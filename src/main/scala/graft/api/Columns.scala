@@ -212,16 +212,15 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
   // ---------------------------------------------------------------- read
 
   /** Contiguous reads (everything / step-1 slices) route through the DSv2
-    * scan: vectorized ColumnarBatch decode inside whole-stage codegen
-    * (~15× the row-path throughput), with the `_row_id` range pushed down
-    * to the same chunk pruning. Id-gathers (`_pos` scatter-back contract)
-    * and stepped slices keep the row path.
+    * scan, with the `_row_id` range pushed down to the chunk pruning.
+    * Id-gathers (`_pos` request-position contract) and stepped slices read
+    * through `ColumnStore.read`. Both decode with the same columnar reader.
     */
   def read(columns: Seq[String] = Seq.empty, rows: Rows = AllRows): DataFrame = {
     // `_row_id` is ALWAYS the first output column on both routes; tolerate a
     // caller listing it explicitly by stripping it here — otherwise the DSv2
     // route would emit it twice (every later reference AMBIGUOUS) while the
-    // row path raised from planUnits. One contract, either path.
+    // store route raised from planUnits. One contract, either route.
     val requested = columns.filterNot(_ == "_row_id")
     val idOnly = columns.nonEmpty && requested.isEmpty
     def dsv2(where: Option[org.apache.spark.sql.Column]): DataFrame = {

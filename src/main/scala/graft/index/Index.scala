@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.codec.Bytes
-import graft.store.{ColumnStore, FsIO, SelRange}
+import graft.store.{BinCodec, ColumnStore, FsIO, SelRange}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,9 +33,6 @@ object Index {
   def dir(store: ColumnStore, col: String): String =
     s"${store.root}/index/$col"
 
-  private def legacyMetaPath(store: ColumnStore, col: String): String =
-    s"${dir(store, col)}/_idxmeta.bin"
-
   /** Index metadata: rows/stamp the build captured, plus the LIVE delta
     * generations (name, rows) — LSM-style sorted runs stacked on the base
     * sort by incremental refreshes. The meta is the COMMIT POINT: a gen
@@ -53,21 +50,20 @@ object Index {
     * tombstone grace); superseded meta FILES are swept by the winner, and
     * readers re-list on a failed read. Two same-epoch commits are both valid
     * views built from the same parent; picking either is equivalent to one
-    * of the two racing writers having committed last. A legacy single
-    * `_idxmeta.bin` (pre-CAS stores) reads as epoch 0.
+    * of the two racing writers having committed last.
     *
     * BASE VERSIONING: the base sort lives in a meta-named `_base-<uuid>`
-    * subdir (`base`; "" = legacy root layout). A full REBUILD writes a NEW
-    * base dir and commits it — it never overwrites files another meta
-    * references, so an incremental refresh racing a rebuild yields two
-    * self-consistent candidate metas (old base + delta vs new base) and
-    * the CAS picks one; the loser's dirs age out through the same
-    * tombstone-grace GC as generations. (With an overwritten-in-place
-    * base, the racing incremental meta would have double-listed the
-    * rebuilt rows — new-base ∪ old-delta — a correctness bug, not a leak.)
+    * subdir (`base`). A full REBUILD writes a NEW base dir and commits it
+    * — it never overwrites files another meta references, so an
+    * incremental refresh racing a rebuild yields two self-consistent
+    * candidate metas (old base + delta vs new base) and the CAS picks one;
+    * the loser's dirs age out through the same tombstone-grace GC as
+    * generations. (With an overwritten-in-place base, the racing
+    * incremental meta would have double-listed the rebuilt rows —
+    * new-base ∪ old-delta — a correctness bug, not a leak.)
     */
   private[graft] final case class IdxMeta(rows: Long, stamp: Long,
-      gens: Seq[(String, Long)], base: String = "") {
+      gens: Seq[(String, Long)], base: String) {
     def deltaRows: Long = gens.map(_._2).sum
   }
 
@@ -80,27 +76,21 @@ object Index {
       .sortBy { case (e, u, _) => (-e, u) }
       .map { case (e, _, n) => (e, n) }
 
-  def exists(store: ColumnStore, col: String): Boolean = {
-    val d = dir(store, col)
-    listMetas(d).nonEmpty || FsIO.exists(legacyMetaPath(store, col))
-  }
+  def exists(store: ColumnStore, col: String): Boolean =
+    listMetas(dir(store, col)).nonEmpty
 
-  private def parseMeta(bytes: Array[Byte]): IdxMeta = {
-    val r = new Bytes.Reader(bytes)
-    val rows = r.readVar()
-    val stamp = if (r.remaining > 0) r.readVar() else -1L
-    val gens =
-      if (r.remaining > 0) {
-        val n = r.readVar().toInt
-        (0 until n).map { _ =>
-          val name = new String(r.readBytes(r.readVar().toInt), utf8)
-          (name, r.readVar())
-        }
-      } else Seq.empty
-    val base =
-      if (r.remaining > 0) new String(r.readBytes(r.readVar().toInt), utf8)
-      else "" // legacy: base sort at the index dir root
-    IdxMeta(rows, stamp, gens, base)
+  /** Layout: rows, stamp, gens (name, rows)*, base. A meta missing any of
+    * them (older builds wrote stamp-less or base-less metas) is unsupported.
+    */
+  private def loadMeta(file: String): IdxMeta = {
+    val r = new Bytes.Reader(FsIO.readAll(file))
+    def str(): String = new String(r.readBytes(r.readVar().toInt), utf8)
+    val m =
+      try Some(IdxMeta(r.readVar(), r.readVar(),
+        Seq.fill(r.readVar().toInt)((str(), r.readVar())), str()))
+      catch { case _: RuntimeException => None }
+    m.filter(x => x.base.nonEmpty && r.remaining == 0)
+      .getOrElse(BinCodec.unsupported(file, "an index meta in an older layout"))
   }
 
   /** Effective meta + its epoch. Retries on a read of a just-GC'd meta
@@ -113,8 +103,8 @@ object Index {
       val metas = listMetas(d)
       try {
         return metas.headOption match {
-          case Some((e, name)) => (parseMeta(FsIO.readAll(s"$d/$name")), e)
-          case None => (parseMeta(FsIO.readAll(legacyMetaPath(store, col))), 0L)
+          case Some((e, name)) => (loadMeta(s"$d/$name"), e)
+          case None => throw new java.io.FileNotFoundException(s"no index meta in $d")
         }
       } catch {
         case _: java.io.IOException if attempt < 3 => attempt += 1
@@ -126,15 +116,15 @@ object Index {
   private[graft] def readMeta(store: ColumnStore, col: String): IdxMeta =
     readMetaEpoch(store, col)._1
 
-  /** Identity of the effective meta FILE (epoch + uuid name; "legacy" for
-    * pre-CAS stores). Every index build/refresh commits a fresh uuid-named
-    * meta, so this string changes whenever the index content can change —
-    * including a store deleted and rebuilt at the SAME path with the same
-    * nrows/stamp. Used as the content-identifying part of planning-cache
-    * keys (GraftScan.cachedPlan).
+  /** Identity of the effective meta FILE (epoch + uuid name; throws when
+    * the column has no index). Every index build/refresh commits a fresh
+    * uuid-named meta, so this string changes whenever the index content can
+    * change — including a store deleted and rebuilt at the SAME path with
+    * the same nrows/stamp. Used as the content-identifying part of
+    * planning-cache keys (GraftScan.cachedPlan).
     */
   private[graft] def metaIdent(store: ColumnStore, col: String): String =
-    listMetas(dir(store, col)).headOption.map(_._2).getOrElse("legacy")
+    listMetas(dir(store, col)).head._2
 
   /** CAS commit: publish `m` at `epoch` and return whether we WON (our
     * file is the effective meta). On a win, sweeps every superseded meta
@@ -165,9 +155,6 @@ object Index {
     if (won) {
       metas.drop(1)
         .foreach { case (_, n) => try FsIO.delete(s"$d/$n") catch { case _: Exception => () } }
-      val legacy = legacyMetaPath(store, col)
-      if (FsIO.exists(legacy))
-        try FsIO.delete(legacy) catch { case _: Exception => () }
     }
     won
   }
@@ -178,7 +165,7 @@ object Index {
   def builtRows(store: ColumnStore, col: String): Long =
     readMeta(store, col).rows
 
-  /** Store update-stamp captured at build time (-1 for legacy metas). */
+  /** Store update-stamp captured at build time. */
   def builtStamp(store: ColumnStore, col: String): Long =
     readMeta(store, col).stamp
 
@@ -194,7 +181,7 @@ object Index {
     val m =
       try readMeta(store, col)
       catch { case _: Exception => return false } // no index
-    m.rows == store.nrows && m.stamp >= 0 && m.stamp == store.updateStamp
+    m.rows == store.nrows && m.stamp == store.updateStamp
   }
 
   /** Build (or rebuild) the index for a column. One shuffle, fully
@@ -238,12 +225,9 @@ object Index {
     gcSweep(store, col)
   }
 
-  /** Full path of the meta's base-sort parquet (legacy: the dir itself). */
-  private[graft] def basePath(store: ColumnStore, col: String): String = {
-    val d = dir(store, col)
-    val b = readMeta(store, col).base
-    if (b.isEmpty) d else s"$d/$b"
-  }
+  /** Full path of the meta's base-sort parquet. */
+  private[graft] def basePath(store: ColumnStore, col: String): String =
+    s"${dir(store, col)}/${readMeta(store, col).base}"
 
   def drop(store: ColumnStore, col: String): Unit =
     FsIO.delete(dir(store, col), recursive = true)
@@ -286,8 +270,7 @@ object Index {
   def table(spark: SparkSession, store: ColumnStore, col: String): DataFrame = {
     val d = dir(store, col)
     val m = readMeta(store, col)
-    val basePath = if (m.base.isEmpty) d else s"$d/${m.base}"
-    val paths = basePath +: m.gens.map { case (g, _) => s"$d/$g" }
+    val paths = (m.base +: m.gens.map(_._1)).map(p => s"$d/$p")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(ValueCol,
         graft.store.ColumnStore.sparkType(store.spec.col(col).ptype)),
@@ -319,7 +302,7 @@ object Index {
     *
     * Falls back to a full rebuild when rows were updated IN PLACE since
     * the build (the update stamp moved — deltas can't express changed
-    * values) or when the meta predates stamps.
+    * values).
     */
   def refresh(spark: SparkSession, store: ColumnStore, col: String,
       maxDeltaGens: Int = 8): Unit = {
@@ -344,7 +327,7 @@ object Index {
     val n = store.nrows
     if (m.rows == n && m.stamp == store.updateStamp) return true // fresh
     val newRows = n - m.rows
-    val incrementalOk = m.stamp >= 0 && m.stamp == store.updateStamp && newRows > 0
+    val incrementalOk = m.stamp == store.updateStamp && newRows > 0
     if (!incrementalOk || (m.deltaRows + newRows) * 4L > n) {
       create(spark, store, col, overwrite = true) // commit-until-win inside
       return true
@@ -399,14 +382,10 @@ object Index {
     val grace = sys.props.get("graft.index.gc.graceMs").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
     val now = System.currentTimeMillis()
-    val metas = listMetas(d).map { case (_, name) =>
-      try Some(parseMeta(FsIO.readAll(s"$d/$name")))
-      catch { case _: Exception => None }
-    } :+ (try Some(parseMeta(FsIO.readAll(legacyMetaPath(store, col))))
-      catch { case _: Exception => None })
-    val live: Set[String] = metas.flatten
-      .flatMap(m => m.gens.map(_._1) ++ (if (m.base.nonEmpty) Seq(m.base) else Nil))
-      .toSet
+    val live: Set[String] = listMetas(d).flatMap { case (_, name) =>
+      try { val m = loadMeta(s"$d/$name"); m.base +: m.gens.map(_._1) }
+      catch { case _: Exception => Nil }
+    }.toSet
     FsIO.list(d)
       .filter(f => f.startsWith("_gen-") || f.startsWith("_base-"))
       .foreach { f =>
@@ -430,32 +409,6 @@ object Index {
           }
         } catch { case _: Exception => () } // GC is best-effort, never fatal
       }
-    // legacy ROOT base (meta.base == ""): once no present meta references
-    // it, age its loose part-files out through a root-level tombstone
-    if (metas.flatten.exists(_.base.isEmpty)) {
-      // LIVE root base: drop any stale tombstone (mirrors the live-dir
-      // branch above) — a transient meta-read failure must not leave a
-      // clock running that would later delete live part-files without a
-      // fresh grace window (ADVICE r05, low)
-      val tomb = s"$d/_rootbase_gone"
-      try { if (FsIO.exists(tomb)) FsIO.delete(tomb) }
-      catch { case _: Exception => () }
-    } else {
-      val tomb = s"$d/_rootbase_gone"
-      try {
-        if (FsIO.list(d).exists(f => f.startsWith("part-"))) {
-          if (!FsIO.exists(tomb)) {
-            val w = new Bytes.Writer()
-            w.writeVar(now)
-            FsIO.writeAtomic(tomb, w.result())
-          } else if (now - new Bytes.Reader(FsIO.readAll(tomb)).readVar() > grace) {
-            FsIO.list(d).filter(f => f.startsWith("part-") || f == "_SUCCESS")
-              .foreach(f => FsIO.delete(s"$d/$f"))
-            FsIO.delete(tomb)
-          }
-        }
-      } catch { case _: Exception => () }
-    }
   }
 
   private def load(spark: SparkSession, store: ColumnStore, col: String): DataFrame = {

@@ -859,10 +859,9 @@ object GraftScan {
   }
 
   /** Exact table-wide SUM of an integer column from the per-chunk sums the
-    * manifests carry (v3) — None when not provable: non-integer column, any
-    * chunk without a sum (legacy v2 manifest, per-chunk overflow), a
-    * backfilled partition without materialized chunks, or accumulator
-    * overflow. O(segments) metadata reads via the cached manifests, then
+    * manifests carry — None when not provable: non-integer column, any
+    * chunk without a sum (per-chunk overflow), a backfilled partition
+    * without materialized chunks, or accumulator overflow. O(segments) metadata reads via the cached manifests, then
     * O(chunks) driver adds — no chunk file is opened.
     */
   private[sources] def statSum(store: ColumnStore, colName: String): Option[Long] = {
@@ -1155,18 +1154,20 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // that the driver-collected bucket set stays bounded at 10^12 rows
     val g = math.max(64L, math.min(8192L, store.nrows / 1024L))
     val maxRanges = 1 << 16
-    // metaIdent (epoch+uuid of the winning meta file) identifies the index
-    // CONTENT: a store deleted and rebuilt at the same path with the same
-    // nrows/stamp still commits fresh uuid-named metas, so it cannot
-    // collide with a prior cache entry
-    val key = s"ir|$root|${store.nrows}|${store.updateStamp}|$g|" +
-      routed.toSeq.sortBy(_._1)
-        .map { case (c, conds) =>
-          c + "@" + graft.index.Index.metaIdent(store, c) + ":" +
-            conds.mkString("&&") }.mkString("|")
-    GraftScan.cachedPlan(key) {
-      var acc: Option[Seq[(Long, Long)]] = None
-      try {
+    // the fallback sits OUTSIDE cachedPlan: only a consult that succeeded
+    // is cached, so a transient failure does not pin the zone-map fallback
+    try {
+      // metaIdent (epoch+uuid of the winning meta file) identifies the index
+      // CONTENT: a store deleted and rebuilt at the same path with the same
+      // nrows/stamp still commits fresh uuid-named metas, so it cannot
+      // collide with a prior cache entry
+      val key = s"ir|$root|${store.nrows}|${store.updateStamp}|$g|" +
+        routed.toSeq.sortBy(_._1)
+          .map { case (c, conds) =>
+            c + "@" + graft.index.Index.metaIdent(store, c) + ":" +
+              conds.mkString("&&") }.mkString("|")
+      GraftScan.cachedPlan(key) {
+        var acc: Option[Seq[(Long, Long)]] = None
         routed.foreach { case (c, conds) =>
           val idx = graft.index.Index.table(spark, store, c)
           val buckets = idx.where(conds.reduce(_ && _))
@@ -1178,11 +1179,11 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
           }
         }
         acc
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
-          None
       }
+    } catch {
+      case e: Exception =>
+        System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
+        None
     }
   }
 
@@ -1243,8 +1244,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         val m = graft.index.Index.readMeta(store, c)
         if (m.gens.nonEmpty) None // per-gen order only; fallback sorts
         else {
-          val d = graft.index.Index.dir(store, c)
-          val baseDir = if (m.base.isEmpty) d else s"$d/${m.base}"
+          val baseDir = s"${graft.index.Index.dir(store, c)}/${m.base}"
           val files = FsIO.list(baseDir)
             .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
           if (files.isEmpty) None
@@ -1276,7 +1276,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       case Some(sel) =>
         val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
         val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-        return units.map(u => GraftInputPartition(u, store.spec, wanted,
+        return units.map(u => GraftInputPartition(u, store.spec,
           required.fieldNames.toSeq): InputPartition).toArray
       case None => ()
     }
@@ -1307,7 +1307,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // emptyMeansAll=false: a fully-pruned projection (count(*), or bare
     // _row_id) decodes NO column chunks — units carry row counts only
     val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, store.spec, wanted,
+    units.map(u => GraftInputPartition(u, store.spec,
       required.fieldNames.toSeq, probes): InputPartition).toArray
   }
 
@@ -1316,42 +1316,20 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
 }
 
 final case class GraftInputPartition(unit: DecodeUnit, spec: TableSpec,
-    wanted: Seq[String], outFields: Seq[String],
+    outFields: Seq[String],
     probes: Seq[(String, Array[Long])] = Nil) extends InputPartition
 
 class GraftReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    partition match {
-      case op: GraftOrderedPartition => return new OrderedPartitionReader(op)
-      case _ => ()
-    }
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new PartitionReader[InternalRow] {
-      // unboxed path: Decode emits catalyst values directly (UTF8String,
-      // UnsafeArrayData bulk copies), permuted to the required fields
-      private val it = Decode.refineUnit(p.unit, p.probes) match {
-        case None => Iterator.empty
-        case Some(u) => Decode.decodeUnitInternal(u, p.spec, p.wanted, p.outFields)
-      }
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        if (!it.hasNext) return false
-        current = it.next()
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
+  // only ordered partitions read row-wise (value-order scatter-back); every
+  // other scan is columnar, since Spark rejects scans that mix the two
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new OrderedPartitionReader(partition.asInstanceOf[GraftOrderedPartition])
 
   // vectorized path: decoded chunk arrays bulk-copied into column vectors
-  // (no per-row object, no boxing); Spark's ColumnarToRow is codegen'd.
-  // Ordered partitions stream row-wise (value-order scatter-back).
+  // (no per-row object, no boxing); Spark's ColumnarToRow is codegen'd. An
+  // empty projection (count(*)) reads as zero-column batches.
   override def supportColumnarReads(partition: InputPartition): Boolean =
     !partition.isInstanceOf[GraftOrderedPartition]
-
-  // (row-path readers above handle the empty projection by emitting
-  // field-less rows; the columnar reader emits zero-column batches)
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1441,7 +1419,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
       else GraftScan.fromRanges(GraftScan.intersectRanges(Seq((s, e)),
         GraftScan.toRanges(GraftScan.planSelection(st, rowIdFilters))))
     val (units, _) = st.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, st.spec, wanted,
+    units.map(u => GraftInputPartition(u, st.spec,
       required.fieldNames.toSeq): InputPartition).toArray
   }
 
@@ -1639,7 +1617,8 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
     // manifests were encoded before the segment number existed — restamp
     val msgs = messages.map { case m: GraftCommitMessage =>
       (m.part, BinCodec.writePartManifest(
-        BinCodec.readPartManifest(m.manifest).copy(segment = seg)))
+        BinCodec.readPartManifest(m.manifest, s"$segDir/${Format.partManifestFile(m.part, 0)}")
+          .copy(segment = seg)))
     }
     ColumnStore.commitSegment(segDir, seg, msgs.toSeq, lin)
     FsIO.delete(staging, recursive = true)

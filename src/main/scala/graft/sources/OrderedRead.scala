@@ -3,7 +3,9 @@ package graft.sources
 import graft.index.Index
 import graft.store.{ColumnStore, Decode, FsIO, SelIds, TableSpec}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.types.LongType
 
 /** Ordered-scan pushdown (`option("ordered", col)`): stream the table in
   * index VALUE order with NO Spark sort anywhere in the plan.
@@ -52,6 +54,12 @@ class OrderedPartitionReader(p: GraftOrderedPartition)
 
   private val ids = new IndexIdStream(p.indexDir, p.files, p.desc)
   private var emitted = 0L
+  // copies a decoded row's outFields (dropping the trailing `_pos`)
+  private val keep = UnsafeProjection.create(p.outFields.map {
+    case "_row_id" => LongType
+    case f => ColumnStore.sparkType(p.spec.col(f).ptype)
+  }.toArray)
+  private val posField = p.outFields.length
 
   private val rows: Iterator[InternalRow] =
     ids.grouped(p.batchRows).flatMap { batch =>
@@ -59,9 +67,14 @@ class OrderedPartitionReader(p: GraftOrderedPartition)
       val pos = Array.tabulate(idArr.length)(_.toLong)
       val (units, _) = store.planUnits(p.wanted, SelIds(idArr, pos),
         emptyMeansAll = false)
+      // chunks decode once in disk order; each row lands in its value-order
+      // slot by `_pos`
       val slots = new Array[InternalRow](idArr.length)
-      units.foreach(u =>
-        Decode.decodeUnitSlotted(u, p.spec, p.wanted, p.outFields, slots))
+      units.foreach { u =>
+        val r = new Decode.ColumnarUnitReader(u, p.spec, p.outFields :+ "_pos")
+        try r.rows.foreach(row => slots(row.getLong(posField).toInt) = keep(row).copy())
+        finally r.close()
+      }
       slots.indices.foreach(i => require(slots(i) != null,
         s"ordered gather missed id ${idArr(i)} — store changed mid-scan"))
       slots.iterator

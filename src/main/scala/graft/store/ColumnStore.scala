@@ -337,30 +337,29 @@ object ColumnStore {
     * allocation and publication are the same single atomic create, so a
     * stalled writer is simply not committed yet and always lands after.
     * Losing the race just retries the next number; readers sort by marker
-    * number, and pre-marker (legacy) segments keep their number order
-    * (markers always allocate above every existing segment number).
-    * Marker count is bounded by segment count; compactSegments resets both.
+    * number. Marker count is bounded by segment count; compactSegments
+    * resets both.
     *
     * The published segment is encoded IN THE MARKER NAME
     * (`.commit-<n>-<seg>`): create-exclusive is atomic for the name, but a
     * payload is only atomically visible on close (and on HDFS-like stores
     * the content of an open file is empty to readers), so a name-only
-    * protocol closes the window where a concurrent lister sees the marker
-    * but reads 0 bytes. Older stores carry payload-only `.commit-<n>`
-    * markers; readers still parse those (with a bounded retry for the
-    * create-to-close window).
+    * protocol has no window where a concurrent lister sees the marker but
+    * reads 0 bytes.
     */
   private[graft] def commitSegment(segDir: String, seg: Long,
       byPart: Seq[(Int, Array[Byte])], lineage: String): Unit = {
     val sorted = byPart.sortBy(_._1)
     FsIO.writeAtomic(s"$segDir/${Format.SegManifestFile}",
       BinCodec.writeSegManifest(sorted.map(_._2)))
-    val rows = sorted.map(m => BinCodec.readPartManifest(m._2).nrows)
+    val rows = sorted.map { case (p, m) =>
+      BinCodec.readPartManifest(m, s"$segDir/${Format.partManifestFile(p, 0)}").nrows
+    }
     FsIO.writeAtomic(s"$segDir/_commit.bin",
-      BinCodec.writeSegmentCommit(SegmentCommit(seg, rows, lineage, markered = true)))
+      BinCodec.writeSegmentCommit(SegmentCommit(seg, rows, lineage)))
     val segsDir = segDir.substring(0, segDir.lastIndexOf('/'))
     val names = FsIO.list(segsDir)
-    val floor = (names.collect { case n if n.startsWith(".commit-") => markerParts(n)._1 } ++
+    val floor = (names.collect { case n if n.startsWith(".commit-") => markerParts(segsDir, n)._1 } ++
       names.collect { case n if n.startsWith("seg") => n.drop(3).toLong })
       .foldLeft(-1L)(math.max)
     var n = floor + 1
@@ -374,15 +373,12 @@ object ColumnStore {
     require(published, s"could not publish a commit marker in $segsDir")
   }
 
-  /** Parse a marker filename: `(sequence, Some(segment))` for the v3
-    * name-encoded form `.commit-<n>-<seg>`, `(sequence, None)` for a legacy
-    * `.commit-<n>` whose segment lives in the payload.
-    */
-  private[graft] def markerParts(name: String): (Long, Option[Long]) = {
+  /** Parse a marker filename `.commit-<n>-<seg>` into (sequence, segment). */
+  private[graft] def markerParts(segsDir: String, name: String): (Long, Long) = {
     val body = name.drop(".commit-".length)
     val i = body.indexOf('-')
-    if (i < 0) (body.toLong, None)
-    else (body.substring(0, i).toLong, Some(body.substring(i + 1).toLong))
+    if (i < 0) BinCodec.unsupported(s"$segsDir/$name", "a payload-only commit marker")
+    (body.substring(0, i).toLong, body.substring(i + 1).toLong)
   }
 }
 
@@ -426,7 +422,6 @@ class ColumnStore(val root: String) extends Serializable {
     colStatsCache.clear()
     rawBytesCache.set(null)
     commitCache.clear()
-    markerCache.clear()
     specCache.set(null)
   }
 
@@ -434,7 +429,8 @@ class ColumnStore(val root: String) extends Serializable {
     val c = specCache.get()
     if (c != null) c
     else {
-      val s = BinCodec.readTableSpec(FsIO.readAll(s"$root/${Format.SchemaFile}"))
+      val file = s"$root/${Format.SchemaFile}"
+      val s = BinCodec.readTableSpec(FsIO.readAll(file), file)
       specCache.set(s)
       s
     }
@@ -448,65 +444,28 @@ class ColumnStore(val root: String) extends Serializable {
   // ------------------------------------------------------------- segments
 
   /** Committed segments in ROW-ID order = commit order (see commitSegment):
-    * marker-published segments sort by their `.commit-<n>` number; legacy
-    * (pre-marker) segments are visible by their commit record alone and
-    * sort by segment number — always below marker numbers. A markered
-    * commit record WITHOUT a marker is a commit in flight (or crashed
-    * mid-publish): invisible.
+    * a segment is visible iff its commit record exists and a
+    * `.commit-<n>-<seg>` marker publishes it, and segments sort by their
+    * marker number. A commit record WITHOUT a marker is a commit in flight
+    * (or crashed mid-publish): invisible.
     */
   def segments: Seq[Long] = {
-    val names = FsIO.list(s"$root/${Format.SegmentsDir}")
+    val segsDir = s"$root/${Format.SegmentsDir}"
+    val names = FsIO.list(segsDir)
     val markerOf: Map[Long, Long] = names // seg -> smallest marker number
-      .collect { case m if m.startsWith(".commit-") => ColumnStore.markerParts(m) }
-      .map { case (n, segOpt) => segOpt.getOrElse(markerSeg(n)) -> n }
-      .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).min }
+      .collect { case m if m.startsWith(".commit-") => ColumnStore.markerParts(segsDir, m) }
+      .groupBy(_._2).map { case (s, xs) => s -> xs.map(_._1).min }
     names.filter(_.startsWith("seg")).map(_.drop(3).toLong)
       .filter(s => FsIO.exists(s"${Format.segDir(root, s)}/_commit.bin"))
-      .flatMap { s =>
-        val c = segmentCommit(s)
-        if (!c.markered) Some((s, s)) // legacy: order by number
-        else markerOf.get(s).map(n => (n, s)) // visible iff published
-      }
+      .flatMap(s => markerOf.get(s).map(n => (n, s)))
       .sortBy(identity).map(_._2)
   }
 
-  /** Segment a LEGACY payload-carrying `.commit-<n>` marker publishes
-    * (immutable → cached). Current markers encode the segment in the name
-    * and never reach here. The legacy writer created the name then wrote
-    * the payload, so a concurrent lister could observe an empty file for a
-    * moment — retry briefly before failing with a retryable error rather
-    * than throwing an index error from a 0-byte read. A naive "skip
-    * unreadable markers" would be WRONG: treating marker n as absent while
-    * n+1 is visible would renumber rows once n's payload lands.
-    */
-  @transient private lazy val markerCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Long]()
-  private def markerSeg(n: Long): Long = {
-    // read-retry OUTSIDE the map update: computeIfAbsent holds the bin lock
-    // for its whole body, so a crashed-mid-publish marker's 50×10 ms retry
-    // would stall unrelated lookups hashing to the same bin; read first,
-    // then publish the resolved value with putIfAbsent (idempotent — every
-    // racer resolves the same immutable payload)
-    val cached = markerCache.get(n)
-    if (cached != null) return cached.longValue
-    val path = s"$root/${Format.SegmentsDir}/.commit-$n"
-    var attempt = 0
-    var seg = -1L
-    while (seg < 0) {
-      val bytes = FsIO.readAll(path)
-      if (bytes.nonEmpty) seg = new Bytes.Reader(bytes).readVar()
-      else if (attempt >= 50) throw new java.io.IOException(
-        s"commit marker $path still empty after ${attempt} reads — " +
-          "writer in flight or crashed mid-publish; retry the operation")
-      else { attempt += 1; Thread.sleep(10) }
-    }
-    markerCache.putIfAbsent(n, seg)
-    seg
-  }
-
   def segmentCommit(seg: Long): SegmentCommit =
-    commitCache.computeIfAbsent(seg, _ =>
-      BinCodec.readSegmentCommit(FsIO.readAll(s"${Format.segDir(root, seg)}/_commit.bin")))
+    commitCache.computeIfAbsent(seg, _ => {
+      val file = s"${Format.segDir(root, seg)}/_commit.bin"
+      BinCodec.readSegmentCommit(FsIO.readAll(file), file)
+    })
 
   /** All partition manifests of a segment, partition order, at their
     * highest update version — via the consolidated `_manifest.bin` written
@@ -537,20 +496,13 @@ class ColumnStore(val root: String) extends Serializable {
       else base.map { m =>
         topVer.get(m.part) match {
           case Some(v) if v > m.updateVersion =>
-            BinCodec.readPartManifest(
-              FsIO.readAll(s"$dir/${Format.partManifestFile(m.part, v)}"))
+            val file = s"$dir/${Format.partManifestFile(m.part, v)}"
+            BinCodec.readPartManifest(FsIO.readAll(file), file)
           case _ => m
         }
       }
-    if (names.contains(Format.SegManifestFile)) {
-      patched(BinCodec.readSegManifest(FsIO.readAll(s"$dir/${Format.SegManifestFile}")))
-    } else {
-      // legacy segment without a consolidated manifest: per-part reads
-      val baseRe = """^p(\d+)\.manifest\.bin$""".r
-      val parts = names.collect { case baseRe(p) => p.toInt }.sorted
-      patched(parts.toIndexedSeq.map(p =>
-        BinCodec.readPartManifest(FsIO.readAll(s"$dir/${Format.partManifestFile(p, 0)}"))))
-    }
+    val file = s"$dir/${Format.SegManifestFile}"
+    patched(BinCodec.readSegManifest(FsIO.readAll(file), file))
   }
 
   /** Per-(partition, column) min/max ROLL-UP over the chunk zone maps,
@@ -823,23 +775,24 @@ class ColumnStore(val root: String) extends Serializable {
     * `_pos` for id-list gathers). Chunk pruning against the manifest
     * rowstart/nrows zone map happens here, on the driver, before any task
     * launches — the Spark analogue of the reference's chunk binary search.
+    * Each unit decodes through the columnar reader the DSv2 scan uses.
     */
   def read(spark: SparkSession, columns: Seq[String] = Seq.empty,
       sel: Selection = SelAll, emptyMeansAll: Boolean = true): DataFrame = {
     val s = spec
     val (units, wanted) = planUnits(columns, sel, emptyMeansAll)
-    val fields = mutable.ArrayBuffer(StructField("_row_id", LongType, nullable = false))
-    if (sel.isInstanceOf[SelIds])
-      fields += StructField("_pos", LongType, nullable = false)
-    wanted.foreach(cn => fields +=
-      StructField(cn, sparkType(s.col(cn).ptype), nullable = false))
-    val schema = StructType(fields.toSeq)
-    val specB = s
-    val wantedB = wanted
+    val ids = if (sel.isInstanceOf[SelIds]) Seq("_row_id", "_pos") else Seq("_row_id")
+    val schema = StructType(ids.map(StructField(_, LongType, nullable = false)) ++
+      wanted.map(cn => StructField(cn, sparkType(s.col(cn).ptype), nullable = false)))
+    val outFields = ids ++ wanted
     val rdd = spark.sparkContext
       .parallelize(units, math.max(1, units.size))
-      .flatMap(u => Decode.decodeUnit(u, specB, wantedB))
-    spark.createDataFrame(rdd, schema)
+      .mapPartitions(_.flatMap { u =>
+        val reader = new Decode.ColumnarUnitReader(u, s, outFields)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
+        reader.rows
+      })
+    org.apache.spark.sql.graft.InternalRows.toDataFrame(spark, rdd, schema)
   }
 
   /** Driver-side scan planning: partition pruning + per-unit chunk pruning

@@ -1,17 +1,17 @@
 package graft.store
 
 import graft.codec._
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Executor-side chunk decode for one (segment, partition) unit.
   * Mirrors the reference read path (pycolumns chunks.py:633-669: histogram
   * rows per chunk, decompress each touched chunk once, slice rows out) —
-  * here each unit decodes its pruned chunk list sequentially and emits Rows.
+  * here each unit decodes its pruned chunk list sequentially. Every read
+  * surface (DSv2 scan, `ColumnStore.read`, ordered scan) decodes through
+  * [[ColumnarUnitReader]].
   */
 object Decode {
 
@@ -30,6 +30,14 @@ object Decode {
   val chunksRead = new java.util.concurrent.atomic.AtomicLong()
   val chunksFilterSkipped = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Fail unless `blob` matches the CRC32C its manifest entry recorded. */
+  def verifyChunk(cm: ChunkMeta, blob: Array[Byte]): Unit = {
+    val crc = FsIO.crc32c(blob)
+    require(crc == cm.crc,
+      s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
+        f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")
+  }
+
   /** Per-unit file handle cache: a unit decodes many chunks from the same
     * column file — open it ONCE and issue positioned reads, instead of an
     * open/close round-trip per chunk (on an object store, per-chunk opens
@@ -45,12 +53,7 @@ object Decode {
         FsIO.fs(dir).open(new org.apache.hadoop.fs.Path(s"$dir/${cm.file}")))
       val buf = new Array[Byte](cm.nbytes.toInt)
       in.readFully(cm.offset, buf)
-      if (verifyCrc) {
-        val crc = FsIO.crc32c(buf)
-        require(crc == cm.crc,
-          s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
-            f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")
-      }
+      if (verifyCrc) verifyChunk(cm, buf)
       buf
     }
 
@@ -62,7 +65,7 @@ object Decode {
 
   // ------------------------------------------- membership-filter pruning
 
-  /** Refine a unit against equality/IN probe hashes (manifest-v4 chunk
+  /** Refine a unit against equality/IN probe hashes (per-chunk
     * membership filters) BEFORE any chunk decode. Executor-side by design:
     * the filter blobs live next to their chunks (few KB each) and are
     * never shipped through planning metadata, so at 10^5 partitions the
@@ -73,16 +76,17 @@ object Decode {
     * Sound because pushed filters are top-level conjuncts and every probe
     * hash is canonical (see GraftScan.filterProbes): a chunk whose filter
     * excludes ALL probe values of some conjunct can satisfy none of the
-    * unit's rows in that chunk's row range. Chunks without filters (legacy
-    * manifests, bool/binary kinds) and unreadable/corrupt filters survive
-    * conservatively; Spark re-applies every filter as residual.
+    * unit's rows in that chunk's row range. Chunks without filters (bool/
+    * binary kinds, or written with chunk filters off) and unreadable/corrupt
+    * filters survive conservatively; Spark re-applies every filter as
+    * residual.
     */
   def refineUnit(u: DecodeUnit,
       probes: Seq[(String, Array[Long])]): Option[DecodeUnit] = {
     if (probes.isEmpty) return Some(u)
     u.sel match {
       case SelIds(_, _) => return Some(u) // id-gather paths keep their contract
-      case SelRange(_, _, step) if step != 1L => return Some(u) // stepped: row path only
+      case SelRange(_, _, step) if step != 1L => return Some(u) // refined ranges are step 1
       case _ => ()
     }
     val dir = Format.segDir(u.root, u.segment)
@@ -134,52 +138,6 @@ object Decode {
       }
     }
     Some(u.copy(colChunks = newCols, sel = newSel))
-  }
-
-  /** Typed accessor facade over a decoded chunk. */
-  private final class VecView(vec: ColVec) {
-    private val listOffsets: Array[Int] = vec match {
-      case IntListVec(lengths, _) =>
-        val o = new Array[Int](lengths.length + 1)
-        var i = 0
-        while (i < lengths.length) { o(i + 1) = o(i) + lengths(i); i += 1 }
-        o
-      case _ => null
-    }
-
-    def get(i: Int): Any = vec match {
-      case LongVec(a) => a(i)
-      case IntVec(a) => a(i)
-      case ShortVec(a) => a(i)
-      case DoubleVec(a) => a(i)
-      case FloatVec(a) => a(i)
-      case BoolVec(a) => a(i)
-      case StrVec(a) => a(i)
-      case Utf8Vec(b) => new String(b(i), java.nio.charset.StandardCharsets.UTF_8)
-      case BinVec(a) => a(i)
-      case l: IntListVec =>
-        val from = listOffsets(i)
-        val until = listOffsets(i + 1)
-        val out = new Array[Int](until - from)
-        System.arraycopy(l.values, from, out, 0, out.length)
-        out.toSeq
-    }
-
-    /** Catalyst-value accessor for the unboxed InternalRow read path:
-      * strings as UTF8String, token lists as UnsafeArrayData (one bulk
-      * copy, no per-int boxing).
-      */
-    def getInternal(i: Int): Any = vec match {
-      case StrVec(a) => UTF8String.fromString(a(i))
-      case Utf8Vec(b) => UTF8String.fromBytes(b(i)) // zero transcode
-      case l: IntListVec =>
-        val from = listOffsets(i)
-        val until = listOffsets(i + 1)
-        val out = new Array[Int](until - from)
-        System.arraycopy(l.values, from, out, 0, out.length)
-        UnsafeArrayData.fromPrimitiveArray(out)
-      case _ => get(i)
-    }
   }
 
   /** Default/parsed fill value for columns added after this segment
@@ -252,11 +210,16 @@ object Decode {
 
   // ------------------------------------------------------- columnar batch
 
-  /** Vectorized DSv2 read path: decoded chunk arrays are bulk-copied into
+  /** The one chunk decoder: decoded chunk arrays are bulk-copied into
     * OnHeapColumnVectors (putLongs/putInts/... — no per-value boxing, no
     * per-row object), emitted as ColumnarBatches of ≤ `batchRows` rows.
     * Chunks spanning a batch boundary stay decoded in a one-chunk cache
     * per column, so each chunk is decompressed exactly once per scan.
+    *
+    * `outFields` names the output columns in order: table columns, plus
+    * `_row_id` and — for SelIds units — `_pos`, the request position of
+    * each row. Rows come out in ascending row-id order. The chunk files
+    * close once the last batch is built.
     */
   final class ColumnarUnitReader(u: DecodeUnit, spec: TableSpec,
       outFields: Seq[String], batchRows: Int = 1 << 16)
@@ -264,8 +227,13 @@ object Decode {
     import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
     import org.apache.spark.sql.types.LongType
 
-    private val (locals, _) = selectedLocals(u)
+    private val (locals, positions) = selectedLocals(u)
+    require(positions != null || !outFields.contains("_pos"),
+      "_pos is defined only for SelIds units")
     private val n = locals.length
+    // id gathers may repeat an id; a span of them is never one bulk copy
+    private val noRepeats = !u.sel.isInstanceOf[SelIds] ||
+      (1 until n).forall(i => locals(i) != locals(i - 1))
     private val reader = new BlobReader(u.root, u.segment)
     private var pos = 0
     private var lastBatch: ColumnarBatch = _
@@ -299,8 +267,9 @@ object Decode {
       }
     }
 
-    private val cursors: Array[ColCursor] = outFields.map { f =>
-      if (f == "_row_id") null else new ColCursor(spec.col(f), u.colChunks(f))
+    private val cursors: Array[ColCursor] = outFields.map {
+      case "_row_id" | "_pos" => null
+      case f => new ColCursor(spec.col(f), u.colChunks(f))
     }.toArray
 
     override def hasNext: Boolean = pos < n
@@ -310,19 +279,26 @@ object Decode {
       val until = math.min(n, pos + batchRows)
       val cnt = until - from
       val vectors = outFields.zipWithIndex.map { case (f, vi) =>
-        val dt = if (f == "_row_id") LongType
-          else ColumnStore.sparkType(cursors(vi).cs.ptype)
-        val vec = new OnHeapColumnVector(cnt, dt)
-        if (f == "_row_id") {
-          var i = 0
-          while (i < cnt) { vec.putLong(i, u.globalOffset + locals(from + i)); i += 1 }
-        } else fill(cursors(vi), vec, from, until)
+        val cur = cursors(vi)
+        val vec = new OnHeapColumnVector(cnt,
+          if (cur == null) LongType else ColumnStore.sparkType(cur.cs.ptype))
+        f match {
+          case "_row_id" =>
+            var i = 0
+            while (i < cnt) { vec.putLong(i, u.globalOffset + locals(from + i)); i += 1 }
+          case "_pos" => vec.putLongs(0, cnt, positions, from)
+          case _ => fill(cur, vec, from, until)
+        }
         vec: org.apache.spark.sql.vectorized.ColumnVector
       }.toArray
       pos = until
+      if (pos == n) reader.close() // every chunk this unit needs is decoded
       lastBatch = new ColumnarBatch(vectors, cnt)
       lastBatch
     }
+
+    /** The batches as rows. Each row object is reused: copy to keep one. */
+    def rows: Iterator[InternalRow] = flatMap(_.rowIterator().asScala)
 
     private def fill(cur: ColCursor, vec: WritableColumnVector,
         from: Int, until: Int): Unit = {
@@ -338,7 +314,7 @@ object Decode {
         val cnt = j - k
         val off = (locals(k) - lo).toInt
         // bulk path when the selected span is a contiguous run of rows
-        val contiguous = locals(j - 1) - locals(k) == (j - 1 - k).toLong
+        val contiguous = noRepeats && locals(j - 1) - locals(k) == (j - 1 - k).toLong
         cv match {
           case LongVec(a) =>
             if (contiguous) vec.putLongs(k - from, cnt, a, off)
@@ -410,155 +386,5 @@ object Decode {
       reader.close()
       if (lastBatch != null) lastBatch.close()
     }
-  }
-
-  /** Per-column streaming cursor for the row read paths: serves values for
-    * ASCENDING local row ids holding at most ONE decoded chunk at a time —
-    * the same memory contract as ColumnarUnitReader and as the reference
-    * (chunks.py:633-669 decompresses one chunk at a time). The old shape
-    * materialized every selected value of every column as boxed Array[Any]
-    * for the whole unit: a SelAll read of a 10M-row partition held tens of
-    * millions of boxed objects per task.
-    */
-  private final class StreamCursor(u: DecodeUnit, cs: ColumnSpec,
-      chunks: Seq[ChunkMeta], reader: BlobReader, internal: Boolean) {
-    private val sorted = chunks.sortBy(_.rowStartLocal).toIndexedSeq
-    private val fillV: Any =
-      if (sorted.nonEmpty) null
-      else if (!internal) fillValue(cs)
-      else fillValue(cs) match { // catalyst representation for InternalRows
-        case s: String => UTF8String.fromString(s)
-        case seq: Seq[_] => UnsafeArrayData.fromPrimitiveArray(
-          seq.map(_.asInstanceOf[Number].intValue).toArray)
-        case other => other
-      }
-    private var ci = 0
-    private var view: VecView = _
-    private var lo = 0L
-    private var hi = -1L // current chunk's covered local range [lo, hi)
-
-    private def advance(local: Long): Unit = {
-      while (ci < sorted.length &&
-        local >= sorted(ci).rowStartLocal + sorted(ci).nrows) ci += 1
-      // a planning gap must fail loudly, not surface as NPEs downstream
-      require(ci < sorted.length && local >= sorted(ci).rowStartLocal,
-        s"selection not covered by chunks for column ${cs.name} in " +
-          s"seg=${u.segment} part=${u.part}")
-      view = new VecView(Chunk.decode(reader.read(sorted(ci))))
-      lo = sorted(ci).rowStartLocal
-      hi = lo + sorted(ci).nrows
-    }
-
-    def get(local: Long): Any = {
-      if (sorted.isEmpty) return fillV // backfilled column: constant fill
-      if (local >= hi || local < lo) advance(local)
-      if (internal) view.getInternal((local - lo).toInt)
-      else view.get((local - lo).toInt)
-    }
-  }
-
-  /** Close the unit's file handles when the iterator drains; a task that
-    * dies mid-iteration is covered by the task-completion listener.
-    */
-  private def closeOnExhaust[T](reader: BlobReader, it: Iterator[T]): Iterator[T] = {
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => reader.close())
-    new Iterator[T] {
-      override def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) reader.close() // idempotent
-        h
-      }
-      override def next(): T = it.next()
-    }
-  }
-
-  /** DSv2 read path: emit InternalRows directly (catalyst values; token
-    * arrays via UnsafeArrayData bulk copies). outFields selects/permutes
-    * from (_row_id, wanted...). Streams chunk-at-a-time per column.
-    */
-  def decodeUnitInternal(u: DecodeUnit, spec: TableSpec, wanted: Seq[String],
-      outFields: Seq[String]): Iterator[InternalRow] = {
-    val (locals, _) = selectedLocals(u)
-    if (locals.isEmpty) return Iterator.empty
-    val n = locals.length
-    val reader = new BlobReader(u.root, u.segment)
-    val cursors = wanted.map(cn =>
-      new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = true)).toArray
-    // map outFields onto (_row_id, wanted...) positions
-    val srcIdx = outFields.map {
-      case "_row_id" => -1
-      case cn =>
-        val i = wanted.indexOf(cn)
-        // -1 doubles as the _row_id sentinel below — a planning bug must
-        // fail here, not silently emit row ids as the column's values
-        require(i >= 0, s"outField $cn not among wanted columns $wanted")
-        i
-    }.toArray
-    closeOnExhaust(reader, (0 until n).iterator.map { i =>
-      val arr = new Array[Any](srcIdx.length)
-      var f = 0
-      while (f < srcIdx.length) {
-        arr(f) = if (srcIdx(f) < 0) u.globalOffset + locals(i)
-          else cursors(srcIdx(f)).get(locals(i))
-        f += 1
-      }
-      new GenericInternalRow(arr)
-    })
-  }
-
-  /** Decode a SelIds unit, writing each output row into `slots` at its
-    * selection POSITION (the SelIds `pos` contract) — the ordered-scan
-    * reader's scatter-back: ids arrive in value order with pos = 0..B-1,
-    * chunks decode once in disk order, rows land value-ordered. Row layout
-    * follows `outFields` exactly (no leading id/pos fields).
-    */
-  def decodeUnitSlotted(u: DecodeUnit, spec: TableSpec, wanted: Seq[String],
-      outFields: Seq[String], slots: Array[InternalRow]): Unit = {
-    val (locals, positions) = selectedLocals(u)
-    if (locals.isEmpty) return
-    require(positions != null, "decodeUnitSlotted requires a SelIds selection")
-    val reader = new BlobReader(u.root, u.segment)
-    try {
-      val cursors = wanted.map(cn =>
-        new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = true)).toArray
-      val srcIdx = outFields.map {
-        case "_row_id" => -1
-        case cn =>
-          val i = wanted.indexOf(cn)
-          require(i >= 0, s"outField $cn not among wanted columns $wanted")
-          i
-      }.toArray
-      var i = 0
-      while (i < locals.length) {
-        val arr = new Array[Any](srcIdx.length)
-        var f = 0
-        while (f < srcIdx.length) {
-          arr(f) = if (srcIdx(f) < 0) u.globalOffset + locals(i)
-            else cursors(srcIdx(f)).get(locals(i))
-          f += 1
-        }
-        slots(positions(i).toInt) = new GenericInternalRow(arr)
-        i += 1
-      }
-    } finally reader.close()
-  }
-
-  def decodeUnit(u: DecodeUnit, spec: TableSpec,
-      wanted: Seq[String]): Iterator[Row] = {
-    val (locals, positions) = selectedLocals(u)
-    if (locals.isEmpty) return Iterator.empty
-    val n = locals.length
-    val reader = new BlobReader(u.root, u.segment)
-    val cursors = wanted.map(cn =>
-      new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = false)).toArray
-    val hasPos = positions != null
-    closeOnExhaust(reader, (0 until n).iterator.map { i =>
-      val base = mutable.ArrayBuffer[Any](u.globalOffset + locals(i))
-      if (hasPos) base += positions(i)
-      var c = 0
-      while (c < cursors.length) { base += cursors(c).get(locals(i)); c += 1 }
-      Row.fromSeq(base.toSeq)
-    })
   }
 }

@@ -4,19 +4,30 @@ import graft.codec.{Bytes, PType}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** On-disk format of a graft column store (SURVEY.md §1.3 mapping).
+/** On-disk format of a graft column store (SURVEY.md §1.3 mapping). This
+  * is the only layout readers accept: every metadata file below is read
+  * at exactly its current version, and anything else fails with one
+  * `unsupported graft format version` error naming the file.
   *
   * ```
   * root/
   *   _schema.bin                 # TableSpec (columns, chunking config)
   *   _meta/<name>.bin            # Meta entries (string map, pycolumns Meta)
-  *   segments/seg<N>/            # one segment per create/append (immutable)
-  *     p<i>.<col>.bin            # column chunk blobs, partition i, base
-  *     p<i>.<col>.c<j>.v<k>.bin  # copy-on-write updated chunk j, version k
-  *     p<i>.manifest.bin         # per-partition manifest == resume checkpoint
-  *     p<i>.manifest.v<k>.bin    # manifest after update round k
-  *     _commit.bin               # segment commit record (global row offsets)
-  *   index/<col>/                # sorted index table (parquet) + meta
+  *   segments/
+  *     .commit-<n>-<seg>         # empty marker: publishes seg as commit n
+  *     seg<N>/                   # one segment per create/append (immutable)
+  *       _claim.bin              # writer identity + claim state
+  *       p<i>.<col>.bin          # column chunk blobs, partition i, base
+  *       p<i>.<col>.c<j>.v<k>.bin  # copy-on-write updated chunk j, version k
+  *       p<i>.<col>.g<k>.bin     # vacuum generation file at version k
+  *       p<i>.manifest.bin       # per-partition manifest == resume checkpoint
+  *       p<i>.manifest.v<k>.bin  # manifest after update/vacuum round k
+  *       _manifest.bin           # every partition's v0 manifest, part order
+  *       _commit.bin             # segment commit record (rows per partition)
+  *   index/<col>/                # secondary index of one column
+  *     _meta-<epoch>-<uuid>.bin  # index meta; the highest epoch wins
+  *     _base-<uuid>/             # base sort (parquet)
+  *     _gen-<uuid>/              # delta generations (parquet)
   *   <name>.cols/                # nested sub-table (own independent store)
   * ```
   *
@@ -39,7 +50,7 @@ object Format {
     * SEGMENT instead of a list+read per partition.
     */
   final val SegManifestFile = "_manifest.bin"
-  /** v2 adds per-column compression/chunking config; v1 stores readable. */
+  /** Schema layout version: the one `_schema.bin` version readers accept. */
   final val FormatVersion = 2
 
   def segDir(root: String, seg: Long): String = s"$root/$SegmentsDir/seg$seg"
@@ -83,8 +94,7 @@ final case class ColumnSpec(
 final case class TableSpec(
     columns: Seq[ColumnSpec],
     targetChunkBytes: Long = 1L << 20, // reference default '1m', defaults.py:23
-    chunkRows: Int = 0,                // 0 = derive from targetChunkBytes
-    formatVersion: Int = Format.FormatVersion) {
+    chunkRows: Int = 0) {              // 0 = derive from targetChunkBytes
   def col(name: String): ColumnSpec =
     columns.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no such column: $name"))
@@ -115,13 +125,13 @@ final case class ChunkMeta(
     minBits: Long = 0L,
     maxBits: Long = 0L,
     /** sumKind 1 = exact integer sum of the chunk's values in sumBits
-      * (manifest v3) — lets unfiltered SUM answer metadata-only; 0 = none.
+      * — lets unfiltered SUM answer metadata-only; 0 = none.
       */
     sumKind: Int = 0,
     sumBits: Long = 0L,
     /** filterKind 1 = a MemberFilter (split-block bloom over the chunk's
       * distinct values) lives at [filterOffset, filterOffset+filterBytes)
-      * of `file` (manifest v4); 0 = none. Equality/IN probes test it
+      * of `file`; 0 = none. Equality/IN probes test it
       * before decoding — the filter blob itself stays OUT of the manifest
       * so planning metadata remains O(chunks), not O(distinct values).
       */
@@ -139,17 +149,14 @@ final case class PartManifest(
     updateVersion: Int,
     chunks: Seq[ChunkMeta])
 
+/** Segment commit record. It is not the publication: a segment becomes
+  * visible only when its `.commit-<n>-<seg>` marker exists (see
+  * ColumnStore.commitSegment).
+  */
 final case class SegmentCommit(
     segment: Long,
     partRows: Seq[Long], // rows per partition, ordered by partition id
-    lineage: String,
-    /** v2: visibility requires a `.commit-<n>` marker in the segments dir
-      * (the marker's create-exclusive write is BOTH the commit-order
-      * sequence allocation and the atomic publication — see
-      * ColumnStore.commitSegment). Legacy (v1) commits are visible by the
-      * record alone and order by segment number.
-      */
-    markered: Boolean = false) {
+    lineage: String) {
   def totalRows: Long = partRows.sum
 }
 
@@ -185,9 +192,18 @@ object BinCodec {
     w.result()
   }
 
-  def readTableSpec(b: Array[Byte]): TableSpec = {
+  /** The one error every metadata reader raises for bytes in any layout
+    * but the current one: stores written by older builds are not readable.
+    */
+  def unsupported(file: String, found: String): Nothing =
+    throw new IllegalStateException(
+      s"unsupported graft format version in $file: found $found, " +
+        "this build reads only the current layout")
+
+  def readTableSpec(b: Array[Byte], file: String): TableSpec = {
     val r = new Reader(b)
-    val ver = r.readVar().toInt
+    val ver = r.readVar()
+    if (ver != Format.FormatVersion) unsupported(file, s"schema v$ver")
     val tcb = r.readVar()
     val cr = r.readVar().toInt
     val n = r.readVar().toInt
@@ -197,21 +213,24 @@ object BinCodec {
       val fw = r.readVar().toInt
       val fill = if (r.readByte() == 1) Some(rStr(r)) else None
       val seg = r.readVar()
-      val (comp, cb, ccr) =
-        if (ver >= 2) {
-          val comp = if (r.readByte() == 1) Some(rStr(r)) else None
-          (comp, r.readVar(), r.readVar().toInt)
-        } else (None, 0L, 0)
-      ColumnSpec(name, pt, fw, fill, seg, comp, cb, ccr)
+      val comp = if (r.readByte() == 1) Some(rStr(r)) else None
+      ColumnSpec(name, pt, fw, fill, seg, comp, r.readVar(), r.readVar().toInt)
     }
-    TableSpec(cols, tcb, cr, ver)
+    TableSpec(cols, tcb, cr)
   }
 
-  /** Leading sentinel distinguishing versioned part manifests from the
-    * legacy (v2) layout, whose first varint is the segment number — real
-    * segments are small, so this value can never collide.
+  /** Leading sentinel of part manifests and commit records, followed by
+    * the layout version.
     */
   private final val ManifestMagic = 0x67726674aaL // "grft" + noise
+
+  /** Read the magic + version header; anything else is unsupported. */
+  private def header(r: Reader, ver: Long, what: String, file: String): Unit = {
+    val first = r.readVar()
+    val found = if (first == ManifestMagic) r.readVar() else -1L
+    if (found != ver)
+      unsupported(file, if (found < 0) s"$what without a version header" else s"$what v$found")
+  }
 
   def writePartManifest(m: PartManifest): Array[Byte] = {
     val w = new Writer()
@@ -237,24 +256,18 @@ object BinCodec {
     w.result()
   }
 
-  def readPartManifest(b: Array[Byte]): PartManifest = {
+  def readPartManifest(b: Array[Byte], file: String): PartManifest = {
     val r = new Reader(b)
-    val first = r.readVar()
-    val ver = if (first == ManifestMagic) r.readVar().toInt else { r.pos = 0; 2 }
+    header(r, 4L, "part manifest", file)
     val seg = r.readVar(); val part = r.readVar().toInt; val nrows = r.readVar()
     val el = r.readLE64(); val lin = rStr(r)
     val uv = r.readVar().toInt
     val n = r.readVar().toInt
     val chunks = (0 until n).map { _ =>
-      val base = ChunkMeta(rStr(r), r.readVar().toInt, r.readVar(), r.readVar().toInt,
+      ChunkMeta(rStr(r), r.readVar().toInt, r.readVar(), r.readVar().toInt,
         r.readVar().toInt, r.readVar().toInt, rStr(r), r.readVar(), r.readVar(),
-        r.readVar(), r.readLE64(), r.readVar().toInt, r.readLE64(), r.readLE64())
-      val v3 =
-        if (ver >= 3) base.copy(sumKind = r.readVar().toInt, sumBits = r.readLE64())
-        else base
-      if (ver >= 4) v3.copy(filterKind = r.readVar().toInt,
-        filterOffset = r.readVar(), filterBytes = r.readVar())
-      else v3
+        r.readVar(), r.readLE64(), r.readVar().toInt, r.readLE64(), r.readLE64(),
+        r.readVar().toInt, r.readLE64(), r.readVar().toInt, r.readVar(), r.readVar())
     }
     PartManifest(seg, part, nrows, el, lin, uv, chunks)
   }
@@ -269,10 +282,10 @@ object BinCodec {
     w.result()
   }
 
-  def readSegManifest(b: Array[Byte]): IndexedSeq[PartManifest] = {
+  def readSegManifest(b: Array[Byte], file: String): IndexedSeq[PartManifest] = {
     val r = new Reader(b)
     val n = r.readVar().toInt
-    (0 until n).map(_ => readPartManifest(r.readBytes(r.readVar().toInt)))
+    (0 until n).map(_ => readPartManifest(r.readBytes(r.readVar().toInt), file))
   }
 
   def writeSegmentCommit(c: SegmentCommit): Array[Byte] = {
@@ -282,20 +295,17 @@ object BinCodec {
     w.writeVar(c.partRows.size.toLong)
     c.partRows.foreach(w.writeVar)
     wStr(w, c.lineage)
-    w.writeByte(if (c.markered) 1 else 0)
+    w.writeByte(1) // "published by marker": the only kind of commit there is
     w.result()
   }
 
-  def readSegmentCommit(b: Array[Byte]): SegmentCommit = {
+  def readSegmentCommit(b: Array[Byte], file: String): SegmentCommit = {
     val r = new Reader(b)
-    val first = r.readVar()
-    val ver = if (first == ManifestMagic) r.readVar().toInt else { r.pos = 0; 1 }
+    header(r, 2L, "segment commit", file)
     val seg = r.readVar()
     val n = r.readVar().toInt
     val rows = (0 until n).map(_ => r.readVar())
-    val lin = rStr(r)
-    val markered = ver >= 2 && r.readByte() == 1
-    SegmentCommit(seg, rows, lin, markered)
+    SegmentCommit(seg, rows, rStr(r))
   }
 
 }
@@ -341,6 +351,10 @@ object FsIO {
   private def crcSibling(p: java.nio.file.Path): java.nio.file.Path =
     p.resolveSibling("." + p.getFileName.toString + ".crc")
 
+  /** Hadoop create() makes parent dirs implicitly; the nio writes match. */
+  private def createParent(p: java.nio.file.Path): Unit =
+    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+
   private def isCrcSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(".crc")
 
@@ -378,6 +392,7 @@ object FsIO {
   def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
     val lp = localOf(path)
     if (lp != null) {
+      createParent(lp)
       val tmp = lp.resolveSibling(
         lp.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
       java.nio.file.Files.write(tmp, bytes)
@@ -561,9 +576,7 @@ object FsIO {
     val lp = localOf(path)
     if (lp == null) return fs(path).create(new Path(path), true)
     val bytesPerSum = conf.getInt("file.bytes-per-checksum", 512)
-    // Hadoop create() makes parent dirs implicitly; match that
-    val parent = lp.getParent
-    if (parent != null) java.nio.file.Files.createDirectories(parent)
+    createParent(lp)
     val dataOut = java.nio.file.Files.newOutputStream(lp)
     new java.io.BufferedOutputStream(dataOut, 1 << 16) {
       private val crc = new java.util.zip.CRC32()

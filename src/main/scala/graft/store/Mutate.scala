@@ -288,7 +288,7 @@ object Mutate {
     }
     val colCfg = CodecConfig.forColumn(cfg, spec.col(t.colName).compression)
     val replaced = byChunk.map { case (cm, (idxB, vals)) =>
-      val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+      val blob = readChunk(dir, cm)
       val pt = spec.col(t.colName).ptype
       val any = vecToAny(Chunk.decode(blob))
       val idx = idxB.result()
@@ -400,8 +400,17 @@ object Mutate {
         n.stripPrefix(s"$base.v").stripSuffix(".bin").toIntOption
       else None
     }
-    BinCodec.readPartManifest(
-      FsIO.readAll(s"$dir/${Format.partManifestFile(part, vers.max)}"))
+    val file = s"$dir/${Format.partManifestFile(part, vers.max)}"
+    BinCodec.readPartManifest(FsIO.readAll(file), file)
+  }
+
+  /** A chunk blob a rewrite copies, checked against its manifest CRC: a
+    * corrupt source fails the update or vacuum before anything publishes.
+    */
+  private def readChunk(dir: String, cm: ChunkMeta): Array[Byte] = {
+    val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+    Decode.verifyChunk(cm, blob)
+    blob
   }
 
   // ---------------------------------------------------------------- vacuum
@@ -452,7 +461,7 @@ object Mutate {
       var offset = 0L
       try {
         m.chunks.filter(_.column == cs.name).sortBy(_.rowStartLocal).foreach { cm =>
-          val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+          val blob = readChunk(dir, cm)
           out.write(blob)
           // carry the membership filter into the generation file — losing
           // it on vacuum would silently disable point-lookup pruning

@@ -41,27 +41,12 @@ object StreamingIngest {
     Option(df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"))
       .getOrElse("")
 
-  /** foreachBatch sink function.
-    *
-    * `legacyLineageCompat`: opt-in for ONE restart of a query whose store
-    * was written by the pre-queryId lineage format — its replayed last
-    * batch then matches the old `stream-batch:<id>` record instead of
-    * appending twice. It must NOT stay on (and is off by default) because
-    * the legacy key cannot distinguish queries: a NEW query writing into a
-    * store holding legacy commits would silently DROP its early batches as
-    * "already committed" — losing a batch is strictly worse than the one
-    * duplicate the flag prevents.
-    */
+  /** foreachBatch sink function. */
   def sink(c: Columns, order: OrderMode = graft.store.AsIs,
-      cfg: CodecConfig = CodecConfig.default,
-      legacyLineageCompat: Boolean = false): (DataFrame, Long) => Unit = {
+      cfg: CodecConfig = CodecConfig.default): (DataFrame, Long) => Unit = {
     (df: DataFrame, batchId: Long) =>
       val lineage = lineageFor(activeQueryId(df), batchId)
-      val legacy = s"stream-batch:$batchId"
-      val committed = c.store.segments.exists { s =>
-        val l = c.store.segmentCommit(s).lineage
-        l == lineage || (legacyLineageCompat && l == legacy)
-      }
+      val committed = c.store.segments.exists(c.store.segmentCommit(_).lineage == lineage)
       if (!committed) c.append(df, order, lineage, cfg)
   }
 }

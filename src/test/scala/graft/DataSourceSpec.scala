@@ -296,11 +296,12 @@ class DataSourceSpec extends AnyFunSuite {
     val factory = scan.createReaderFactory()
     val skippedBefore = graft.store.Decode.chunksFilterSkipped.get()
     val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
+      val r = factory.createColumnarReader(p)
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
       while (r.next()) {
-        val row = r.get()
-        buf += ((row.getUTF8String(0).toString, row.getLong(1)))
+        r.get().rowIterator().forEachRemaining { row =>
+          buf += ((row.getUTF8String(0).toString, row.getLong(1)))
+        }
       }
       r.close()
       buf
@@ -439,6 +440,73 @@ class DataSourceSpec extends AnyFunSuite {
     c.dropStore()
   }
 
+  test("plain, filtered, count(*) and micro-batch scans all plan columnar") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
+    val c = mk(400)
+    def scans(p: SparkPlan): Seq[DataSourceV2ScanExecBase] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case b: DataSourceV2ScanExecBase => Seq(b)
+      case o => o.children.flatMap(scans)
+    }
+    def columnar(plan: SparkPlan): Boolean = {
+      val ss = scans(plan)
+      ss.nonEmpty && ss.forall(_.supportsColumnar)
+    }
+    def batchColumnar(df: org.apache.spark.sql.DataFrame, rows: Long): Boolean = {
+      assert(df.collect().length == rows)
+      columnar(df.queryExecution.executedPlan)
+    }
+    val df = spark.read.format("graft").load(c.root)
+    assert(batchColumnar(df, 400), "plain scan")
+    assert(batchColumnar(df.where(col("id") >= 100L && col("id") < 120L), 20), "filtered scan")
+    // the limit keeps the count from being answered by metadata: the scan
+    // reads an empty projection
+    val counted = df.limit(50).groupBy().count()
+    assert(batchColumnar(counted, 1) && counted.head().getLong(0) == 50L, "count(*)")
+    val q = spark.readStream.format("graft").load(c.root)
+      .writeStream.format("memory").queryName("graft_columnar_tail")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+      assert(columnar(exec.executedPlan), s"micro-batch scan:\n${exec.executedPlan}")
+      assert(spark.table("graft_columnar_tail").count() == 400)
+    } finally q.stop()
+    c.dropStore()
+  }
+
+  test("a failed index consult is not cached: the next planning routes") {
+    // values scattered over row order: zone maps cannot prune an equality,
+    // only the index can
+    val n = 4000
+    val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
+    val df0 = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until n).map(i => Row((i * 7919L) % n)), 4), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-ircache"), df0, chunkRows = 50)
+    c("v").createIndex()
+    def plannedChunks(): Int = {
+      val b = new graft.sources.GraftScanBuilder(c.root)
+      b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("v", 1234L)))
+      b.build().asInstanceOf[graft.sources.GraftScan].planInputPartitions()
+        .map(_.asInstanceOf[graft.sources.GraftInputPartition]
+          .unit.colChunks.valuesIterator.map(_.size).sum).sum
+    }
+    // the consult throws once: the base sort is briefly unreadable
+    val base = graft.index.Index.basePath(c.store, "v")
+    val aside = s"${c.root}/base-aside"
+    graft.store.FsIO.rename(base, aside)
+    val unrouted = try plannedChunks() finally graft.store.FsIO.rename(aside, base)
+    assert(unrouted == n / 50, s"fallback plans every chunk, planned $unrouted")
+    // same query, same store state: the consult reruns and prunes
+    val routed = plannedChunks()
+    assert(routed <= 3, s"index route should plan one granule's chunks, planned $routed")
+    c.dropStore()
+  }
+
   test("IN-list envelope extremes are type-exact (no Double-key collisions)") {
     import graft.store.{SelAll, SelRange, SelRanges}
     import org.apache.spark.sql.sources
@@ -571,9 +639,9 @@ class DataSourceSpec extends AnyFunSuite {
     // the surviving chunks still cover every requested row
     val rows = after.flatMap { p =>
       val gp = p.asInstanceOf[graft.sources.GraftInputPartition]
-      val it = graft.store.Decode.decodeUnitInternal(gp.unit, gp.spec, gp.wanted,
-        gp.outFields)
-      it.map(_.getLong(gp.outFields.indexOf("id"))).toSeq
+      val r = new graft.store.Decode.ColumnarUnitReader(gp.unit, gp.spec, gp.outFields)
+      try r.rows.map(_.getLong(gp.outFields.indexOf("id"))).toVector
+      finally r.close()
     }.toSet
     assert(Set(100L, 105L, 2000L).subsetOf(rows))
     // end-to-end: a broadcast join over the store stays exact with the

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * defaults, per-column resolution — here exact serialization equality).
   */
 class FormatSpec extends AnyFunSuite {
+  import SparkTestBase.{assertUnsupported, tmpDir}
 
   test("createOut sidecar is Hadoop-ChecksumFileSystem compatible (verify + corruption)") {
     val base = s"/tmp/graft-crc-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -52,7 +53,7 @@ class FormatSpec extends AnyFunSuite {
       ColumnSpec("c", PType.F32.id, fill = Some("9.5"), addedAtSegment = 3L),
       ColumnSpec("d", PType.I32LIST.id)),
       targetChunkBytes = 123456L, chunkRows = 789)
-    assert(BinCodec.readTableSpec(BinCodec.writeTableSpec(spec)) == spec)
+    assert(BinCodec.readTableSpec(BinCodec.writeTableSpec(spec), "spec") == spec)
   }
 
   test("PartManifest round trip incl. chunk stats") {
@@ -60,25 +61,26 @@ class FormatSpec extends AnyFunSuite {
       ChunkMeta("a", 0, 0L, 500, 4, 1, "p7.a.bin", 0L, 999L, 4000L, 0xdeadL, 1, -5L, 42L),
       ChunkMeta("a", 1, 500L, 500, 9, 0, "p7.a.c1.v3.bin", 0L, 1L, 2L, 3L, 2,
         java.lang.Double.doubleToLongBits(-1.5), java.lang.Double.doubleToLongBits(2.5))))
-    assert(BinCodec.readPartManifest(BinCodec.writePartManifest(m)) == m)
+    assert(BinCodec.readPartManifest(BinCodec.writePartManifest(m), "m") == m)
   }
 
   test("PartManifest v4 round trip incl. membership-filter location") {
     val m = PartManifest(1L, 0, 100L, 7L, "x", 0, Seq(
       ChunkMeta("k", 0, 0L, 100, 2, 1, "p0.k.bin", 0L, 50L, 400L, 0x1L,
         3, 11L, 22L, 0, 0L, filterKind = 1, filterOffset = 50L, filterBytes = 130L)))
-    assert(BinCodec.readPartManifest(BinCodec.writePartManifest(m)) == m)
+    assert(BinCodec.readPartManifest(BinCodec.writePartManifest(m), "m") == m)
   }
 
-  test("v3 manifest bytes (no filter fields) read with filterKind 0") {
-    // hand-write the v3 layout: magic, ver 3, header, one chunk WITHOUT the
-    // v4 filter triple — a round-4 store must keep reading
+  /** A hand-written manifest of an older layout: v3 (magic, version 3,
+    * chunks without the filter triple) or v2 (no magic/version header).
+    */
+  private def oldManifest(ver: Int): Array[Byte] = {
     import graft.codec.Bytes
     val w = new Bytes.Writer()
     def wStr(s: String): Unit = {
       val b = s.getBytes("UTF-8"); w.writeVar(b.length.toLong); w.writeBytes(b)
     }
-    w.writeVar(0x67726674aaL); w.writeVar(3L)
+    if (ver == 3) { w.writeVar(0x67726674aaL); w.writeVar(3L) }
     w.writeVar(2L); w.writeVar(7L); w.writeVar(1000L)
     w.writeLE64(5L); wStr("lineage"); w.writeVar(0L)
     w.writeVar(1L) // one chunk
@@ -86,17 +88,47 @@ class FormatSpec extends AnyFunSuite {
     w.writeVar(4L); w.writeVar(1L); wStr("p7.a.bin"); w.writeVar(0L)
     w.writeVar(999L); w.writeVar(4000L); w.writeLE64(0xdeadL)
     w.writeVar(1L); w.writeLE64(-5L); w.writeLE64(42L)
-    w.writeVar(1L); w.writeLE64(12345L) // v3 sum
-    val m = BinCodec.readPartManifest(w.result())
-    val cm = m.chunks.head
-    assert(cm.sumKind == 1 && cm.sumBits == 12345L)
-    assert(cm.filterKind == 0 && cm.filterOffset == 0L && cm.filterBytes == 0L,
-      "v3 chunks must read as filter-less")
+    if (ver == 3) { w.writeVar(1L); w.writeLE64(12345L) } // v3 sum
+    w.result()
+  }
+
+  test("part manifest v2/v3 fails with unsupported graft format version") {
+    assertUnsupported("seg2/p7.manifest.bin") {
+      BinCodec.readPartManifest(oldManifest(3), "seg2/p7.manifest.bin")
+    }
+    assertUnsupported("seg2/p7.manifest.bin") {
+      BinCodec.readPartManifest(oldManifest(2), "seg2/p7.manifest.bin")
+    }
+    val seg = BinCodec.writeSegManifest(Seq(oldManifest(3)))
+    assertUnsupported("seg2/_manifest.bin") {
+      BinCodec.readSegManifest(seg, "seg2/_manifest.bin")
+    }
+  }
+
+  test("segment commit v1 fails with unsupported graft format version") {
+    // v1: no magic/version header, no marker byte
+    val w = new graft.codec.Bytes.Writer()
+    w.writeVar(5L); w.writeVar(1L); w.writeVar(10L)
+    val lin = "x".getBytes("UTF-8")
+    w.writeVar(lin.length.toLong); w.writeBytes(lin)
+    assertUnsupported("seg5/_commit.bin") {
+      BinCodec.readSegmentCommit(w.result(), "seg5/_commit.bin")
+    }
+  }
+
+  test("local writeAtomic creates missing parent directories") {
+    val base = tmpDir("graft-wa")
+    val path = s"$base/a/b/f.bin"
+    FsIO.writeAtomic(path, Array[Byte](1, 2, 3))
+    assert(FsIO.readAll(path).toSeq == Seq[Byte](1, 2, 3))
+    FsIO.delete(base, recursive = true)
   }
 
   test("SegmentCommit and Meta round trip") {
     val c = SegmentCommit(5L, Seq(10L, 0L, 33L), "stream-batch:9")
-    assert(BinCodec.readSegmentCommit(BinCodec.writeSegmentCommit(c)) == c)
+    val bytes = BinCodec.writeSegmentCommit(c)
+    assert(BinCodec.readSegmentCommit(bytes, "c") == c)
+    assert(bytes.last == 1, "commit records keep their trailing published byte")
     val meta = JObj("名前" -> JStr("value with\nnewline\"quotes\"bell"),
       "" -> JStr(""), "k" -> Json.arr(Json.num(-12L), Json.num(3.5),
         JNull, JBool(false), JObj("nested" -> Json.num(Long.MaxValue))))

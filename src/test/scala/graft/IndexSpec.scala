@@ -404,6 +404,19 @@ class IndexSpec extends AnyFunSuite {
     c.dropStore()
   }
 
+  test("stamp-less index meta fails with unsupported graft format version") {
+    val (c, _) = mkQueryStore()
+    val d = Index.dir(c.store, "id")
+    // the meta older builds wrote: row count only, base sort at the dir root
+    val w = new graft.codec.Bytes.Writer(); w.writeVar(20L)
+    val meta = f"$d/_meta-${1L << 40}%019d-ffffffffffff.bin" // the winning epoch
+    graft.store.FsIO.writeAtomic(meta, w.result())
+    assertUnsupported(meta)(Index.builtRows(c.store, "id"))
+    // a scan never routes through an index it cannot read
+    assert(!Index.routableFor(c.store, "id"))
+    c.dropStore()
+  }
+
   test("indexed query feeds gather (entry point B, SURVEY.md §3.2)") {
     val (c, data) = mkQueryStore()
     val ids = RowIds.and(c("id") > 5L, c("rand") > 10f)

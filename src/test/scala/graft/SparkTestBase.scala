@@ -17,6 +17,14 @@ object SparkTestBase {
     s
   }
 
+  /** `read` must fail with the one unsupported-format error, naming `file`. */
+  def assertUnsupported(file: String)(read: => Any): Unit = {
+    val e = org.scalatest.Assertions.intercept[IllegalStateException](read)
+    org.scalatest.Assertions.assert(
+      e.getMessage.contains("unsupported graft format version") &&
+        e.getMessage.contains(file), e.getMessage)
+  }
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.delete()

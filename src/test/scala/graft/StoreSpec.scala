@@ -365,8 +365,7 @@ class StoreSpec extends AnyFunSuite {
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
     val markers = FsIO.list(segsDir).filter(_.startsWith(".commit-"))
     // v3 markers carry the segment in the NAME (atomic single-name publish)
-    val seg1Marker = markers.find(m =>
-      ColumnStore.markerParts(m)._2.contains(1L)).get
+    val seg1Marker = markers.find(m => ColumnStore.markerParts(segsDir, m)._2 == 1L).get
     FsIO.delete(s"$segsDir/$seg1Marker")
     st.invalidateAll()
     assert(st.nrows == 100, "unmarkered commit must be invisible")
@@ -381,23 +380,46 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
-  test("legacy payload-only .commit-<n> markers still order segments (v2 compat)") {
+  test("payload-only .commit-<n> marker fails with unsupported graft format version") {
     val (st, _) = mkStore(100)
-    st.append(spark, refDf(refData(50, seed = 31L), 2), AsIs, lineage = "t:legacy")
-    st.invalidateAll()
-    assert(st.segments == Seq(0L, 1L) && st.nrows == 150)
-    // rewrite seg 1's v3 name-encoded marker as a legacy payload marker
+    // the marker older builds wrote: the segment lives in the payload
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
-    val v3 = FsIO.list(segsDir).filter(_.startsWith(".commit-"))
-      .find(m => ColumnStore.markerParts(m)._2.contains(1L)).get
-    val n = ColumnStore.markerParts(v3)._1
-    val w = new graft.codec.Bytes.Writer(); w.writeVar(1L)
-    FsIO.delete(s"$segsDir/$v3")
-    FsIO.writeAtomic(s"$segsDir/.commit-$n", w.result())
+    val w = new graft.codec.Bytes.Writer(); w.writeVar(0L)
+    FsIO.writeAtomic(s"$segsDir/.commit-7", w.result())
     st.invalidateAll()
-    assert(st.segments == Seq(0L, 1L) && st.nrows == 150,
-      "legacy marker must publish identically")
-    st.verify()
+    assertUnsupported(s"$segsDir/.commit-7")(st.segments)
+    st.dropStore()
+  }
+
+  test("vacuum and update verify copied chunk bytes against the manifest CRC") {
+    val (st, _) = mkStore(400, chunkRows = 50, parts = 2)
+    Mutate.update(spark, st, "rand", Array(5L), Array(0.5f: Any))
+    val seg = st.segments.head
+    val m = st.partManifests(seg).find(_.updateVersion > 0).get
+    // flip one byte inside a chunk every vacuum of this partition copies
+    val cm = m.chunks.filter(_.column == "scol").maxBy(_.rowStartLocal)
+    val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
+    try {
+      val at = cm.offset + cm.nbytes / 2
+      raf.seek(at)
+      val b = raf.read()
+      raf.seek(at)
+      raf.write(b ^ 0x40)
+    } finally raf.close()
+    def failsOnCrc(op: => Any): Unit = {
+      val e = intercept[Exception](op)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage))
+      assert(msgs.exists(_.contains("chunk CRC mismatch")), e.toString)
+      st.invalidateManifests()
+      assert(st.partManifest(seg, m.part).updateVersion == m.updateVersion,
+        "a failed copy must not publish a new manifest")
+    }
+    failsOnCrc(Mutate.vacuum(spark, st))
+    // an update that rewrites the corrupted chunk fails the same way
+    val off = st.partOffsets().find(o => o._1 == seg && o._2 == m.part).get._3
+    failsOnCrc(Mutate.update(spark, st, "scol", Array(off + cm.rowStartLocal),
+      Array("x": Any)))
     st.dropStore()
   }
 
@@ -500,8 +522,10 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
-  test("format v1 schema still readable (forward-written v2 fields optional)") {
-    // simulate a v1 writer: serialize WITHOUT the v2 per-column fields
+  test("schema v1 fails with unsupported graft format version") {
+    val root = tmpDir("graft-v1")
+    ColumnStore.create(root, ColumnStore.specFromSchema(schema))
+    // the v1 layout: no per-column compression/chunking fields
     val w = new graft.codec.Bytes.Writer()
     def wStr(s: String): Unit = {
       val b = s.getBytes("UTF-8"); w.writeVar(b.length.toLong); w.writeBytes(b)
@@ -510,9 +534,34 @@ class StoreSpec extends AnyFunSuite {
     w.writeVar(1L << 20); w.writeVar(0L); w.writeVar(1L)
     wStr("x"); w.writeVar(PType.I64.id.toLong); w.writeVar(0L)
     w.writeByte(0); w.writeVar(0L)
-    val t = BinCodec.readTableSpec(w.result())
-    assert(t.columns == Seq(ColumnSpec("x", PType.I64.id)))
-    assert(t.formatVersion == 1)
+    FsIO.writeAtomic(s"$root/${Format.SchemaFile}", w.result())
+    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).spec)
+    FsIO.delete(root, recursive = true)
+  }
+
+  test("id gathers and negative steps read list, string and int columns (TokenGen)") {
+    val n = 600L
+    val c = graft.api.Columns.fromDataFrame(spark, tmpDir("graft-tokread"),
+      graft.gen.TokenGen.dataset(spark, n, 3).toDF(), ByKey("doc_id", 3), chunkRows = 40)
+    // ByKey(doc_id): row id i holds generator row i
+    def check(rows: graft.api.Rows, expect: Seq[Long]): Unit = {
+      val out = c.read(Seq("tokens", "doc_id", "n_tok"), rows)
+        .collect().sortBy(_.getLong(1)) // _pos = request order
+      assert(out.map(_.getLong(0)).toSeq == expect)
+      out.foreach { r =>
+        val g = graft.gen.TokenGen.row(42L, r.getLong(0))
+        assert(r.getSeq[Int](2).toArray.sameElements(g.tokens), s"tokens of ${g.doc_id}")
+        assert(r.getString(3) == g.doc_id)
+        assert(r.getInt(4) == g.n_tok, s"n_tok of ${g.doc_id}")
+      }
+    }
+    // repeated and descending ids; in chunk [40, 80) the five ids 43..47,
+    // with a repeat and a gap, span five rows — not a contiguous run
+    val ids = Seq(47L, 45L, 44L, 44L, 43L, 599L, 7L, 7L, 0L, 320L, 319L, 39L, 7L)
+    check(graft.api.RowList(ids), ids)
+    check(graft.api.Slice(590, 10, -7), 590L to 11L by -7L)
+    check(graft.api.Slice(step = -1), (n - 1) to 0L by -1L)
+    c.dropStore()
   }
 
   test("meta entries: arbitrary nested JSON, write/read/update (S10)") {
