@@ -565,24 +565,22 @@ object SparkEntry {
       // checkpoint materializes once and every pass plans from the
       // truncated relation (rows identical)
       val corpus = annCorpus(s, dir).localCheckpoint()
-      try {
-        val q = corpus.where(col("vec_id") === 0)
-          .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-        // 16 tables suffice here: the top-5 sit at cos >= 0.995 where the
-        // per-table hit rate is ~0.64 -> miss ~(0.36)^16 ~ 1e-7
-        val sigs = Similarity.signatureTable(s, corpus, tables = 16)
-        val lsh = Similarity.lshTopK(s, corpus, q, 5, tables = 16, sigs = Some(sigs))
-          .select(col("rank").cast("long").as("rank"), col("vec_id")).orderBy("rank")
-        val brute = Similarity.cosineTopK(s, corpus, q, 5)
-          .select(col("rank").cast("long").as("rank"), col("vec_id")).orderBy("rank")
-        val l = lsh.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val b = brute.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        require(l == b, s"LSH top-5 $l != exact top-5 $b (recall@5 < 1)")
-        val rows: java.util.List[Row] =
-          java.util.Arrays.asList(l.map { case (r, v) => Row(r, v) }: _*)
-        s.createDataFrame(rows, StructType(Seq(
-          StructField("rank", LongType), StructField("vec_id", LongType))))
-      } finally { corpus.unpersist(); () }
+      val q = corpus.where(col("vec_id") === 0)
+        .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
+      // 16 tables suffice here: the top-5 sit at cos >= 0.995 where the
+      // per-table hit rate is ~0.64 -> miss ~(0.36)^16 ~ 1e-7
+      val sigs = Similarity.signatureTable(s, corpus, tables = 16)
+      val lsh = Similarity.lshTopK(s, corpus, q, 5, tables = 16, sigs = Some(sigs))
+        .select(col("rank").cast("long").as("rank"), col("vec_id")).orderBy("rank")
+      val brute = Similarity.cosineTopK(s, corpus, q, 5)
+        .select(col("rank").cast("long").as("rank"), col("vec_id")).orderBy("rank")
+      val l = lsh.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val b = brute.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      require(l == b, s"LSH top-5 $l != exact top-5 $b (recall@5 < 1)")
+      val rows: java.util.List[Row] =
+        java.util.Arrays.asList(l.map { case (r, v) => Row(r, v) }: _*)
+      s.createDataFrame(rows, StructType(Seq(
+        StructField("rank", LongType), StructField("vec_id", LongType))))
     }),
     "text_token_counts" -> ((s, dir) =>
       TextStats.tokenCounts(t(s, dir, "documents"))

@@ -280,52 +280,44 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
   def gather(idsDf: DataFrame, columns: Seq[String] = Seq.empty,
       broadcastIds: Boolean = true, idCollectLimit: Int = 1 << 22,
       rangeGranule: Long = 8192L, maxRanges: Int = 1 << 20): DataFrame = {
-    // normalize to long once (an int id frame would ClassCastException in
-    // getLong below) and SNAPSHOT: the id lineage otherwise re-executes for
-    // the strategy probe, the bucket pass, and the final semi-join — and a
-    // nondeterministic source could make the pruning pass and the
-    // correctness join disagree, silently dropping rows. The snapshot is an
-    // RDD-level cache, NOT Dataset.persist: SQL cache entries sit in the
-    // CacheManager until explicitly unpersisted, so repeated large gathers
-    // would pin storage memory forever — an RDD cache is released by the
-    // ContextCleaner as soon as the caller drops the result. MEMORY_AND_DISK
-    // so eviction spills instead of forcing a (nondeterministic) recompute.
-    val normalized = idsDf.toDF("_row_id")
-      .select(col("_row_id").cast("long").as("_row_id")).distinct()
-    val idsRdd = normalized.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = spark.createDataFrame(idsRdd, normalized.schema)
-    // one job decides the strategy: collect up to limit+1 ids — if they all
-    // fit, that IS the id set (no separate count pass)
-    val firstBatch = ids.limit(idCollectLimit + 1).collect()
-    if (firstBatch.length <= idCollectLimit) {
-      val sorted = firstBatch.map(_.getLong(0)).sorted
-      idsRdd.unpersist(blocking = false) // the SelIds read has no dependency left
-      store.read(spark, columns,
-        SelIds(sorted, Array.tabulate(sorted.length)(_.toLong))).drop("_pos")
-    } else {
-      val g = math.max(1L, rangeGranule)
-      val buckets = ids
-        .select((col("_row_id") / lit(g)).cast("long").as("b"))
-        .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
-      if (buckets.length > maxRanges) {
-        val base = store.read(spark, columns, SelAll)
-        val right = if (broadcastIds) broadcast(ids) else ids
-        base.join(right, Seq("_row_id"), "left_semi")
+    Jobs.described(spark, s"gather ${if (columns.isEmpty) "*" else columns.mkString(",")}") {
+      // normalize to long once (an int id frame would ClassCastException in
+      // getLong below) and SNAPSHOT: the id lineage otherwise re-executes for
+      // the strategy probe, the bucket pass, and the final semi-join — and a
+      // nondeterministic source could make the pruning pass and the
+      // correctness join disagree, silently dropping rows. The snapshot is an
+      // RDD-level cache, NOT Dataset.persist: SQL cache entries sit in the
+      // CacheManager until explicitly unpersisted, so repeated large gathers
+      // would pin storage memory forever — an RDD cache is released by the
+      // ContextCleaner as soon as the caller drops the result. MEMORY_AND_DISK
+      // so eviction spills instead of forcing a (nondeterministic) recompute.
+      val normalized = idsDf.toDF("_row_id")
+        .select(col("_row_id").cast("long").as("_row_id")).distinct()
+      val idsRdd = normalized.rdd
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ids = spark.createDataFrame(idsRdd, normalized.schema)
+      // one job decides the strategy: collect up to limit+1 ids — if they all
+      // fit, that IS the id set (no separate count pass)
+      val firstBatch = ids.limit(idCollectLimit + 1).collect()
+      if (firstBatch.length <= idCollectLimit) {
+        val sorted = firstBatch.map(_.getLong(0)).sorted
+        idsRdd.unpersist(blocking = false) // the SelIds read has no dependency left
+        store.read(spark, columns,
+          SelIds(sorted, Array.tabulate(sorted.length)(_.toLong))).drop("_pos")
       } else {
-        val sb = buckets.sorted
-        val starts = scala.collection.mutable.ArrayBuilder.make[Long]
-        val stops = scala.collection.mutable.ArrayBuilder.make[Long]
-        var i = 0
-        while (i < sb.length) {
-          val s = sb(i) * g
-          var e = sb(i) + 1
-          while (i + 1 < sb.length && sb(i + 1) == e) { e = sb(i + 1) + 1; i += 1 }
-          starts += s; stops += e * g
-          i += 1
+        val g = math.max(1L, rangeGranule)
+        val buckets = ids
+          .select((col("_row_id") / lit(g)).cast("long").as("b"))
+          .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
+        if (buckets.length > maxRanges) {
+          val base = store.read(spark, columns, SelAll)
+          val right = if (broadcastIds) broadcast(ids) else ids
+          base.join(right, Seq("_row_id"), "left_semi")
+        } else {
+          val rs = Ranges.fromBuckets(buckets.sorted, g)
+          store.read(spark, columns, SelRanges(rs.map(_._1).toArray, rs.map(_._2).toArray))
+            .join(ids, Seq("_row_id"), "left_semi")
         }
-        store.read(spark, columns, SelRanges(starts.result(), stops.result()))
-          .join(ids, Seq("_row_id"), "left_semi")
       }
     }
   }

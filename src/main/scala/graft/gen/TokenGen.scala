@@ -1,11 +1,25 @@
 package graft.gen
 
+import graft.gen.SplitMix.mix
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Flagship input row (BASELINE.json input_hint): pre-tokenized training
   * sequences. Typed Dataset end-to-end (no RDD).
   */
 final case class TokenRow(doc_id: String, tokens: Array[Int], n_tok: Int, source: String)
+
+/** splitmix64's finalizer: the one 64-bit mixer behind every synthetic
+  * stream (token rows, hyperplanes, MinHash seeds, multimodal pixels and
+  * samples). The DuckDB oracles replay it bit for bit.
+  */
+object SplitMix {
+  @inline def mix(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+}
 
 /** Deterministic synthesis of the F1 token table (FIXTURES.md):
   * a pure function of (seed, rowIndex), so runs at ANY parallelism
@@ -21,13 +35,6 @@ final case class TokenRow(doc_id: String, tokens: Array[Int], n_tok: Int, source
 object TokenGen {
 
   final val Sources = Array("web", "code", "books", "synth")
-
-  @inline private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** Tiny splittable counter-based PRNG: stream k of row i under seed. */
   private final class Rng(seed: Long, i: Long) {

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.codec.Bytes
-import graft.store.{BinCodec, ColumnStore, FsIO, SelRange}
+import graft.store.{BinCodec, ColumnStore, FsIO, Jobs, SelRange}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -205,9 +205,10 @@ object Index {
     // NEW versioned base dir — never overwrites files another meta (or an
     // in-flight reader) references; superseded bases age out via the GC
     val base = s"_base-${java.util.UUID.randomUUID().toString.take(12)}"
-    df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
-      .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
-      .write.mode("overwrite").parquet(s"$d/$base")
+    Jobs.described(spark, s"index build $col")(
+      df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
+        .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
+        .write.mode("overwrite").parquet(s"$d/$base"))
     // stamp recorded for DSv2 routing freshness (see routableFor); a full
     // build collapses every delta generation into the new base.
     // Commit-until-win: a rebuild reflects the complete CURRENT table, so
@@ -337,18 +338,21 @@ object Index {
       .select(org.apache.spark.sql.functions.col(col).as(ValueCol),
         org.apache.spark.sql.functions.col("_row_id").as(RowIdCol))
     val merge = m.gens.size >= maxDeltaGens
-    val (df, genRows, newGens) =
-      if (merge) {
-        // collapse every gen + the new rows into ONE generation — reads
-        // only delta data, the base sort is untouched
-        val old = spark.read.parquet(m.gens.map(g => s"$d/${g._1}"): _*)
-        (old.unionAll(fresh), m.deltaRows + newRows, Seq.empty[(String, Long)])
-      } else (fresh, newRows, m.gens)
-    val parts = math.max(1, math.min(2048, (genRows / (2L << 20)).toInt + 1))
     val gen = s"_gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
-      .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
-      .write.mode("overwrite").parquet(s"$d/$gen")
+    val (genRows, newGens) = Jobs.described(spark, s"index refresh $col") {
+      val (df, genRows, newGens) =
+        if (merge) {
+          // collapse every gen + the new rows into ONE generation — reads
+          // only delta data, the base sort is untouched
+          val old = spark.read.parquet(m.gens.map(g => s"$d/${g._1}"): _*)
+          (old.unionAll(fresh), m.deltaRows + newRows, Seq.empty[(String, Long)])
+        } else (fresh, newRows, m.gens)
+      val parts = math.max(1, math.min(2048, (genRows / (2L << 20)).toInt + 1))
+      df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
+        .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
+        .write.mode("overwrite").parquet(s"$d/$gen")
+      (genRows, newGens)
+    }
     // COMMIT (CAS): the epoch-named meta makes the new generation (and, on
     // merge, the disappearance of the old ones) visible atomically; losing
     // the race leaves our gen as an unreferenced orphan for the sweep

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.gen.SplitMix.mix
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -17,13 +18,6 @@ import scala.collection.mutable
   *    cosine; brute-force O(n²) never materializes.
   */
 object Dedup {
-
-  @inline private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** Exact duplicate groups: representative (min doc_id) + multiplicity.
     * One shuffle, partial-aggregated map-side.

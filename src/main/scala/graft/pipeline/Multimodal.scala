@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.gen.SplitMix.mix
 import org.apache.spark.sql.{Dataset, SparkSession}
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -31,13 +32,6 @@ final case class MediaFeature(media_id: Long, kind: String,
 final case class FrameRow(media_id: Long, frame_idx: Int, frame: Array[Byte])
 
 object Multimodal {
-
-  @inline private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   private val Kinds = Array("image", "audio", "video")
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.gen.SplitMix.mix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,13 +16,6 @@ import org.apache.spark.sql.functions._
   *    path: at 10^12 vectors the probe only shuffles candidate buckets.
   */
 object Similarity {
-
-  @inline private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** Deterministic pseudo-Gaussian hyperplanes (sum of 4 uniforms, CLT). */
   private[pipeline] def hyperplanes(seed: Long, nPlanes: Int, dim: Int): Array[Array[Double]] =

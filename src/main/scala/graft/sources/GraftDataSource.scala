@@ -240,8 +240,7 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
       case s: aggregate.Sum if !s.isDistinct =>
         // exact: integer chunk sums from the manifests, LongType (Spark's
         // sum over any integral column widens to long)
-        fieldOf(s.column).flatMap(cn => (if (full) GraftScan.statSum(store, cn)
-          else GraftScan.statSumRanged(store, cn, ranges))
+        fieldOf(s.column).flatMap(cn => GraftScan.statSumRanged(store, cn, ranges)
           .map(v => StructField("sum", LongType, nullable = false) -> (v: Any)))
       case _ => None
     }
@@ -307,6 +306,8 @@ final case class GraftAggPartition(values: Array[Any]) extends InputPartition
 
 object GraftScan {
   import graft.codec.{PType, Utf8Order}
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftScan])
 
   /** Column prunability kind: 1 integer stats, 2 float stats, 3 string
     * prefix stats, 0 none. Matches what valueStats records at encode.
@@ -638,25 +639,15 @@ object GraftScan {
               }
           }
         }
-        val merged = mergeRanges(surviving.toSeq)
-        ranges = Some(ranges.fold(merged)(prev => intersectRanges(prev, merged)))
+        val merged = Ranges.merge(surviving.toSeq)
+        ranges = Some(ranges.fold(merged)(prev => Ranges.intersect(prev, merged)))
       }
     }
     val base: Seq[(Long, Long)] = ranges.getOrElse(Seq((0L, Long.MaxValue)))
     val clipped = base.map { case (a, b) => (math.max(a, rowLo), math.min(b, rowHi)) }
       .filter { case (a, b) => a < b }
-    val sel =
-      if (clipped.isEmpty) SelRanges(Array.empty, Array.empty)
-      else if (clipped == Seq((0L, Long.MaxValue))) SelAll
-      else if (clipped.size == 1) SelRange(clipped.head._1, clipped.head._2, 1L)
-      else SelRanges(clipped.map(_._1).toArray, clipped.map(_._2).toArray)
-    (sel, partsVisited, partsSkipped)
+    (fromRanges(clipped), partsVisited, partsSkipped)
   }
-
-  // range arithmetic shared with the executor-side refinement: graft.store.Ranges
-  def mergeRanges(rs: Seq[(Long, Long)]): Seq[(Long, Long)] = Ranges.merge(rs)
-  def intersectRanges(x: Seq[(Long, Long)], y: Seq[(Long, Long)]): Seq[(Long, Long)] =
-    Ranges.intersect(x, y)
 
   /** Is `f` a `_row_id` comparison the selection planner understands? */
   private[sources] def rowIdFilter(f: Filter): Boolean = f match {
@@ -697,6 +688,45 @@ object GraftScan {
     }
   }
 
+  /** Running MIN or MAX over exact stats bits — kind 1 integers, kind 2
+    * float IEEE bits — typed to the column at the end. Double.compare
+    * matches Spark's Min/Max ordering on signed zeros (-0.0 < 0.0);
+    * primitive '<' would tie them and keep whichever bits arrived first.
+    */
+  private final class MinMaxAcc(val kind: Int, isMin: Boolean) {
+    private var acc = 0L
+    private var seen = false
+    def add(minBits: Long, maxBits: Long): Unit = {
+      val v = if (isMin) minBits else maxBits
+      val better = !seen || (kind match {
+        case 2 =>
+          val d = java.lang.Double.compare(
+            java.lang.Double.longBitsToDouble(v), java.lang.Double.longBitsToDouble(acc))
+          if (isMin) d < 0 else d > 0
+        case _ => if (isMin) v < acc else v > acc
+      })
+      if (better) { acc = v; seen = true }
+    }
+    def result(pt: PType.PType): Option[Any] = if (!seen) None else pt match {
+      case PType.I64 => Some(acc)
+      case PType.I32 => Some(acc.toInt)
+      case PType.I16 => Some(acc.toShort)
+      case PType.BOOL => Some(acc != 0L)
+      case PType.F64 => Some(java.lang.Double.longBitsToDouble(acc))
+      case PType.F32 => Some(java.lang.Double.longBitsToDouble(acc).toFloat)
+      case _ => None
+    }
+  }
+
+  /** None for columns without exact stats: string prefixes are lossy,
+    * bin/list columns have none.
+    */
+  private def minMaxAcc(cs: ColumnSpec, isMin: Boolean): Option[MinMaxAcc] = cs.ptype match {
+    case PType.I64 | PType.I32 | PType.I16 | PType.BOOL => Some(new MinMaxAcc(1, isMin))
+    case PType.F64 | PType.F32 => Some(new MinMaxAcc(2, isMin))
+    case _ => None
+  }
+
   /** Exact table-wide min/max of a column from the per-partition stat
     * roll-ups, typed to the column — None when not provable (kind-0 or
     * mixed stats, string/binary prefix stats, or a backfilled partition
@@ -704,50 +734,21 @@ object GraftScan {
     */
   private[sources] def statMinMax(store: ColumnStore, colName: String,
       isMin: Boolean): Option[Any] = {
-    import graft.codec.PType
     val cs = store.spec.col(colName)
-    val expectKind = cs.ptype match {
-      case PType.I64 | PType.I32 | PType.I16 | PType.BOOL => 1
-      case PType.F64 | PType.F32 => 2
-      case _ => return None // string prefixes are lossy; bin/list have none
-    }
-    var acc = 0L
-    var seen = false
-    var curSeg = -1L
-    var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
-    for ((seg, part, _, rows) <- store.partOffsets(); if rows > 0) {
-      if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
-      segStats.getOrElse(part, Map.empty).get(colName) match {
-        case Some((k, mn, mx)) if k == expectKind =>
-          val v = if (isMin) mn else mx
-          if (!seen) { acc = v; seen = true }
-          else {
-            val better = expectKind match {
-              // Double.compare matches Spark's Min/Max ordering on signed
-              // zeros (-0.0 < 0.0); primitive '<' would tie them and keep
-              // whichever bits arrived first.
-              case 2 =>
-                val d = java.lang.Double.compare(
-                  java.lang.Double.longBitsToDouble(v),
-                  java.lang.Double.longBitsToDouble(acc))
-                if (isMin) d < 0 else d > 0
-              case _ => if (isMin) v < acc else v > acc
-            }
-            if (better) acc = v
+    minMaxAcc(cs, isMin).flatMap { m =>
+      var curSeg = -1L
+      var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
+      val ok = store.partOffsets().forall { case (seg, part, _, rows) =>
+        rows == 0 || {
+          if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
+          segStats.getOrElse(part, Map.empty).get(colName) match {
+            case Some((k, mn, mx)) if k == m.kind => m.add(mn, mx); true
+            case _ => false // kind mismatch / no stats / backfilled part
           }
-        case _ => return None // kind mismatch / no stats / backfilled part
+        }
       }
+      if (ok) m.result(cs.ptype) else None
     }
-    if (!seen) return None
-    Some(cs.ptype match {
-      case PType.I64 => acc
-      case PType.I32 => acc.toInt
-      case PType.I16 => acc.toShort
-      case PType.BOOL => acc != 0L
-      case PType.F64 => java.lang.Double.longBitsToDouble(acc)
-      case PType.F32 => java.lang.Double.longBitsToDouble(acc).toFloat
-      case _ => return None
-    })
   }
 
   /** Walk a column's chunks, classifying each against exact global row
@@ -795,48 +796,20 @@ object GraftScan {
     */
   private[sources] def statMinMaxRanged(store: ColumnStore, colName: String,
       isMin: Boolean, ranges: Seq[(Long, Long)]): Option[Any] = {
-    import graft.codec.PType
     val cs = store.spec.col(colName)
-    val expectKind = cs.ptype match {
-      case PType.I64 | PType.I32 | PType.I16 | PType.BOOL => 1
-      case PType.F64 | PType.F32 => 2
-      case _ => return None
-    }
-    var acc = 0L
-    var seen = false
-    val ok = walkChunksRanged(store, colName, ranges) { cm =>
-      if (cm.statsKind != expectKind) false
-      else {
-        val v = if (isMin) cm.minBits else cm.maxBits
-        if (!seen) { acc = v; seen = true }
-        else {
-          val better = expectKind match {
-            case 2 =>
-              val d = java.lang.Double.compare(
-                java.lang.Double.longBitsToDouble(v),
-                java.lang.Double.longBitsToDouble(acc))
-              if (isMin) d < 0 else d > 0
-            case _ => if (isMin) v < acc else v > acc
-          }
-          if (better) acc = v
-        }
-        true
+    minMaxAcc(cs, isMin).flatMap { m =>
+      val ok = walkChunksRanged(store, colName, ranges) { cm =>
+        cm.statsKind == m.kind && { m.add(cm.minBits, cm.maxBits); true }
       }
+      if (ok) m.result(cs.ptype) else None
     }
-    if (!ok || !seen) return None
-    Some(cs.ptype match {
-      case PType.I64 => acc
-      case PType.I32 => acc.toInt
-      case PType.I16 => acc.toShort
-      case PType.BOOL => acc != 0L
-      case PType.F64 => java.lang.Double.longBitsToDouble(acc)
-      case PType.F32 => java.lang.Double.longBitsToDouble(acc).toFloat
-      case _ => return None
-    })
   }
 
-  /** SUM of an integer column over exact row ranges — provable only when
-    * every overlapping chunk is fully inside and carries a v3 sum.
+  /** SUM of an integer column over exact row ranges (the whole table is
+    * `Seq((0, nrows))`) from the per-chunk sums the manifests carry —
+    * provable only when every overlapping chunk is fully inside and carries
+    * a sum: None for a backfilled partition without chunks, a sum-less
+    * chunk, or accumulator overflow. No chunk file is opened.
     */
   private[sources] def statSumRanged(store: ColumnStore, colName: String,
       ranges: Seq[(Long, Long)]): Option[Long] = {
@@ -856,32 +829,6 @@ object GraftScan {
       }
     }
     if (ok && !overflow) Some(acc) else None
-  }
-
-  /** Exact table-wide SUM of an integer column from the per-chunk sums the
-    * manifests carry — None when not provable: non-integer column, any
-    * chunk without a sum (per-chunk overflow), a backfilled partition
-    * without materialized chunks, or accumulator overflow. O(segments) metadata reads via the cached manifests, then
-    * O(chunks) driver adds — no chunk file is opened.
-    */
-  private[sources] def statSum(store: ColumnStore, colName: String): Option[Long] = {
-    import graft.codec.PType
-    store.spec.col(colName).ptype match {
-      case PType.I64 | PType.I32 | PType.I16 => ()
-      case _ => return None
-    }
-    var acc = 0L
-    for ((seg, part, _, rows) <- store.partOffsets(); if rows > 0) {
-      val m = store.partManifest(seg, part)
-      val cs = m.chunks.filter(_.column == colName)
-      if (cs.isEmpty) return None // backfilled partition: values live in fill
-      cs.foreach { c =>
-        if (c.sumKind != 1) return None
-        try acc = Math.addExact(acc, c.sumBits)
-        catch { case _: ArithmeticException => return None }
-      }
-    }
-    Some(acc)
   }
 
   /** Skip the first `n` rows of a selection (exact offset pushdown). */
@@ -1015,19 +962,6 @@ object GraftScan {
     v
   }
 
-  /** Merge sorted granule-bucket ids into [start, stop) row ranges. */
-  private[sources] def bucketsToRanges(sorted: Array[Long], g: Long): Seq[(Long, Long)] = {
-    val out = mutable.ArrayBuffer.empty[(Long, Long)]
-    var i = 0
-    while (i < sorted.length) {
-      val s = sorted(i) * g
-      var e = sorted(i) + 1
-      while (i + 1 < sorted.length && sorted(i + 1) == e) { e = sorted(i + 1) + 1; i += 1 }
-      out += ((s, e * g))
-      i += 1
-    }
-    out.toSeq
-  }
 }
 
 class GraftScan(root: String, required: StructType, pushed: Array[Filter],
@@ -1170,19 +1104,20 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         var acc: Option[Seq[(Long, Long)]] = None
         routed.foreach { case (c, conds) =>
           val idx = graft.index.Index.table(spark, store, c)
-          val buckets = idx.where(conds.reduce(_ && _))
-            .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
-            .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
+          val buckets = Jobs.described(spark, s"index consult $c")(
+            idx.where(conds.reduce(_ && _))
+              .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
+              .distinct().limit(maxRanges + 1).collect().map(_.getLong(0)))
           if (buckets.length <= maxRanges) {
-            val ranges = GraftScan.bucketsToRanges(buckets.sorted, g)
-            acc = Some(acc.fold(ranges)(prev => GraftScan.intersectRanges(prev, ranges)))
+            val ranges = Ranges.fromBuckets(buckets.sorted, g)
+            acc = Some(acc.fold(ranges)(prev => Ranges.intersect(prev, ranges)))
           }
         }
         acc
       }
     } catch {
       case e: Exception =>
-        System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
+        GraftScan.log.warn(s"index routing failed, falling back to zone maps: ${e.getMessage}")
         None
     }
   }
@@ -1209,15 +1144,16 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
             s"${graft.index.Index.metaIdent(freshStore, c)}|$c|$desc|$k") {
           val v = if (desc) fcol(graft.index.Index.ValueCol).desc
             else fcol(graft.index.Index.ValueCol).asc
-          val ids = graft.index.Index.table(spark, store, c)
-            .orderBy(v, fcol(graft.index.Index.RowIdCol).asc)
-            .limit(k).select(graft.index.Index.RowIdCol)
-            .collect().map(_.getLong(0)).sorted
+          val ids = Jobs.described(spark, s"index topN $c")(
+            graft.index.Index.table(spark, store, c)
+              .orderBy(v, fcol(graft.index.Index.RowIdCol).asc)
+              .limit(k).select(graft.index.Index.RowIdCol)
+              .collect().map(_.getLong(0)).sorted)
           Some(SelIds(ids, Array.tabulate(ids.length)(_.toLong)))
         }
       } catch {
         case e: Exception =>
-          System.err.println(s"[graft] topN routing failed, falling back: ${e.getMessage}")
+          GraftScan.log.warn(s"topN routing failed, falling back: ${e.getMessage}")
           None
       }
     }
@@ -1290,7 +1226,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       else routedMap(pushed ++ runtimeFilters)
     val sel0 = indexRanges(session, rmap) match {
       case Some(ir) =>
-        GraftScan.fromRanges(GraftScan.intersectRanges(GraftScan.toRanges(zone), ir))
+        GraftScan.fromRanges(Ranges.intersect(GraftScan.toRanges(zone), ir))
       case None => zone
     }
     // composition per Spark's pushDownLimitAndOffset: a pushed limit is the
@@ -1365,8 +1301,8 @@ final case class GraftStreamOffset(nrows: Long)
   * chunk-pruned DecodeUnits as a batch scan — a batch decodes only the new
   * segments' chunks, never rescans history. Offsets restart exactly from
   * the checkpoint (segment commits are atomic and immutable), giving
-  * end-to-end exactly-once when paired with the StreamingIngest sink's
-  * lineage dedup. Rate control: `maxRowsPerTrigger` caps a batch; the cut
+  * end-to-end exactly-once when paired with the native sink's
+  * (`writeStream.format("graft")`, [[GraftStreamingWrite]]) lineage dedup. Rate control: `maxRowsPerTrigger` caps a batch; the cut
   * can land mid-segment because DecodeUnits slice row ranges exactly.
   *
   * Contract: the stream observes APPENDS. In-place updates (P5) mutate
@@ -1416,7 +1352,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
     // their exact row ranges (offsets still advance over skipped rows)
     val sel: Selection =
       if (rowIdFilters.isEmpty) SelRange(s, e, 1L)
-      else GraftScan.fromRanges(GraftScan.intersectRanges(Seq((s, e)),
+      else GraftScan.fromRanges(Ranges.intersect(Seq((s, e)),
         GraftScan.toRanges(GraftScan.planSelection(st, rowIdFilters))))
     val (units, _) = st.planUnits(wanted, sel, emptyMeansAll = false)
     units.map(u => GraftInputPartition(u, st.spec,

@@ -743,11 +743,12 @@ class ColumnStore(val root: String) extends Serializable {
     val rootB = root
     // unboxed path: execute the plan to InternalRows (datasource-style) and
     // encode per partition; runJob returns results in partition order
-    val rdd = df.queryExecution.toRdd
-    val manifests: Array[(Int, Array[Byte])] =
+    val manifests: Array[(Int, Array[Byte])] = Jobs.described(spark, s"append seg$seg") {
+      val rdd = df.queryExecution.toRdd
       spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
         ColumnStore.encodePartition(it, specB,
           s"$rootB/${Format.SegmentsDir}/seg$seg", seg, lineage, cfg))
+    }
     // commit: per-partition row counts in partition-id order fix the global
     // row-id assignment (SURVEY.md §7.5(6)). The consolidated manifest goes
     // first so a segment with a commit record always has one.

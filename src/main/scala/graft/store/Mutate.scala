@@ -108,6 +108,19 @@ object Mutate {
       localIds: Array[Long],
       values: Array[Any]) extends Serializable
 
+  /** Index of the partition holding global row `id`, given the partitions'
+    * ascending start offsets: binary search, O(log P) per id.
+    */
+  private def partOf(starts: Array[Long], id: Long): Int = {
+    var lo = 0
+    var hi = starts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (starts(mid) <= id) lo = mid + 1 else hi = mid
+    }
+    lo - 1
+  }
+
   /** Scatter update: col[ids] = values (P5). Values aligned with ids, or a
     * single scalar broadcast over all ids.
     */
@@ -126,19 +139,10 @@ object Mutate {
     val offs = store.partOffsets()
     // binary-search each id's partition: O(ids log P + P), not O(P × ids)
     val starts = offs.map(_._3).toArray
-    def pidOf(id: Long): Int = {
-      var lo = 0
-      var hi = starts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (starts(mid) <= id) lo = mid + 1 else hi = mid
-      }
-      lo - 1
-    }
     val byPid = mutable.LinkedHashMap.empty[Int, (mutable.ArrayBuilder[Long], mutable.ArrayBuffer[Any])]
     var i = 0
     while (i < ids.length) {
-      val pid = pidOf(ids(i))
+      val pid = partOf(starts, ids(i))
       val slot = byPid.getOrElseUpdate(pid,
         (mutable.ArrayBuilder.make[Long], mutable.ArrayBuffer.empty[Any]))
       slot._1 += ids(i) - offs(pid)._3
@@ -150,9 +154,10 @@ object Mutate {
     }
     if (tasks.isEmpty) return
     val specB = s
-    spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
-      .map(t => runPartUpdate(t, specB, cfg))
-      .collect()
+    Jobs.described(spark, s"update $colName")(
+      spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
+        .map(t => runPartUpdate(t, specB, cfg))
+        .collect())
     store.invalidateManifests()
   }
 
@@ -189,15 +194,6 @@ object Mutate {
     val specB = s
     val rootB = store.root
     val colB = colName
-    def pidOf(id: Long): Int = {
-      var lo = 0
-      var hi = starts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (starts(mid) <= id) lo = mid + 1 else hi = mid
-      }
-      lo - 1
-    }
     val pairs = norm.queryExecution.toRdd.mapPartitions { it =>
       it.map { row =>
         // a failed cast yields null, and getLong/getInt read null slots as 0
@@ -219,7 +215,7 @@ object Mutate {
           case PType.BIN => row.getBinary(1)
           case PType.I32LIST => row.getArray(1).toIntArray()
         }
-        (pidOf(id), (id, v))
+        (partOf(starts, id), (id, v))
       }
     }
     val tasks = math.max(1, math.min(metas.length,
@@ -229,7 +225,8 @@ object Mutate {
     // in memory, not its whole shuffle partition as boxed tuples (the old
     // it.toArray + groupBy OOMed at exactly the 10^9-row scale this MERGE
     // path exists for)
-    pairs.repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(tasks))
+    Jobs.described(spark, s"update $colName")(pairs
+      .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(tasks))
       .mapPartitions { it =>
         val rows = it.buffered
         new Iterator[Int] {
@@ -248,7 +245,7 @@ object Mutate {
               specB, cfg)
           }
         }
-      }.collect()
+      }.collect())
     store.invalidateManifests()
   }
 
@@ -433,9 +430,10 @@ object Mutate {
     } yield CompactTask(store.root, seg, m.part)
     if (tasks.isEmpty) return
     val spec = store.spec
-    spark.sparkContext.parallelize(tasks, tasks.size)
-      .map(t => compactPartition(t, spec, cfg))
-      .collect()
+    Jobs.described(spark, "vacuum")(
+      spark.sparkContext.parallelize(tasks, tasks.size)
+        .map(t => compactPartition(t, spec, cfg))
+        .collect())
     store.invalidateManifests()
   }
 

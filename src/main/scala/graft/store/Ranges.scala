@@ -4,8 +4,8 @@ import scala.collection.mutable
 
 /** Interval arithmetic over global [start, stop) row ranges — the ONE
   * implementation shared by driver-side selection planning
-  * (GraftScan.planSelection) and executor-side membership-filter refinement
-  * (Decode.refineUnit).
+  * (GraftScan.planSelection), index-bucket routing (GraftScan, Columns.gather)
+  * and executor-side membership-filter refinement (Decode.refineUnit).
   */
 object Ranges {
 
@@ -18,6 +18,22 @@ object Ranges {
       val (la, lb) = out.last
       if (a <= lb) out(out.size - 1) = (la, math.max(lb, b))
       else out += ((a, b))
+    }
+    out.toSeq
+  }
+
+  /** Sorted granule-bucket ids (`row_id / g`) → the [start, stop) row
+    * ranges they cover, adjacent buckets coalesced.
+    */
+  def fromBuckets(sorted: Array[Long], g: Long): Seq[(Long, Long)] = {
+    val out = mutable.ArrayBuffer.empty[(Long, Long)]
+    var i = 0
+    while (i < sorted.length) {
+      val s = sorted(i) * g
+      var e = sorted(i) + 1
+      while (i + 1 < sorted.length && sorted(i + 1) == e) { e = sorted(i + 1) + 1; i += 1 }
+      out += ((s, e * g))
+      i += 1
     }
     out.toSeq
   }

@@ -471,4 +471,47 @@ class IndexSpec extends AnyFunSuite {
     assert(c.subNames.isEmpty)
     c.dropStore()
   }
+
+  test("engine jobs carry graft descriptions: index build, incremental refresh, vacuum") {
+    val schema = StructType(Seq(StructField("ind", LongType, nullable = false)))
+    def df(vals: Seq[Long], parts: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize(vals.map(Row(_)), parts), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-jobdesc"), df(0L until 20000L, 2))
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    sc.addSparkListener(listener)
+    try {
+      c("ind").createIndex()
+      c.append(df(20000L until 21000L, 1)) // auto-refresh: incremental path
+      assert(Index.deltaGens(c.store, "ind").size == 1)
+      c("ind").update(Seq(5L), Seq(-5L))
+      c.vacuum()
+      // the caller's own description is back after every engine call
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // listener events are async: poll until the queue stabilizes
+      var last = -1
+      var same = 0
+      var spins = 0
+      while (same < 3 && spins < 50) {
+        val v = descs.size
+        if (v == last) same += 1 else { same = 0; last = v }
+        Thread.sleep(100)
+        spins += 1
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+    val seen = descs.toArray.toSet
+    Seq("graft: index build ind", "graft: append seg1", "graft: index refresh ind",
+      "graft: update ind", "graft: vacuum").foreach(d =>
+      assert(seen.contains(d), s"no job described '$d' in $seen"))
+    c.dropStore()
+  }
 }

@@ -1,9 +1,7 @@
 package graft
 
 import graft.api.Columns
-import graft.store.{ColumnSpec, TableSpec}
-import graft.codec.PType
-import graft.streaming.StreamingIngest
+import graft.sources.GraftStreamingWrite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -54,38 +52,45 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: micro-batches append segments exactly once") {
+    // through the native writeStream.format("graft") sink; each query id
+    // commits its own epoch 0, and compaction keeps data, row ids and index
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val c = Columns.create(spark, tmpDir("graft-stream"), TableSpec(Seq(
-      ColumnSpec("id", PType.I64.id), ColumnSpec("s", PType.STR.id))))
-    val sink = StreamingIngest.sink(c)
-    val q = mem.toDF().toDF("id", "s").writeStream
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => sink(df, id))
-      .start()
-    mem.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    mem.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    assert(c.nrows == 3)
-    val out = c.read().collect().map(r => (r.getLong(1), r.getString(2))).sortBy(_._1)
-    assert(out.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    // replaying a batch id FROM THE SAME QUERY must be a no-op
-    // (exactly-once); the lineage key is (queryId, batchId)
-    val df = c.read(Seq("id", "s")).select("id", "s")
-    sink(df.where($"id" === 1L), 50L)
-    assert(c.nrows == 4)
-    sink(df.where($"id" === 1L), 50L) // replay of (same query, batch 50)
-    assert(c.nrows == 4, "replayed batch 50 must be skipped")
-    // a DIFFERENT query's batch 0 is NOT the streamed query's batch 0: it
-    // must append, not be swallowed by the other query's lineage
-    sink(df.where($"id" === 2L).limit(0), 0L) // empty frame, new lineage
-    assert(c.store.segments.exists(s =>
-      c.store.segmentCommit(s).lineage == StreamingIngest.lineageFor("", 0L)),
-      "distinct query's batch 0 must commit its own segment")
+    val root = tmpDir("graft-nsink-epochs") + "/store"
+    val q = mem.toDF().toDF("id", "s").writeStream.format("graft")
+      .option("checkpointLocation", tmpDir("graft-nsink-epochs-ckpt"))
+      .outputMode("append").start(root)
+    try {
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      mem.addData((3L, "c"))
+      q.processAllAvailable()
+    } finally q.stop()
+    // the lineage key is (query id, epoch id): another query's epoch 0 is
+    // not the streamed query's epoch 0 and must append, not be swallowed
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StringType, nullable = false)))
+    def commitEpoch0(queryId: String, id: Long, v: String): Unit = {
+      val sw = new GraftStreamingWrite(root, schema, queryId)
+      val w = sw.createStreamingWriterFactory(null).createWriter(0, 0L, 0L)
+      w.write(new GenericInternalRow(Array[Any](id, UTF8String.fromString(v))))
+      sw.commit(0L, Array(w.commit()))
+    }
+    commitEpoch0("qa", 1L, "a")
+    commitEpoch0("qb", 4L, "d")
+    val c = Columns.open(spark, root)
+    assert(c.nrows == 5)
+    val lineages = c.store.segments.map(s => c.store.segmentCommit(s).lineage)
+    assert(lineages.contains("stream-write:qa:0") && lineages.contains("stream-write:qb:0"),
+      s"lineages: $lineages")
+    assert(lineages.count(_.endsWith(":0")) == 3, s"lineages: $lineages")
 
-    // compaction: many micro-batch segments -> one, data + row ids intact
+    // compaction: many epoch segments -> one, data + row ids intact
     c("id").createIndex()
     val before = c.read().collect().map(_.toSeq).sortBy(_(0).asInstanceOf[Long])
     assert(c.store.segments.size > 1)
