@@ -282,29 +282,32 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
       rangeGranule: Long = 8192L, maxRanges: Int = 1 << 20): DataFrame = {
     Jobs.described(spark, s"gather ${if (columns.isEmpty) "*" else columns.mkString(",")}") {
       // normalize to long once (an int id frame would ClassCastException in
-      // getLong below) and SNAPSHOT: the id lineage otherwise re-executes for
-      // the strategy probe, the bucket pass, and the final semi-join — and a
-      // nondeterministic source could make the pruning pass and the
-      // correctness join disagree, silently dropping rows. The snapshot is an
-      // RDD-level cache, NOT Dataset.persist: SQL cache entries sit in the
-      // CacheManager until explicitly unpersisted, so repeated large gathers
-      // would pin storage memory forever — an RDD cache is released by the
-      // ContextCleaner as soon as the caller drops the result. MEMORY_AND_DISK
-      // so eviction spills instead of forcing a (nondeterministic) recompute.
+      // getLong below). One job decides the strategy: collect up to limit+1
+      // ids — if they all fit, that IS the id set (deduped and sorted here;
+      // no separate count pass). A driver-local id frame (an index consult
+      // answered on the driver) collects with no job at all.
       val normalized = idsDf.toDF("_row_id")
-        .select(col("_row_id").cast("long").as("_row_id")).distinct()
-      val idsRdd = normalized.rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ids = spark.createDataFrame(idsRdd, normalized.schema)
-      // one job decides the strategy: collect up to limit+1 ids — if they all
-      // fit, that IS the id set (no separate count pass)
-      val firstBatch = ids.limit(idCollectLimit + 1).collect()
+        .select(col("_row_id").cast("long").as("_row_id"))
+      val firstBatch = normalized.limit(idCollectLimit + 1).collect()
       if (firstBatch.length <= idCollectLimit) {
-        val sorted = firstBatch.map(_.getLong(0)).sorted
-        idsRdd.unpersist(blocking = false) // the SelIds read has no dependency left
+        val sorted = firstBatch.map(_.getLong(0)).distinct.sorted
         store.read(spark, columns,
           SelIds(sorted, Array.tabulate(sorted.length)(_.toLong))).drop("_pos")
       } else {
+        // SNAPSHOT the distinct ids: the lineage otherwise re-executes for
+        // the bucket pass and the final semi-join — and a nondeterministic
+        // source could make the pruning pass and the correctness join
+        // disagree, silently dropping rows. The snapshot is an RDD-level
+        // cache, NOT Dataset.persist: SQL cache entries sit in the
+        // CacheManager until explicitly unpersisted, so repeated large
+        // gathers would pin storage memory forever — an RDD cache is
+        // released by the ContextCleaner as soon as the caller drops the
+        // result. MEMORY_AND_DISK so eviction spills instead of forcing a
+        // (nondeterministic) recompute.
+        val distinct = normalized.distinct()
+        val ids = spark.createDataFrame(
+          distinct.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+          distinct.schema)
         val g = math.max(1L, rangeGranule)
         val buckets = ids
           .select((col("_row_id") / lit(g)).cast("long").as("b"))

@@ -1,9 +1,20 @@
 package graft.index
 
 import graft.codec.Bytes
+import graft.sources.GraftScan
 import graft.store.{BinCodec, ColumnStore, FsIO, Jobs, SelRange}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions, sources}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalRows
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Secondary index per column — the Spark-native replacement for the
   * reference's `.index`/`.sorted`/`.index1` trio (pycolumns
@@ -15,12 +26,17 @@ import org.apache.spark.sql.functions._
   * (in-memory argsort and the external k-way mergesort, mergesort.py) —
   * SURVEY.md §2.3 I1-I3: do not reimplement.
   *
-  * Lookup: because rows are globally value-sorted, Parquet row-group
-  * min/max statistics are exactly the reference's coarse `index1` zone map
-  * (every-10,000th sorted value, column.py:584-613): a `WHERE value > v`
-  * prunes row groups the same way the in-RAM bisect prunes 10k-row windows,
-  * then Catalyst's pushed filter refines within groups. Results are row-id
-  * sets in value order (the reference's contract: `Indices`, value-sorted).
+  * Lookup: runs are value-sorted, so Parquet row-group min/max statistics
+  * are exactly the reference's coarse `index1` zone map (every-10,000th
+  * sorted value, column.py:584-613). A consult reads the footers of every
+  * run file on the driver and keeps the row groups whose min/max can match
+  * — the zone-map test the store's chunks use, as the reference bisects its
+  * fences in RAM. When the kept groups hold at most `DriverRows` rows, it
+  * reads just those rows with parquet-java and filters them with Spark's
+  * own predicate, launching no Spark job (the reference answers in one
+  * process too); larger kept sets go to the distributed index read.
+  * Results are row-id sets in value order (the reference's contract:
+  * `Indices`, value-sorted).
   *
   * Tie-break by row_id (documented divergence: numpy argsort tie order is
   * unspecified; reference tests use tie-free data).
@@ -272,13 +288,13 @@ object Index {
     val d = dir(store, col)
     val m = readMeta(store, col)
     val paths = (m.base +: m.gens.map(_._1)).map(p => s"$d/$p")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(ValueCol,
-        graft.store.ColumnStore.sparkType(store.spec.col(col).ptype)),
-      org.apache.spark.sql.types.StructField(RowIdCol,
-        org.apache.spark.sql.types.LongType)))
-    spark.read.schema(schema).parquet(paths: _*)
+    spark.read.schema(tableSchema(store, col)).parquet(paths: _*)
   }
+
+  private def tableSchema(store: ColumnStore, col: String): StructType =
+    StructType(Seq(
+      StructField(ValueCol, ColumnStore.sparkType(store.spec.col(col).ptype)),
+      StructField(RowIdCol, LongType)))
 
   /** Bring the index up to date after APPENDS by sorting only the rows the
     * build has not seen — O(new rows), not a full re-sort (the reference
@@ -415,61 +431,232 @@ object Index {
       }
   }
 
-  private def load(spark: SparkSession, store: ColumnStore, col: String): DataFrame = {
+  private def requireIndex(store: ColumnStore, col: String): Unit =
     require(exists(store, col),
       s"column $col has no index (reference raises, column.py:476-481)")
-    table(spark, store, col)
-  }
 
   // ------------------------------------------------------- query surface
   // All return a DataFrame[row_id: bigint] in value-then-row_id order
   // (the reference returns Indices slices of the value-sorted permutation).
 
-  private def ids(df: DataFrame, cond: Column): DataFrame =
-    df.where(cond).select(RowIdCol)
+  /** Most index rows a consult reads on the driver. Measured at local[4]
+    * on a one-column long index: a consult matching every one of 2^15 rows
+    * plans and collects its local id frame as fast as the distributed read
+    * (≈110 ms each), and at 2^16 takes ≈180 ms against ≈100 ms; a local
+    * frame costs ≈2-3 µs per id. Selective consults, range routing and
+    * top-N stay faster on the driver well past this (≈30 ms against
+    * ≈90-250 ms at 2^16 rows).
+    */
+  final val DriverRows: Int = 1 << 15
+
+  /** A pushed-down filter → its condition over the index table's `value`
+    * column: the one translation shared by the facade predicates and DSv2
+    * routing (`GraftScan`), evaluated on the driver or by the distributed
+    * read. None for shapes an index cannot answer.
+    */
+  private[graft] def indexCond(f: Filter): Option[Expression] = {
+    val v = UnresolvedAttribute(ValueCol)
+    f match {
+      case sources.GreaterThan(_, x) => Some(expressions.GreaterThan(v, Literal(x)))
+      case sources.GreaterThanOrEqual(_, x) => Some(expressions.GreaterThanOrEqual(v, Literal(x)))
+      case sources.LessThan(_, x) => Some(expressions.LessThan(v, Literal(x)))
+      case sources.LessThanOrEqual(_, x) => Some(expressions.LessThanOrEqual(v, Literal(x)))
+      case sources.EqualTo(_, x) => Some(expressions.EqualTo(v, Literal(x)))
+      case sources.In(_, xs) => Some(expressions.In(v, xs.toSeq.map(Literal(_))))
+      case sources.Not(sources.EqualTo(_, x)) =>
+        Some(expressions.Not(expressions.EqualTo(v, Literal(x))))
+      case sources.And(l, r) =>
+        for (a <- indexCond(l); b <- indexCond(r)) yield expressions.And(a, b)
+      case _ => None
+    }
+  }
+
+  private val idSchema = StructType(Seq(StructField(RowIdCol, LongType)))
+
+  /** Row ids of `col`'s index rows satisfying every filter, as
+    * DataFrame[row_id] — a local frame in (value, row_id) order when the
+    * driver answers (see [[lookup]]), else the distributed index read.
+    */
+  def consult(spark: SparkSession, store: ColumnStore, col: String,
+      filters: Seq[Filter]): DataFrame =
+    lookup(spark, store, col, filters) match {
+      case Left(ids) => InternalRows.local(spark, ids.map(InternalRow(_)).toSeq, idSchema)
+      case Right(df) => df
+    }
+
+  /** The consult. Opens the effective meta's run files (base parts and
+    * delta gens) and keeps the row groups whose footer min/max pass the
+    * store's zone-map test of the filters (`GraftScan.colBounds`) — the
+    * reference's bisect of its `index1` fences (column.py:584-613). When
+    * the kept groups hold at most `bound` rows, their rows are read here and
+    * filtered by Spark's own predicate (its literal coercion, NaN and
+    * string order): Left(the matching row ids, in (value, row_id) order, or
+    * ascending when `valueOrder` is false). Otherwise Right(the distributed
+    * `where(cond)` over the index table), the only shape for id sets too
+    * large for the driver.
+    */
+  private[graft] def lookup(spark: SparkSession, store: ColumnStore, col: String,
+      filters: Seq[Filter], bound: Int = DriverRows,
+      valueOrder: Boolean = true): Either[Array[Long], DataFrame] = {
+    requireIndex(store, col)
+    val cond = filters.map(f => indexCond(f).getOrElse(
+      throw new IllegalArgumentException(s"not an index predicate: $f")))
+      .reduce[Expression](expressions.And(_, _))
+    val zone = GraftScan.colBounds(filters.flatMap(GraftScan.flatAnd)
+      .filter(GraftScan.prunable(store.spec, _)))
+    // a group holding a NaN has no float stats (parquet-java drops them), so
+    // it is kept: NaN sorts above +Inf and matches any filter without an
+    // upper bound
+    def mayMatch(f: RunFile, g: Int): Boolean =
+      f.stats(g).forall { case (k, mn, mx) => zone.mayMatch(k, mn, mx) }
+    val opened = mutable.ArrayBuffer.empty[RunFile]
+    try {
+      val kept = runFiles(store, col).flatten.map { p =>
+        val f = new RunFile(p)
+        opened += f
+        f -> (0 until f.groups).filter(mayMatch(f, _))
+      }
+      if (kept.map { case (f, gs) => gs.map(f.rowCount).sum }.sum > bound)
+        Right(table(spark, store, col).where(InternalRows.column(cond)).select(RowIdCol))
+      else {
+        val schema = tableSchema(store, col)
+        val dt = schema.head.dataType
+        val pred = InternalRows.predicate(spark, schema, cond)
+        val row = new GenericInternalRow(2)
+        val hits = mutable.ArrayBuffer.empty[(Any, Long)]
+        for ((f, gs) <- kept; g <- gs) f.foreach(g, dt) { (v, id) =>
+          row.update(0, v); row.setLong(1, id)
+          if (pred.eval(row)) hits += ((v, id))
+        }
+        // each run is already in order: the sort merges them
+        Left(if (valueOrder) hits.sorted(ordering(dt, desc = false)).map(_._2).toArray
+          else hits.map(_._2).toArray.sorted)
+      }
+    } finally opened.foreach(_.close())
+  }
+
+  /** The k row ids `ORDER BY col [DESC] LIMIT k` keeps — value order, ties
+    * by ascending row id, as the distributed sort + limit picks them —
+    * sorted ascending. Read on the driver: each run gives its own top k
+    * (ascending: its first k rows; descending: its last rows back past the
+    * k-th value's ties) and the runs merge. Distributed sort + limit when k
+    * or the rows read would pass `bound`.
+    */
+  private[graft] def topN(spark: SparkSession, store: ColumnStore, col: String,
+      desc: Boolean, k: Int, bound: Int = DriverRows): Array[Long] =
+    driverTopN(store, col, desc, k, bound).getOrElse {
+      val v = if (desc) functions.col(ValueCol).desc else functions.col(ValueCol).asc
+      Jobs.described(spark, s"index topN $col")(
+        table(spark, store, col).orderBy(v, functions.col(RowIdCol).asc)
+          .limit(k).select(RowIdCol).collect().map(_.getLong(0)).sorted)
+    }
+
+  private def driverTopN(store: ColumnStore, col: String, desc: Boolean, k: Int,
+      bound: Int): Option[Array[Long]] = {
+    if (k > bound) return None
+    val dt = tableSchema(store, col).head.dataType
+    val byValue = TypeUtils.getInterpretedOrdering(dt)
+    var read = 0L
+    val candidates = mutable.ArrayBuffer.empty[(Any, Long)]
+    for (run <- runFiles(store, col)) {
+      // this run's rows in walk order: from its first row (asc) or its last
+      // row backwards (desc), a whole row group at a time
+      val walked = mutable.ArrayBuffer.empty[(Any, Long)]
+      // descending, rows tied with the k-th value hold smaller row ids
+      // further back, so the walk goes on past them
+      def enough: Boolean = walked.size >= k &&
+        (!desc || byValue.compare(walked.last._1, walked(k - 1)._1) < 0)
+      val files = if (desc) run.reverse else run
+      val it = files.iterator
+      while (!enough && it.hasNext) {
+        val f = new RunFile(it.next())
+        try {
+          val gs = if (desc) (0 until f.groups).reverse else 0 until f.groups
+          val g = gs.iterator
+          while (!enough && g.hasNext) {
+            val rows = mutable.ArrayBuffer.empty[(Any, Long)]
+            f.foreach(g.next(), dt)((v, id) => rows += ((v, id)))
+            read += rows.size
+            if (read > bound) return None
+            walked ++= (if (desc) rows.reverseIterator else rows)
+          }
+        } finally f.close()
+      }
+      candidates ++= (if (desc) walked else walked.take(k))
+    }
+    Some(candidates.sorted(ordering(dt, desc)).take(k).map(_._2).toArray.sorted)
+  }
+
+  /** Spark's sort order over (value, row_id): value ascending or
+    * descending, then row id ascending.
+    */
+  private def ordering(dt: DataType, desc: Boolean): Ordering[(Any, Long)] = {
+    val byValue = TypeUtils.getInterpretedOrdering(dt)
+    (a, b) => {
+      val c = byValue.compare(a._1, b._1)
+      if (c != 0) (if (desc) -c else c) else java.lang.Long.compare(a._2, b._2)
+    }
+  }
+
+  /** Every run of the effective meta — the base, then each delta gen — as
+    * its part files in range order. A run always holds a part file (Spark
+    * writes a schema-only one for an empty frame), so none means the run
+    * is gone: fail like a read of it, never answer "no rows".
+    */
+  private def runFiles(store: ColumnStore, col: String): Seq[Seq[String]] = {
+    val d = dir(store, col)
+    val m = readMeta(store, col)
+    (m.base +: m.gens.map(_._1)).map { r =>
+      val files = RunFile.files(s"$d/$r")
+      if (files.isEmpty) throw new java.io.FileNotFoundException(s"index run $d/$r is missing")
+      files.map(f => s"$d/$r/$f")
+    }
+  }
+
+  private def cmp(spark: SparkSession, s: ColumnStore, c: String, f: Filter): DataFrame =
+    consult(spark, s, c, Seq(f))
 
   def gt(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) > lit(v))
+    cmp(spark, s, c, sources.GreaterThan(c, v))
   def ge(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) >= lit(v))
+    cmp(spark, s, c, sources.GreaterThanOrEqual(c, v))
   def lt(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) < lit(v))
+    cmp(spark, s, c, sources.LessThan(c, v))
   def le(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) <= lit(v))
+    cmp(spark, s, c, sources.LessThanOrEqual(c, v))
   def eq(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) === lit(v))
+    cmp(spark, s, c, sources.EqualTo(c, v))
   def ne(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) =!= lit(v))
+    cmp(spark, s, c, sources.Not(sources.EqualTo(c, v)))
 
   /** All four interval types (pycolumns between, column.py:841-914):
     * "[]" closed, "[)" half-open right, "(]" half-open left, "()" open.
     */
   def between(spark: SparkSession, s: ColumnStore, c: String, lo: Any, hi: Any,
       interval: String = "[]"): DataFrame = {
-    val v = col(ValueCol)
-    val cond = interval match {
-      case "[]" => v >= lit(lo) && v <= lit(hi)
-      case "[)" => v >= lit(lo) && v < lit(hi)
-      case "(]" => v > lit(lo) && v <= lit(hi)
-      case "()" => v > lit(lo) && v < lit(hi)
+    val fs = interval match {
+      case "[]" => Seq(sources.GreaterThanOrEqual(c, lo), sources.LessThanOrEqual(c, hi))
+      case "[)" => Seq(sources.GreaterThanOrEqual(c, lo), sources.LessThan(c, hi))
+      case "(]" => Seq(sources.GreaterThan(c, lo), sources.LessThanOrEqual(c, hi))
+      case "()" => Seq(sources.GreaterThan(c, lo), sources.LessThan(c, hi))
       case other => throw new IllegalArgumentException(s"bad interval '$other'")
     }
-    ids(load(spark, s, c), cond)
+    consult(spark, s, c, fs)
   }
 
-  /** IN-list (pycolumns match, column.py:688-729). Small lists compile to
-    * `isin` (pushed to parquet); large probe sets should use
-    * `matchDf` (broadcast semi join) instead.
+  /** IN-list (pycolumns match, column.py:688-729). Large probe sets should
+    * use `matchDf` (broadcast semi join) instead.
     */
   def matchIn(spark: SparkSession, s: ColumnStore, c: String, values: Seq[Any]): DataFrame =
-    ids(load(spark, s, c), col(ValueCol).isin(values: _*))
+    cmp(spark, s, c, sources.In(c, values.toArray))
 
   /** IN via join for large probe sets: broadcast left-semi join against the
     * index (SURVEY.md Q4 mapping).
     */
   def matchDf(spark: SparkSession, s: ColumnStore, c: String, probe: DataFrame): DataFrame = {
     val p = probe.toDF(ValueCol).distinct()
-    load(spark, s, c)
+    requireIndex(s, c)
+    table(spark, s, c)
       .join(broadcast(p), Seq(ValueCol), "left_semi")
       .select(RowIdCol)
   }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.index.Index
 import graft.store._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -309,6 +310,12 @@ object GraftScan {
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftScan])
 
+  /** `f` with its ANDs flattened into conjuncts. */
+  private[graft] def flatAnd(f: Filter): Seq[Filter] = f match {
+    case sources.And(l, r) => flatAnd(l) ++ flatAnd(r)
+    case other => Seq(other)
+  }
+
   /** Column prunability kind: 1 integer stats, 2 float stats, 3 string
     * prefix stats, 0 none. Matches what valueStats records at encode.
     */
@@ -405,49 +412,29 @@ object GraftScan {
     case _ => None
   }
 
-  /** ceil(v) as Long for integer-stat comparison; None = no integer can
-    * satisfy `x >= v` (v is NaN — only NaN matches under Spark's total
-    * order, and integer columns hold none — or v > Long.MaxValue).
-    */
-  private def loCeil(v: Number): Option[Long] = v match {
-    case d: java.lang.Double => ceilOf(d.doubleValue)
-    case f: java.lang.Float => ceilOf(f.doubleValue)
-    case n => Some(n.longValue)
-  }
-  private def ceilOf(d: Double): Option[Long] =
-    if (d.isNaN || d > 9.223372036854775e18) None
-    else if (d < -9.223372036854775e18) Some(Long.MinValue)
-    else Some(math.ceil(d).toLong)
-
-  /** floor(v) as Long for `x <= v`; None = nothing can satisfy (v below
-    * Long.MinValue). NaN is LARGEST in Spark's order, so `x <= NaN` keeps
-    * everything.
-    */
-  private def hiFloor(v: Number): Option[Long] = v match {
-    case d: java.lang.Double => floorOf(d.doubleValue)
-    case f: java.lang.Float => floorOf(f.doubleValue)
-    case n => Some(n.longValue)
-  }
-  private def floorOf(d: Double): Option[Long] =
-    if (d.isNaN || d > 9.223372036854775e18) Some(Long.MaxValue)
-    else if (d < -9.223372036854775e18) None
-    else Some(math.floor(d).toLong)
-
   /** Can a chunk with these stats contain a value in [lo, hi]? Kind-exact:
-    * integer stats compare as Long (no i64-through-double rounding), float
-    * as double with Spark NaN-largest semantics, strings on unsigned
-    * 8-byte UTF-8 prefixes (strict-inequality pruning only).
+    * integer stats compare as Long against an integral bound (no
+    * i64-through-double rounding) and, against a floating bound, in that
+    * bound's type — as Spark's coercion compares them (the conversion is
+    * monotone, so the converted min/max bound the converted values); float
+    * as double with Spark NaN-largest semantics, strings on unsigned 8-byte
+    * UTF-8 prefixes (strict-inequality pruning only).
     */
   private[sources] def chunkMayMatch(kind: Int, minBits: Long, maxBits: Long,
       lo: Option[Any], hi: Option[Any]): Boolean = kind match {
     case 0 => true
     case 1 =>
+      // NaN is largest: `x >= NaN` holds for no integer, `x <= NaN` for all
       val loOk = lo.forall {
-        case n: Number => loCeil(n).exists(l => maxBits >= l)
+        case d: java.lang.Double => maxBits.toDouble >= d
+        case f: java.lang.Float => maxBits.toFloat >= f
+        case n: Number => maxBits >= n.longValue
         case _ => true
       }
       val hiOk = hi.forall {
-        case n: Number => hiFloor(n).exists(h => minBits <= h)
+        case d: java.lang.Double => d.isNaN || minBits.toDouble <= d
+        case f: java.lang.Float => f.isNaN || minBits.toFloat <= f
+        case n: Number => minBits <= n.longValue
         case _ => true
       }
       loOk && hiOk
@@ -483,15 +470,24 @@ object GraftScan {
     * pruning (the [min,max] envelope alone is useless for scattered join
     * keys — the common shape of runtime DPP filters). All three views are
     * conservative: `longs` truncates fractional probes (extra candidates
-    * only), NaNs are dropped from `doubles` (a kind-2 chunk holds no NaN),
-    * `prefixes` ride the same order-preserving 8-byte truncation as the
-    * string zone maps. Stored sign-flipped where unsigned order is needed.
+    * only) and is None when a floating probe is past the range where
+    * integers convert to it exactly (2^53 for a double, 2^24 for a float:
+    * many integers equal it there), NaNs are dropped from `doubles` (a
+    * kind-2 chunk holds no NaN), `prefixes` ride the same order-preserving
+    * 8-byte truncation as the string zone maps. Stored sign-flipped where
+    * unsigned order is needed.
     */
-  private[sources] final case class InProbe(longs: Array[Long],
+  private[graft] final case class InProbe(longs: Option[Array[Long]],
       doubles: Array[Double], prefixes: Array[Long])
 
   private[sources] def mkInProbe(vs: Array[Any]): InProbe = {
-    val longs = vs.collect { case n: Number => n.longValue }.sorted
+    val inexact = vs.exists {
+      case d: java.lang.Double => math.abs(d) >= 9.007199254740992e15
+      case f: java.lang.Float => math.abs(f) >= 1.6777216e7f
+      case _ => false
+    }
+    val longs =
+      if (inexact) None else Some(vs.collect { case n: Number => n.longValue }.sorted)
     // normalize -0.0 → 0.0: binarySearch uses Double's TOTAL order
     // (-0.0 < 0.0), but Spark's IN matches them equal — a -0.0 probe left
     // as-is would land before a chunk min of +0.0 and prune rows the
@@ -519,7 +515,7 @@ object GraftScan {
   /** May a chunk with these stats contain ANY value of the IN list? */
   private[sources] def inMayMatch(kind: Int, minBits: Long, maxBits: Long,
       p: InProbe): Boolean = kind match {
-    case 1 => existsIn(p.longs, minBits, maxBits)
+    case 1 => p.longs.forall(existsIn(_, minBits, maxBits))
     case 2 => existsInD(p.doubles,
       java.lang.Double.longBitsToDouble(minBits),
       java.lang.Double.longBitsToDouble(maxBits))
@@ -545,6 +541,44 @@ object GraftScan {
       hi.forall(h => cmp(fill, h).forall(_ <= 0))
   }
 
+  /** The zone-map test one column's filters imply: the tightest [lo, hi]
+    * envelope plus exact IN membership probes. Shared by the chunk planner
+    * (planSelectionCounted) and the index-run pruner (`Index.lookup`).
+    */
+  private[graft] final case class ColBounds(lo: Option[Any], hi: Option[Any],
+      probes: Seq[InProbe]) {
+    /** May a unit with these stats hold a row satisfying every filter? A
+      * chunk survives an IN only if SOME probed value lands inside its
+      * [min, max], beyond the envelope.
+      */
+    def mayMatch(kind: Int, minBits: Long, maxBits: Long): Boolean =
+      chunkMayMatch(kind, minBits, maxBits, lo, hi) &&
+        probes.forall(inMayMatch(kind, minBits, maxBits, _))
+  }
+
+  /** ColBounds of `fs`, the (AND-flattened) filters on ONE column; filters
+    * that bound nothing are ignored.
+    */
+  private[graft] def colBounds(fs: Seq[Filter]): ColBounds = {
+    val bs = fs.flatMap(bounds)
+    // tightest bounds by a coarse merge key; picking a looser candidate
+    // would only prune less (the chunk test itself is kind-exact)
+    def u64(l: Long): Double =
+      if (l >= 0) l.toDouble else l.toDouble + 1.8446744073709552e19
+    def mergeKey(v: Any): Double = v match {
+      case n: Number => n.doubleValue
+      case s: String => u64(Utf8Order.prefix8(s))
+      case PrefixUpper(p) => u64(Utf8Order.prefix8Upper(p))
+      case _ => 0.0
+    }
+    val los = bs.flatMap(_._2)
+    val his = bs.flatMap(_._3)
+    ColBounds(
+      if (los.isEmpty) None else Some(los.maxBy(mergeKey)),
+      if (his.isEmpty) None else Some(his.minBy(mergeKey)),
+      fs.collect { case sources.In(_, vs) if vs.nonEmpty => mkInProbe(vs) })
+  }
+
   /** Global row ranges whose chunks can satisfy all pushed filters. */
   def planSelection(store: ColumnStore, pushed: Array[Filter]): Selection =
     planSelectionCounted(store, pushed)._1
@@ -557,12 +591,7 @@ object GraftScan {
       pushed: Array[Filter]): (Selection, Int, Int) = {
     if (pushed.isEmpty) return (SelAll, 0, 0)
     val spec = store.spec
-    // flatten ANDs
-    def flat(f: Filter): Seq[Filter] = f match {
-      case sources.And(l, r) => flat(l) ++ flat(r)
-      case other => Seq(other)
-    }
-    val fs = pushed.flatMap(flat)
+    val fs = pushed.flatMap(flatAnd)
     // _row_id bounds
     var partsVisited = 0
     var partsSkipped = 0
@@ -582,66 +611,41 @@ object GraftScan {
       case _ =>
     }
     // value predicates -> surviving chunk row-ranges per column, intersected
-    val valueCols = fs.flatMap(bounds)
-      .filter { case (c, _, _) => spec.columns.exists(_.name == c) }
-    // exact IN membership probes per column (beyond the envelope): a chunk
-    // survives only if SOME probed value lands inside its [min, max]
-    val inByCol: Map[String, Seq[InProbe]] = fs.collect {
-      case sources.In(c, vs) if vs.nonEmpty && spec.columns.exists(_.name == c) =>
-        c -> mkInProbe(vs)
-    }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSeq }
+    val byCol = fs.flatMap(f => bounds(f).map(_._1 -> f))
+      .filter { case (c, _) => spec.columns.exists(_.name == c) }
+      .groupBy(_._1)
     var ranges: Option[Seq[(Long, Long)]] = None
-    if (valueCols.nonEmpty) {
-      val byCol = valueCols.groupBy(_._1)
-      byCol.foreach { case (colName, bs) =>
-        // tightest bounds by a coarse merge key; picking a looser candidate
-        // would only prune less (the chunk test itself is kind-exact)
-        def u64(l: Long): Double =
-          if (l >= 0) l.toDouble else l.toDouble + 1.8446744073709552e19
-        def mergeKey(v: Any): Double = v match {
-          case n: Number => n.doubleValue
-          case s: String => u64(Utf8Order.prefix8(s))
-          case PrefixUpper(p) => u64(Utf8Order.prefix8Upper(p))
-          case _ => 0.0
+    byCol.foreach { case (colName, cfs) =>
+      val zone = colBounds(cfs.map(_._2).toSeq)
+      val cs = spec.columns.find(_.name == colName)
+      val surviving = mutable.ArrayBuffer.empty[(Long, Long)]
+      var curSeg = -1L
+      var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
+      for ((seg, part, off, rows) <- store.partOffsets()) {
+        if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
+        segStats.getOrElse(part, Map.empty).get(colName) match {
+          case None =>
+            // column backfilled after this segment: every row carries the
+            // fill value. Include the partition when the fill satisfies
+            // the interval (conservatively when not decidable).
+            if (cs.forall(c => fillMayMatch(Decode.fillValue(c), zone.lo, zone.hi)))
+              surviving += ((off, off + rows))
+          case Some((k, mn, mx)) if !zone.mayMatch(k, mn, mx) =>
+            // partition-level roll-up excludes the predicate: skip the
+            // whole partition without touching its chunk list
+            partsSkipped += 1
+          case _ =>
+            partsVisited += 1
+            val m = store.partManifest(seg, part)
+            m.chunks.foreach { cm =>
+              if (cm.column == colName &&
+                zone.mayMatch(cm.statsKind, cm.minBits, cm.maxBits))
+                surviving += ((off + cm.rowStartLocal, off + cm.rowStartLocal + cm.nrows))
+            }
         }
-        val los = bs.flatMap(_._2)
-        val his = bs.flatMap(_._3)
-        val lo = if (los.isEmpty) None else Some(los.maxBy(mergeKey))
-        val hi = if (his.isEmpty) None else Some(his.minBy(mergeKey))
-        val cs = spec.columns.find(_.name == colName)
-        val probes = inByCol.getOrElse(colName, Nil)
-        def statsPass(k: Int, mn: Long, mx: Long): Boolean =
-          chunkMayMatch(k, mn, mx, lo, hi) &&
-            probes.forall(inMayMatch(k, mn, mx, _))
-        val surviving = mutable.ArrayBuffer.empty[(Long, Long)]
-        var curSeg = -1L
-        var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
-        for ((seg, part, off, rows) <- store.partOffsets()) {
-          if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
-          segStats.getOrElse(part, Map.empty).get(colName) match {
-            case None =>
-              // column backfilled after this segment: every row carries the
-              // fill value. Include the partition when the fill satisfies
-              // the interval (conservatively when not decidable).
-              if (cs.forall(c => fillMayMatch(Decode.fillValue(c), lo, hi)))
-                surviving += ((off, off + rows))
-            case Some((k, mn, mx)) if !statsPass(k, mn, mx) =>
-              // partition-level roll-up excludes the predicate: skip the
-              // whole partition without touching its chunk list
-              partsSkipped += 1
-            case _ =>
-              partsVisited += 1
-              val m = store.partManifest(seg, part)
-              m.chunks.foreach { cm =>
-                if (cm.column == colName &&
-                  statsPass(cm.statsKind, cm.minBits, cm.maxBits))
-                  surviving += ((off + cm.rowStartLocal, off + cm.rowStartLocal + cm.nrows))
-              }
-          }
-        }
-        val merged = Ranges.merge(surviving.toSeq)
-        ranges = Some(ranges.fold(merged)(prev => Ranges.intersect(prev, merged)))
       }
+      val merged = Ranges.merge(surviving.toSeq)
+      ranges = Some(ranges.fold(merged)(prev => Ranges.intersect(prev, merged)))
     }
     val base: Seq[(Long, Long)] = ranges.getOrElse(Seq((0L, Long.MaxValue)))
     val clipped = base.map { case (a, b) => (math.max(a, rowLo), math.min(b, rowHi)) }
@@ -672,21 +676,6 @@ object GraftScan {
     else if (rs == Seq((0L, Long.MaxValue))) SelAll
     else if (rs.size == 1) SelRange(rs.head._1, rs.head._2, 1L)
     else SelRanges(rs.map(_._1).toArray, rs.map(_._2).toArray)
-
-  /** Index-routable predicate shapes → a condition over the index table. */
-  private[sources] def indexCond(f: Filter): Option[(String, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.functions.{col => fcol, lit}
-    val v = fcol(graft.index.Index.ValueCol)
-    f match {
-      case sources.GreaterThan(c, x) => Some((c, v > lit(x)))
-      case sources.GreaterThanOrEqual(c, x) => Some((c, v >= lit(x)))
-      case sources.LessThan(c, x) => Some((c, v < lit(x)))
-      case sources.LessThanOrEqual(c, x) => Some((c, v <= lit(x)))
-      case sources.EqualTo(c, x) => Some((c, v === lit(x)))
-      case sources.In(c, xs) if xs.nonEmpty => Some((c, v.isin(xs.toIndexedSeq: _*)))
-      case _ => None
-    }
-  }
 
   /** Running MIN or MAX over exact stats bits — kind 1 integers, kind 2
     * float IEEE bits — typed to the column at the end. Double.compare
@@ -921,11 +910,7 @@ object GraftScan {
         }
         case _ => None
       }
-    def flat(f: Filter): Seq[Filter] = f match {
-      case sources.And(l, r) => flat(l) ++ flat(r)
-      case other => Seq(other)
-    }
-    filters.flatMap(flat).toSeq.flatMap {
+    filters.flatMap(flatAnd).toSeq.flatMap {
       case sources.EqualTo(c, v) =>
         canon(c, v).map(h => (c, Array(h)))
       case sources.In(c, vs) if vs.nonEmpty =>
@@ -945,22 +930,46 @@ object GraftScan {
     * nrows/stamp and misses the cache, and a same-(rows,stamp) index
     * rebuild contains identical (value, row_id) pairs by construction.
     * Planning metadata only — never query results.
+    *
+    * Bounded by WEIGHT, not entry count: an entry weighs the ranges plus
+    * ids it holds (at least 1), and the total stays under
+    * `PlanCacheWeight`, so driver heap is bounded whatever the predicates.
     */
-  private val planCache =
-    new java.util.LinkedHashMap[String, AnyRef](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, AnyRef]): Boolean = size() > 256
-    }
+  private[sources] final class PlanCache(capacity: Long) {
+    private val entries =
+      new java.util.LinkedHashMap[String, (AnyRef, Long)](64, 0.75f, true)
+    private var total = 0L
 
-  private[sources] def cachedPlan[T <: AnyRef](key: String)(compute: => T): T = {
-    planCache.synchronized {
-      val v = planCache.get(key)
-      if (v != null) return v.asInstanceOf[T]
+    def get(key: String): Option[AnyRef] = synchronized(Option(entries.get(key)).map(_._1))
+
+    /** Insert, then evict least-recently-used entries until the total
+      * weight fits; an entry heavier than the capacity is not kept.
+      */
+    def put(key: String, v: AnyRef, weight: Long): Unit = synchronized {
+      val w = math.max(1L, weight)
+      if (w <= capacity) {
+        Option(entries.put(key, (v, w))).foreach(old => total -= old._2)
+        total += w
+        val it = entries.values.iterator
+        while (total > capacity) { total -= it.next()._2; it.remove() }
+      }
     }
-    val v = compute
-    planCache.synchronized { planCache.put(key, v) }
-    v
   }
+
+  /** Most ranges plus ids the plan cache holds (~16 bytes each, boxed). */
+  private[sources] final val PlanCacheWeight = 1L << 20
+
+  private val planCache = new PlanCache(PlanCacheWeight)
+
+  private[sources] def cachedPlan[T <: AnyRef](key: String, weight: T => Long)(
+      compute: => T): T =
+    planCache.get(key) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val v = compute
+        planCache.put(key, v, weight(v))
+        v
+    }
 
 }
 
@@ -1009,22 +1018,24 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     new GraftMicroBatchStream(root, required, maxRowsPerTrigger,
       pushed.filter(GraftScan.rowIdFilter))
 
-  private def flat(f: Filter): Seq[Filter] = f match {
-    case sources.And(l, r) => flat(l) ++ flat(r)
-    case other => Seq(other)
-  }
-
-  /** Indexed-and-FRESH columns with routable predicates. */
-  private def routedMap(filters: Array[Filter]): Map[String, Seq[org.apache.spark.sql.Column]] =
+  /** Indexed-and-FRESH columns with routable predicates: the index shapes
+    * that can narrow a scan (not `!=`, not an empty IN).
+    */
+  private def routedMap(filters: Array[Filter]): Map[String, Seq[Filter]] =
     if (!useIndex) Map.empty
-    else filters.flatMap(flat).flatMap(GraftScan.indexCond)
-      .filter { case (c, _) => graft.index.Index.routableFor(store, c) }
-      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSeq }
+    else filters.flatMap(GraftScan.flatAnd).filter {
+      case _: sources.Not => false
+      case sources.In(_, xs) => xs.nonEmpty
+      case f => Index.indexCond(f).isDefined
+    }
+      .groupBy(_.references.head)
+      .filter { case (c, _) => Index.routableFor(store, c) }
+      .map { case (c, fs) => c -> fs.toSeq }
 
   /** Static (plan-time) route — decided without a job so the plan string
     * advertises it; runtime filters extend it at execution time.
     */
-  @transient private lazy val routed: Map[String, Seq[org.apache.spark.sql.Column]] =
+  @transient private lazy val routed: Map[String, Seq[Filter]] =
     routedMap(pushed)
 
   override def readSchema(): StructType = required
@@ -1072,16 +1083,17 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
   }
 
   /** SQL users get the secondary index WITHOUT the API facade: the scan
-    * looks the pushed predicates up in the value-sorted index table,
-    * compacts the matching row ids to granule-aligned ranges on executors
-    * (the driver only collects bucket ids, capped), and intersects them
-    * with the zone-map selection. Residual filters keep the result exact;
+    * consults the index for the pushed predicates (`Index.lookup` — on the
+    * driver when the footer-kept row groups are small, else a distributed
+    * job that compacts the hits to bucket ids, capped), compacts the
+    * matching row ids to granule-aligned ranges, and intersects them with
+    * the zone-map selection. Residual filters keep the result exact;
     * `routableFor` guarantees the index saw every append/update, so the
     * pruning is complete. Falls back to pure zone maps when the hit set is
     * too broad to bound (index gives no benefit there anyway).
     */
   private def indexRanges(spark: org.apache.spark.sql.SparkSession,
-      routed: Map[String, Seq[org.apache.spark.sql.Column]]): Option[Seq[(Long, Long)]] = {
+      routed: Map[String, Seq[Filter]]): Option[Seq[(Long, Long)]] = {
     import org.apache.spark.sql.functions.{col => fcol}
     if (routed.isEmpty) return None
     // adaptive granule: fine enough to prune small tables, coarse enough
@@ -1097,17 +1109,17 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       // collide with a prior cache entry
       val key = s"ir|$root|${store.nrows}|${store.updateStamp}|$g|" +
         routed.toSeq.sortBy(_._1)
-          .map { case (c, conds) =>
-            c + "@" + graft.index.Index.metaIdent(store, c) + ":" +
-              conds.mkString("&&") }.mkString("|")
-      GraftScan.cachedPlan(key) {
+          .map { case (c, fs) =>
+            c + "@" + Index.metaIdent(store, c) + ":" + fs.mkString("&&") }.mkString("|")
+      GraftScan.cachedPlan[Option[Seq[(Long, Long)]]](key, _.fold(0L)(_.size.toLong)) {
         var acc: Option[Seq[(Long, Long)]] = None
-        routed.foreach { case (c, conds) =>
-          val idx = graft.index.Index.table(spark, store, c)
-          val buckets = Jobs.described(spark, s"index consult $c")(
-            idx.where(conds.reduce(_ && _))
-              .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
-              .distinct().limit(maxRanges + 1).collect().map(_.getLong(0)))
+        routed.foreach { case (c, fs) =>
+          val buckets = Index.lookup(spark, store, c, fs, valueOrder = false) match {
+            case Left(ids) => ids.map(_ / g).distinct
+            case Right(df) => Jobs.described(spark, s"index consult $c")(
+              df.select((fcol(Index.RowIdCol) / g).cast("long").as("b"))
+                .distinct().limit(maxRanges + 1).collect().map(_.getLong(0)))
+          }
           if (buckets.length <= maxRanges) {
             val ranges = Ranges.fromBuckets(buckets.sorted, g)
             acc = Some(acc.fold(ranges)(prev => Ranges.intersect(prev, ranges)))
@@ -1130,7 +1142,6 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
   private def topNSelection(spark: org.apache.spark.sql.SparkSession): Option[Selection] =
     topN.flatMap { case (c, desc, k) =>
       try {
-        import org.apache.spark.sql.functions.{col => fcol}
         // Re-verify freshness at EXECUTION time against a FRESH store view:
         // pushTopN checked it at plan-build, but an in-place update between
         // planning and execution (or re-running a cached plan) would
@@ -1138,17 +1149,12 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         // selection, top-k-from-a-stale-index is NOT a superset of the true
         // answer, so the retained sort could not repair it.
         val freshStore = ColumnStore.open(root)
-        if (!graft.index.Index.routableFor(freshStore, c)) None
-        else GraftScan.cachedPlan(
+        if (!Index.routableFor(freshStore, c)) None
+        else GraftScan.cachedPlan[Option[SelIds]](
           s"tn|$root|${freshStore.nrows}|${freshStore.updateStamp}|" +
-            s"${graft.index.Index.metaIdent(freshStore, c)}|$c|$desc|$k") {
-          val v = if (desc) fcol(graft.index.Index.ValueCol).desc
-            else fcol(graft.index.Index.ValueCol).asc
-          val ids = Jobs.described(spark, s"index topN $c")(
-            graft.index.Index.table(spark, store, c)
-              .orderBy(v, fcol(graft.index.Index.RowIdCol).asc)
-              .limit(k).select(graft.index.Index.RowIdCol)
-              .collect().map(_.getLong(0)).sorted)
+            s"${Index.metaIdent(freshStore, c)}|$c|$desc|$k",
+          _.fold(0L)(_.ids.length.toLong)) {
+          val ids = Index.topN(spark, freshStore, c, desc, k)
           Some(SelIds(ids, Array.tabulate(ids.length)(_.toLong)))
         }
       } catch {
@@ -1181,8 +1187,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         if (m.gens.nonEmpty) None // per-gen order only; fallback sorts
         else {
           val baseDir = s"${graft.index.Index.dir(store, c)}/${m.base}"
-          val files = FsIO.list(baseDir)
-            .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
+          val files = graft.index.RunFile.files(baseDir)
           if (files.isEmpty) None
           else Some(GraftOrderedPartition(root, c,
             required.fieldNames.filterNot(_ == "_row_id").toSeq,

@@ -1,7 +1,7 @@
 package graft.sources
 
-import graft.index.Index
-import graft.store.{ColumnStore, Decode, FsIO, SelIds, TableSpec}
+import graft.index.{Index, IndexIdStream}
+import graft.store.{ColumnStore, Decode, SelIds, TableSpec}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
@@ -12,7 +12,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Shape: ONE input partition whose reader walks the index's row_id column
   * (the index parquet files are globally range-sorted: file-name order =
-  * range-bucket order, rows sorted within) and gathers the table rows in
+  * range-bucket order, rows sorted within) through `IndexIdStream` — the
+  * parquet-java run reader the driver-side index consults use, opened with
+  * the JVM's one Hadoop Configuration — and gathers the table rows in
   * id batches through the normal chunk machinery — each batch is a SelIds
   * scatter-back into value-order slots, so memory is bounded by one batch
   * and every touched chunk decodes once per batch. The scan reports its
@@ -94,118 +96,4 @@ class OrderedPartitionReader(p: GraftOrderedPartition)
   }
   override def get(): InternalRow = current
   override def close(): Unit = ids.close()
-}
-
-/** Executor-side stream of the index's `row_id` column in file order —
-  * i.e. in VALUE order (the index build is a repartitionByRange +
-  * sortWithinPartitions; Spark names output files in partition order).
-  * Reads ONLY the row_id column chunks (requested-schema projection), so
-  * the stream costs ~8 bytes/row of I/O regardless of the value type.
-  *
-  * `descending = true` walks files and row groups in REVERSE, buffering
-  * one row group's ids (8 B/row of that group) and emitting them
-  * back-to-front — descending value order with bounded memory.
-  */
-private[sources] class IndexIdStream(dir: String, files0: Seq[String],
-    descending: Boolean = false)
-    extends Iterator[Long] with AutoCloseable {
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-  import org.apache.parquet.schema.{MessageType, Type}
-
-  private val remaining = (if (descending) files0.reverse else files0).iterator
-  private var reader: ParquetFileReader = _
-  private var colReader: org.apache.parquet.column.ColumnReader = _
-  private var maxDef: Int = 0
-  private var groupLeft: Long = 0L
-  private var schema: MessageType = _
-  private var groupIdx: Int = 0 // next group to read (desc: counts down)
-  private var descBuf: Array[Long] = _
-  private var descPos: Int = 0 // next emit position in descBuf (counts down)
-
-  private val dummyConverter: GroupConverter = new GroupConverter {
-    override def getConverter(i: Int): Converter = new PrimitiveConverter {}
-    override def start(): Unit = ()
-    override def end(): Unit = ()
-  }
-
-  private def openNextFile(): Boolean = {
-    closeFile()
-    while (remaining.hasNext) {
-      val f = remaining.next()
-      reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/$f"), FsIO.conf))
-      val full = reader.getFooter.getFileMetaData.getSchema
-      // project to row_id only: other columns' pages are never read
-      val rowIdField: Type = full.getType(full.getFieldIndex(Index.RowIdCol))
-      schema = new MessageType(full.getName, rowIdField)
-      reader.setRequestedSchema(schema)
-      groupIdx = if (descending) reader.getRowGroups.size() - 1 else 0
-      if (nextGroup()) return true
-      closeFile() // empty file: advance
-    }
-    false
-  }
-
-  private def nextGroup(): Boolean = {
-    val pages =
-      if (descending) {
-        if (groupIdx < 0) null
-        else { val p = reader.readRowGroup(groupIdx); groupIdx -= 1; p }
-      } else reader.readNextRowGroup()
-    if (pages == null) return false
-    val desc = schema.getColumns.get(0)
-    maxDef = desc.getMaxDefinitionLevel
-    val store = new ColumnReadStoreImpl(pages, dummyConverter, schema,
-      reader.getFooter.getFileMetaData.getCreatedBy)
-    colReader = store.getColumnReader(desc)
-    groupLeft = pages.getRowCount
-    if (descending && groupLeft > 0) {
-      // buffer this group's ids and emit back-to-front
-      val n = groupLeft.toInt
-      if (descBuf == null || descBuf.length < n) descBuf = new Array[Long](n)
-      var i = 0
-      while (i < n) { descBuf(i) = readOne(); i += 1 }
-      descPos = n
-      groupLeft = n // emit counter
-    }
-    groupLeft > 0
-  }
-
-  private def readOne(): Long = {
-    require(colReader.getCurrentDefinitionLevel == maxDef,
-      "null row_id in index parquet")
-    val v = colReader.getLong
-    colReader.consume()
-    v
-  }
-
-  override def hasNext: Boolean = {
-    while (groupLeft == 0L) {
-      if (reader == null || !nextGroup()) {
-        if (!openNextFile()) return false
-      }
-    }
-    true
-  }
-
-  override def next(): Long = {
-    if (!hasNext) throw new NoSuchElementException
-    groupLeft -= 1
-    if (descending) { descPos -= 1; descBuf(descPos) }
-    else readOne()
-  }
-
-  private def closeFile(): Unit = {
-    if (reader != null) {
-      try reader.close() catch { case _: Exception => () }
-      reader = null
-      colReader = null
-      groupLeft = 0L
-    }
-  }
-
-  override def close(): Unit = closeFile()
 }
