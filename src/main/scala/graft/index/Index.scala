@@ -2,7 +2,7 @@ package graft.index
 
 import graft.codec.Bytes
 import graft.sources.GraftScan
-import graft.store.{BinCodec, ColumnStore, FsIO, Jobs, SelRange}
+import graft.store.{BinCodec, ColumnStore, Decode, FsIO, Jobs, SelRange}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions, sources}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -20,11 +20,15 @@ import scala.collection.mutable
   * reference's `.index`/`.sorted`/`.index1` trio (pycolumns
   * column.py:483-613).
   *
-  * Build: `select(value, row_id) → repartitionByRange(value) →
-  * sortWithinPartitions(value, row_id)` persisted as Parquet. Spark's
-  * Tungsten external shuffle sort subsumes BOTH reference branches
-  * (in-memory argsort and the external k-way mergesort, mergesort.py) —
-  * SURVEY.md §2.3 I1-I3: do not reimplement.
+  * Build: every index run (the base sort, a delta generation, a merge of
+  * generations) is (value, row_id) rows sorted by both, persisted as
+  * Parquet. As the reference picks by size — an in-memory argsort when the
+  * column fits, its external k-way mergesort past `cache_mem`
+  * (column.py:483-559, mergesort.py) — a run of at most `DriverRows` rows
+  * and `DriverBytes` raw bytes is sorted and written on the driver with no
+  * Spark job, and a larger one by Spark's external shuffle sort
+  * (`repartitionByRange → sortWithinPartitions`), never a reimplemented
+  * mergesort (SURVEY.md §2.3 I1-I3).
   *
   * Lookup: runs are value-sorted, so Parquet row-group min/max statistics
   * are exactly the reference's coarse `index1` zone map (every-10,000th
@@ -200,37 +204,36 @@ object Index {
     m.rows == store.nrows && m.stamp == store.updateStamp
   }
 
-  /** Build (or rebuild) the index for a column. One shuffle, fully
-    * distributed; partition count scales with data size so a 100× larger
-    * table gets proportionally more sort partitions.
+  /** Build (or rebuild) the index for a column: one sorted run of every
+    * row, written by [[writeRun]] — on the driver when it is small, else by
+    * one distributed range sort.
     */
   def create(spark: SparkSession, store: ColumnStore, col: String,
-      overwrite: Boolean = false): Unit = {
+      overwrite: Boolean = false): Unit =
+    create(spark, store, col, overwrite, DriverRows)
+
+  private[graft] def create(spark: SparkSession, store: ColumnStore, col: String,
+      overwrite: Boolean, bound: Int): Unit = {
     require(store.spec.col(col).ptypeId != graft.codec.PType.I32LIST.id,
       s"cannot index array column $col")
     if (exists(store, col))
       require(overwrite, s"index on $col exists " +
         "(reference raises unless overwrite=True, column.py:492-497)")
+    // the rows and stamp this build sees, taken before the read is planned:
+    // an update landing later leaves the index stamped older than the
+    // store, so DSv2 routing disengages until the next refresh
     val nrows = store.nrows
-    val df = store.read(spark, Seq(col))
-      .select(org.apache.spark.sql.functions.col(col).as(ValueCol),
-        org.apache.spark.sql.functions.col("_row_id").as(RowIdCol))
-    // ~2M rows per sort partition; bounded so tiny tables get 1 partition
-    val parts = math.max(1, math.min(2048, (nrows / (2L << 20)).toInt + 1))
-    val d = dir(store, col)
+    val stamp = store.updateStamp
     // NEW versioned base dir — never overwrites files another meta (or an
     // in-flight reader) references; superseded bases age out via the GC
     val base = s"_base-${java.util.UUID.randomUUID().toString.take(12)}"
-    Jobs.described(spark, s"index build $col")(
-      df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
-        .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
-        .write.mode("overwrite").parquet(s"$d/$base"))
-    // stamp recorded for DSv2 routing freshness (see routableFor); a full
-    // build collapses every delta generation into the new base.
+    writeRun(spark, store, col, base, SelRange(0L, nrows, 1L), Seq.empty, bound,
+      s"index build $col")
+    // a full build collapses every delta generation into the new base.
     // Commit-until-win: a rebuild reflects the complete CURRENT table, so
     // it must end up the effective meta even if incremental refreshes race
     // it (their metas reference the OLD base — self-consistent, loser).
-    val m = IdxMeta(nrows, store.updateStamp, Seq.empty, base)
+    val m = IdxMeta(nrows, stamp, Seq.empty, base)
     var attempt = 0
     var done = false
     while (!done && attempt < 16) {
@@ -240,6 +243,66 @@ object Index {
     }
     require(done, s"index build on $col lost ${attempt} meta commit races")
     gcSweep(store, col)
+  }
+
+  /** Most raw (decoded) bytes a run built on the driver may read: the
+    * planned chunks' `ChunkMeta.rawBytes` plus, for a gen merge, the old
+    * gens' footer sizes. It keeps 2^15 wide values from pulling gigabytes
+    * onto the driver. Measured at local[4] (min / median of 7 alternating
+    * builds): 2^15 strings of 500 bytes (16.5 MB raw) build in 192 / 230 ms
+    * on the driver against 288 / 332 ms by Spark; 2^15 longs in 41 / 52 ms
+    * against 285 / 352 ms.
+    */
+  final val DriverBytes: Long = 16L << 20
+
+  /** Write the run directory `run` of `col`'s index: the store's rows in
+    * `sel` plus the rows of the delta gens `merged`, sorted by (value,
+    * row_id). The reference argsorts a column in memory when it fits and
+    * mergesorts externally past `cache_mem` (column.py:483-559); here a run
+    * of at most `bound` rows and `DriverBytes` raw bytes is decoded on the
+    * driver (the store's chunk decoder, the gens through [[RunFile]]),
+    * sorted by Spark's own ordering and written by [[RunFile.write]] with
+    * no Spark job. Larger runs take one distributed range sort:
+    * `repartitionByRange(value, row_id) → sortWithinPartitions` written as
+    * Parquet, partitions scaling with the rows.
+    */
+  private def writeRun(spark: SparkSession, store: ColumnStore, col: String, run: String,
+      sel: SelRange, merged: Seq[(String, Long)], bound: Int, what: String): Unit = {
+    val d = dir(store, col)
+    val schema = tableSchema(store, col)
+    val rows = sel.stop - sel.start + merged.map(_._2).sum
+    if (rows <= bound) {
+      val (units, _) = store.planUnits(Seq(col), sel)
+      val opened = mutable.ArrayBuffer.empty[RunFile]
+      try {
+        for ((g, _) <- merged; f <- RunFile.files(s"$d/$g")) opened += new RunFile(s"$d/$g/$f")
+        val bytes = units.flatMap(_.colChunks(col)).map(_.rawBytes).sum +
+          opened.map(_.rawBytes).sum
+        if (bytes <= DriverBytes) {
+          val dt = schema.head.dataType
+          val buf = new mutable.ArrayBuffer[(Any, Long)](rows.toInt)
+          units.foreach { u =>
+            val r = new Decode.ColumnarUnitReader(u, store.spec, Seq(col, "_row_id"))
+            try r.rows.foreach(row => buf += ((InternalRow.copyValue(row.get(0, dt)), row.getLong(1))))
+            finally r.close()
+          }
+          for (f <- opened; g <- 0 until f.groups) f.foreach(g, dt)((v, id) => buf += ((v, id)))
+          RunFile.write(spark, s"$d/$run", schema, buf.sorted(ordering(dt, desc = false)))
+          return
+        }
+      } finally opened.foreach(_.close())
+    }
+    Jobs.described(spark, what) {
+      val fresh = store.read(spark, Seq(col), sel)
+        .select(functions.col(col).as(ValueCol), functions.col("_row_id").as(RowIdCol))
+      val df = if (merged.isEmpty) fresh
+        else spark.read.schema(schema).parquet(merged.map(g => s"$d/${g._1}"): _*).unionAll(fresh)
+      // ~2M rows per sort partition; bounded so tiny runs get 1 partition
+      val parts = math.max(1, math.min(2048, (rows / (2L << 20)).toInt + 1))
+      df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
+        .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
+        .write.mode("overwrite").parquet(s"$d/$run")
+    }
   }
 
   /** Full path of the meta's base-sort parquet. */
@@ -307,7 +370,10 @@ object Index {
     * the meta write is the atomic commit point, so readers never observe a
     * half-written generation and a crashed attempt leaves only an orphan
     * dir the next refresh GCs. Each generation is itself range-sorted, so
-    * Parquet row-group pruning applies per gen.
+    * Parquet row-group pruning applies per gen. Every run — delta, merge or
+    * rebuild — is written by [[writeRun]]: on the driver when it is small,
+    * as the reference argsorts a column that fits in memory, else by one
+    * distributed range sort.
     *
     * Maintenance is amortized O(delta), NEVER periodically O(table):
     *  - more than `maxDeltaGens` gens → MERGE all gens + the new rows into
@@ -322,11 +388,15 @@ object Index {
     * values).
     */
   def refresh(spark: SparkSession, store: ColumnStore, col: String,
-      maxDeltaGens: Int = 8): Unit = {
+      maxDeltaGens: Int = 8): Unit =
+    refresh(spark, store, col, maxDeltaGens, DriverRows)
+
+  private[graft] def refresh(spark: SparkSession, store: ColumnStore, col: String,
+      maxDeltaGens: Int, bound: Int): Unit = {
     var attempt = 0
     var done = false
     while (!done && attempt < 4) {
-      done = refreshOnce(spark, store, col, maxDeltaGens)
+      done = refreshOnce(spark, store, col, maxDeltaGens, bound)
       attempt += 1 // lost a CAS race: re-read the winner — usually the
                    // racing refresh already covered our rows → no-op
     }
@@ -338,44 +408,33 @@ object Index {
     * re-reads and retries); every other exit is a clean completion.
     */
   private def refreshOnce(spark: SparkSession, store: ColumnStore, col: String,
-      maxDeltaGens: Int): Boolean = {
+      maxDeltaGens: Int, bound: Int): Boolean = {
     if (!exists(store, col)) return true
     val (m, epoch) = readMetaEpoch(store, col)
+    // the rows and stamp this refresh sees, taken before the read is planned
     val n = store.nrows
-    if (m.rows == n && m.stamp == store.updateStamp) return true // fresh
+    val stamp = store.updateStamp
+    if (m.rows == n && m.stamp == stamp) return true // fresh
     val newRows = n - m.rows
-    val incrementalOk = m.stamp == store.updateStamp && newRows > 0
+    val incrementalOk = m.stamp == stamp && newRows > 0
     if (!incrementalOk || (m.deltaRows + newRows) * 4L > n) {
-      create(spark, store, col, overwrite = true) // commit-until-win inside
+      create(spark, store, col, overwrite = true, bound) // commit-until-win inside
       return true
     }
-    val d = dir(store, col)
-    val fresh = store.read(spark, Seq(col), SelRange(m.rows, n, 1L))
-      .select(org.apache.spark.sql.functions.col(col).as(ValueCol),
-        org.apache.spark.sql.functions.col("_row_id").as(RowIdCol))
-    val merge = m.gens.size >= maxDeltaGens
+    // past maxDeltaGens, collapse every gen + the new rows into ONE
+    // generation — reads only delta data, the base sort is untouched
+    val merged = if (m.gens.size >= maxDeltaGens) m.gens else Seq.empty
     val gen = s"_gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    val (genRows, newGens) = Jobs.described(spark, s"index refresh $col") {
-      val (df, genRows, newGens) =
-        if (merge) {
-          // collapse every gen + the new rows into ONE generation — reads
-          // only delta data, the base sort is untouched
-          val old = spark.read.parquet(m.gens.map(g => s"$d/${g._1}"): _*)
-          (old.unionAll(fresh), m.deltaRows + newRows, Seq.empty[(String, Long)])
-        } else (fresh, newRows, m.gens)
-      val parts = math.max(1, math.min(2048, (genRows / (2L << 20)).toInt + 1))
-      df.repartitionByRange(parts, asc(ValueCol), asc(RowIdCol))
-        .sortWithinPartitions(asc(ValueCol), asc(RowIdCol))
-        .write.mode("overwrite").parquet(s"$d/$gen")
-      (genRows, newGens)
-    }
+    writeRun(spark, store, col, gen, SelRange(m.rows, n, 1L), merged, bound,
+      s"index refresh $col")
+    val kept = if (merged.isEmpty) m.gens else Seq.empty
     // COMMIT (CAS): the epoch-named meta makes the new generation (and, on
     // merge, the disappearance of the old ones) visible atomically; losing
     // the race leaves our gen as an unreferenced orphan for the sweep
     // below to tombstone — a reader that sampled our meta mid-race still
     // has every dir it references.
     if (!commitMeta(store, col,
-        IdxMeta(n, store.updateStamp, newGens :+ (gen, genRows), m.base), epoch + 1))
+        IdxMeta(n, stamp, kept :+ (gen, newRows + merged.map(_._2).sum), m.base), epoch + 1))
       return false
     gcSweep(store, col)
     true
@@ -439,13 +498,15 @@ object Index {
   // All return a DataFrame[row_id: bigint] in value-then-row_id order
   // (the reference returns Indices slices of the value-sorted permutation).
 
-  /** Most index rows a consult reads on the driver. Measured at local[4]
-    * on a one-column long index: a consult matching every one of 2^15 rows
-    * plans and collects its local id frame as fast as the distributed read
-    * (≈110 ms each), and at 2^16 takes ≈180 ms against ≈100 ms; a local
-    * frame costs ≈2-3 µs per id. Selective consults, range routing and
-    * top-N stay faster on the driver well past this (≈30 ms against
-    * ≈90-250 ms at 2^16 rows).
+  /** Most index rows read or written on the driver: a consult's
+    * footer-kept rows, and the rows of a run a build, refresh or merge
+    * writes (see [[writeRun]]; `DriverBytes` bounds its bytes too).
+    * Measured at local[4] on a one-column long index: a consult matching
+    * every one of 2^15 rows plans and collects its local id frame as fast
+    * as the distributed read (≈110 ms each), and at 2^16 takes ≈180 ms
+    * against ≈100 ms; a local frame costs ≈2-3 µs per id. Selective
+    * consults, range routing and top-N stay faster on the driver well past
+    * this (≈30 ms against ≈90-250 ms at 2^16 rows).
     */
   final val DriverRows: Int = 1 << 15
 

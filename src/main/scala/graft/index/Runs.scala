@@ -1,16 +1,25 @@
 package graft.index
 
 import graft.store.FsIO
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.ColumnReader
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.column.statistics.{BinaryStatistics, BooleanStatistics,
   DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,7 +27,8 @@ import scala.jdk.CollectionConverters._
 
 /** One Parquet file of an index run, read with parquet-java directly — the
   * one reader behind the driver-side consults (`Index.lookup`,
-  * `Index.topN`) and the executor-side ordered scan ([[IndexIdStream]]).
+  * `Index.topN`), the driver-side gen merge and the executor-side ordered
+  * scan ([[IndexIdStream]]).
   * A run (the base sort or one delta generation) is a directory of files of
   * (value, row_id) rows sorted by (value, row_id); file-name order is range
   * order.
@@ -43,6 +53,8 @@ private[graft] final class RunFile(path: String) extends AutoCloseable {
 
   def groups: Int = footer.getBlocks.size
   def rowCount(g: Int): Long = footer.getBlocks.get(g).getRowCount
+  /** Uncompressed bytes of every row group, from the footer. */
+  def rawBytes: Long = footer.getBlocks.asScala.map(_.getTotalByteSize).sum
 
   /** Footer min/max of group `g`'s values in the store's zone-map encoding
     * (kind, minBits, maxBits) — see `GraftScan.chunkMayMatch`. None when
@@ -144,6 +156,76 @@ private[graft] object RunFile {
   /** The `part-*.parquet` files of a run directory in range order. */
   def files(dir: String): Seq[String] =
     FsIO.list(dir).filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
+
+  /** The SQL settings Spark's Parquet write support reads from the writer's
+    * Configuration (Spark's own write copies them there before each job).
+    */
+  private val writeKeys = Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+    SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE, SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+    SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).map(_.key)
+
+  /** Write `rows`, already in (value, row_id) order, as the run directory
+    * `dir` with no Spark job: Spark's own Parquet write support over
+    * InternalRows, streamed through `FsIO.createOut` (nio plus a `.crc`
+    * sidecar on local paths). Files are `part-<k>-<uuid>.parquet`, so
+    * file-name order is range order. As Spark's write does, it takes the
+    * session's compression codec, row-group size (`parquet.block.size`) and
+    * `maxRecordsPerFile`; a run with no rows still gets one (empty) file.
+    */
+  def write(spark: SparkSession, dir: String, schema: StructType,
+      rows: collection.Seq[(Any, Long)]): Unit = {
+    val conf = new Configuration(false)
+    // REQUIRED columns, as Spark writes the store's non-null columns: no
+    // definition levels to write or read back
+    ParquetWriteSupport.setSchema(StructType(schema.map(_.copy(nullable = false))), conf)
+    writeKeys.foreach(k => conf.set(k, spark.conf.get(k)))
+    val codec = CompressionCodecName.fromConf(
+      spark.conf.get(SQLConf.PARQUET_COMPRESSION.key) match {
+        case "none" => "uncompressed"
+        case c => c
+      })
+    val groupBytes = spark.conf.getOption(ParquetOutputFormat.BLOCK_SIZE)
+      .map(_.toLong).getOrElse(ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
+    val perFile = spark.conf.get(SQLConf.MAX_RECORDS_PER_FILE.key).toLong
+    val uuid = java.util.UUID.randomUUID().toString
+    val slices = if (perFile > 0 && perFile < rows.size) rows.grouped(perFile.toInt) else Iterator(rows)
+    slices.zipWithIndex.foreach { case (slice, k) =>
+      val w = new RunFile.Builder(new RunFile.Out(f"$dir/part-$k%05d-$uuid.parquet"))
+        .withConf(conf).withCompressionCodec(codec).withRowGroupSize(groupBytes).build()
+      try {
+        val row = new GenericInternalRow(2)
+        slice.foreach { case (v, id) => row.update(0, v); row.setLong(1, id); w.write(row) }
+      } finally w.close()
+    }
+  }
+
+  private final class Builder(f: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, Builder](f) {
+    override def self(): Builder = this
+    override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
+
+  /** A data file written through `FsIO.createOut`. */
+  private final class Out(path: String) extends OutputFile {
+    override def create(blockSizeHint: Long): PositionOutputStream =
+      createOrOverwrite(blockSizeHint)
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+      new PositionOutputStream {
+        private val out = FsIO.createOut(path)
+        private var pos = 0L
+        override def getPos: Long = pos
+        override def write(b: Int): Unit = { out.write(b); pos += 1 }
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          out.write(b, off, len); pos += len
+        }
+        override def flush(): Unit = out.flush()
+        override def close(): Unit = out.close()
+      }
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = 0L
+    override def getPath: String = path
+  }
 }
 
 /** An index run's `row_id` column in file order — i.e. in VALUE order (the

@@ -10,8 +10,8 @@ import scala.jdk.CollectionConverters._
   * Mirrors the reference read path (pycolumns chunks.py:633-669: histogram
   * rows per chunk, decompress each touched chunk once, slice rows out) —
   * here each unit decodes its pruned chunk list sequentially. Every read
-  * surface (DSv2 scan, `ColumnStore.read`, ordered scan) decodes through
-  * [[ColumnarUnitReader]].
+  * surface (DSv2 scan, `ColumnStore.read`, ordered scan, the driver-side
+  * index build) decodes through [[ColumnarUnitReader]].
   */
 object Decode {
 

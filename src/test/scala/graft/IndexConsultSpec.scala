@@ -10,9 +10,12 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.collection.mutable
+
 /** Index consults answered on the driver (footer-pruned reads of the index
   * runs, Spark's predicate over the kept rows) against the distributed
-  * index read they replace, over every value type and index shape.
+  * index read they replace, and index runs built on the driver against the
+  * distributed sort they replace, over every value type and index shape.
   */
 class IndexConsultSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -231,15 +234,21 @@ class IndexConsultSpec extends AnyFunSuite {
     c.dropStore()
   }
 
-  test("a corrupted index run fails the consult; a routed scan falls back, then routes again") {
+  // the default build writes a run this small on the driver; bound -1
+  // forces the distributed sort's Parquet commit
+  for ((suffix, bound) <- Seq(("", Index.DriverRows), (" (distributed-written run)", -1)))
+  test("a corrupted index run fails the consult; a routed scan falls back, then routes again" +
+      suffix) {
     val n = 4000
     val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
     val c = Columns.fromDataFrame(spark, tmpDir("graft-consult-crc"), spark.createDataFrame(
       spark.sparkContext.parallelize((0 until n).map(i => Row((i * 7919L) % n)), 4), schema),
       chunkRows = 50)
-    c("v").createIndex()
+    Index.create(spark, c.store, "v", overwrite = false, bound)
     val base = Index.basePath(c.store, "v")
     val part = graft.index.RunFile.files(base).head
+    // the checksummed local FS verifies every read against this sidecar
+    assert(new java.io.File(s"$base/.$part.crc").isFile, s"no .crc sidecar for $part")
     val file = new java.io.RandomAccessFile(s"$base/$part", "rw")
     def flip(): Unit = { file.seek(100); val b = file.read(); file.seek(100); file.write(b ^ 0x5a) }
     def plannedChunks(): Int = {
@@ -305,5 +314,210 @@ class IndexConsultSpec extends AnyFunSuite {
       assert(jobs.get() == 1, s"indexed gather launched ${jobs.get()} jobs")
     } finally sc.removeSparkListener(listener)
     c.dropStore()
+  }
+
+  /** Every run of `name`'s effective meta as its (value, row_id) rows in
+    * file order — floats as raw bits, so NaN and ±0.0 compare exactly — and
+    * its row groups' footer stats.
+    */
+  private def runs(store: graft.store.ColumnStore, name: String)
+      : Seq[(Seq[(Any, Long)], Seq[Option[(Int, Long, Long)]])] = {
+    val d = Index.dir(store, name)
+    val m = Index.readMeta(store, name)
+    val dt = cols.find(_._1 == name).get._2
+    (m.base +: m.gens.map(_._1)).map { r =>
+      val files = graft.index.RunFile.files(s"$d/$r")
+      assert(files.nonEmpty, s"run $r of $name has no file")
+      val rows = mutable.ArrayBuffer.empty[(Any, Long)]
+      val stats = mutable.ArrayBuffer.empty[Option[(Int, Long, Long)]]
+      files.foreach { f =>
+        val rf = new graft.index.RunFile(s"$d/$r/$f")
+        try (0 until rf.groups).foreach { g =>
+          stats += rf.stats(g)
+          rf.foreach(g, dt) { (v, id) =>
+            val k = v match {
+              case x: Double => java.lang.Double.doubleToRawLongBits(x)
+              case x: Float => java.lang.Float.floatToRawIntBits(x)
+              case x: Array[Byte] => x.toSeq
+              case x => x.toString
+            }
+            rows += ((k, id))
+          }
+        } finally rf.close()
+      }
+      (rows.toSeq, stats.toSeq)
+    }
+  }
+
+  test("driver-built and distributed runs agree: create, deltas, merge and quarter rebuild") {
+    val driver = Columns.fromDataFrame(spark, tmpDir("graft-build-driver"), rows(0, 400))
+    val spread = Columns.fromDataFrame(spark, tmpDir("graft-build-spark"), rows(0, 400))
+    def step(state: String)(op: (Columns, Int) => Unit): Unit = {
+      op(driver, Index.DriverRows)
+      op(spread, -1)
+      cols.foreach { case (n, _, _) =>
+        val (a, b) = (Index.readMeta(driver.store, n), Index.readMeta(spread.store, n))
+        assert((a.rows, a.stamp, a.gens.map(_._2)) == (b.rows, b.stamp, b.gens.map(_._2)),
+          s"$state $n: metas differ")
+        val (ra, rb) = (runs(driver.store, n), runs(spread.store, n))
+        assert(ra.map(_._1) == rb.map(_._1), s"$state $n: (value, row_id) sequences differ")
+        // footer min/max (string-annotated for s) as Spark's write records them
+        assert(ra.map(_._2) == rb.map(_._2), s"$state $n: footer stats differ")
+        if (n == "i64" || n == "s")
+          assert(ra.flatMap(_._2).forall(_.isDefined), s"$state $n: no footer stats")
+      }
+    }
+    def append(from: Int, until: Int, maxGens: Int = 8)(c: Columns, bound: Int): Unit = {
+      c.store.append(spark, rows(from, until))
+      cols.foreach { case (n, _, _) => Index.refresh(spark, c.store, n, maxGens, bound) }
+    }
+    step("create")((c, bound) =>
+      cols.foreach { case (n, _, _) => Index.create(spark, c.store, n, overwrite = false, bound) })
+    step("delta")(append(400, 420))
+    step("second delta")(append(420, 450))
+    step("merge")(append(450, 470, maxGens = 2))
+    cols.foreach { case (n, _, _) => assert(Index.deltaGens(driver.store, n).size == 1, n) }
+    assertReadsAgree(driver, spread, "merged gen")
+    step("quarter rebuild")(append(470, 700))
+    cols.foreach { case (n, _, _) => assert(Index.deltaGens(driver.store, n).isEmpty, n) }
+    assertReadsAgree(driver, spread, "rebuilt")
+    // a fresh delta-free index streams the ordered read in index order
+    cols.foreach { case (n, _, _) =>
+      def ordered(c: Columns) = c.readOrdered(n, Seq(n)).collect().map(_.getLong(0)).toSeq
+      assert(ordered(driver) == ordered(spread), s"readOrdered $n")
+    }
+    driver.dropStore()
+    spread.dropStore()
+  }
+
+  /** Consults, top-N and DSv2 routed scans over two stores of the same
+    * rows, one with driver-built runs, return the same rows.
+    */
+  private def assertReadsAgree(a: Columns, b: Columns, state: String): Unit = {
+    cols.foreach { case (n, _, _) =>
+      cases(a, n).zip(cases(b, n)).foreach { case ((desc, fa, _), (_, fb, _)) =>
+        assert(fa().collect().map(_.getLong(0)).toSeq == fb().collect().map(_.getLong(0)).toSeq,
+          s"$state $n $desc")
+      }
+      for (desc <- Seq(false, true); k <- Seq(1, 17, 500))
+        assert(Index.topN(spark, a.store, n, desc, k).toSeq ==
+          Index.topN(spark, b.store, n, desc, k).toSeq, s"$state topN $n desc=$desc k=$k")
+    }
+    val shown = cols.map(_._1).filterNot(_ == "bin").map(col)
+    Seq(col("i64").between(-3L, 5L), col("s") === "é", col("f64") > 1.0, col("b") === true,
+        col("i16") < 0.toShort, col("f32") === Float.NaN).foreach { p =>
+      def routed(c: Columns) = {
+        val q = spark.read.format("graft").load(c.root).where(p).select(shown: _*)
+        assert(q.queryExecution.executedPlan.toString.contains("IndexRouted"), s"$state $p not routed")
+        q.collect().map(_.toString).sorted.toSeq
+      }
+      assert(routed(a) == routed(b), s"$state routed $p")
+    }
+  }
+
+  /** Spark jobs started while `body` runs, with their descriptions. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def settle(): Unit = { // listener events are async: poll until stable
+      var last = -1
+      var same = 0
+      var spins = 0
+      while (same < 3 && spins < 50) {
+        val v = descs.size
+        if (v == last) same += 1 else { same = 0; last = v }
+        Thread.sleep(100)
+        spins += 1
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try { settle(); descs.clear(); body; settle() }
+    finally sc.removeSparkListener(listener)
+    descs.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a small build, refresh and merge run no Spark job; the refresh decodes only new chunks") {
+    val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
+    def df(from: Int, until: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
+      (from until until).map(i => Row((i * 7919L) % 1000)), 2), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-build-jobs"), df(0, 3000), chunkRows = 100)
+    var newChunks, decoded = 0L
+    val jobs = jobsDuring {
+      c("v").createIndex()
+      c.store.append(spark, df(3000, 3250))
+      c.store.append(spark, df(3250, 3300))
+      newChunks = c.store.segments.takeRight(2)
+        .map(s => c.store.partManifests(s).map(_.chunks.size.toLong).sum).sum
+      // the two appends refresh as one delta of 300 rows
+      val before = graft.store.Decode.chunksRead.get()
+      Index.refresh(spark, c.store, "v")
+      decoded = graft.store.Decode.chunksRead.get() - before
+      // past the cap of one gen, the next refresh merges
+      c.store.append(spark, df(3300, 3320))
+      Index.refresh(spark, c.store, "v", maxDeltaGens = 1)
+    }
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft: append")),
+      s"index jobs launched: $jobs")
+    assert(decoded == newChunks, s"refresh decoded $decoded chunks, not the $newChunks new ones")
+    assert(Index.deltaGens(c.store, "v").size == 1)
+    assert(Index.table(spark, c.store, "v").count() == 3320L)
+    assert(RowIds.collectSorted(c("v") === 13L).toSeq ==
+      (0 until 3320).filter(i => (i * 7919L) % 1000 == 13).map(_.toLong))
+    c.dropStore()
+  }
+  test("an empty store's build writes a readable zero-row run, on either path") {
+    for (bound <- Seq(Index.DriverRows, -1)) {
+      val store = graft.store.ColumnStore.create(tmpDir("graft-build-empty"),
+        graft.store.ColumnStore.specFromSchema(StructType(Seq(
+          StructField("s", StringType, nullable = false)))))
+      Index.create(spark, store, "s", overwrite = false, bound)
+      val base = Index.basePath(store, "s")
+      assert(graft.index.RunFile.files(base).nonEmpty, s"bound $bound: no run file")
+      assert(Index.table(spark, store, "s").count() == 0L)
+      assert(Index.consult(spark, store, "s", Seq(sources.GreaterThan("s", ""))).count() == 0L)
+      assert(Index.topN(spark, store, "s", desc = true, 5).isEmpty)
+      assert(Index.routableFor(store, "s"))
+      store.dropStore()
+    }
+  }
+
+  test("a run past the driver byte bound is built by Spark") {
+    // 33 rows of 512 KiB strings: far under DriverRows, over DriverBytes
+    val wide = 33
+    val schema = StructType(Seq(StructField("s", StringType, nullable = false)))
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-build-wide"), spark.createDataFrame(
+      spark.sparkContext.parallelize((0 until wide).map(i =>
+        Row(s"${(wide - i) % 7}" * (1 << 19))), 2), schema))
+    assert(c.store.colRawBytes("s") > Index.DriverBytes)
+    val jobs = jobsDuring(c("s").createIndex())
+    assert(jobs.contains("graft: index build s"), s"expected the distributed build: $jobs")
+    assert(RowIds.collectSorted(c("s") === "3" * (1 << 19)).toSeq ==
+      (0 until wide).filter(i => (wide - i) % 7 == 3).map(_.toLong))
+    c.dropStore()
+  }
+
+  test("an index built from a store snapshot older than the store is not routable") {
+    val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
+    for (bound <- Seq(Index.DriverRows, -1)) {
+      val c = Columns.fromDataFrame(spark, tmpDir("graft-build-stamp"), spark.createDataFrame(
+        spark.sparkContext.parallelize((0 until 500).map(i => Row(i.toLong)), 2), schema))
+      // a second handle on the store caches its manifests now...
+      val old = graft.store.ColumnStore.open(c.root)
+      assert(old.updateStamp == c.store.updateStamp)
+      // ...so it misses this update, and builds from the rows before it
+      c("v").update(Seq(3L), Seq(-3L))
+      Index.create(spark, old, "v", overwrite = false, bound)
+      assert(!Index.routableFor(c.store, "v"), s"bound $bound: stale index routable")
+      // the stale stamp forces a rebuild, which sees the update
+      Index.refresh(spark, c.store, "v", maxDeltaGens = 8, bound)
+      assert(Index.routableFor(c.store, "v"))
+      assert(RowIds.collectSorted(c("v") === -3L).toSeq == Seq(3L))
+      c.dropStore()
+    }
   }
 }

@@ -205,7 +205,10 @@ class IndexSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      c.append(df(100000L until 102000L, 2)) // triggers the auto-refresh
+      // the append and its refresh, the refresh forced onto the distributed
+      // sort (a run this small is otherwise built on the driver, no shuffle)
+      c.store.append(spark, df(100000L until 102000L, 2))
+      Index.refresh(spark, c.store, "ind", maxDeltaGens = 8, bound = -1)
       // listener events are async: poll until the counter stabilizes
       var last = -1L
       var same = 0
@@ -487,8 +490,11 @@ class IndexSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     sc.addSparkListener(listener)
     try {
-      c("ind").createIndex()
-      c.append(df(20000L until 21000L, 1)) // auto-refresh: incremental path
+      // build and incremental refresh forced onto the distributed sort: runs
+      // this small are otherwise built on the driver with no job at all
+      Index.create(spark, c.store, "ind", overwrite = false, bound = -1)
+      c.store.append(spark, df(20000L until 21000L, 1))
+      Index.refresh(spark, c.store, "ind", maxDeltaGens = 8, bound = -1)
       assert(Index.deltaGens(c.store, "ind").size == 1)
       c("ind").update(Seq(5L), Seq(-5L))
       c.vacuum()
