@@ -143,10 +143,11 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
     sb.toString
   }
 
-  /** Drop every cached planning structure and re-read from disk — the
-    * reference's `reload()` for stores mutated by another process.
+  /** The reference's `reload()` for stores mutated by another process. A
+    * no-op here: every read already takes the store's newest published
+    * version.
     */
-  def reload(): Columns = { store.invalidateAll(); this }
+  def reload(): Columns = this
 
   private[graft] def requireWritable(): Unit =
     if (mode == "r") throw new java.io.IOException(
@@ -155,15 +156,12 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
   // --------------------------------------------------------------- write
 
   private var deferIndexRefresh = false
-  // columns whose index MUST rebuild regardless of row count (scatter
-  // updates change values without changing nrows)
-  private val forcedRefresh = scala.collection.mutable.LinkedHashSet.empty[String]
 
   def append(df: DataFrame, order: OrderMode = AsIs, lineage: String = "",
       cfg: CodecConfig = CodecConfig.default): Unit = {
     requireWritable()
     store.append(spark, df, order, lineage, cfg)
-    requestIndexRefresh(Nil)
+    requestIndexRefresh()
   }
 
   /** Defer index rebuilds until the block exits (pycolumns `updating()`
@@ -179,35 +177,23 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
       val out = f(this)
       if (!outer) {
         deferIndexRefresh = false
-        requestIndexRefresh(Nil)
+        requestIndexRefresh()
       }
       out
     } finally deferIndexRefresh = outer
   }
 
-  /** Refresh indexes: the named columns unconditionally (value updates
-    * don't change nrows), plus any index whose built row count is stale
-    * (appends). Deferred inside `updating{}` — forced columns are
-    * remembered until exit. Append-only staleness takes the INCREMENTAL
-    * path (sort just the new rows, `Index.refresh`); forced columns and
-    * any store with in-place updates since the build fall back to a full
-    * rebuild (changed values can't be expressed as a delta).
+  /** Bring every index up to date unless inside `updating{}`. `Index.refresh`
+    * decides from the store version: no-op while fresh, the INCREMENTAL
+    * path after appends (sort just the new rows), a full rebuild after an
+    * in-place update (changed values can't be expressed as a delta).
     */
-  private[graft] def requestIndexRefresh(forcedCols: Seq[String]): Unit = {
-    forcedRefresh ++= forcedCols.filter(Index.exists(store, _))
+  private[graft] def requestIndexRefresh(): Unit =
     if (!deferIndexRefresh) {
-      val n = nrows
-      val stale = columnNames.filter(c =>
-        Index.exists(store, c) && Index.builtRows(store, c) != n)
-      val toDo = (forcedRefresh ++ stale).toSeq.distinct
-      val forced = forcedRefresh.toSet
-      forcedRefresh.clear()
-      toDo.foreach { c =>
-        if (forced(c)) Index.create(spark, store, c, overwrite = true)
-        else Index.refresh(spark, store, c)
-      }
+      val dirs = FsIO.list(s"$root/${Format.IndexDir}").toSet // one listing, not one per column
+      columnNames.filter(c => dirs(c) && Index.exists(store, c))
+        .foreach(Index.refresh(spark, store, _))
     }
-  }
 
   // ---------------------------------------------------------------- read
 
@@ -435,36 +421,16 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
 
   // ----------------------------------------------------------- maintain
 
-  /** Indexes that are exactly fresh right now — safe to re-stamp after a
-    * maintenance op that preserves all (value, row_id) pairs. An index
-    * already stale (pending rebuild inside `updating{}`, missed append)
-    * must NOT be re-stamped: that would launder staleness into DSv2
-    * routability.
-    */
-  private def freshIndexes(): Seq[String] = {
-    val n = nrows
-    val stamp = store.updateStamp
-    columnNames.filter(c => Index.exists(store, c) &&
-      Index.builtRows(store, c) == n && Index.builtStamp(store, c) == stamp)
-  }
-
   def vacuum(cfg: CodecConfig = CodecConfig.default): Unit = {
     requireWritable()
-    val fresh = freshIndexes()
     Mutate.vacuum(spark, store, cfg)
-    // vacuum merges COW chunk versions — values and row ids unchanged, so a
-    // pre-vacuum-fresh index is still exact; advance its stamp so index
-    // routing stays engaged across maintenance
-    fresh.foreach(Index.restamp(store, _))
   }
 
   /** Merge all segments into one (row ids preserved, indexes stay valid). */
   def compactSegments(numParts: Int = 0,
       cfg: CodecConfig = CodecConfig.default): Unit = {
     requireWritable()
-    val fresh = freshIndexes()
     Mutate.compactSegments(spark, store, numParts, cfg)
-    fresh.foreach(Index.restamp(store, _))
   }
 
   def storageBytes: Long = Mutate.storageBytes(store)
@@ -490,7 +456,7 @@ class GraftColumn(cols: Columns, val name: String) {
     val n = cols.nrows
     val wrapped = ids.map(i => if (i < 0) i + n else i).toArray
     Mutate.update(spark, store, name, wrapped, values.toArray, cfg)
-    cols.requestIndexRefresh(Seq(name))
+    cols.requestIndexRefresh()
   }
 
   /** Distributed MERGE-style bulk update from a DataFrame of
@@ -504,7 +470,7 @@ class GraftColumn(cols: Columns, val name: String) {
   def update(updates: DataFrame, cfg: CodecConfig): Unit = {
     cols.requireWritable()
     Mutate.updateDf(spark, store, name, updates, cfg)
-    cols.requestIndexRefresh(Seq(name))
+    cols.requestIndexRefresh()
   }
 
   // ------------------------------------------------------------- index

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.codec.Bytes
 import graft.sources.GraftScan
-import graft.store.{BinCodec, ColumnStore, Decode, FsIO, Jobs, SelRange}
+import graft.store.{BinCodec, ColumnStore, Decode, FsIO, Jobs, SelRange, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions, sources}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -53,9 +53,9 @@ object Index {
   def dir(store: ColumnStore, col: String): String =
     s"${store.root}/index/$col"
 
-  /** Index metadata: rows/stamp the build captured, plus the LIVE delta
-    * generations (name, rows) — LSM-style sorted runs stacked on the base
-    * sort by incremental refreshes. The meta is the COMMIT POINT: a gen
+  /** Index metadata: the row count and store version the build read, plus
+    * the LIVE delta generations (name, rows) — LSM-style sorted runs
+    * stacked on the base sort by incremental refreshes. The meta is the COMMIT POINT: a gen
     * directory not listed here does not exist to readers (crashed refresh
     * attempts leave only invisible orphans, GC'd by the next refresh).
     *
@@ -82,7 +82,7 @@ object Index {
     * incremental meta would have double-listed the rebuilt rows —
     * new-base ∪ old-delta — a correctness bug, not a leak.)
     */
-  private[graft] final case class IdxMeta(rows: Long, stamp: Long,
+  private[graft] final case class IdxMeta(rows: Long, version: Long,
       gens: Seq[(String, Long)], base: String) {
     def deltaRows: Long = gens.map(_._2).sum
   }
@@ -99,7 +99,7 @@ object Index {
   def exists(store: ColumnStore, col: String): Boolean =
     listMetas(dir(store, col)).nonEmpty
 
-  /** Layout: rows, stamp, gens (name, rows)*, base. A meta missing any of
+  /** Layout: rows, version, gens (name, rows)*, base. A meta missing any of
     * them (older builds wrote stamp-less or base-less metas) is unsupported.
     */
   private def loadMeta(file: String): IdxMeta = {
@@ -136,16 +136,6 @@ object Index {
   private[graft] def readMeta(store: ColumnStore, col: String): IdxMeta =
     readMetaEpoch(store, col)._1
 
-  /** Identity of the effective meta FILE (epoch + uuid name; throws when
-    * the column has no index). Every index build/refresh commits a fresh
-    * uuid-named meta, so this string changes whenever the index content can
-    * change — including a store deleted and rebuilt at the SAME path with
-    * the same nrows/stamp. Used as the content-identifying part of
-    * planning-cache keys (GraftScan.cachedPlan).
-    */
-  private[graft] def metaIdent(store: ColumnStore, col: String): String =
-    listMetas(dir(store, col)).head._2
-
   /** CAS commit: publish `m` at `epoch` and return whether we WON (our
     * file is the effective meta). On a win, sweeps every superseded meta
     * file: in-flight readers that already listed re-list on the failed
@@ -160,7 +150,7 @@ object Index {
     val name = f"_meta-$epoch%019d-$uuid.bin"
     val w = new Bytes.Writer()
     w.writeVar(m.rows)
-    w.writeVar(m.stamp)
+    w.writeVar(m.version)
     w.writeVar(m.gens.size.toLong)
     m.gens.foreach { case (gn, rows) =>
       val b = gn.getBytes(utf8)
@@ -179,30 +169,20 @@ object Index {
     won
   }
 
-  /** Rows visible to the index at build time (staleness contract: appends
-    * don't appear until rebuild — tests/test_create_index.py:164-185).
+  /** May the DSv2 scan route THROUGH this index when planning over
+    * `snap`? Stricter than the API staleness contract (stale reads are
+    * legal inside `updating{}`): routing prunes rows before residual
+    * filtering, so the index must hold exactly the snapshot's values — it
+    * covers the snapshot's rows and was built from a version no older than
+    * the snapshot's last value update and no newer than the snapshot.
+    * Vacuum, compaction and column add/drop keep every (value, row_id).
     */
-  def builtRows(store: ColumnStore, col: String): Long =
-    readMeta(store, col).rows
+  def routableFor(snap: Snapshot, col: String): Boolean =
+    try fresh(snap, readMeta(new ColumnStore(snap.root), col))
+    catch { case _: Exception => false } // no index
 
-  /** Store update-stamp captured at build time. */
-  def builtStamp(store: ColumnStore, col: String): Long =
-    readMeta(store, col).stamp
-
-  /** May the DSv2 scan route THROUGH this index? Stricter than the API
-    * staleness contract (stale reads are legal inside `updating{}`): scan
-    * routing prunes row ranges before residual filtering, so the index must
-    * reflect every append AND every in-place update — nrows and the store
-    * update-stamp must both match what the build saw. One listing + one
-    * read per scan-planning call (the listing picks the CAS winner; it
-    * replaced the single fixed-name read when metas became epoch-named).
-    */
-  def routableFor(store: ColumnStore, col: String): Boolean = {
-    val m =
-      try readMeta(store, col)
-      catch { case _: Exception => return false } // no index
-    m.rows == store.nrows && m.stamp == store.updateStamp
-  }
+  private[graft] def fresh(snap: Snapshot, m: IdxMeta): Boolean =
+    m.rows == snap.nrows && snap.updatedAt <= m.version && m.version <= snap.version
 
   /** Build (or rebuild) the index for a column: one sorted run of every
     * row, written by [[writeRun]] — on the driver when it is small, else by
@@ -214,26 +194,26 @@ object Index {
 
   private[graft] def create(spark: SparkSession, store: ColumnStore, col: String,
       overwrite: Boolean, bound: Int): Unit = {
-    require(store.spec.col(col).ptypeId != graft.codec.PType.I32LIST.id,
+    val snap = store.snapshot
+    require(snap.spec.col(col).ptypeId != graft.codec.PType.I32LIST.id,
       s"cannot index array column $col")
     if (exists(store, col))
       require(overwrite, s"index on $col exists " +
         "(reference raises unless overwrite=True, column.py:492-497)")
-    // the rows and stamp this build sees, taken before the read is planned:
-    // an update landing later leaves the index stamped older than the
-    // store, so DSv2 routing disengages until the next refresh
-    val nrows = store.nrows
-    val stamp = store.updateStamp
+    // the build reads one snapshot: an update published later leaves the
+    // index older than the store's last update, so DSv2 routing disengages
+    // until the next refresh
+    val nrows = snap.nrows
     // NEW versioned base dir — never overwrites files another meta (or an
     // in-flight reader) references; superseded bases age out via the GC
     val base = s"_base-${java.util.UUID.randomUUID().toString.take(12)}"
-    writeRun(spark, store, col, base, SelRange(0L, nrows, 1L), Seq.empty, bound,
+    writeRun(spark, store, snap, col, base, SelRange(0L, nrows, 1L), Seq.empty, bound,
       s"index build $col")
     // a full build collapses every delta generation into the new base.
     // Commit-until-win: a rebuild reflects the complete CURRENT table, so
     // it must end up the effective meta even if incremental refreshes race
     // it (their metas reference the OLD base — self-consistent, loser).
-    val m = IdxMeta(nrows, stamp, Seq.empty, base)
+    val m = IdxMeta(nrows, snap.version, Seq.empty, base)
     var attempt = 0
     var done = false
     while (!done && attempt < 16) {
@@ -266,13 +246,13 @@ object Index {
     * `repartitionByRange(value, row_id) → sortWithinPartitions` written as
     * Parquet, partitions scaling with the rows.
     */
-  private def writeRun(spark: SparkSession, store: ColumnStore, col: String, run: String,
-      sel: SelRange, merged: Seq[(String, Long)], bound: Int, what: String): Unit = {
+  private def writeRun(spark: SparkSession, store: ColumnStore, snap: Snapshot, col: String,
+      run: String, sel: SelRange, merged: Seq[(String, Long)], bound: Int, what: String): Unit = {
     val d = dir(store, col)
-    val schema = tableSchema(store, col)
+    val schema = tableSchema(snap.spec, col)
     val rows = sel.stop - sel.start + merged.map(_._2).sum
     if (rows <= bound) {
-      val (units, _) = store.planUnits(Seq(col), sel)
+      val (units, _) = snap.planUnits(Seq(col), sel)
       val opened = mutable.ArrayBuffer.empty[RunFile]
       try {
         for ((g, _) <- merged; f <- RunFile.files(s"$d/$g")) opened += new RunFile(s"$d/$g/$f")
@@ -282,7 +262,7 @@ object Index {
           val dt = schema.head.dataType
           val buf = new mutable.ArrayBuffer[(Any, Long)](rows.toInt)
           units.foreach { u =>
-            val r = new Decode.ColumnarUnitReader(u, store.spec, Seq(col, "_row_id"))
+            val r = new Decode.ColumnarUnitReader(u, snap.spec, Seq(col, "_row_id"))
             try r.rows.foreach(row => buf += ((InternalRow.copyValue(row.get(0, dt)), row.getLong(1))))
             finally r.close()
           }
@@ -312,27 +292,6 @@ object Index {
   def drop(store: ColumnStore, col: String): Unit =
     FsIO.delete(dir(store, col), recursive = true)
 
-  /** Re-stamp the index as fresh after a maintenance op that PRESERVES
-    * every (value, row_id) pair — vacuum (COW chunk merge) and segment
-    * compaction. Those ops bump partition update versions, so the store's
-    * update stamp moves past the one the build captured and DSv2 routing
-    * would disengage FOREVER despite the index still being exactly right.
-    * Callers must verify the index was fresh BEFORE the maintenance op
-    * (see Columns.vacuum) — re-stamping a stale index would launder real
-    * staleness into routability.
-    */
-  def restamp(store: ColumnStore, col: String): Unit = {
-    if (!exists(store, col)) return
-    var attempt = 0
-    while (attempt < 4) {
-      val (m, e) = readMetaEpoch(store, col)
-      if (m.rows != store.nrows) return // a real rebuild is owed
-      if (m.stamp == store.updateStamp) return // someone already stamped
-      if (commitMeta(store, col, m.copy(stamp = store.updateStamp), e + 1)) return
-      attempt += 1 // lost a CAS race — re-read the winner and re-decide
-    }
-  }
-
   /** Names of the live delta generations (empty after a full build). */
   private[graft] def deltaGens(store: ColumnStore, col: String): Seq[String] =
     readMeta(store, col).gens.map(_._1)
@@ -351,12 +310,12 @@ object Index {
     val d = dir(store, col)
     val m = readMeta(store, col)
     val paths = (m.base +: m.gens.map(_._1)).map(p => s"$d/$p")
-    spark.read.schema(tableSchema(store, col)).parquet(paths: _*)
+    spark.read.schema(tableSchema(store.spec, col)).parquet(paths: _*)
   }
 
-  private def tableSchema(store: ColumnStore, col: String): StructType =
+  private def tableSchema(spec: graft.store.TableSpec, col: String): StructType =
     StructType(Seq(
-      StructField(ValueCol, ColumnStore.sparkType(store.spec.col(col).ptype)),
+      StructField(ValueCol, ColumnStore.sparkType(spec.col(col).ptype)),
       StructField(RowIdCol, LongType)))
 
   /** Bring the index up to date after APPENDS by sorting only the rows the
@@ -383,9 +342,9 @@ object Index {
     *    globally-sorted base (amortized: O(table) work per O(table/4) rows
     *    appended — the LSM compaction trade).
     *
-    * Falls back to a full rebuild when rows were updated IN PLACE since
-    * the build (the update stamp moved — deltas can't express changed
-    * values).
+    * Falls back to a full rebuild when values were updated IN PLACE since
+    * the build (the store's last update is newer than the version the
+    * build read — deltas can't express changed values).
     */
   def refresh(spark: SparkSession, store: ColumnStore, col: String,
       maxDeltaGens: Int = 8): Unit =
@@ -411,13 +370,14 @@ object Index {
       maxDeltaGens: Int, bound: Int): Boolean = {
     if (!exists(store, col)) return true
     val (m, epoch) = readMetaEpoch(store, col)
-    // the rows and stamp this refresh sees, taken before the read is planned
-    val n = store.nrows
-    val stamp = store.updateStamp
-    if (m.rows == n && m.stamp == stamp) return true // fresh
+    // the one snapshot this refresh reads; a build from this version or a
+    // newer one is already as fresh as this refresh could make it
+    val snap = store.snapshot
+    val n = snap.nrows
+    val unchanged = m.version >= snap.updatedAt // no value update since the build
+    if (m.version >= snap.version || (m.rows == n && unchanged)) return true
     val newRows = n - m.rows
-    val incrementalOk = m.stamp == stamp && newRows > 0
-    if (!incrementalOk || (m.deltaRows + newRows) * 4L > n) {
+    if (!unchanged || newRows <= 0 || (m.deltaRows + newRows) * 4L > n) {
       create(spark, store, col, overwrite = true, bound) // commit-until-win inside
       return true
     }
@@ -425,7 +385,7 @@ object Index {
     // generation — reads only delta data, the base sort is untouched
     val merged = if (m.gens.size >= maxDeltaGens) m.gens else Seq.empty
     val gen = s"_gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    writeRun(spark, store, col, gen, SelRange(m.rows, n, 1L), merged, bound,
+    writeRun(spark, store, snap, col, gen, SelRange(m.rows, n, 1L), merged, bound,
       s"index refresh $col")
     val kept = if (merged.isEmpty) m.gens else Seq.empty
     // COMMIT (CAS): the epoch-named meta makes the new generation (and, on
@@ -434,7 +394,8 @@ object Index {
     // below to tombstone — a reader that sampled our meta mid-race still
     // has every dir it references.
     if (!commitMeta(store, col,
-        IdxMeta(n, stamp, kept :+ (gen, newRows + merged.map(_._2).sum), m.base), epoch + 1))
+        IdxMeta(n, snap.version, kept :+ (gen, newRows + merged.map(_._2).sum), m.base),
+        epoch + 1))
       return false
     gcSweep(store, col)
     true
@@ -580,7 +541,7 @@ object Index {
       if (kept.map { case (f, gs) => gs.map(f.rowCount).sum }.sum > bound)
         Right(table(spark, store, col).where(InternalRows.column(cond)).select(RowIdCol))
       else {
-        val schema = tableSchema(store, col)
+        val schema = tableSchema(store.spec, col)
         val dt = schema.head.dataType
         val pred = InternalRows.predicate(spark, schema, cond)
         val row = new GenericInternalRow(2)
@@ -615,7 +576,7 @@ object Index {
   private def driverTopN(store: ColumnStore, col: String, desc: Boolean, k: Int,
       bound: Int): Option[Array[Long]] = {
     if (k > bound) return None
-    val dt = tableSchema(store, col).head.dataType
+    val dt = tableSchema(store.spec, col).head.dataType
     val byValue = TypeUtils.getInterpretedOrdering(dt)
     var read = 0L
     val candidates = mutable.ArrayBuffer.empty[(Any, Long)]

@@ -111,9 +111,8 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
     with SupportsPushDownOffset
     with SupportsPushDownTopN with SupportsPushDownAggregates {
 
-  private val store = ColumnStore.open(root)
-  private val spec = store.spec
-  private var required: StructType = GraftTable.dataSchema(spec)
+  private val snap = ColumnStore.open(root).snapshot
+  private var required: StructType = GraftTable.dataSchema(snap.spec)
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
   private var topN: Option[(String, Boolean, Int)] = None // (col, desc, k)
@@ -138,10 +137,10 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
       n <= 0 || n > (1 << 20)) return false
     orders(0).expression() match {
       case r: NamedReference if r.fieldNames.length == 1 &&
-          spec.columns.exists(_.name == r.fieldNames()(0)) =>
+          snap.spec.columns.exists(_.name == r.fieldNames()(0)) =>
         val c = r.fieldNames()(0)
         // null ordering irrelevant: graft columns are dense non-null
-        if (!graft.index.Index.routableFor(store, c)) return false
+        if (!graft.index.Index.routableFor(snap, c)) return false
         topN = Some((c, orders(0).direction() == SortDirection.DESCENDING, n))
         true
       case _ => false
@@ -198,16 +197,16 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
   }
 
   private def tryAggregate(agg: aggregate.Aggregation): Option[(StructType, Array[Any])] = {
-    if (agg.groupByExpressions.nonEmpty || store.nrows == 0) return None
+    if (agg.groupByExpressions.nonEmpty || snap.nrows == 0) return None
     // Filtered aggregates stay metadata-only ONLY for consumed `_row_id`
     // range filters (row-exact by construction). Any value filter means a
     // residual Filter node exists and Spark never offers the aggregate —
     // decline defensively anyway.
     if (!pushed.forall(GraftScan.rowIdFilter)) return None
-    val nrows = store.nrows
+    val nrows = snap.nrows
     val ranges: Seq[(Long, Long)] =
       if (pushed.isEmpty) Seq((0L, nrows))
-      else GraftScan.toRanges(GraftScan.planSelection(store, pushed))
+      else GraftScan.toRanges(GraftScan.planSelection(snap, pushed))
         .map { case (a, b) => (math.max(0L, a), math.min(b, nrows)) }
         .filter { case (a, b) => a < b }
     val full = ranges == Seq((0L, nrows))
@@ -215,7 +214,7 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
     def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case r: org.apache.spark.sql.connector.expressions.NamedReference
-          if r.fieldNames.length == 1 && spec.columns.exists(_.name == r.fieldNames()(0)) =>
+          if r.fieldNames.length == 1 && snap.spec.columns.exists(_.name == r.fieldNames()(0)) =>
           Some(r.fieldNames()(0))
         case _ => None
       }
@@ -228,20 +227,20 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
           StructField("count", LongType, nullable = false) -> (selCount: Any))
       case m: aggregate.Min =>
         fieldOf(m.column).flatMap(cn => (if (full)
-            GraftScan.statMinMax(store, cn, isMin = true)
-          else GraftScan.statMinMaxRanged(store, cn, isMin = true, ranges))
-          .map(v => StructField("min", ColumnStore.sparkType(spec.col(cn).ptype),
+            GraftScan.statMinMax(snap, cn, isMin = true)
+          else GraftScan.statMinMaxRanged(snap, cn, isMin = true, ranges))
+          .map(v => StructField("min", ColumnStore.sparkType(snap.spec.col(cn).ptype),
             nullable = false) -> v))
       case m: aggregate.Max =>
         fieldOf(m.column).flatMap(cn => (if (full)
-            GraftScan.statMinMax(store, cn, isMin = false)
-          else GraftScan.statMinMaxRanged(store, cn, isMin = false, ranges))
-          .map(v => StructField("max", ColumnStore.sparkType(spec.col(cn).ptype),
+            GraftScan.statMinMax(snap, cn, isMin = false)
+          else GraftScan.statMinMaxRanged(snap, cn, isMin = false, ranges))
+          .map(v => StructField("max", ColumnStore.sparkType(snap.spec.col(cn).ptype),
             nullable = false) -> v))
       case s: aggregate.Sum if !s.isDistinct =>
         // exact: integer chunk sums from the manifests, LongType (Spark's
         // sum over any integral column widens to long)
-        fieldOf(s.column).flatMap(cn => GraftScan.statSumRanged(store, cn, ranges)
+        fieldOf(s.column).flatMap(cn => GraftScan.statSumRanged(snap, cn, ranges)
           .map(v => StructField("sum", LongType, nullable = false) -> (v: Any)))
       case _ => None
     }
@@ -261,7 +260,7 @@ class GraftScanBuilder(root: String, useIndex: Boolean = true,
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f =>
-      GraftScan.prunable(spec, f) || GraftScan.rowIdFilter(f))
+      GraftScan.prunable(snap.spec, f) || GraftScan.rowIdFilter(f))
     filters.filterNot(GraftScan.rowIdFilter)
   }
 
@@ -580,17 +579,17 @@ object GraftScan {
   }
 
   /** Global row ranges whose chunks can satisfy all pushed filters. */
-  def planSelection(store: ColumnStore, pushed: Array[Filter]): Selection =
-    planSelectionCounted(store, pushed)._1
+  def planSelection(snap: Snapshot, pushed: Array[Filter]): Selection =
+    planSelectionCounted(snap, pushed)._1
 
   /** planSelection + evidence: (selection, partitions whose chunk lists
     * were walked, partitions skipped wholesale by the per-partition
     * min/max roll-up).
     */
-  def planSelectionCounted(store: ColumnStore,
+  def planSelectionCounted(snap: Snapshot,
       pushed: Array[Filter]): (Selection, Int, Int) = {
     if (pushed.isEmpty) return (SelAll, 0, 0)
-    val spec = store.spec
+    val spec = snap.spec
     val fs = pushed.flatMap(flatAnd)
     // _row_id bounds
     var partsVisited = 0
@@ -621,8 +620,8 @@ object GraftScan {
       val surviving = mutable.ArrayBuffer.empty[(Long, Long)]
       var curSeg = -1L
       var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
-      for ((seg, part, off, rows) <- store.partOffsets()) {
-        if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
+      for ((seg, part, off, rows) <- snap.partOffsets) {
+        if (seg != curSeg) { curSeg = seg; segStats = snap.partColStats(seg) }
         segStats.getOrElse(part, Map.empty).get(colName) match {
           case None =>
             // column backfilled after this segment: every row carries the
@@ -636,7 +635,7 @@ object GraftScan {
             partsSkipped += 1
           case _ =>
             partsVisited += 1
-            val m = store.partManifest(seg, part)
+            val m = snap.partManifest(seg, part)
             m.chunks.foreach { cm =>
               if (cm.column == colName &&
                 zone.mayMatch(cm.statsKind, cm.minBits, cm.maxBits))
@@ -721,15 +720,15 @@ object GraftScan {
     * mixed stats, string/binary prefix stats, or a backfilled partition
     * without materialized chunks).
     */
-  private[sources] def statMinMax(store: ColumnStore, colName: String,
+  private[sources] def statMinMax(snap: Snapshot, colName: String,
       isMin: Boolean): Option[Any] = {
-    val cs = store.spec.col(colName)
+    val cs = snap.spec.col(colName)
     minMaxAcc(cs, isMin).flatMap { m =>
       var curSeg = -1L
       var segStats: Map[Int, Map[String, (Int, Long, Long)]] = null
-      val ok = store.partOffsets().forall { case (seg, part, _, rows) =>
+      val ok = snap.partOffsets.forall { case (seg, part, _, rows) =>
         rows == 0 || {
-          if (seg != curSeg) { curSeg = seg; segStats = store.partColStats(seg) }
+          if (seg != curSeg) { curSeg = seg; segStats = snap.partColStats(seg) }
           segStats.getOrElse(part, Map.empty).get(colName) match {
             case Some((k, mn, mx)) if k == m.kind => m.add(mn, mx); true
             case _ => false // kind mismatch / no stats / backfilled part
@@ -747,7 +746,7 @@ object GraftScan {
     * the row ranges land on chunk boundaries. Backfilled partitions (no
     * chunks) abort unless fully outside the ranges.
     */
-  private def walkChunksRanged(store: ColumnStore, colName: String,
+  private def walkChunksRanged(snap: Snapshot, colName: String,
       ranges: Seq[(Long, Long)])(in: ChunkMeta => Boolean): Boolean = {
     val sorted = ranges.sortBy(_._1)
     def overlap(lo: Long, hi: Long): Int = { // 0 none, 1 full, 2 partial
@@ -759,8 +758,8 @@ object GraftScan {
       }
       if (covered == 0) 0 else if (covered == hi - lo) 1 else 2
     }
-    for ((seg, part, off, rows) <- store.partOffsets(); if rows > 0) {
-      val m = store.partManifest(seg, part)
+    for ((seg, part, off, rows) <- snap.partOffsets; if rows > 0) {
+      val m = snap.partManifest(seg, part)
       val cs = m.chunks.filter(_.column == colName)
       if (cs.isEmpty) {
         // backfilled: fill values, no stats — only a fully-disjoint
@@ -783,11 +782,11 @@ object GraftScan {
     * otherwise, or when no chunk overlaps (empty min/max = NULL — the
     * caller falls back to a real scan).
     */
-  private[sources] def statMinMaxRanged(store: ColumnStore, colName: String,
+  private[sources] def statMinMaxRanged(snap: Snapshot, colName: String,
       isMin: Boolean, ranges: Seq[(Long, Long)]): Option[Any] = {
-    val cs = store.spec.col(colName)
+    val cs = snap.spec.col(colName)
     minMaxAcc(cs, isMin).flatMap { m =>
-      val ok = walkChunksRanged(store, colName, ranges) { cm =>
+      val ok = walkChunksRanged(snap, colName, ranges) { cm =>
         cm.statsKind == m.kind && { m.add(cm.minBits, cm.maxBits); true }
       }
       if (ok) m.result(cs.ptype) else None
@@ -800,16 +799,16 @@ object GraftScan {
     * a sum: None for a backfilled partition without chunks, a sum-less
     * chunk, or accumulator overflow. No chunk file is opened.
     */
-  private[sources] def statSumRanged(store: ColumnStore, colName: String,
+  private[sources] def statSumRanged(snap: Snapshot, colName: String,
       ranges: Seq[(Long, Long)]): Option[Long] = {
     import graft.codec.PType
-    store.spec.col(colName).ptype match {
+    snap.spec.col(colName).ptype match {
       case PType.I64 | PType.I32 | PType.I16 => ()
       case _ => return None
     }
     var acc = 0L
     var overflow = false
-    val ok = walkChunksRanged(store, colName, ranges) { cm =>
+    val ok = walkChunksRanged(snap, colName, ranges) { cm =>
       if (cm.sumKind != 1) false
       else {
         try acc = Math.addExact(acc, cm.sumBits)
@@ -924,11 +923,10 @@ object GraftScan {
     * selections). One logical query triggers SEVERAL plan materializations
     * (explain, AQE initial + final, a derived Dataset re-running pushdown),
     * and each used to re-run the index lookup job. Entries are keyed by the
-    * FULL freshness tuple (store nrows + update stamp + the canonicalized
+    * FULL freshness tuple (store id + store version + the canonicalized
     * predicate set), so a cached entry is used only when the compute would
-    * provably return the same ranges: any append or in-place update moves
-    * nrows/stamp and misses the cache, and a same-(rows,stamp) index
-    * rebuild contains identical (value, row_id) pairs by construction.
+    * provably return the same ranges: every published mutation moves the
+    * version and misses the cache.
     * Planning metadata only — never query results.
     *
     * Bounded by WEIGHT, not entry count: an entry weighs the ranges plus
@@ -982,6 +980,8 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   @transient private lazy val store = ColumnStore.open(root)
+  // the one store version this scan plans over
+  @transient private lazy val snap = store.snapshot
 
   // ------------------------------------------------------ runtime filters
   // The DSv2 analogue of dynamic partition pruning: when this scan feeds a
@@ -1004,7 +1004,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // keep only what the planner can actually use; everything is re-applied
     // by the join itself, so dropping a filter is always safe
     runtimeFilters = filters.filter(f =>
-      GraftScan.prunable(store.spec, f) || GraftScan.rowIdFilter(f))
+      GraftScan.prunable(snap.spec, f) || GraftScan.rowIdFilter(f))
   }
 
   /** Streaming READ: `spark.readStream.format("graft").load(root)` tails
@@ -1029,7 +1029,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       case f => Index.indexCond(f).isDefined
     }
       .groupBy(_.references.head)
-      .filter { case (c, _) => Index.routableFor(store, c) }
+      .filter { case (c, _) => Index.routableFor(snap, c) }
       .map { case (c, fs) => c -> fs.toSeq }
 
   /** Static (plan-time) route — decided without a job so the plan string
@@ -1060,16 +1060,16 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     * needs it again — at 10^5 partitions each walk is real driver work).
     */
   @transient private lazy val zoneSel: Selection =
-    GraftScan.planSelection(store, pushed)
+    GraftScan.planSelection(snap, pushed)
 
   override def estimateStatistics(): Statistics = {
-    val nrows = store.nrows
+    val nrows = snap.nrows
     val zone = zoneSel
     val rows0 = GraftScan.selRows(zone, nrows)
     val rows1 = if (limit >= 0) math.min(rows0, limit.toLong) else rows0
     val rows2 = math.max(0L, rows1 - offset)
     val rows = topN.fold(rows2) { case (_, _, k) => math.min(rows2, k.toLong) }
-    val raw = store.colRawBytes
+    val raw = snap.colRawBytes
     val wanted = required.fieldNames.filterNot(_ == "_row_id")
     val perRow =
       if (nrows == 0) 8.0
@@ -1098,19 +1098,15 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     if (routed.isEmpty) return None
     // adaptive granule: fine enough to prune small tables, coarse enough
     // that the driver-collected bucket set stays bounded at 10^12 rows
-    val g = math.max(64L, math.min(8192L, store.nrows / 1024L))
+    val g = math.max(64L, math.min(8192L, snap.nrows / 1024L))
     val maxRanges = 1 << 16
     // the fallback sits OUTSIDE cachedPlan: only a consult that succeeded
     // is cached, so a transient failure does not pin the zone-map fallback
     try {
-      // metaIdent (epoch+uuid of the winning meta file) identifies the index
-      // CONTENT: a store deleted and rebuilt at the same path with the same
-      // nrows/stamp still commits fresh uuid-named metas, so it cannot
-      // collide with a prior cache entry
-      val key = s"ir|$root|${store.nrows}|${store.updateStamp}|$g|" +
-        routed.toSeq.sortBy(_._1)
-          .map { case (c, fs) =>
-            c + "@" + Index.metaIdent(store, c) + ":" + fs.mkString("&&") }.mkString("|")
+      // every index routable for one store version holds the same (value,
+      // row_id) pairs, so (store id, version) identifies the index content
+      val key = s"ir|$root|${snap.id}|${snap.version}|$g|" + routed.toSeq.sortBy(_._1)
+        .map { case (c, fs) => c + ":" + fs.mkString("&&") }.mkString("|")
       GraftScan.cachedPlan[Option[Seq[(Long, Long)]]](key, _.fold(0L)(_.size.toLong)) {
         var acc: Option[Seq[(Long, Long)]] = None
         routed.foreach { case (c, fs) =>
@@ -1142,19 +1138,15 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
   private def topNSelection(spark: org.apache.spark.sql.SparkSession): Option[Selection] =
     topN.flatMap { case (c, desc, k) =>
       try {
-        // Re-verify freshness at EXECUTION time against a FRESH store view:
-        // pushTopN checked it at plan-build, but an in-place update between
-        // planning and execution (or re-running a cached plan) would
-        // otherwise read a stale index tail — and unlike the normal
+        // Re-verify freshness against the snapshot the rows are read from:
+        // pushTopN checked it at plan-build, but unlike the normal
         // selection, top-k-from-a-stale-index is NOT a superset of the true
         // answer, so the retained sort could not repair it.
-        val freshStore = ColumnStore.open(root)
-        if (!Index.routableFor(freshStore, c)) None
+        if (!Index.routableFor(snap, c)) None
         else GraftScan.cachedPlan[Option[SelIds]](
-          s"tn|$root|${freshStore.nrows}|${freshStore.updateStamp}|" +
-            s"${Index.metaIdent(freshStore, c)}|$c|$desc|$k",
+          s"tn|$root|${snap.id}|${snap.version}|$c|$desc|$k",
           _.fold(0L)(_.ids.length.toLong)) {
-          val ids = Index.topN(spark, freshStore, c, desc, k)
+          val ids = Index.topN(spark, store, c, desc, k)
           Some(SelIds(ids, Array.tabulate(ids.length)(_.toLong)))
         }
       } catch {
@@ -1180,8 +1172,8 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       if (pushed.nonEmpty || limit >= 0 || offset > 0 || topN.isDefined ||
         parts.length > 2 ||
         (parts.length == 2 && !parts(1).equalsIgnoreCase("asc") && !descending) ||
-        !store.spec.columns.exists(_.name == c)) None
-      else if (!graft.index.Index.routableFor(store, c)) None
+        !snap.spec.columns.exists(_.name == c)) None
+      else if (!graft.index.Index.routableFor(snap, c)) None
       else {
         val m = graft.index.Index.readMeta(store, c)
         if (m.gens.nonEmpty) None // per-gen order only; fallback sorts
@@ -1191,8 +1183,8 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
           if (files.isEmpty) None
           else Some(GraftOrderedPartition(root, c,
             required.fieldNames.filterNot(_ == "_row_id").toSeq,
-            required.fieldNames.toSeq, store.spec, baseDir, files,
-            m.rows, m.stamp, 1 << 16, descending))
+            required.fieldNames.toSeq, snap.spec, baseDir, files,
+            m.rows, m.version, 1 << 16, descending))
         }
       }
     }
@@ -1216,8 +1208,8 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     topNSelection(session) match {
       case Some(sel) =>
         val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
-        val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-        return units.map(u => GraftInputPartition(u, store.spec,
+        val (units, _) = snap.planUnits(wanted, sel, emptyMeansAll = false)
+        return units.map(u => GraftInputPartition(u, snap.spec,
           required.fieldNames.toSeq): InputPartition).toArray
       case None => ()
     }
@@ -1225,7 +1217,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // the index route; a dropped/unusable runtime filter only loses pruning
     val zone =
       if (runtimeFilters.isEmpty) zoneSel
-      else GraftScan.planSelection(store, pushed ++ runtimeFilters)
+      else GraftScan.planSelection(snap, pushed ++ runtimeFilters)
     val rmap =
       if (runtimeFilters.isEmpty) routed
       else routedMap(pushed ++ runtimeFilters)
@@ -1238,17 +1230,17 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // prefix length INCLUDING the skipped rows when both arrive (Spark
     // pushes Limit(k, Offset(n)) as limit n+k with offset n), so clip to
     // the limit first, then skip the offset
-    val sel1 = if (limit >= 0) GraftScan.clipSelection(sel0, limit, store.nrows) else sel0
-    val sel = if (offset > 0) GraftScan.skipSelection(sel1, offset, store.nrows) else sel1
+    val sel1 = if (limit >= 0) GraftScan.clipSelection(sel0, limit, snap.nrows) else sel0
+    val sel = if (offset > 0) GraftScan.skipSelection(sel1, offset, snap.nrows) else sel1
     val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
     // equality/IN probe hashes for the executor-side membership-filter
     // test: tasks skip chunks whose bloom excludes every probe — an
     // unindexed point-lookup MISS then decodes zero chunks
-    val probes = GraftScan.filterProbes(store.spec, pushed ++ runtimeFilters)
+    val probes = GraftScan.filterProbes(snap.spec, pushed ++ runtimeFilters)
     // emptyMeansAll=false: a fully-pruned projection (count(*), or bare
     // _row_id) decodes NO column chunks — units carry row counts only
-    val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, store.spec,
+    val (units, _) = snap.planUnits(wanted, sel, emptyMeansAll = false)
+    units.map(u => GraftInputPartition(u, snap.spec,
       required.fieldNames.toSeq, probes): InputPartition).toArray
   }
 
@@ -1320,10 +1312,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming._
 
-  /** Fresh store view per planning call: segment commits are re-listed so
-    * appends from other processes become visible between batches.
-    */
-  private def store = ColumnStore.open(root)
+  private val store = ColumnStore.open(root)
 
   override def initialOffset(): Offset = GraftStreamOffset(0L)
 
@@ -1351,16 +1340,16 @@ class GraftMicroBatchStream(root: String, required: StructType,
     val s = start.asInstanceOf[GraftStreamOffset].nrows
     val e = end.asInstanceOf[GraftStreamOffset].nrows
     if (e <= s) return Array.empty
-    val st = store
+    val snap = store.snapshot
     val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
     // consumed _row_id filters: the batch's [start, end) intersects with
     // their exact row ranges (offsets still advance over skipped rows)
     val sel: Selection =
       if (rowIdFilters.isEmpty) SelRange(s, e, 1L)
       else GraftScan.fromRanges(Ranges.intersect(Seq((s, e)),
-        GraftScan.toRanges(GraftScan.planSelection(st, rowIdFilters))))
-    val (units, _) = st.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, st.spec,
+        GraftScan.toRanges(GraftScan.planSelection(snap, rowIdFilters))))
+    val (units, _) = snap.planUnits(wanted, sel, emptyMeansAll = false)
+    units.map(u => GraftInputPartition(u, snap.spec,
       required.fieldNames.toSeq): InputPartition).toArray
   }
 
@@ -1440,7 +1429,7 @@ class GraftBatchWrite(root: String, writeSchema: StructType, truncate: Boolean)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val base = stagingRoot.getOrElse(root)
-    ColumnStore.commitSegment(Format.segDir(base, seg), seg,
+    ColumnStore.commitSegment(base, seg,
       messages.map { case m: GraftCommitMessage => (m.part, m.manifest) }.toSeq,
       lineage = "dsv2:batch-write")
     stagingRoot.foreach { staging =>
@@ -1451,16 +1440,20 @@ class GraftBatchWrite(root: String, writeSchema: StructType, truncate: Boolean)
       // old store exists in full (possibly split root/trash: reassemble by
       // moving trash entries back); after it the new store is in place and
       // trash is garbage. The previous delete-then-rename had a window with
-      // neither store's _schema.bin at the root.
+      // neither store's _schema.bin at the root. The root keeps its own
+      // version dir, and the swap publishes its next version.
       val stagingName = staging.substring(staging.lastIndexOf('/') + 1)
       val trash =
         s"$root/.overwrite-trash-${java.util.UUID.randomUUID().toString.take(8)}"
       val trashName = trash.substring(trash.lastIndexOf('/') + 1)
+      val kept = Set(stagingName, trashName, Format.VersionDir)
       FsIO.mkdirs(trash)
-      FsIO.list(root).filterNot(n => n == stagingName || n == trashName)
-        .foreach(n => FsIO.rename(s"$root/$n", s"$trash/$n"))
-      FsIO.list(staging).foreach(n => FsIO.rename(s"$staging/$n", s"$root/$n"))
-      FsIO.delete(staging, recursive = true)
+      try {
+        FsIO.list(root).filterNot(kept).foreach(n => FsIO.rename(s"$root/$n", s"$trash/$n"))
+        FsIO.list(staging).filterNot(_ == Format.VersionDir)
+          .foreach(n => FsIO.rename(s"$staging/$n", s"$root/$n"))
+      } finally Snapshot.publish(root, updated = true)
+      new ColumnStore(staging).dropStore()
       FsIO.delete(trash, recursive = true)
     }
   }
@@ -1514,15 +1507,12 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  // ONE driver-side store across the query's lifetime: segment commit
-  // records are immutable once read, so the per-epoch lineage-dedup check
-  // costs one directory listing plus reads of NEW commit records only —
-  // re-opening per epoch would make the 10^4th commit re-read 10^4
-  // _commit.bin files (quadratic over the stream's life)
-  @transient private lazy val cachedStore: ColumnStore =
+  // the per-epoch lineage-dedup check reads the store's snapshot: after an
+  // epoch's append-only version it reads only the NEW commit records, so
+  // the 10^4th commit does not re-read 10^4 _commit.bin files
+  @transient private lazy val store: ColumnStore =
     if (ColumnStore.exists(root)) ColumnStore.open(root)
     else ColumnStore.create(root, ColumnStore.specFromSchema(writeSchema))
-  private def ensureStore(): ColumnStore = cachedStore
 
   private def sanitizedQuery: String = queryId.replaceAll("[^a-zA-Z0-9-]", "_")
   private def stagingDir(epochId: Long): String =
@@ -1532,17 +1522,16 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
 
   override def createStreamingWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val store = ensureStore()
     require(writeSchema.fieldNames.toSeq == store.spec.colNames,
       s"write schema ${writeSchema.fieldNames.toSeq} != store columns ${store.spec.colNames}")
     GraftStreamingWriterFactory(root, s".stream-epoch-$sanitizedQuery", store.spec)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val store = ensureStore()
     val lin = lineageFor(epochId)
     val staging = stagingDir(epochId)
-    if (store.segments.exists(s => store.segmentCommit(s).lineage == lin)) {
+    val snap = store.snapshot
+    if (snap.segments.exists(s => snap.commits(s).lineage == lin)) {
       FsIO.delete(staging, recursive = true) // epoch replay: already visible
       return
     }
@@ -1561,7 +1550,7 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
         BinCodec.readPartManifest(m.manifest, s"$segDir/${Format.partManifestFile(m.part, 0)}")
           .copy(segment = seg)))
     }
-    ColumnStore.commitSegment(segDir, seg, msgs.toSeq, lin)
+    ColumnStore.commitSegment(root, seg, msgs.toSeq, lin)
     FsIO.delete(staging, recursive = true)
   }
 

@@ -29,27 +29,27 @@ import org.apache.spark.sql.types.LongType
   * globally); otherwise the scan stays a normal parallel scan, reports no
   * ordering, and the user's Sort node survives — the exact fallback.
   *
-  * Concurrent maintenance: the reader re-checks the index stamp at
-  * execution and the batch gather re-reads live manifests; an index
-  * REBUILD (which deletes the planned parquet files) or an in-place update
-  * between planning and execution fails the task loudly rather than
-  * emitting mis-ordered rows.
+  * Concurrent maintenance: the reader takes the store's snapshot at
+  * execution, gathers every batch from it, and requires the planned index
+  * meta to be routable for it; an index REBUILD (which deletes the planned
+  * parquet files) or an in-place update between planning and execution
+  * fails the task loudly rather than emitting mis-ordered rows.
   */
 final case class GraftOrderedPartition(root: String, col: String,
     wanted: Seq[String], outFields: Seq[String], spec: TableSpec,
     indexDir: String, files: Seq[String], expectRows: Long,
-    expectStamp: Long, batchRows: Int, desc: Boolean = false)
+    expectVersion: Long, batchRows: Int, desc: Boolean = false)
     extends InputPartition
 
 class OrderedPartitionReader(p: GraftOrderedPartition)
     extends PartitionReader[InternalRow] {
 
   private val store = ColumnStore.open(p.root)
+  private val snap = store.snapshot
   locally {
     val m = Index.readMeta(store, p.col)
-    require(m.rows == p.expectRows && m.stamp == p.expectStamp &&
-      m.gens.isEmpty && store.nrows == p.expectRows &&
-      store.updateStamp == p.expectStamp,
+    require(m.rows == p.expectRows && m.version == p.expectVersion &&
+      m.gens.isEmpty && Index.fresh(snap, m),
       s"index on ${p.col} changed between planning and execution of an " +
         "ordered scan — re-run the query")
   }
@@ -67,7 +67,7 @@ class OrderedPartitionReader(p: GraftOrderedPartition)
     ids.grouped(p.batchRows).flatMap { batch =>
       val idArr = batch.toArray
       val pos = Array.tabulate(idArr.length)(_.toLong)
-      val (units, _) = store.planUnits(p.wanted, SelIds(idArr, pos),
+      val (units, _) = snap.planUnits(p.wanted, SelIds(idArr, pos),
         emptyMeansAll = false)
       // chunks decode once in disk order; each row lands in its value-order
       // slot by `_pos`

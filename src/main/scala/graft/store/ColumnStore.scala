@@ -93,6 +93,7 @@ object ColumnStore {
     FsIO.mkdirs(s"$root/${Format.MetaDir}")
     FsIO.mkdirs(s"$root/${Format.SegmentsDir}")
     FsIO.writeAtomic(s"$root/${Format.SchemaFile}", BinCodec.writeTableSpec(spec))
+    Snapshot.create(root, spec)
     new ColumnStore(root)
   }
 
@@ -338,7 +339,8 @@ object ColumnStore {
     * stalled writer is simply not committed yet and always lands after.
     * Losing the race just retries the next number; readers sort by marker
     * number. Marker count is bounded by segment count; compactSegments
-    * resets both.
+    * resets both. The store version published last makes the segment
+    * visible to readers holding an older snapshot.
     *
     * The published segment is encoded IN THE MARKER NAME
     * (`.commit-<n>-<seg>`): create-exclusive is atomic for the name, but a
@@ -347,8 +349,9 @@ object ColumnStore {
     * protocol has no window where a concurrent lister sees the marker but
     * reads 0 bytes.
     */
-  private[graft] def commitSegment(segDir: String, seg: Long,
+  private[graft] def commitSegment(root: String, seg: Long,
       byPart: Seq[(Int, Array[Byte])], lineage: String): Unit = {
+    val segDir = Format.segDir(root, seg)
     val sorted = byPart.sortBy(_._1)
     FsIO.writeAtomic(s"$segDir/${Format.SegManifestFile}",
       BinCodec.writeSegManifest(sorted.map(_._2)))
@@ -371,6 +374,7 @@ object ColumnStore {
       } catch { case _: java.io.IOException => n += 1 }
     }
     require(published, s"could not publish a commit marker in $segsDir")
+    Snapshot.publish(root, updated = false)
   }
 
   /** Parse a marker filename `.commit-<n>-<seg>` into (sequence, segment). */
@@ -384,208 +388,34 @@ object ColumnStore {
 
 /** A graft column store rooted at `root` — the Spark-native analogue of
   * `pycolumns.Columns` storage (SURVEY.md §1). All table-level operations
-  * (write/read/update/vacuum) are Spark jobs; metadata handling is
-  * driver-side and O(partitions).
+  * (write/read/update/vacuum) are Spark jobs. A handle holds only the root:
+  * each metadata accessor reads the store's newest [[Snapshot]] (one
+  * listing while the version is unchanged), so it sees every published
+  * mutation; code needing one consistent state takes `snapshot` once.
   */
 class ColumnStore(val root: String) extends Serializable {
   import ColumnStore._
 
-  // ------------------------------------------------------- metadata cache
-  // Driver-side caches so repeated planning does O(segments) — not
-  // O(partitions) — metadata round-trips. Commits are immutable once
-  // written (updates never change row counts), so the commit cache needs no
-  // invalidation; manifests change on update/vacuum, which call
-  // invalidateManifests(). @transient: executors reopen by root.
-
-  @transient private lazy val specCache =
-    new java.util.concurrent.atomic.AtomicReference[TableSpec](null)
-  @transient private lazy val commitCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, SegmentCommit]()
-  @transient private lazy val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, IndexedSeq[PartManifest]]()
-  @transient private lazy val colStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, Map[Int, Map[String, (Int, Long, Long)]]]()
-  @transient private lazy val rawBytesCache =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](null)
-
-  private[graft] def invalidateManifests(): Unit = {
-    manifestCache.clear()
-    colStatsCache.clear()
-    rawBytesCache.set(null)
-  }
-
-  /** Segment REPLACEMENT (compactSegments) reuses segment numbers, so even
-    * the otherwise-immutable commit records must drop.
-    */
-  private[graft] def invalidateAll(): Unit = {
-    manifestCache.clear()
-    colStatsCache.clear()
-    rawBytesCache.set(null)
-    commitCache.clear()
-    specCache.set(null)
-  }
-
-  def spec: TableSpec = {
-    val c = specCache.get()
-    if (c != null) c
-    else {
-      val file = s"$root/${Format.SchemaFile}"
-      val s = BinCodec.readTableSpec(FsIO.readAll(file), file)
-      specCache.set(s)
-      s
-    }
-  }
-
-  private def writeSpec(s: TableSpec): Unit = {
-    FsIO.writeAtomic(s"$root/${Format.SchemaFile}", BinCodec.writeTableSpec(s))
-    specCache.set(s)
-  }
-
-  // ------------------------------------------------------------- segments
-
-  /** Committed segments in ROW-ID order = commit order (see commitSegment):
-    * a segment is visible iff its commit record exists and a
-    * `.commit-<n>-<seg>` marker publishes it, and segments sort by their
-    * marker number. A commit record WITHOUT a marker is a commit in flight
-    * (or crashed mid-publish): invisible.
-    */
-  def segments: Seq[Long] = {
-    val segsDir = s"$root/${Format.SegmentsDir}"
-    val names = FsIO.list(segsDir)
-    val markerOf: Map[Long, Long] = names // seg -> smallest marker number
-      .collect { case m if m.startsWith(".commit-") => ColumnStore.markerParts(segsDir, m) }
-      .groupBy(_._2).map { case (s, xs) => s -> xs.map(_._1).min }
-    names.filter(_.startsWith("seg")).map(_.drop(3).toLong)
-      .filter(s => FsIO.exists(s"${Format.segDir(root, s)}/_commit.bin"))
-      .flatMap(s => markerOf.get(s).map(n => (n, s)))
-      .sortBy(identity).map(_._2)
-  }
-
-  def segmentCommit(seg: Long): SegmentCommit =
-    commitCache.computeIfAbsent(seg, _ => {
-      val file = s"${Format.segDir(root, seg)}/_commit.bin"
-      BinCodec.readSegmentCommit(FsIO.readAll(file), file)
-    })
-
-  /** All partition manifests of a segment, partition order, at their
-    * highest update version — via the consolidated `_manifest.bin` written
-    * at commit. One directory listing + one file read per segment (plus one
-    * read per UPDATED partition), instead of a list + read per partition:
-    * at 10^5 partitions on an object store that is the difference between
-    * milliseconds and minutes of serial driver time before the first task.
-    */
-  def partManifests(seg: Long): IndexedSeq[PartManifest] =
-    manifestCache.computeIfAbsent(seg, _ => loadPartManifests(seg))
-
-  private def loadPartManifests(seg: Long): IndexedSeq[PartManifest] = {
-    val dir = Format.segDir(root, seg)
-    val names = FsIO.list(dir)
-    // max update version per part from the single listing; ignore leftover
-    // .tmp-xxxx from crashed atomic writes (endsWith .bin + toIntOption)
-    val verRe = """^p(\d+)\.manifest\.v(\d+)\.bin$""".r
-    val topVer = mutable.HashMap.empty[Int, Int]
-    names.foreach {
-      case verRe(p, v) =>
-        val pi = p.toInt
-        val vi = v.toInt
-        if (vi > topVer.getOrElse(pi, 0)) topVer(pi) = vi
-      case _ =>
-    }
-    def patched(base: IndexedSeq[PartManifest]): IndexedSeq[PartManifest] =
-      if (topVer.isEmpty) base
-      else base.map { m =>
-        topVer.get(m.part) match {
-          case Some(v) if v > m.updateVersion =>
-            val file = s"$dir/${Format.partManifestFile(m.part, v)}"
-            BinCodec.readPartManifest(FsIO.readAll(file), file)
-          case _ => m
-        }
-      }
-    val file = s"$dir/${Format.SegManifestFile}"
-    patched(BinCodec.readSegManifest(FsIO.readAll(file), file))
-  }
-
-  /** Per-(partition, column) min/max ROLL-UP over the chunk zone maps,
-    * derived from the cached manifests (no format change) and kind-aware
-    * (Long / double-bits / unsigned-prefix order). Lets query planning skip
-    * whole partitions before walking chunk lists: at 10^5 partitions ×
-    * 10^3 chunks × k filtered columns, the per-chunk walk alone is ~10^8
-    * driver comparisons per query — the roll-up reduces the common
-    * selective case to O(partitions). Mixed/absent stat kinds collapse to
-    * kind 0 = never skip (conservative).
-    */
-  def partColStats(seg: Long): Map[Int, Map[String, (Int, Long, Long)]] =
-    colStatsCache.computeIfAbsent(seg, _ => partManifests(seg).map { m =>
-      m.part -> m.chunks.groupBy(_.column).map { case (cn, cs) =>
-        val kinds = cs.map(_.statsKind).distinct
-        if (kinds.sizeIs != 1 || kinds.head == 0) cn -> ((0, 0L, 0L))
-        else {
-          val k = kinds.head
-          def lt(a: Long, b: Long): Boolean = k match {
-            case 2 => java.lang.Double.longBitsToDouble(a) <
-              java.lang.Double.longBitsToDouble(b)
-            case 3 => java.lang.Long.compareUnsigned(a, b) < 0
-            case _ => a < b
-          }
-          var mn = cs.head.minBits
-          var mx = cs.head.maxBits
-          cs.foreach { c =>
-            if (lt(c.minBits, mn)) mn = c.minBits
-            if (lt(mx, c.maxBits)) mx = c.maxBits
-          }
-          cn -> ((k, mn, mx))
-        }
-      }
-    }.toMap)
-
-  /** Decoded (uncompressed) bytes per column, summed over every chunk —
-    * the size statistic Catalyst needs to plan joins over graft tables
-    * (e.g. pick a broadcast side). Cached with the manifests.
-    */
-  def colRawBytes: Map[String, Long] = {
-    val c = rawBytesCache.get()
-    if (c != null) c
-    else {
-      val m = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-      for (seg <- segments; pm <- partManifests(seg); ch <- pm.chunks)
-        m(ch.column) += ch.rawBytes
-      val out = m.toMap
-      rawBytesCache.set(out)
-      out
-    }
-  }
-
-  /** Highest-version manifest for (seg, part) — updates bump the version.
-    * Parts are dense 0..n-1 in partition order, so this is an array index.
-    */
-  def partManifest(seg: Long, part: Int): PartManifest = {
-    val ms = partManifests(seg)
-    if (part < ms.length && ms(part).part == part) ms(part)
-    else ms.find(_.part == part).getOrElse(
-      throw new IllegalStateException(s"no manifest for seg=$seg part=$part"))
-  }
-
-  def nrows: Long = segments.map(segmentCommit(_).totalRows).sum
-
-  /** Monotone stamp of in-place mutation state: the sum of every
-    * partition's update version (scatter updates and vacuum bump these).
-    * Indexes capture it at build time; DSv2 index routing requires it
-    * unchanged — O(partitions) over the cached manifests.
-    */
-  def updateStamp: Long =
-    segments.map(s => partManifests(s).map(_.updateVersion.toLong).sum).sum
+  def snapshot: Snapshot = Snapshot.of(root)
+  def spec: TableSpec = snapshot.spec
+  def segments: Seq[Long] = snapshot.segments
+  def partManifests(seg: Long): IndexedSeq[PartManifest] = snapshot.partManifests(seg)
+  def colRawBytes: Map[String, Long] = snapshot.colRawBytes
+  def nrows: Long = snapshot.nrows
+  def planUnits(columns: Seq[String], sel: Selection,
+      emptyMeansAll: Boolean = true): (Seq[DecodeUnit], Seq[String]) =
+    snapshot.planUnits(columns, sel, emptyMeansAll)
 
   /** Equal-length invariant across columns (pycolumns Columns.verify,
     * columns.py:449-469): every column must cover every row of every
     * committed partition.
     */
   def verify(): Unit = {
-    val cols = spec.columns
-    for (seg <- segments) {
-      val commit = segmentCommit(seg)
-      commit.partRows.zipWithIndex.foreach { case (rows, part) =>
-        val m = partManifest(seg, part)
-        for (c <- cols if c.addedAtSegment <= seg) {
+    val snap = snapshot
+    for (seg <- snap.segments) {
+      snap.commits(seg).partRows.zipWithIndex.foreach { case (rows, part) =>
+        val m = snap.partManifest(seg, part)
+        for (c <- snap.spec.columns if c.addedAtSegment <= seg) {
           val covered = m.chunks.filter(_.column == c.name).map(_.nrows.toLong).sum
           require(covered == rows,
             s"column ${c.name} covers $covered of $rows rows in seg=$seg part=$part")
@@ -609,7 +439,7 @@ class ColumnStore(val root: String) extends Serializable {
     require(names == expect,
       s"appended data columns $names != table columns $expect " +
         "(reference rejects mismatched column sets, columns.py:619-627)")
-    writeSegment(spark, df, seg, order, lineage, cfg)
+    writeSegment(spark, df, s, seg, order, lineage, cfg)
     seg
   }
 
@@ -721,9 +551,8 @@ class ColumnStore(val root: String) extends Serializable {
     df.select(cols: _*)
   }
 
-  private def writeSegment(spark: SparkSession, df0: DataFrame, seg: Long,
+  private def writeSegment(spark: SparkSession, df0: DataFrame, s: TableSpec, seg: Long,
       order: OrderMode, lineage: String, cfg: CodecConfig): Unit = {
-    val s = spec
     val df1 = normalize(df0, s)
     val df = order match {
       case ByKey(key, n) =>
@@ -752,25 +581,10 @@ class ColumnStore(val root: String) extends Serializable {
     // commit: per-partition row counts in partition-id order fix the global
     // row-id assignment (SURVEY.md §7.5(6)). The consolidated manifest goes
     // first so a segment with a commit record always has one.
-    ColumnStore.commitSegment(segDir, seg, manifests.toSeq, lineage)
+    ColumnStore.commitSegment(root, seg, manifests.toSeq, lineage)
   }
 
   // ---------------------------------------------------------------- read
-
-  /** Global row offset of each (segment, part), ordered. */
-  def partOffsets(): Seq[(Long, Int, Long, Long)] = {
-    // (segment, part, globalOffset, partRows)
-    var off = 0L
-    val out = mutable.ArrayBuffer.empty[(Long, Int, Long, Long)]
-    for (seg <- segments) {
-      val commit = segmentCommit(seg)
-      commit.partRows.zipWithIndex.foreach { case (rows, part) =>
-        out += ((seg, part, off, rows))
-        off += rows
-      }
-    }
-    out.toSeq
-  }
 
   /** Read selected columns/rows back as a DataFrame with `_row_id` (and
     * `_pos` for id-list gathers). Chunk pruning against the manifest
@@ -780,8 +594,9 @@ class ColumnStore(val root: String) extends Serializable {
     */
   def read(spark: SparkSession, columns: Seq[String] = Seq.empty,
       sel: Selection = SelAll, emptyMeansAll: Boolean = true): DataFrame = {
-    val s = spec
-    val (units, wanted) = planUnits(columns, sel, emptyMeansAll)
+    val snap = snapshot
+    val s = snap.spec
+    val (units, wanted) = snap.planUnits(columns, sel, emptyMeansAll)
     val ids = if (sel.isInstanceOf[SelIds]) Seq("_row_id", "_pos") else Seq("_row_id")
     val schema = StructType(ids.map(StructField(_, LongType, nullable = false)) ++
       wanted.map(cn => StructField(cn, sparkType(s.col(cn).ptype), nullable = false)))
@@ -794,118 +609,6 @@ class ColumnStore(val root: String) extends Serializable {
         reader.rows
       })
     org.apache.spark.sql.graft.InternalRows.toDataFrame(spark, rdd, schema)
-  }
-
-  /** Driver-side scan planning: partition pruning + per-unit chunk pruning
-    * against the manifest zone map. Shared by the API read path and the
-    * DSv2 connector.
-    */
-  def planUnits(columns: Seq[String], sel: Selection,
-      emptyMeansAll: Boolean = true): (Seq[DecodeUnit], Seq[String]) = {
-    val s = spec
-    // emptyMeansAll=false (DSv2 empty projection): decode NO columns, the
-    // units carry row counts only (count(*) never opens a chunk file)
-    val wanted = if (columns.isEmpty && emptyMeansAll) s.colNames else columns
-    wanted.foreach(s.col(_)) // validate
-    val offs = partOffsets()
-    // SelIds: sort (id, pos) ONCE, then each partition/chunk slices its span
-    // with binary search — O((P + chunks) log N) total, not O(P × N)
-    val sortedSel = sel match {
-      case SelIds(ids, pos) =>
-        val order = ids.indices.toArray.sortBy(ids(_))
-        val sIds = new Array[Long](ids.length)
-        val sPos = new Array[Long](ids.length)
-        var i = 0
-        while (i < order.length) { sIds(i) = ids(order(i)); sPos(i) = pos(order(i)); i += 1 }
-        SelIds(sIds, sPos)
-      case other => other
-    }
-    // binary search: first index in sIds with value >= key
-    def lowerBound(a: Array[Long], key: Long): Int = {
-      var lo = 0
-      var hi = a.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (a(mid) < key) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    val units = mutable.ArrayBuffer.empty[DecodeUnit]
-    // manifests looked up once per SEGMENT (consolidated file, cached)
-    var curSeg = -1L
-    var segManifests: IndexedSeq[PartManifest] = null
-    for ((seg, part, off, rows) <- offs) {
-      val localSel: Option[Selection] = sortedSel match {
-        case SelAll => Some(SelAll)
-        case SelRange(start, stop, step) =>
-          if (stop <= off || start >= off + rows) None
-          else Some(SelRange(start, stop, step))
-        case SelRanges(starts, stops) =>
-          val ks = mutable.ArrayBuilder.make[Long]
-          val ke = mutable.ArrayBuilder.make[Long]
-          var i = 0
-          while (i < starts.length) {
-            if (stops(i) > off && starts(i) < off + rows) {
-              ks += starts(i); ke += stops(i)
-            }
-            i += 1
-          }
-          val a = ks.result()
-          if (a.isEmpty) None else Some(SelRanges(a, ke.result()))
-        case SelIds(sIds, sPos) =>
-          val from = lowerBound(sIds, off)
-          val until = lowerBound(sIds, off + rows)
-          if (from == until) None
-          else Some(SelIds(
-            java.util.Arrays.copyOfRange(sIds, from, until),
-            java.util.Arrays.copyOfRange(sPos, from, until)))
-      }
-      localSel.foreach { ls =>
-        if (seg != curSeg) { curSeg = seg; segManifests = partManifests(seg) }
-        val m =
-          if (part < segManifests.length && segManifests(part).part == part)
-            segManifests(part)
-          else segManifests.find(_.part == part).getOrElse(
-            throw new IllegalStateException(s"no manifest for seg=$seg part=$part"))
-        val perCol = wanted.map { cn =>
-          // manifest PRESENCE decides fill-vs-chunks: a backfilled column
-          // materializes chunks on first update, so addedAtSegment alone
-          // would hide the written values
-          val colChunks = m.chunks.filter(_.column == cn)
-          if (colChunks.isEmpty) cn -> Seq.empty[ChunkMeta] // fill col
-          else cn -> pruneChunks(colChunks, ls, off)
-        }.toMap
-        units += DecodeUnit(root, seg, part, off, rows, perCol, ls)
-      }
-    }
-    (units.toSeq, wanted)
-  }
-
-  private def pruneChunks(chunks: Seq[ChunkMeta], sel: Selection,
-      off: Long): Seq[ChunkMeta] = sel match {
-    case SelAll => chunks
-    case SelRange(start, stop, _) =>
-      chunks.filter(c => off + c.rowStartLocal < stop &&
-        off + c.rowStartLocal + c.nrows > start)
-    case SelRanges(starts, stops) =>
-      chunks.filter { c =>
-        val lo = off + c.rowStartLocal
-        val hi = lo + c.nrows
-        starts.indices.exists(i => starts(i) < hi && stops(i) > lo)
-      }
-    case SelIds(ids, _) =>
-      // ids arrive sorted (planUnits sorts once); chunks sorted by row start
-      // — one merge walk, O(chunks + ids)
-      val sorted = chunks.sortBy(_.rowStartLocal)
-      val out = mutable.ArrayBuffer.empty[ChunkMeta]
-      var i = 0
-      sorted.foreach { c =>
-        val lo = off + c.rowStartLocal
-        val hi = lo + c.nrows
-        while (i < ids.length && ids(i) < lo) i += 1
-        if (i < ids.length && ids(i) < hi) out += c
-      }
-      out.toSeq
   }
 
   // ---------------------------------------------------------------- meta
@@ -950,6 +653,7 @@ class ColumnStore(val root: String) extends Serializable {
     val s = spec
     require(!s.colNames.contains(c.name), s"column ${c.name} exists")
     writeSpec(s.copy(columns = s.columns :+ c.copy(addedAtSegment = nextSegment)))
+    Snapshot.publish(root, updated = false)
   }
 
   /** Delete a column: schema entry dropped, chunk files removed. Stale
@@ -957,11 +661,12 @@ class ColumnStore(val root: String) extends Serializable {
     * by requested column names only).
     */
   def dropColumn(name: String): Unit = {
-    val s = spec
+    val snap = snapshot
+    val s = snap.spec
     require(s.colNames.contains(name), s"no such column $name")
     require(s.columns.size > 1, "cannot drop the last column")
     writeSpec(s.copy(columns = s.columns.filterNot(_.name == name)))
-    for (seg <- segments) {
+    for (seg <- snap.segments) {
       val dir = Format.segDir(root, seg)
       FsIO.list(dir)
         .filter(f => f.matches(
@@ -969,7 +674,11 @@ class ColumnStore(val root: String) extends Serializable {
         .foreach(f => FsIO.delete(s"$dir/$f"))
     }
     FsIO.delete(s"$root/${Format.IndexDir}/$name", recursive = true)
+    Snapshot.publish(root, updated = false)
   }
 
-  def dropStore(): Unit = FsIO.delete(root, recursive = true)
+  private def writeSpec(s: TableSpec): Unit =
+    FsIO.writeAtomic(s"$root/${Format.SchemaFile}", BinCodec.writeTableSpec(s))
+
+  def dropStore(): Unit = { FsIO.delete(root, recursive = true); Snapshot.forget(root) }
 }

@@ -12,6 +12,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * ```
   * root/
   *   _schema.bin                 # TableSpec (columns, chunking config)
+  *   _version/<n>-<id>           # store version n (payload: last update)
   *   _meta/<name>.bin            # Meta entries (string map, pycolumns Meta)
   *   segments/
   *     .commit-<n>-<seg>         # empty marker: publishes seg as commit n
@@ -30,6 +31,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     _gen-<uuid>/              # delta generations (parquet)
   *   <name>.cols/                # nested sub-table (own independent store)
   * ```
+  *
+  * Every mutation publishes the next store version AFTER its data: one
+  * create-exclusive entry `_version/<n>-<id>` (a lost race retries n+1;
+  * `id` is fixed at create) naming the newest version that updated a
+  * value. Older entries are deleted, so one listing finds the newest;
+  * readers list it first and share one [[Snapshot]] per version.
   *
   * The per-partition manifest is the analogue of pycolumns' chunk descriptor
   * table (offset,nbytes,rowstart,nrows — /root/reference/pycolumns/
@@ -50,8 +57,11 @@ object Format {
     * SEGMENT instead of a list+read per partition.
     */
   final val SegManifestFile = "_manifest.bin"
-  /** Schema layout version: the one `_schema.bin` version readers accept. */
-  final val FormatVersion = 2
+  final val VersionDir = "_version"
+  /** Schema layout version: the one `_schema.bin` version readers accept
+    * (3: stores carry `_version/`; index metas record a store version).
+    */
+  final val FormatVersion = 3
 
   def segDir(root: String, seg: Long): String = s"$root/$SegmentsDir/seg$seg"
   def colFile(part: Int, col: String): String = s"p$part.$col.bin"
@@ -286,6 +296,20 @@ object BinCodec {
     val r = new Reader(b)
     val n = r.readVar().toInt
     (0 until n).map(_ => readPartManifest(r.readBytes(r.readVar().toInt), file))
+  }
+
+  /** Store version entry payload: the newest version that updated a value. */
+  def writeVersion(updatedAt: Long): Array[Byte] = {
+    val w = new Writer()
+    w.writeVar(ManifestMagic); w.writeVar(1L) // version entry format v1
+    w.writeVar(updatedAt)
+    w.result()
+  }
+
+  def readVersion(b: Array[Byte], file: String): Long = {
+    val r = new Reader(b)
+    header(r, 1L, "store version", file)
+    r.readVar()
   }
 
   def writeSegmentCommit(c: SegmentCommit): Array[Byte] = {
@@ -550,6 +574,29 @@ object FsIO {
     } else {
       val out = fs(path).create(new Path(path), false)
       try out.write(bytes) finally out.close()
+    }
+  }
+
+  /** Like [[createExclusive]], returning false when `path` exists, but
+    * readers never see a partial payload: it is written under a temporary
+    * name, then hard-linked (local) or renamed without overwrite (Hadoop).
+    */
+  def publishExclusive(path: String, bytes: Array[Byte]): Boolean = {
+    val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
+    val lp = localOf(path)
+    if (lp != null) {
+      val lt = localOf(tmp)
+      createParent(lt)
+      java.nio.file.Files.write(lt, bytes)
+      try { java.nio.file.Files.createLink(lp, lt); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(lt)
+    } else {
+      val out = fs(tmp).create(new Path(tmp), true)
+      try out.write(bytes) finally out.close()
+      try { fc(path).rename(new Path(tmp), new Path(path)); true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+      finally delete(tmp)
     }
   }
 

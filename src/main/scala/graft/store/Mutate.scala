@@ -127,16 +127,17 @@ object Mutate {
   def update(spark: SparkSession, store: ColumnStore, colName: String,
       ids: Array[Long], values: Array[Any],
       cfg: CodecConfig = CodecConfig.default): Unit = {
-    val s = store.spec
+    val snap = store.snapshot
+    val s = snap.spec
     val cs = s.col(colName)
     require(values.length == ids.length || values.length == 1,
       s"${values.length} values for ${ids.length} rows")
-    val total = store.nrows
+    val total = snap.nrows
     ids.foreach(id => require(id >= 0 && id < total,
       s"row id $id out of bounds [0, $total) " +
         "(reference raises IndexError, _column_pywrap.c bounds checks)"))
     val cast = values.map(castValue(cs, _))
-    val offs = store.partOffsets()
+    val offs = snap.partOffsets
     // binary-search each id's partition: O(ids log P + P), not O(P × ids)
     val starts = offs.map(_._3).toArray
     val byPid = mutable.LinkedHashMap.empty[Int, (mutable.ArrayBuilder[Long], mutable.ArrayBuffer[Any])]
@@ -154,11 +155,12 @@ object Mutate {
     }
     if (tasks.isEmpty) return
     val specB = s
-    Jobs.described(spark, s"update $colName")(
+    // a failed job may already have published some partitions' manifests
+    try Jobs.described(spark, s"update $colName")(
       spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
         .map(t => runPartUpdate(t, specB, cfg))
         .collect())
-    store.invalidateManifests()
+    finally Snapshot.publish(store.root, updated = true)
   }
 
   /** Distributed bulk update: col[id] = value for every (_row_id, value)
@@ -172,7 +174,8 @@ object Mutate {
       updates: org.apache.spark.sql.DataFrame,
       cfg: CodecConfig = CodecConfig.default): Unit = {
     import org.apache.spark.sql.functions.{col => f, substring}
-    val s = store.spec
+    val snap = store.snapshot
+    val s = snap.spec
     val cs = s.col(colName)
     require(updates.columns.length == 2,
       s"updates must have exactly (_row_id, value) columns, got ${updates.columns.toSeq}")
@@ -185,11 +188,11 @@ object Mutate {
     }
     val norm = base.select(f("_row_id").cast(org.apache.spark.sql.types.LongType),
       castVal.as("value"))
-    val offs = store.partOffsets()
+    val offs = snap.partOffsets
     if (offs.isEmpty) return
     val starts = offs.map(_._3).toArray
     val metas = offs.map(o => (o._1, o._2, o._3)).toArray // (seg, part, off)
-    val total = store.nrows
+    val total = snap.nrows
     val pt = cs.ptype
     val specB = s
     val rootB = store.root
@@ -225,7 +228,7 @@ object Mutate {
     // in memory, not its whole shuffle partition as boxed tuples (the old
     // it.toArray + groupBy OOMed at exactly the 10^9-row scale this MERGE
     // path exists for)
-    Jobs.described(spark, s"update $colName")(pairs
+    try Jobs.described(spark, s"update $colName")(pairs
       .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(tasks))
       .mapPartitions { it =>
         val rows = it.buffered
@@ -246,7 +249,7 @@ object Mutate {
           }
         }
       }.collect())
-    store.invalidateManifests()
+    finally Snapshot.publish(store.root, updated = true)
   }
 
   private def runPartUpdate(t: PartUpdate, spec: TableSpec,
@@ -423,18 +426,21 @@ object Mutate {
   def vacuum(spark: SparkSession, store: ColumnStore,
       cfg: CodecConfig = CodecConfig.default): Unit = {
     val cowRe = """\.c\d+\.v\d+\.bin$""".r
+    val snap = store.snapshot
     val tasks = for {
-      seg <- store.segments
-      m <- store.partManifests(seg)
+      seg <- snap.segments
+      m <- snap.partManifests(seg)
       if m.updateVersion > 0 && m.chunks.exists(c => cowRe.findFirstIn(c.file).isDefined)
     } yield CompactTask(store.root, seg, m.part)
     if (tasks.isEmpty) return
-    val spec = store.spec
-    Jobs.described(spark, "vacuum")(
+    val spec = snap.spec
+    // a failed job may already have published manifests and deleted files
+    // that the previous snapshot still points to
+    try Jobs.described(spark, "vacuum")(
       spark.sparkContext.parallelize(tasks, tasks.size)
         .map(t => compactPartition(t, spec, cfg))
         .collect())
-    store.invalidateManifests()
+    finally Snapshot.publish(store.root, updated = false)
   }
 
   /** Crash-safe compaction order: (1) write each column's chunks into a NEW
@@ -503,9 +509,10 @@ object Mutate {
     */
   def compactSegments(spark: SparkSession, store: ColumnStore,
       numParts: Int = 0, cfg: CodecConfig = CodecConfig.default): Unit = {
-    if (store.segments.size <= 1) return
+    val snap = store.snapshot
+    if (snap.segments.size <= 1) return
     val parts = if (numParts > 0) numParts
-      else math.max(1, math.min(2048, (store.nrows / (1L << 19)).toInt + 1))
+      else math.max(1, math.min(2048, (snap.nrows / (1L << 19)).toInt + 1))
     val df = store.read(spark)
     val ordered = df
       .repartitionByRange(parts, org.apache.spark.sql.functions.col("_row_id"))
@@ -515,22 +522,24 @@ object Mutate {
     // column epochs reset to segment 0 — keeping the original
     // addedAtSegment would make append's column-set check reject the
     // full-width frame and hide the materialized values from readers
-    val freshSpec = store.spec.copy(
-      columns = store.spec.columns.map(_.copy(addedAtSegment = 0L)))
+    val freshSpec = snap.spec.copy(
+      columns = snap.spec.columns.map(_.copy(addedAtSegment = 0L)))
     val tmpRoot = s"${store.root}/.compact-${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = ColumnStore.create(tmpRoot, freshSpec)
-    tmp.append(spark, ordered, AsIs, lineage = s"compact:${store.segments.size}segs", cfg)
-    require(tmp.nrows == store.nrows,
-      s"compaction row count mismatch: ${tmp.nrows} != ${store.nrows}")
+    tmp.append(spark, ordered, AsIs, lineage = s"compact:${snap.segments.size}segs", cfg)
+    require(tmp.nrows == snap.nrows,
+      s"compaction row count mismatch: ${tmp.nrows} != ${snap.nrows}")
     val segDir = s"${store.root}/${Format.SegmentsDir}"
     val trash = s"${store.root}/.trash-${java.util.UUID.randomUUID().toString.take(8)}"
-    FsIO.rename(segDir, trash)
-    FsIO.rename(s"$tmpRoot/${Format.SegmentsDir}", segDir)
-    FsIO.writeAtomic(s"${store.root}/${Format.SchemaFile}",
-      BinCodec.writeTableSpec(freshSpec))
+    // the store version lives outside segments/, so the swap keeps it
+    try {
+      FsIO.rename(segDir, trash)
+      FsIO.rename(s"$tmpRoot/${Format.SegmentsDir}", segDir)
+      FsIO.writeAtomic(s"${store.root}/${Format.SchemaFile}",
+        BinCodec.writeTableSpec(freshSpec))
+    } finally Snapshot.publish(store.root, updated = false)
     FsIO.delete(trash, recursive = true)
-    FsIO.delete(tmpRoot, recursive = true)
-    store.invalidateAll()
+    tmp.dropStore()
   }
 
   /** Total bytes under segments/ (observable storage for vacuum tests). */

@@ -396,7 +396,7 @@ class DataSourceSpec extends AnyFunSuite {
     assert(df.where(col("id").isin(5L, 6L, 1999L)).count() == 3)
     // evidence: equality plans strictly fewer decode units than a full scan
     val st = graft.store.ColumnStore.open(c.root)
-    val selEq = graft.sources.GraftScan.planSelection(st,
+    val selEq = graft.sources.GraftScan.planSelection(st.snapshot,
       Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.EqualTo("s", "key01234")))
     val pruned = selEq match {
@@ -527,7 +527,7 @@ class DataSourceSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(vals.toSeq.map(Row(_)), 1), schemaL)
     val cL = Columns.fromDataFrame(spark, tmpDir("graft-inexact-l"), dfL, chunkRows = 4)
     val stL = graft.store.ColumnStore.open(cL.root)
-    val selL = graft.sources.GraftScan.planSelection(stL,
+    val selL = graft.sources.GraftScan.planSelection(stL.snapshot,
       Array[sources.Filter](sources.In("v", Array[Any](big + 5, big + 3))))
     assert(covers(selL, 0L), s"IN envelope pruned the chunk holding ${big + 3}: $selL")
     assert(spark.read.format("graft").load(cL.root)
@@ -545,7 +545,7 @@ class DataSourceSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(svals.map(Row(_)), 1), schemaS)
     val cS = Columns.fromDataFrame(spark, tmpDir("graft-inexact-s"), dfS, chunkRows = 4)
     val stS = graft.store.ColumnStore.open(cS.root)
-    val selS = graft.sources.GraftScan.planSelection(stS,
+    val selS = graft.sources.GraftScan.planSelection(stS.snapshot,
       Array[sources.Filter](sources.In("s", Array[Any](svals.last, svals.head))))
     assert(covers(selS, 0L), s"IN envelope pruned the chunk holding ${svals.head}: $selS")
     assert(spark.read.format("graft").load(cS.root)
@@ -575,7 +575,7 @@ class DataSourceSpec extends AnyFunSuite {
     val c = Columns.fromDataFrame(spark, tmpDir("graft-rollup"), df,
       graft.store.ByKey("id", 8), chunkRows = 50)
     val st = graft.store.ColumnStore.open(c.root)
-    val (sel, visited, skipped) = graft.sources.GraftScan.planSelectionCounted(st,
+    val (sel, visited, skipped) = graft.sources.GraftScan.planSelectionCounted(st.snapshot,
       Array[sources.Filter](sources.GreaterThanOrEqual("id", 3900L)))
     assert(skipped >= 6 && visited <= 2,
       s"roll-up should skip most partitions: visited=$visited skipped=$skipped sel=$sel")
@@ -750,8 +750,8 @@ class DataSourceSpec extends AnyFunSuite {
     // rows than the table (routing + zone maps intersected)
     assert(spark.read.format("graft").load(c.root)
       .where(col("id") === 42L).count() == 1)
-    // vacuum after a scatter update: values preserved → index re-stamped →
-    // routing stays ON (previously disengaged forever)
+    // vacuum after a scatter update: values preserved → the index stays
+    // routable → routing stays ON
     c("id").update(Seq(10L), Seq(777777L)) // forces a full rebuild (fresh)
     c.vacuum()
     val q2 = spark.read.format("graft").load(c.root).where(col("id") === 777777L)

@@ -357,7 +357,7 @@ class IndexConsultSpec extends AnyFunSuite {
       op(spread, -1)
       cols.foreach { case (n, _, _) =>
         val (a, b) = (Index.readMeta(driver.store, n), Index.readMeta(spread.store, n))
-        assert((a.rows, a.stamp, a.gens.map(_._2)) == (b.rows, b.stamp, b.gens.map(_._2)),
+        assert((a.rows, a.version, a.gens.map(_._2)) == (b.rows, b.version, b.gens.map(_._2)),
           s"$state $n: metas differ")
         val (ra, rb) = (runs(driver.store, n), runs(spread.store, n))
         assert(ra.map(_._1) == rb.map(_._1), s"$state $n: (value, row_id) sequences differ")
@@ -481,7 +481,7 @@ class IndexConsultSpec extends AnyFunSuite {
       assert(Index.table(spark, store, "s").count() == 0L)
       assert(Index.consult(spark, store, "s", Seq(sources.GreaterThan("s", ""))).count() == 0L)
       assert(Index.topN(spark, store, "s", desc = true, 5).isEmpty)
-      assert(Index.routableFor(store, "s"))
+      assert(Index.routableFor(store.snapshot, "s"))
       store.dropStore()
     }
   }
@@ -506,17 +506,24 @@ class IndexConsultSpec extends AnyFunSuite {
     for (bound <- Seq(Index.DriverRows, -1)) {
       val c = Columns.fromDataFrame(spark, tmpDir("graft-build-stamp"), spark.createDataFrame(
         spark.sparkContext.parallelize((0 until 500).map(i => Row(i.toLong)), 2), schema))
-      // a second handle on the store caches its manifests now...
+      // a second handle opened before the update still sees it: every handle
+      // reads the store's newest version
       val old = graft.store.ColumnStore.open(c.root)
-      assert(old.updateStamp == c.store.updateStamp)
-      // ...so it misses this update, and builds from the rows before it
       c("v").update(Seq(3L), Seq(-3L))
+      assert(old.snapshot.version == c.store.snapshot.version)
       Index.create(spark, old, "v", overwrite = false, bound)
-      assert(!Index.routableFor(c.store, "v"), s"bound $bound: stale index routable")
-      // the stale stamp forces a rebuild, which sees the update
-      Index.refresh(spark, c.store, "v", maxDeltaGens = 8, bound)
-      assert(Index.routableFor(c.store, "v"))
+      assert(Index.routableFor(c.store.snapshot, "v"),
+        s"bound $bound: fresh index not routable")
       assert(RowIds.collectSorted(c("v") === -3L).toSeq == Seq(3L))
+      // an update published after the build leaves the index older than the
+      // store's last update
+      graft.store.Mutate.update(spark, c.store, "v", Array(4L), Array(-4L: Any))
+      assert(!Index.routableFor(c.store.snapshot, "v"),
+        s"bound $bound: stale index routable")
+      // the stale index forces a rebuild, which sees the update
+      Index.refresh(spark, c.store, "v", maxDeltaGens = 8, bound)
+      assert(Index.routableFor(c.store.snapshot, "v"))
+      assert(RowIds.collectSorted(c("v") === -4L).toSeq == Seq(4L))
       c.dropStore()
     }
   }

@@ -236,7 +236,7 @@ class IndexSpec extends AnyFunSuite {
     // lookups see old + new rows; DSv2 routing considers the index fresh
     assert(RowIds.collectSorted(c("ind") === 100001L).toSeq == Seq(50001L))
     assert(RowIds.collectSorted(c("ind") > 49998L).length == 1 + 2000)
-    assert(Index.routableFor(c.store, "ind"))
+    assert(Index.routableFor(c.store.snapshot, "ind"))
 
     // a second append stacks another generation
     c.append(df(Seq(200000L), 1))
@@ -282,7 +282,7 @@ class IndexSpec extends AnyFunSuite {
     // every appended value still findable after the collapse
     (0 until 10).foreach(i =>
       assert(RowIds.collectSorted(c("ind") === (100000L + i)).toSeq == Seq(10000L + i)))
-    assert(Index.routableFor(c.store, "ind"))
+    assert(Index.routableFor(c.store.snapshot, "ind"))
     c.dropStore()
   }
 
@@ -322,25 +322,25 @@ class IndexSpec extends AnyFunSuite {
     assert(errs.isEmpty, s"refresh raced into an error: ${errs.peek()}")
     // effective meta covers every row EXACTLY once (a double-committed gen
     // would make the union over-count; a lost update would under-count)
-    assert(Index.builtRows(c.store, "ind") == 6000L)
+    assert(Index.readMeta(c.store, "ind").rows == 6000L)
     assert(Index.table(spark, c.store, "ind").count() == 6000L)
     assert(RowIds.collectSorted(c("ind") === 90500L).toSeq == Seq(5500L))
     assert(RowIds.collectSorted(c("ind") > 89999L).length == 1000)
-    assert(Index.routableFor(c.store, "ind"))
-    // refresh racing restamp converges too (vacuum's freshness path)
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    // refresh racing a full rebuild converges too
     c.store.append(spark, df(Seq(95000L), 1), graft.store.AsIs, lineage = "race:2")
     val t1 = new Thread(() => try Index.refresh(spark, c.store, "ind")
       catch { case t: Throwable => errs.add(t) })
-    val t2 = new Thread(() => try Index.restamp(c.store, "ind")
+    val t2 = new Thread(() => try Index.create(spark, c.store, "ind", overwrite = true)
       catch { case t: Throwable => errs.add(t) })
     t1.start(); t2.start(); t1.join(); t2.join()
-    assert(errs.isEmpty, s"refresh/restamp race error: ${errs.peek()}")
+    assert(errs.isEmpty, s"refresh/rebuild race error: ${errs.peek()}")
     // whichever meta won, it is self-consistent: rows == union count
     val m = Index.readMeta(c.store, "ind")
     assert(Index.table(spark, c.store, "ind").count() == m.rows)
     // and a follow-up refresh lands on the fully-fresh state
     Index.refresh(spark, c.store, "ind")
-    assert(Index.builtRows(c.store, "ind") == 6001L)
+    assert(Index.readMeta(c.store, "ind").rows == 6001L)
     assert(RowIds.collectSorted(c("ind") === 95000L).toSeq == Seq(6000L))
     c.dropStore()
   }
@@ -388,7 +388,7 @@ class IndexSpec extends AnyFunSuite {
     c("ind").createIndex()
     val (m, e) = Index.readMetaEpoch(c.store, "ind")
     // a commit at the next epoch wins...
-    assert(Index.commitMeta(c.store, "ind", m.copy(stamp = m.stamp), e + 1))
+    assert(Index.commitMeta(c.store, "ind", m.copy(version = m.version), e + 1))
     // ...after which a commit built from the STALE epoch loses cleanly:
     // it targets e+1 too, and the same-epoch tie-break is uuid-ordered, so
     // run it at the stale writer's view repeatedly — whenever commitMeta
@@ -414,9 +414,9 @@ class IndexSpec extends AnyFunSuite {
     val w = new graft.codec.Bytes.Writer(); w.writeVar(20L)
     val meta = f"$d/_meta-${1L << 40}%019d-ffffffffffff.bin" // the winning epoch
     graft.store.FsIO.writeAtomic(meta, w.result())
-    assertUnsupported(meta)(Index.builtRows(c.store, "id"))
+    assertUnsupported(meta)(Index.readMeta(c.store, "id").rows)
     // a scan never routes through an index it cannot read
-    assert(!Index.routableFor(c.store, "id"))
+    assert(!Index.routableFor(c.store.snapshot, "id"))
     c.dropStore()
   }
 
@@ -518,6 +518,34 @@ class IndexSpec extends AnyFunSuite {
     Seq("graft: index build ind", "graft: append seg1", "graft: index refresh ind",
       "graft: update ind", "graft: vacuum").foreach(d =>
       assert(seen.contains(d), s"no job described '$d' in $seen"))
+    c.dropStore()
+  }
+
+  test("vacuum never launders an update published around it into routability") {
+    val schema = StructType(Seq(StructField("ind", LongType, nullable = false)))
+    def df(vals: Seq[Long]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(vals.map(Row(_)), 2), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-vac-route"), df(0L until 200L))
+    c.append(df(200L until 400L)) // a second segment for compactSegments
+    c("ind").createIndex()
+    c("ind").update(Seq(5L), Seq(-5L)) // the facade rebuilds: fresh again
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    val built = Index.readMeta(c.store, "ind").version
+    // vacuum keeps every (value, row_id) pair: still routable, no meta write
+    graft.store.Mutate.vacuum(spark, c.store)
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    assert(Index.readMeta(c.store, "ind").version == built)
+    // an update published between the vacuum and any later maintenance
+    graft.store.Mutate.update(spark, c.store, "ind", Array(6L), Array(-6L: Any))
+    assert(!Index.routableFor(c.store.snapshot, "ind"))
+    c.vacuum()
+    assert(!Index.routableFor(c.store.snapshot, "ind"), "vacuum laundered a stale index")
+    c.compactSegments()
+    assert(c.store.segments == Seq(0L))
+    assert(!Index.routableFor(c.store.snapshot, "ind"), "compaction laundered a stale index")
+    Index.refresh(spark, c.store, "ind")
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    assert(RowIds.collectSorted(c("ind") === -6L).toSeq == Seq(6L))
     c.dropStore()
   }
 }

@@ -25,7 +25,7 @@ class SkewSpec extends AnyFunSuite {
   }
 
   private def partSizes(c: Columns): Seq[Long] =
-    c.store.partOffsets().map(_._4).filter(_ > 0)
+    c.store.snapshot.partOffsets.map(_._4).filter(_ > 0)
 
   test("salting spreads a hot key; plain range partitioning cannot") {
     val n = 8000

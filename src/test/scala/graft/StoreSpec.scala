@@ -224,10 +224,13 @@ class StoreSpec extends AnyFunSuite {
     Mutate.update(spark, st, "rand", Array(3L, 77L), Array(1.5f, 2.5f))
     Mutate.vacuum(spark, st)
     val bytes1 = Mutate.storageBytes(st)
-    val stamp1 = st.updateStamp
+    def updateVersions = st.segments.flatMap(st.partManifests).map(_.updateVersion.toLong).sum
+    val stamp1 = updateVersions
+    val version1 = st.snapshot.version
     Mutate.vacuum(spark, st) // nothing left to reclaim -> must not rewrite
     assert(Mutate.storageBytes(st) == bytes1, "second vacuum rewrote data")
-    assert(st.updateStamp == stamp1, "second vacuum bumped update versions")
+    assert(updateVersions == stamp1, "second vacuum bumped update versions")
+    assert(st.snapshot.version == version1, "second vacuum published a store version")
     // a failed encode (null value) must clean up its tmp files
     val schemaN = StructType(Seq(
       StructField("id", LongType, nullable = true),
@@ -280,6 +283,8 @@ class StoreSpec extends AnyFunSuite {
     FsIO.delete(s"$segDir/p2.id.bin")
     FsIO.delete(s"$segDir/p2.rand.bin")
     FsIO.delete(s"$segDir/p2.scol.bin")
+    // the next published version shows the loss to every handle
+    Snapshot.publish(st.root, updated = false)
     assert(st.nrows == 400) // uncommitted segment invisible
     // re-run the same append: completed partitions are skipped via their
     // manifest checkpoints, missing one is re-encoded, then commit lands
@@ -308,7 +313,6 @@ class StoreSpec extends AnyFunSuite {
       catch { case e: Throwable => errs.add(e) })
     t1.start(); t2.start(); t1.join(); t2.join()
     assert(errs.isEmpty, s"concurrent append failed: ${errs.peek()}")
-    st.invalidateAll()
     // visibility order follows COMMIT order (nondeterministic between the
     // racing threads) — only the segment SET is fixed
     assert(st.segments.sorted == Seq(0L, 1L, 2L), s"segments: ${st.segments}")
@@ -323,6 +327,46 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
+  test("a handle opened before another handle's mutations reads every one of them") {
+    val (a, data) = mkStore(400, chunkRows = 50)
+    val b = ColumnStore.open(a.root) // opened (and read) before A mutates
+    assert(b.nrows == 400)
+    def rands(st: ColumnStore): Seq[Float] =
+      st.read(spark, Seq("rand")).collect().sortBy(_.getLong(0)).map(_.getFloat(1)).toSeq
+    var expect = data.map(_._2)
+    def check(what: String): Unit = {
+      assert(b.nrows == expect.size, s"$what: row count")
+      assert(b.spec == a.spec, s"$what: spec")
+      assert(rands(b) == expect, s"$what: values")
+    }
+    val more = refData(100, seed = 5L)
+    a.append(spark, refDf(more, 2), AsIs, lineage = "two-handles")
+    expect = expect ++ more.map(_._2)
+    check("append")
+    Mutate.update(spark, a, "id", Array(450L), Array(-450L: Any))
+    Mutate.update(spark, a, "rand", Array(7L), Array(7.5f: Any))
+    expect = expect.updated(7, 7.5f)
+    check("update")
+    // an index built through B sees A's update and is routable
+    graft.index.Index.create(spark, b, "id")
+    assert(graft.index.Index.routableFor(a.snapshot, "id"))
+    assert(graft.index.RowIds.collectSorted(graft.index.Index.eq(spark, b, "id", -450L))
+      .toSeq == Seq(450L))
+    Mutate.vacuum(spark, a)
+    check("vacuum")
+    Mutate.compactSegments(spark, a)
+    assert(b.segments == Seq(0L), "compactSegments: segments")
+    check("compactSegments")
+    assert(graft.index.Index.routableFor(b.snapshot, "id"))
+    a.addColumn(ColumnSpec("extra", PType.I64.id, fill = Some("3")))
+    check("addColumn")
+    assert(b.read(spark, Seq("extra")).collect().forall(_.getLong(1) == 3L))
+    a.dropColumn("extra")
+    check("dropColumn")
+    assert(!b.spec.colNames.contains("extra"))
+    a.dropStore()
+  }
+
   test("row ids follow COMMIT order: late-committing lower segment appends after") {
     // writer A claims the next segment number first but commits LAST; B's
     // rows become visible first and their ids must NOT shift when A lands
@@ -333,14 +377,12 @@ class StoreSpec extends AnyFunSuite {
     val segA = stA.claimSegment("writer-a") // claims seg 1
     assert(segA == 1L)
     st.append(spark, refDf(b, 2), AsIs, lineage = "writer-b") // takes seg 2
-    st.invalidateAll()
     assert(st.segments == Seq(0L, 2L))
     val bIds = st.read(spark, Seq("rand")).collect()
       .filter(r => b.exists(_._2 == r.getFloat(1))).map(_.getLong(0)).sorted.toSeq
     assert(bIds == (100L until 140L), s"B's rows at $bIds")
     // A resumes into its claimed segment (same lineage) and commits now
     stA.append(spark, refDf(a, 2), AsIs, lineage = "writer-a")
-    st.invalidateAll()
     // committed order: seg 1 committed AFTER seg 2 → sorts after it
     assert(st.segments == Seq(0L, 2L, 1L), s"segments: ${st.segments}")
     assert(st.nrows == 200)
@@ -367,11 +409,10 @@ class StoreSpec extends AnyFunSuite {
     // v3 markers carry the segment in the NAME (atomic single-name publish)
     val seg1Marker = markers.find(m => ColumnStore.markerParts(segsDir, m)._2 == 1L).get
     FsIO.delete(s"$segsDir/$seg1Marker")
-    st.invalidateAll()
+    Snapshot.publish(st.root, updated = false)
     assert(st.nrows == 100, "unmarkered commit must be invisible")
     // the same-lineage retry resumes the segment and re-publishes it
     st.append(spark, refDf(more, 2), AsIs, lineage = "test:pub")
-    st.invalidateAll()
     assert(st.segments.sorted == Seq(0L, 1L) && st.nrows == 150)
     val rands = st.read(spark, Seq("rand")).collect().map(_.getFloat(1)).toSeq
     assert(rands.sorted == (refData(100).map(_._2) ++ more.map(_._2)).sorted,
@@ -386,7 +427,7 @@ class StoreSpec extends AnyFunSuite {
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
     val w = new graft.codec.Bytes.Writer(); w.writeVar(0L)
     FsIO.writeAtomic(s"$segsDir/.commit-7", w.result())
-    st.invalidateAll()
+    Snapshot.publish(st.root, updated = false)
     assertUnsupported(s"$segsDir/.commit-7")(st.segments)
     st.dropStore()
   }
@@ -394,32 +435,40 @@ class StoreSpec extends AnyFunSuite {
   test("vacuum and update verify copied chunk bytes against the manifest CRC") {
     val (st, _) = mkStore(400, chunkRows = 50, parts = 2)
     Mutate.update(spark, st, "rand", Array(5L), Array(0.5f: Any))
+    val expected = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq
     val seg = st.segments.head
     val m = st.partManifests(seg).find(_.updateVersion > 0).get
     // flip one byte inside a chunk every vacuum of this partition copies
     val cm = m.chunks.filter(_.column == "scol").maxBy(_.rowStartLocal)
-    val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
-    try {
-      val at = cm.offset + cm.nbytes / 2
-      raf.seek(at)
-      val b = raf.read()
-      raf.seek(at)
-      raf.write(b ^ 0x40)
-    } finally raf.close()
+    val at = cm.offset + cm.nbytes / 2
+    def flip(): Unit = {
+      val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
+      try {
+        raf.seek(at)
+        val b = raf.read()
+        raf.seek(at)
+        raf.write(b ^ 0x40)
+      } finally raf.close()
+    }
+    flip()
     def failsOnCrc(op: => Any): Unit = {
       val e = intercept[Exception](op)
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(x => String.valueOf(x.getMessage))
       assert(msgs.exists(_.contains("chunk CRC mismatch")), e.toString)
-      st.invalidateManifests()
-      assert(st.partManifest(seg, m.part).updateVersion == m.updateVersion,
+      assert(st.snapshot.partManifest(seg, m.part).updateVersion == m.updateVersion,
         "a failed copy must not publish a new manifest")
     }
     failsOnCrc(Mutate.vacuum(spark, st))
     // an update that rewrites the corrupted chunk fails the same way
-    val off = st.partOffsets().find(o => o._1 == seg && o._2 == m.part).get._3
+    val off = st.snapshot.partOffsets.find(o => o._1 == seg && o._2 == m.part).get._3
     failsOnCrc(Mutate.update(spark, st, "scol", Array(off + cm.rowStartLocal),
       Array("x": Any)))
+    // with the byte restored, a fresh handle reads every row as before: the
+    // failed copies published nothing a reader follows
+    flip()
+    assert(ColumnStore.open(st.root).read(spark).collect().sortBy(_.getLong(0))
+      .map(_.toSeq).toSeq == expected)
     st.dropStore()
   }
 
@@ -437,13 +486,11 @@ class StoreSpec extends AnyFunSuite {
         r
       }(org.apache.spark.sql.Encoders.row(schema))
     intercept[Exception] { st.append(spark, poison.toDF(), AsIs) }
-    st.invalidateAll()
     assert(st.nrows == 100) // orphan invisible
     // an unrelated append must NOT resume into the failed attempt's segment
     // (the old orphan-reuse heuristic would have absorbed its rows)
     val fresh = refData(30, seed = 88L)
     st.append(spark, refDf(fresh, 2), AsIs)
-    st.invalidateAll()
     assert(st.nrows == 130, s"nrows ${st.nrows}: orphan rows leaked in")
     val rands = st.read(spark, Seq("rand")).collect().map(_.getFloat(1)).toSeq
     assert(rands.sorted == (refData(100).map(_._2) ++ fresh.map(_._2)).sorted)
@@ -463,21 +510,40 @@ class StoreSpec extends AnyFunSuite {
 
   test("planning does O(segments) metadata ops over a 64-partition store") {
     val (st, _) = mkStore(n = 6400, chunkRows = 25, parts = 64)
-    // fresh instance: cold caches, like a new reader process
+    // a JVM that never read the store, like a new reader process
+    Snapshot.forget(st.root)
     val cold = ColumnStore.open(st.root)
     FsIO.metaOps.set(0L)
     val (units, _) = cold.planUnits(Seq("id"), SelAll)
     assert(units.size == 64)
     val opsFirst = FsIO.metaOps.get()
-    // 1 segment: schema + segments listing + commit + seg listing +
-    // consolidated manifest ≈ 5 ops; definitely not 64+ (per-partition)
+    // 1 segment: version listing + version entry + schema + segments
+    // listing + commit + seg listing + consolidated manifest ≈ 7 ops;
+    // definitely not 64+ (per-partition)
     assert(opsFirst <= 10, s"cold planning cost $opsFirst metadata ops (O(partitions)?)")
-    // warm re-plan: only the segments listing should hit the FS
-    FsIO.metaOps.set(0L)
-    cold.planUnits(Seq("id"), SelIds(Array(5L, 6300L), Array(0L, 1L)))
-    val opsWarm = FsIO.metaOps.get()
+    // warm re-plan: only the version listing should hit the FS
+    def warmOps(store: ColumnStore): Long = {
+      FsIO.metaOps.set(0L)
+      store.planUnits(Seq("id"), SelIds(Array(5L, 6300L), Array(0L, 1L)))
+      FsIO.metaOps.get()
+    }
+    val opsWarm = warmOps(cold)
     assert(opsWarm <= 3, s"warm planning cost $opsWarm metadata ops")
-    st.dropStore()
+    // and it does not grow with the segment count: 16 segments cost the same
+    val (many, _) = mkStore(n = 400, chunkRows = 25, parts = 4)
+    (1 until 16).foreach(i => many.append(spark, refDf(refData(400, seed = i), 4), AsIs))
+    assert(many.segments.size == 16)
+    val fresh = ColumnStore.open(many.root)
+    assert(warmOps(fresh) == opsWarm, "warm re-plan cost grew with the segment count")
+    // a new handle on either store plans a DSv2 load at the same cost
+    def loadOps(root: String): Long = {
+      spark.read.format("graft").load(root).where("id = 5").queryExecution.executedPlan
+      FsIO.metaOps.set(0L)
+      spark.read.format("graft").load(root).where("id = 5").queryExecution.executedPlan
+      FsIO.metaOps.get()
+    }
+    assert(loadOps(st.root) == loadOps(many.root), "warm DSv2 load cost grew with segments")
+    st.dropStore(); many.dropStore()
   }
 
   test("pruned SelIds read after scatter update sees new values (cache invalidation)") {
@@ -506,7 +572,7 @@ class StoreSpec extends AnyFunSuite {
       assert(row.getLong(1) == id && row.getFloat(2) == rand && row.getString(3) == scol)
     }
     // manifests reflect the config
-    val m = st.partManifest(0L, 0)
+    val m = st.snapshot.partManifest(0L, 0)
     val byCol = m.chunks.groupBy(_.column)
     assert(byCol("scol").forall(c => c.codec == CodecId.Plain && c.outer == 0),
       "pinned 'none' column must store plain, no outer zstd")
@@ -535,7 +601,23 @@ class StoreSpec extends AnyFunSuite {
     wStr("x"); w.writeVar(PType.I64.id.toLong); w.writeVar(0L)
     w.writeByte(0); w.writeVar(0L)
     FsIO.writeAtomic(s"$root/${Format.SchemaFile}", w.result())
+    Snapshot.forget(root) // opened by a process that never read the store
     assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).spec)
+    FsIO.delete(root, recursive = true)
+  }
+
+  test("a store of the previous format fails with unsupported graft format version") {
+    val root = tmpDir("graft-v2")
+    val st = ColumnStore.create(root, ColumnStore.specFromSchema(schema))
+    st.append(spark, refDf(refData(50)), AsIs)
+    // the previous layout: schema v2 and no store version entries
+    val b = BinCodec.writeTableSpec(st.spec)
+    val w = new graft.codec.Bytes.Writer()
+    w.writeVar(2L)
+    w.writeBytes(java.util.Arrays.copyOfRange(b, 1, b.length)) // FormatVersion is one varint byte
+    FsIO.writeAtomic(s"$root/${Format.SchemaFile}", w.result())
+    FsIO.delete(s"$root/${Format.VersionDir}", recursive = true)
+    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).nrows)
     FsIO.delete(root, recursive = true)
   }
 

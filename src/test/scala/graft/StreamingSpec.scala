@@ -85,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
     commitEpoch0("qb", 4L, "d")
     val c = Columns.open(spark, root)
     assert(c.nrows == 5)
-    val lineages = c.store.segments.map(s => c.store.segmentCommit(s).lineage)
+    val lineages = c.store.segments.map(s => c.store.snapshot.commits(s).lineage)
     assert(lineages.contains("stream-write:qa:0") && lineages.contains("stream-write:qb:0"),
       s"lineages: $lineages")
     assert(lineages.count(_.endsWith(":0")) == 3, s"lineages: $lineages")
@@ -122,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
     val c = Columns.open(spark, root)
     assert(c.nrows == 3)
     // each epoch committed exactly one lineage-tagged segment
-    val lineages = c.store.segments.map(s => c.store.segmentCommit(s).lineage)
+    val lineages = c.store.segments.map(s => c.store.snapshot.commits(s).lineage)
     assert(lineages.forall(_.startsWith("stream-write:")), s"lineages: $lineages")
     assert(lineages.distinct.size == lineages.size)
     // RESTART on the same checkpoint: nothing re-appends, new data does
@@ -149,7 +149,7 @@ class StreamingSpec extends AnyFunSuite {
     sw.commit(7L, Array.empty) // replay: lineage already committed → no-op
     assert(Columns.open(spark, root).nrows == n7)
     assert(Columns.open(spark, root).store.segments
-      .count(s => Columns.open(spark, root).store.segmentCommit(s).lineage
+      .count(s => Columns.open(spark, root).store.snapshot.commits(s).lineage
         == "stream-write:qx:7") == 1, "replayed epoch committed twice")
     // no staging/garbage left behind
     assert(!graft.store.FsIO.list(root).exists(_.startsWith(".stream-epoch-")))
@@ -193,7 +193,7 @@ class StreamingSpec extends AnyFunSuite {
     val after = Columns.open(spark, root)
     assert(after.nrows == 40, s"retry must publish exactly once, got ${after.nrows}")
     assert(after.store.segments.size == 1)
-    assert(after.store.segmentCommit(after.store.segments.head).lineage
+    assert(after.store.snapshot.commits(after.store.segments.head).lineage
       == "stream-write:qc:7")
     val rows = after.read().collect().map(r => (r.getLong(1), r.getString(2))).sorted
     assert(rows.toSeq == (0 until 40).map(i => (i.toLong, s"v$i")))
