@@ -406,8 +406,9 @@ object SparkEntry {
         .select("doc_id", "lang", "n_chars")
       val rows = out.collect()
       val decoded = graft.store.Decode.chunksRead.get() - before
-      val chunksTotal = c.store.segments
-        .flatMap(seg => c.store.partManifests(seg)).map(_.chunks.size).sum
+      val snap = c.store.snapshot
+      val chunksTotal = snap.segments
+        .flatMap(snap.partManifests).map(_.chunks.size).sum
       require(rows.length == 2, s"expected the two hit probes, got ${rows.length}")
       require(graft.store.Decode.chunksFilterSkipped.get() > skippedBefore,
         "membership filters never engaged")

@@ -112,8 +112,8 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
   require(mode == "r" || mode == "r+", s"bad mode '$mode' (use 'r' or 'r+')")
 
   def root: String = store.root
-  def nrows: Long = store.nrows
-  def columnNames: Seq[String] = store.spec.colNames
+  def nrows: Long = store.snapshot.nrows
+  def columnNames: Seq[String] = store.snapshot.spec.colNames
   def verify(): Unit = store.verify()
 
   /** Directory-structure listing (pycolumns Columns.list, columns.py:854-886):
@@ -349,7 +349,7 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
       s"cannot shrink $cur -> $n (reference compressed columns cannot shrink)")
     if (n == cur) return
     import org.apache.spark.sql.functions.lit
-    val s = store.spec
+    val s = store.snapshot.spec
     val cols = s.columns.map { cs =>
       val fv = graft.store.Decode.fillValue(cs)
       val c = fv match {

@@ -174,15 +174,16 @@ object Index {
     * legal inside `updating{}`): routing prunes rows before residual
     * filtering, so the index must hold exactly the snapshot's values — it
     * covers the snapshot's rows and was built from a version no older than
-    * the snapshot's last value update and no newer than the snapshot.
-    * Vacuum, compaction and column add/drop keep every (value, row_id).
+    * the last update of `col` and no newer than the snapshot. Vacuum,
+    * compaction, column drop and updates of other columns keep every
+    * (value, row_id) of `col`.
     */
   def routableFor(snap: Snapshot, col: String): Boolean =
-    try fresh(snap, readMeta(new ColumnStore(snap.root), col))
+    try fresh(snap, col, readMeta(new ColumnStore(snap.root), col))
     catch { case _: Exception => false } // no index
 
-  private[graft] def fresh(snap: Snapshot, m: IdxMeta): Boolean =
-    m.rows == snap.nrows && snap.updatedAt <= m.version && m.version <= snap.version
+  private[graft] def fresh(snap: Snapshot, col: String, m: IdxMeta): Boolean =
+    m.rows == snap.nrows && snap.updatedAt(col) <= m.version && m.version <= snap.version
 
   /** Build (or rebuild) the index for a column: one sorted run of every
     * row, written by [[writeRun]] — on the driver when it is small, else by
@@ -200,8 +201,8 @@ object Index {
     if (exists(store, col))
       require(overwrite, s"index on $col exists " +
         "(reference raises unless overwrite=True, column.py:492-497)")
-    // the build reads one snapshot: an update published later leaves the
-    // index older than the store's last update, so DSv2 routing disengages
+    // the build reads one snapshot: an update of `col` published later
+    // leaves the index older than that update, so DSv2 routing disengages
     // until the next refresh
     val nrows = snap.nrows
     // NEW versioned base dir — never overwrites files another meta (or an
@@ -310,7 +311,7 @@ object Index {
     val d = dir(store, col)
     val m = readMeta(store, col)
     val paths = (m.base +: m.gens.map(_._1)).map(p => s"$d/$p")
-    spark.read.schema(tableSchema(store.spec, col)).parquet(paths: _*)
+    spark.read.schema(tableSchema(store.snapshot.spec, col)).parquet(paths: _*)
   }
 
   private def tableSchema(spec: graft.store.TableSpec, col: String): StructType =
@@ -342,9 +343,10 @@ object Index {
     *    globally-sorted base (amortized: O(table) work per O(table/4) rows
     *    appended — the LSM compaction trade).
     *
-    * Falls back to a full rebuild when values were updated IN PLACE since
-    * the build (the store's last update is newer than the version the
-    * build read — deltas can't express changed values).
+    * Falls back to a full rebuild when the column's values were updated IN
+    * PLACE since the build (its last update is newer than the version the
+    * build read — deltas can't express changed values); updates of other
+    * columns leave the index as it is.
     */
   def refresh(spark: SparkSession, store: ColumnStore, col: String,
       maxDeltaGens: Int = 8): Unit =
@@ -374,7 +376,7 @@ object Index {
     // newer one is already as fresh as this refresh could make it
     val snap = store.snapshot
     val n = snap.nrows
-    val unchanged = m.version >= snap.updatedAt // no value update since the build
+    val unchanged = m.version >= snap.updatedAt(col) // no update of col since the build
     if (m.version >= snap.version || (m.rows == n && unchanged)) return true
     val newRows = n - m.rows
     if (!unchanged || newRows <= 0 || (m.deltaRows + newRows) * 4L > n) {
@@ -525,7 +527,7 @@ object Index {
       throw new IllegalArgumentException(s"not an index predicate: $f")))
       .reduce[Expression](expressions.And(_, _))
     val zone = GraftScan.colBounds(filters.flatMap(GraftScan.flatAnd)
-      .filter(GraftScan.prunable(store.spec, _)))
+      .filter(GraftScan.prunable(store.snapshot.spec, _)))
     // a group holding a NaN has no float stats (parquet-java drops them), so
     // it is kept: NaN sorts above +Inf and matches any filter without an
     // upper bound
@@ -541,7 +543,7 @@ object Index {
       if (kept.map { case (f, gs) => gs.map(f.rowCount).sum }.sum > bound)
         Right(table(spark, store, col).where(InternalRows.column(cond)).select(RowIdCol))
       else {
-        val schema = tableSchema(store.spec, col)
+        val schema = tableSchema(store.snapshot.spec, col)
         val dt = schema.head.dataType
         val pred = InternalRows.predicate(spark, schema, cond)
         val row = new GenericInternalRow(2)
@@ -576,7 +578,7 @@ object Index {
   private def driverTopN(store: ColumnStore, col: String, desc: Boolean, k: Int,
       bound: Int): Option[Array[Long]] = {
     if (k > bound) return None
-    val dt = tableSchema(store.spec, col).head.dataType
+    val dt = tableSchema(store.snapshot.spec, col).head.dataType
     val byValue = TypeUtils.getInterpretedOrdering(dt)
     var read = 0L
     val candidates = mutable.ArrayBuffer.empty[(Any, Long)]

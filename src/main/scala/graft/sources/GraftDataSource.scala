@@ -49,7 +49,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftTable.dataSchema(ColumnStore.open(root(options)).spec)
+    GraftTable.dataSchema(ColumnStore.open(root(options)).snapshot.spec)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
@@ -83,7 +83,7 @@ class GraftTable(root: String, provided: Option[StructType])
   override def name(): String = s"graft.`$root`"
 
   override def schema(): StructType =
-    if (ColumnStore.exists(root)) GraftTable.dataSchema(ColumnStore.open(root).spec)
+    if (ColumnStore.exists(root)) GraftTable.dataSchema(ColumnStore.open(root).snapshot.spec)
     else provided.getOrElse(throw new IllegalArgumentException(
       s"no graft store at $root and no schema provided (write-first creates one)"))
 
@@ -1321,7 +1321,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
       .getOrElse(throw new IllegalArgumentException(s"bad graft offset: $json"))
       .group(1).toLong)
 
-  override def latestOffset(): Offset = GraftStreamOffset(store.nrows)
+  override def latestOffset(): Offset = GraftStreamOffset(store.snapshot.nrows)
 
   override def getDefaultReadLimit: ReadLimit =
     if (maxRowsPerBatch > 0) ReadLimit.maxRows(maxRowsPerBatch)
@@ -1329,7 +1329,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GraftStreamOffset].nrows
-    val end = store.nrows
+    val end = store.snapshot.nrows
     limit match {
       case r: ReadMaxRows => GraftStreamOffset(math.min(end, s + r.maxRows()))
       case _ => GraftStreamOffset(end)
@@ -1415,7 +1415,7 @@ class GraftBatchWrite(root: String, writeSchema: StructType, truncate: Boolean)
         createdRoot = true
         ColumnStore.create(root, ColumnStore.specFromSchema(writeSchema))
       }
-    val spec = store.spec
+    val spec = store.snapshot.spec
     // by-name resolution already reordered the input to table-schema order
     require(writeSchema.fieldNames.toSeq == spec.colNames,
       s"write schema ${writeSchema.fieldNames.toSeq} != store columns ${spec.colNames}")
@@ -1452,7 +1452,7 @@ class GraftBatchWrite(root: String, writeSchema: StructType, truncate: Boolean)
         FsIO.list(root).filterNot(kept).foreach(n => FsIO.rename(s"$root/$n", s"$trash/$n"))
         FsIO.list(staging).filterNot(_ == Format.VersionDir)
           .foreach(n => FsIO.rename(s"$staging/$n", s"$root/$n"))
-      } finally Snapshot.publish(root, updated = true)
+      } finally Snapshot.publish(root, Change.Update(writeSchema.fieldNames.toSet))
       new ColumnStore(staging).dropStore()
       FsIO.delete(trash, recursive = true)
     }
@@ -1507,8 +1507,8 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  // the per-epoch lineage-dedup check reads the store's snapshot: after an
-  // epoch's append-only version it reads only the NEW commit records, so
+  // the per-epoch lineage-dedup check reads the store's snapshot: after the
+  // previous epoch's append it reads only that epoch's segment metadata, so
   // the 10^4th commit does not re-read 10^4 _commit.bin files
   @transient private lazy val store: ColumnStore =
     if (ColumnStore.exists(root)) ColumnStore.open(root)
@@ -1522,9 +1522,10 @@ class GraftStreamingWrite(root: String, writeSchema: StructType, queryId: String
 
   override def createStreamingWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo): StreamingDataWriterFactory = {
-    require(writeSchema.fieldNames.toSeq == store.spec.colNames,
-      s"write schema ${writeSchema.fieldNames.toSeq} != store columns ${store.spec.colNames}")
-    GraftStreamingWriterFactory(root, s".stream-epoch-$sanitizedQuery", store.spec)
+    val spec = store.snapshot.spec
+    require(writeSchema.fieldNames.toSeq == spec.colNames,
+      s"write schema ${writeSchema.fieldNames.toSeq} != store columns ${spec.colNames}")
+    GraftStreamingWriterFactory(root, s".stream-epoch-$sanitizedQuery", spec)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

@@ -49,7 +49,7 @@ class OrderedPartitionReader(p: GraftOrderedPartition)
   locally {
     val m = Index.readMeta(store, p.col)
     require(m.rows == p.expectRows && m.version == p.expectVersion &&
-      m.gens.isEmpty && Index.fresh(snap, m),
+      m.gens.isEmpty && Index.fresh(snap, p.col, m),
       s"index on ${p.col} changed between planning and execution of an " +
         "ordered scan — re-run the query")
   }

@@ -374,7 +374,7 @@ object ColumnStore {
       } catch { case _: java.io.IOException => n += 1 }
     }
     require(published, s"could not publish a commit marker in $segsDir")
-    Snapshot.publish(root, updated = false)
+    Snapshot.publish(root, Change.Append)
   }
 
   /** Parse a marker filename `.commit-<n>-<seg>` into (sequence, segment). */
@@ -389,19 +389,17 @@ object ColumnStore {
 /** A graft column store rooted at `root` — the Spark-native analogue of
   * `pycolumns.Columns` storage (SURVEY.md §1). All table-level operations
   * (write/read/update/vacuum) are Spark jobs. A handle holds only the root:
-  * each metadata accessor reads the store's newest [[Snapshot]] (one
-  * listing while the version is unchanged), so it sees every published
-  * mutation; code needing one consistent state takes `snapshot` once.
+  * `snapshot` is the store's newest [[Snapshot]] (one listing while the
+  * version is unchanged), so it sees every published mutation; take it
+  * once per operation and read every piece of metadata from it.
   */
 class ColumnStore(val root: String) extends Serializable {
   import ColumnStore._
 
   def snapshot: Snapshot = Snapshot.of(root)
-  def spec: TableSpec = snapshot.spec
+  // the benchmark harness reads these three through the handle
   def segments: Seq[Long] = snapshot.segments
-  def partManifests(seg: Long): IndexedSeq[PartManifest] = snapshot.partManifests(seg)
   def colRawBytes: Map[String, Long] = snapshot.colRawBytes
-  def nrows: Long = snapshot.nrows
   def planUnits(columns: Seq[String], sel: Selection,
       emptyMeansAll: Boolean = true): (Seq[DecodeUnit], Seq[String]) =
     snapshot.planUnits(columns, sel, emptyMeansAll)
@@ -432,7 +430,7 @@ class ColumnStore(val root: String) extends Serializable {
     */
   def append(spark: SparkSession, df: DataFrame, order: OrderMode = AsIs,
       lineage: String = "", cfg: CodecConfig = CodecConfig.default): Long = {
-    val s = spec
+    val s = snapshot.spec
     val names = df.columns.toSet
     val seg = claimSegment(lineage)
     val expect = s.columns.filter(_.addedAtSegment <= seg).map(_.name).toSet
@@ -650,10 +648,10 @@ class ColumnStore(val root: String) extends Serializable {
     * (pycolumns create_column + fill, columns.py:471-485, column.py:312-344).
     */
   def addColumn(c: ColumnSpec): Unit = {
-    val s = spec
+    val s = snapshot.spec
     require(!s.colNames.contains(c.name), s"column ${c.name} exists")
     writeSpec(s.copy(columns = s.columns :+ c.copy(addedAtSegment = nextSegment)))
-    Snapshot.publish(root, updated = false)
+    Snapshot.publish(root, Change.Update(Set(c.name)))
   }
 
   /** Delete a column: schema entry dropped, chunk files removed. Stale
@@ -674,7 +672,7 @@ class ColumnStore(val root: String) extends Serializable {
         .foreach(f => FsIO.delete(s"$dir/$f"))
     }
     FsIO.delete(s"$root/${Format.IndexDir}/$name", recursive = true)
-    Snapshot.publish(root, updated = false)
+    Snapshot.publish(root, Change.Reshape)
   }
 
   private def writeSpec(s: TableSpec): Unit =

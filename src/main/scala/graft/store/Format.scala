@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * ```
   * root/
   *   _schema.bin                 # TableSpec (columns, chunking config)
-  *   _version/<n>-<id>           # store version n (payload: last update)
+  *   _version/<n>-<id>           # store version n (VersionEntry)
   *   _meta/<name>.bin            # Meta entries (string map, pycolumns Meta)
   *   segments/
   *     .commit-<n>-<seg>         # empty marker: publishes seg as commit n
@@ -34,9 +34,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Every mutation publishes the next store version AFTER its data: one
   * create-exclusive entry `_version/<n>-<id>` (a lost race retries n+1;
-  * `id` is fixed at create) naming the newest version that updated a
-  * value. Older entries are deleted, so one listing finds the newest;
-  * readers list it first and share one [[Snapshot]] per version.
+  * `id` is fixed at create) naming the newest version that changed more
+  * than the segment list and, per column, the newest version that updated
+  * its values; an update also publishes one before its job starts. Older
+  * entries are deleted, so one listing finds the newest; readers list it
+  * first and share one [[Snapshot]] per version.
   *
   * The per-partition manifest is the analogue of pycolumns' chunk descriptor
   * table (offset,nbytes,rowstart,nrows — /root/reference/pycolumns/
@@ -158,6 +160,12 @@ final case class PartManifest(
     lineage: String,
     updateVersion: Int,
     chunks: Seq[ChunkMeta])
+
+/** Payload of a store version entry: the newest version that changed
+  * anything but the segment list (`reshapedAt`; a pure append keeps it),
+  * and per column the newest version that changed its stored values.
+  */
+final case class VersionEntry(reshapedAt: Long, updatedAt: Map[String, Long])
 
 /** Segment commit record. It is not the publication: a segment becomes
   * visible only when its `.commit-<n>-<seg>` marker exists (see
@@ -298,18 +306,21 @@ object BinCodec {
     (0 until n).map(_ => readPartManifest(r.readBytes(r.readVar().toInt), file))
   }
 
-  /** Store version entry payload: the newest version that updated a value. */
-  def writeVersion(updatedAt: Long): Array[Byte] = {
+  def writeVersion(e: VersionEntry): Array[Byte] = {
     val w = new Writer()
     w.writeVar(ManifestMagic); w.writeVar(1L) // version entry format v1
-    w.writeVar(updatedAt)
+    w.writeVar(e.reshapedAt)
+    w.writeVar(e.updatedAt.size.toLong)
+    e.updatedAt.toSeq.sortBy(_._1).foreach { case (c, v) => wStr(w, c); w.writeVar(v) }
     w.result()
   }
 
-  def readVersion(b: Array[Byte], file: String): Long = {
+  def readVersion(b: Array[Byte], file: String): VersionEntry = {
     val r = new Reader(b)
     header(r, 1L, "store version", file)
-    r.readVar()
+    val reshapedAt = r.readVar()
+    val n = r.readVar().toInt
+    VersionEntry(reshapedAt, (0 until n).map(_ => rStr(r) -> r.readVar()).toMap)
   }
 
   def writeSegmentCommit(c: SegmentCommit): Array[Byte] = {

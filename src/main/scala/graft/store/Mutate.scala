@@ -155,12 +155,11 @@ object Mutate {
     }
     if (tasks.isEmpty) return
     val specB = s
-    // a failed job may already have published some partitions' manifests
-    try Jobs.described(spark, s"update $colName")(
-      spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
-        .map(t => runPartUpdate(t, specB, cfg))
-        .collect())
-    finally Snapshot.publish(store.root, updated = true)
+    Snapshot.publishAround(store.root, Change.Update(Set(colName)))(
+      Jobs.described(spark, s"update $colName")(
+        spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
+          .map(t => runPartUpdate(t, specB, cfg))
+          .collect()))
   }
 
   /** Distributed bulk update: col[id] = value for every (_row_id, value)
@@ -228,7 +227,8 @@ object Mutate {
     // in memory, not its whole shuffle partition as boxed tuples (the old
     // it.toArray + groupBy OOMed at exactly the 10^9-row scale this MERGE
     // path exists for)
-    try Jobs.described(spark, s"update $colName")(pairs
+    Snapshot.publishAround(store.root, Change.Update(Set(colName)))(
+      Jobs.described(spark, s"update $colName")(pairs
       .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(tasks))
       .mapPartitions { it =>
         val rows = it.buffered
@@ -248,8 +248,7 @@ object Mutate {
               specB, cfg)
           }
         }
-      }.collect())
-    finally Snapshot.publish(store.root, updated = true)
+      }.collect()))
   }
 
   private def runPartUpdate(t: PartUpdate, spec: TableSpec,
@@ -440,7 +439,7 @@ object Mutate {
       spark.sparkContext.parallelize(tasks, tasks.size)
         .map(t => compactPartition(t, spec, cfg))
         .collect())
-    finally Snapshot.publish(store.root, updated = false)
+    finally Snapshot.publish(store.root, Change.Reshape)
   }
 
   /** Crash-safe compaction order: (1) write each column's chunks into a NEW
@@ -527,8 +526,9 @@ object Mutate {
     val tmpRoot = s"${store.root}/.compact-${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = ColumnStore.create(tmpRoot, freshSpec)
     tmp.append(spark, ordered, AsIs, lineage = s"compact:${snap.segments.size}segs", cfg)
-    require(tmp.nrows == snap.nrows,
-      s"compaction row count mismatch: ${tmp.nrows} != ${snap.nrows}")
+    val written = tmp.snapshot.nrows
+    require(written == snap.nrows,
+      s"compaction row count mismatch: $written != ${snap.nrows}")
     val segDir = s"${store.root}/${Format.SegmentsDir}"
     val trash = s"${store.root}/.trash-${java.util.UUID.randomUUID().toString.take(8)}"
     // the store version lives outside segments/, so the swap keeps it
@@ -537,7 +537,7 @@ object Mutate {
       FsIO.rename(s"$tmpRoot/${Format.SegmentsDir}", segDir)
       FsIO.writeAtomic(s"${store.root}/${Format.SchemaFile}",
         BinCodec.writeTableSpec(freshSpec))
-    } finally Snapshot.publish(store.root, updated = false)
+    } finally Snapshot.publish(store.root, Change.Reshape)
     FsIO.delete(trash, recursive = true)
     tmp.dropStore()
   }

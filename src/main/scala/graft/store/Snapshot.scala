@@ -16,8 +16,8 @@ final class Snapshot private (
     val version: Long,
     /** Store id, fixed at create and carried by every version entry. */
     val id: String,
-    /** Newest version that changed a stored value (an update); 0 if none. */
-    val updatedAt: Long,
+    /** What the newest version records about the changes before it. */
+    val entry: VersionEntry,
     val spec: TableSpec,
     val segments: IndexedSeq[Long],
     val commits: Map[Long, SegmentCommit],
@@ -36,6 +36,9 @@ final class Snapshot private (
     * array index.
     */
   def partManifest(seg: Long, part: Int): PartManifest = partManifests(seg)(part)
+
+  /** Newest version that changed `col`'s stored values; 0 if none did. */
+  def updatedAt(col: String): Long = entry.updatedAt.getOrElse(col, 0L)
 
   /** Driver-side scan planning: partition pruning + per-unit chunk pruning
     * against the manifest zone map. Shared by the API read path, the DSv2
@@ -140,6 +143,19 @@ final class Snapshot private (
   }
 }
 
+/** What a published version changed. */
+private[graft] sealed trait Change
+private[graft] object Change {
+  /** New segments only: every other piece of metadata stands. */
+  case object Append extends Change
+  /** Metadata rewritten with every stored value kept (vacuum, segment
+    * compaction, column drop).
+    */
+  case object Reshape extends Change
+  /** The stored values of `cols` changed (update, column add, overwrite). */
+  final case class Update(cols: Set[String]) extends Change
+}
+
 object Snapshot {
 
   /** Newest version entry `<n>-<id>` as (n, id), or (0, ""); every name listed. */
@@ -150,9 +166,11 @@ object Snapshot {
   }
   private val Entry = """(\d+)-([0-9a-f]+)""".r
 
-  /** `updatedAt` of entry (v, id); None once a newer publish deleted it. */
-  private def updatedAt(root: String, v: Long, id: String): Option[Long] =
-    if (id.isEmpty) Some(0L)
+  private val Empty = VersionEntry(0L, Map.empty)
+
+  /** Payload of entry (v, id); None once a newer publish deleted it. */
+  private def entryOf(root: String, v: Long, id: String): Option[VersionEntry] =
+    if (id.isEmpty) Some(Empty)
     else {
       val file = s"$root/${Format.VersionDir}/$v-$id"
       try Some(BinCodec.readVersion(FsIO.readAll(file), file))
@@ -162,31 +180,43 @@ object Snapshot {
   /** Version 0 of a store just created: a fresh store id, an empty snapshot. */
   private[graft] def create(root: String, spec: TableSpec): Unit = {
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    FsIO.publishExclusive(s"$root/${Format.VersionDir}/0-$id", BinCodec.writeVersion(0L))
-    held.synchronized(held.put(root, new Snapshot(root, 0L, id, 0L, spec, IndexedSeq.empty,
+    FsIO.publishExclusive(s"$root/${Format.VersionDir}/0-$id", BinCodec.writeVersion(Empty))
+    held.synchronized(held.put(root, new Snapshot(root, 0L, id, Empty, spec, IndexedSeq.empty,
       Map.empty, Map.empty, Map.empty, Map.empty, IndexedSeq.empty, 0L)))
   }
 
   /** Publish the next version of `root` once a mutation's data is in place
-    * (`updated`: the mutation changed stored values) and return it. A lost
-    * race re-reads the winner and retries the next number; a win deletes
-    * the older entries.
+    * and return it. A lost race re-reads the winner and retries the next
+    * number; a win deletes the older entries.
     */
   @scala.annotation.tailrec
-  private[graft] def publish(root: String, updated: Boolean): Long = {
+  private[graft] def publish(root: String, change: Change): Long = {
     val dir = s"$root/${Format.VersionDir}"
     val ((cur, id), names) = newest(root)
     require(id.nonEmpty, s"no store version in $dir")
     val h = held.synchronized(held.get(root))
     val n = cur + 1
-    (if (h != null && h.version == cur && h.id == id) Some(h.updatedAt)
-     else updatedAt(root, cur, id)) match {
-      case Some(u) if FsIO.publishExclusive(s"$dir/$n-$id",
-          BinCodec.writeVersion(if (updated) n else u)) =>
+    (if (h != null && h.version == cur && h.id == id) Some(h.entry)
+     else entryOf(root, cur, id)) match {
+      case Some(e) if FsIO.publishExclusive(s"$dir/$n-$id", BinCodec.writeVersion(change match {
+          case Change.Append => e
+          case Change.Reshape => e.copy(reshapedAt = n)
+          case Change.Update(cols) => VersionEntry(n, e.updatedAt ++ cols.map(_ -> n))
+        })) =>
         names.filter(_.endsWith(s"-$id")).foreach(e => FsIO.delete(s"$dir/$e"))
         n
-      case _ => publish(root, updated) // lost the race to n: read the winner
+      case _ => publish(root, change) // lost the race to n: read the winner
     }
+  }
+
+  /** Run a mutation whose job writes values in place (an update): publish
+    * `change` before it starts, so any snapshot that can hold part of its
+    * writes — loaded by another handle mid-job, or after a crash — records
+    * the change, and again once it ends or fails.
+    */
+  private[graft] def publishAround[T](root: String, change: Change)(job: => T): T = {
+    publish(root, change)
+    try job finally publish(root, change)
   }
 
   /** The newest snapshot this JVM read, per root; an evicted root is read again. */
@@ -196,16 +226,19 @@ object Snapshot {
   }
 
   /** The snapshot of `root`'s newest version: one listing while this JVM
-    * holds it, else a read of the whole store's metadata.
+    * holds it, else a read of the store's metadata — only the new segments'
+    * when every version since the held one was an append.
     */
   @scala.annotation.tailrec
   def of(root: String): Snapshot = {
     val ((v, id), _) = newest(root)
     val h = held.synchronized(held.get(root))
     if (h != null && h.version == v && h.id == id) h
-    else updatedAt(root, v, id) match {
-      case Some(u) =>
-        val snap = load(root, v, id, u)
+    else entryOf(root, v, id) match {
+      case Some(e) =>
+        val base = if (h != null && h.id == id && h.version < v &&
+          h.entry.reshapedAt == e.reshapedAt) Some(h) else None
+        val snap = load(root, v, id, e, base)
         held.synchronized(held.put(root, snap))
         snap
       case None => of(root) // a newer publish deleted v: list again
@@ -214,9 +247,17 @@ object Snapshot {
 
   private[graft] def forget(root: String): Unit = held.synchronized { held.remove(root); () }
 
-  private def load(root: String, version: Long, id: String, updatedAt: Long): Snapshot = {
-    val specFile = s"$root/${Format.SchemaFile}"
-    val spec = BinCodec.readTableSpec(FsIO.readAll(specFile), specFile)
+  /** Read version `version`'s metadata. `base`, an older snapshot with no
+    * reshape since, lends its spec and every segment it holds, so only the
+    * segments committed after it are read.
+    */
+  @scala.annotation.tailrec
+  private def load(root: String, version: Long, id: String, e: VersionEntry,
+      base: Option[Snapshot]): Snapshot = {
+    val spec = base.fold {
+      val specFile = s"$root/${Format.SchemaFile}"
+      BinCodec.readTableSpec(FsIO.readAll(specFile), specFile)
+    }(_.spec)
     // visible = published by a `.commit-<n>-<seg>` marker AND carrying its
     // commit record; segments sort by marker number (see commitSegment). A
     // commit record without a marker is a commit in flight: invisible.
@@ -227,17 +268,30 @@ object Snapshot {
       .groupBy(_._2).map { case (s, xs) => s -> xs.map(_._1).min }
     val commits = names.filter(_.startsWith("seg")).map(_.drop(3).toLong)
       .flatMap(s => markerOf.get(s).map(n => (n, s))).sorted
-      .flatMap { case (_, s) => readCommit(root, s).map(s -> _) }
+      .flatMap { case (_, s) =>
+        base.flatMap(_.commits.get(s)).orElse(readCommit(root, s)).map(s -> _) }
     val segments = commits.map(_._1).toIndexedSeq
-    val manifests = segments.map(s => s -> loadPartManifests(root, s)).toMap
-    val raw = manifests.values.flatten.flatMap(_.chunks).groupMapReduce(_.column)(_.rawBytes)(_ + _)
-    val parts = commits.flatMap { case (seg, c) =>
-      c.partRows.zipWithIndex.map { case (rows, part) => (seg, part, rows) } }
-    val starts = parts.scanLeft(0L)(_ + _._3)
-    new Snapshot(root, version, id, updatedAt, spec, segments, commits.toMap, manifests,
-      manifests.map { case (s, ms) => s -> rollUp(ms) }, raw,
-      parts.zip(starts).map { case ((seg, part, rows), off) => (seg, part, off, rows) }
-        .toIndexedSeq, starts.last)
+    val visible = commits.toMap
+    // only a reshape removes a segment; seeing one gone, read everything
+    if (base.exists(_.segments.exists(!visible.contains(_)))) load(root, version, id, e, None)
+    else {
+      val added = segments.filterNot(s => base.exists(_.commits.contains(s)))
+      val newManifests = added.map(s => s -> loadPartManifests(root, s)).toMap
+      val manifests = base.fold(Map.empty[Long, IndexedSeq[PartManifest]])(_.partManifests) ++
+        newManifests
+      val raw = newManifests.values.flatten.flatMap(_.chunks)
+        .foldLeft(base.fold(Map.empty[String, Long])(_.colRawBytes)) { (m, c) =>
+          m.updated(c.column, m.getOrElse(c.column, 0L) + c.rawBytes) }
+      val parts = commits.flatMap { case (seg, c) =>
+        c.partRows.zipWithIndex.map { case (rows, part) => (seg, part, rows) } }
+      val starts = parts.scanLeft(0L)(_ + _._3)
+      new Snapshot(root, version, id, e, spec, segments, visible, manifests,
+        base.fold(Map.empty[Long, Map[Int, Map[String, (Int, Long, Long)]]])(_.partColStats) ++
+          newManifests.map { case (s, ms) => s -> rollUp(ms) },
+        raw,
+        parts.zip(starts).map { case ((seg, part, rows), off) => (seg, part, off, rows) }
+          .toIndexedSeq, starts.last)
+    }
   }
 
   /** A segment's commit record; None when it is missing (a crash between

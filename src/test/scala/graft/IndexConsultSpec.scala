@@ -451,8 +451,9 @@ class IndexConsultSpec extends AnyFunSuite {
       c("v").createIndex()
       c.store.append(spark, df(3000, 3250))
       c.store.append(spark, df(3250, 3300))
-      newChunks = c.store.segments.takeRight(2)
-        .map(s => c.store.partManifests(s).map(_.chunks.size.toLong).sum).sum
+      val snap = c.store.snapshot
+      newChunks = snap.segments.takeRight(2)
+        .map(s => snap.partManifests(s).map(_.chunks.size.toLong).sum).sum
       // the two appends refresh as one delta of 300 rows
       val before = graft.store.Decode.chunksRead.get()
       Index.refresh(spark, c.store, "v")

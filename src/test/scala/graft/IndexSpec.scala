@@ -548,4 +548,48 @@ class IndexSpec extends AnyFunSuite {
     assert(RowIds.collectSorted(c("ind") === -6L).toSeq == Seq(6L))
     c.dropStore()
   }
+
+  test("a snapshot loaded while an update's job runs never routes through an older index") {
+    import graft.store.{BinCodec, Change, Format, FsIO, Snapshot}
+    val schema = StructType(Seq(StructField("ind", LongType, nullable = false)))
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-inflight"), spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 200L).map(Row(_)), 2), schema))
+    c("ind").createIndex()
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    val m0 = c.store.snapshot.partManifest(0L, 0)
+    // what an update's job leaves before it ends, or after a crash: one
+    // partition's next manifest, published by no version of its own
+    Snapshot.publishAround(c.root, Change.Update(Set("ind"))) {
+      FsIO.writeAtomic(s"${Format.segDir(c.root, 0L)}/${Format.partManifestFile(0, 1)}",
+        BinCodec.writePartManifest(m0.copy(updateVersion = 1)))
+      Snapshot.forget(c.root) // a reader that never held the store
+      val snap = c.store.snapshot
+      assert(snap.partManifest(0L, 0).updateVersion == 1)
+      assert(!Index.routableFor(snap, "ind"), "in-flight update routed through the older index")
+    }
+    assert(!Index.routableFor(c.store.snapshot, "ind"))
+    Index.refresh(spark, c.store, "ind")
+    assert(Index.routableFor(c.store.snapshot, "ind"))
+    c.dropStore()
+  }
+
+  test("an update of one column keeps the other columns' indexes routable, unrebuilt") {
+    val schema = StructType(Seq(StructField("a", LongType, nullable = false),
+      StructField("b", LongType, nullable = false)))
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-percol-fresh"), spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 200L).map(i => Row(i, -i)), 2), schema))
+    c("a").createIndex()
+    c("b").createIndex()
+    val builtB = Index.readMeta(c.store, "b")
+    c("a").update(Seq(5L), Seq(-5L)) // the facade refreshes every index
+    assert(Index.readMeta(c.store, "b") == builtB, "index on b rebuilt after an update of a")
+    assert(Index.routableFor(c.store.snapshot, "b"))
+    assert(Index.routableFor(c.store.snapshot, "a"))
+    assert(RowIds.collectSorted(c("a") === -5L).toSeq == Seq(5L))
+    assert(RowIds.collectSorted(c("b") === -5L).toSeq == Seq(5L))
+    graft.store.Mutate.update(spark, c.store, "b", Array(7L), Array(70L: Any))
+    assert(!Index.routableFor(c.store.snapshot, "b"))
+    assert(Index.routableFor(c.store.snapshot, "a"))
+    c.dropStore()
+  }
 }

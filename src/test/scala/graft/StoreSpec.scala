@@ -113,7 +113,7 @@ class StoreSpec extends AnyFunSuite {
     val (st, data) = mkStore(400)
     val more = refData(100, seed = 877L)
     st.append(spark, refDf(more, 2), AsIs)
-    assert(st.nrows == 500)
+    assert(st.snapshot.nrows == 500)
     val out = st.read(spark, Seq("rand")).collect().sortBy(_.getLong(0))
     assert(out.length == 500)
     // appended rows get ids after existing (rowstart chaining)
@@ -215,7 +215,7 @@ class StoreSpec extends AnyFunSuite {
     // epochs reset: a follow-up append must carry ALL columns
     val full = st.read(spark).drop("_row_id")
     c.append(full)
-    assert(st.nrows == 800)
+    assert(st.snapshot.nrows == 800)
     st.dropStore()
   }
 
@@ -224,7 +224,10 @@ class StoreSpec extends AnyFunSuite {
     Mutate.update(spark, st, "rand", Array(3L, 77L), Array(1.5f, 2.5f))
     Mutate.vacuum(spark, st)
     val bytes1 = Mutate.storageBytes(st)
-    def updateVersions = st.segments.flatMap(st.partManifests).map(_.updateVersion.toLong).sum
+    def updateVersions = {
+      val snap = st.snapshot
+      snap.segments.flatMap(snap.partManifests).map(_.updateVersion.toLong).sum
+    }
     val stamp1 = updateVersions
     val version1 = st.snapshot.version
     Mutate.vacuum(spark, st) // nothing left to reclaim -> must not rewrite
@@ -274,7 +277,7 @@ class StoreSpec extends AnyFunSuite {
     val (st, _) = mkStore(400)
     val more = refData(200, seed = 55L)
     st.append(spark, refDf(more, 4), AsIs, lineage = "test:more")
-    assert(st.nrows == 600)
+    assert(st.snapshot.nrows == 600)
     // simulate executor loss after partial write: drop the commit record and
     // one partition's manifest + data of segment 1
     val segDir = Format.segDir(st.root, 1L)
@@ -284,13 +287,13 @@ class StoreSpec extends AnyFunSuite {
     FsIO.delete(s"$segDir/p2.rand.bin")
     FsIO.delete(s"$segDir/p2.scol.bin")
     // the next published version shows the loss to every handle
-    Snapshot.publish(st.root, updated = false)
-    assert(st.nrows == 400) // uncommitted segment invisible
+    Snapshot.publish(st.root, Change.Reshape)
+    assert(st.snapshot.nrows == 400) // uncommitted segment invisible
     // re-run the same append: completed partitions are skipped via their
     // manifest checkpoints, missing one is re-encoded, then commit lands
     st.append(spark, refDf(more, 4), AsIs, lineage = "test:more")
     assert(st.segments == Seq(0L, 1L), s"segments: ${st.segments}")
-    assert(st.nrows == 600)
+    assert(st.snapshot.nrows == 600)
     val out = st.read(spark, Seq("rand")).collect().sortBy(_.getLong(0))
     assert(out.drop(400).map(_.getFloat(1)).toSeq == more.map(_._2))
     st.verify()
@@ -317,7 +320,7 @@ class StoreSpec extends AnyFunSuite {
     // racing threads) — only the segment SET is fixed
     assert(st.segments.sorted == Seq(0L, 1L, 2L), s"segments: ${st.segments}")
     assert(st.segments.head == 0L, "the pre-existing segment stays first")
-    assert(st.nrows == 100 + 80 + 60)
+    assert(st.snapshot.nrows == 100 + 80 + 60)
     st.verify()
     // every value present exactly once: no partition interleaved into the
     // other writer's segment
@@ -330,13 +333,13 @@ class StoreSpec extends AnyFunSuite {
   test("a handle opened before another handle's mutations reads every one of them") {
     val (a, data) = mkStore(400, chunkRows = 50)
     val b = ColumnStore.open(a.root) // opened (and read) before A mutates
-    assert(b.nrows == 400)
+    assert(b.snapshot.nrows == 400)
     def rands(st: ColumnStore): Seq[Float] =
       st.read(spark, Seq("rand")).collect().sortBy(_.getLong(0)).map(_.getFloat(1)).toSeq
     var expect = data.map(_._2)
     def check(what: String): Unit = {
-      assert(b.nrows == expect.size, s"$what: row count")
-      assert(b.spec == a.spec, s"$what: spec")
+      assert(b.snapshot.nrows == expect.size, s"$what: row count")
+      assert(b.snapshot.spec == a.snapshot.spec, s"$what: spec")
       assert(rands(b) == expect, s"$what: values")
     }
     val more = refData(100, seed = 5L)
@@ -363,7 +366,7 @@ class StoreSpec extends AnyFunSuite {
     assert(b.read(spark, Seq("extra")).collect().forall(_.getLong(1) == 3L))
     a.dropColumn("extra")
     check("dropColumn")
-    assert(!b.spec.colNames.contains("extra"))
+    assert(!b.snapshot.spec.colNames.contains("extra"))
     a.dropStore()
   }
 
@@ -385,7 +388,7 @@ class StoreSpec extends AnyFunSuite {
     stA.append(spark, refDf(a, 2), AsIs, lineage = "writer-a")
     // committed order: seg 1 committed AFTER seg 2 → sorts after it
     assert(st.segments == Seq(0L, 2L, 1L), s"segments: ${st.segments}")
-    assert(st.nrows == 200)
+    assert(st.snapshot.nrows == 200)
     val rows = st.read(spark, Seq("rand")).collect().map(r => (r.getLong(0), r.getFloat(1)))
     // B's rows keep their ids; A's occupy the NEW tail [140, 200)
     val bAfter = rows.filter(r => b.exists(_._2 == r._2)).map(_._1).sorted.toSeq
@@ -402,18 +405,18 @@ class StoreSpec extends AnyFunSuite {
     val (st, _) = mkStore(100)
     val more = refData(50, seed = 99L)
     st.append(spark, refDf(more, 2), AsIs, lineage = "test:pub")
-    assert(st.nrows == 150)
+    assert(st.snapshot.nrows == 150)
     // simulate the crash window: drop seg 1's marker, keep _commit.bin
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
     val markers = FsIO.list(segsDir).filter(_.startsWith(".commit-"))
     // v3 markers carry the segment in the NAME (atomic single-name publish)
     val seg1Marker = markers.find(m => ColumnStore.markerParts(segsDir, m)._2 == 1L).get
     FsIO.delete(s"$segsDir/$seg1Marker")
-    Snapshot.publish(st.root, updated = false)
-    assert(st.nrows == 100, "unmarkered commit must be invisible")
+    Snapshot.publish(st.root, Change.Reshape)
+    assert(st.snapshot.nrows == 100, "unmarkered commit must be invisible")
     // the same-lineage retry resumes the segment and re-publishes it
     st.append(spark, refDf(more, 2), AsIs, lineage = "test:pub")
-    assert(st.segments.sorted == Seq(0L, 1L) && st.nrows == 150)
+    assert(st.segments.sorted == Seq(0L, 1L) && st.snapshot.nrows == 150)
     val rands = st.read(spark, Seq("rand")).collect().map(_.getFloat(1)).toSeq
     assert(rands.sorted == (refData(100).map(_._2) ++ more.map(_._2)).sorted,
       "re-published segment must contain each row exactly once")
@@ -427,7 +430,7 @@ class StoreSpec extends AnyFunSuite {
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
     val w = new graft.codec.Bytes.Writer(); w.writeVar(0L)
     FsIO.writeAtomic(s"$segsDir/.commit-7", w.result())
-    Snapshot.publish(st.root, updated = false)
+    Snapshot.publish(st.root, Change.Append)
     assertUnsupported(s"$segsDir/.commit-7")(st.segments)
     st.dropStore()
   }
@@ -437,7 +440,7 @@ class StoreSpec extends AnyFunSuite {
     Mutate.update(spark, st, "rand", Array(5L), Array(0.5f: Any))
     val expected = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq
     val seg = st.segments.head
-    val m = st.partManifests(seg).find(_.updateVersion > 0).get
+    val m = st.snapshot.partManifests(seg).find(_.updateVersion > 0).get
     // flip one byte inside a chunk every vacuum of this partition copies
     val cm = m.chunks.filter(_.column == "scol").maxBy(_.rowStartLocal)
     val at = cm.offset + cm.nbytes / 2
@@ -486,12 +489,12 @@ class StoreSpec extends AnyFunSuite {
         r
       }(org.apache.spark.sql.Encoders.row(schema))
     intercept[Exception] { st.append(spark, poison.toDF(), AsIs) }
-    assert(st.nrows == 100) // orphan invisible
+    assert(st.snapshot.nrows == 100) // orphan invisible
     // an unrelated append must NOT resume into the failed attempt's segment
     // (the old orphan-reuse heuristic would have absorbed its rows)
     val fresh = refData(30, seed = 88L)
     st.append(spark, refDf(fresh, 2), AsIs)
-    assert(st.nrows == 130, s"nrows ${st.nrows}: orphan rows leaked in")
+    assert(st.snapshot.nrows == 130, s"nrows ${st.snapshot.nrows}: orphan rows leaked in")
     val rands = st.read(spark, Seq("rand")).collect().map(_.getFloat(1)).toSeq
     assert(rands.sorted == (refData(100).map(_._2) ++ fresh.map(_._2)).sorted)
     st.verify()
@@ -544,6 +547,31 @@ class StoreSpec extends AnyFunSuite {
     }
     assert(loadOps(st.root) == loadOps(many.root), "warm DSv2 load cost grew with segments")
     st.dropStore(); many.dropStore()
+  }
+
+  test("a snapshot after an append reads only the new segment's metadata") {
+    def appendOps(segs: Int): (Long, ColumnStore) = {
+      val (st, _) = mkStore(n = 400, chunkRows = 25, parts = 4)
+      (1 until segs).foreach(i => st.append(spark, refDf(refData(400, seed = i), 4), AsIs))
+      st.snapshot
+      st.append(spark, refDf(refData(100, seed = 99L), 2), AsIs)
+      FsIO.metaOps.set(0L)
+      val snap = st.snapshot
+      val ops = FsIO.metaOps.get()
+      // the same metadata a reader that never held the store loads
+      Snapshot.forget(st.root)
+      val full = st.snapshot
+      assert(snap.version == full.version && snap.spec == full.spec)
+      assert(snap.segments == full.segments && snap.commits == full.commits)
+      assert(snap.partManifests == full.partManifests && snap.partColStats == full.partColStats)
+      assert(snap.colRawBytes == full.colRawBytes && snap.partOffsets == full.partOffsets)
+      assert(snap.nrows == full.nrows && full.nrows == 400L * segs + 100)
+      (ops, st)
+    }
+    val (one, a) = appendOps(1)
+    val (many, b) = appendOps(16)
+    assert(many == one, s"load after an append: $one metadata ops at 2 segments, $many at 17")
+    a.dropStore(); b.dropStore()
   }
 
   test("pruned SelIds read after scatter update sees new values (cache invalidation)") {
@@ -602,7 +630,7 @@ class StoreSpec extends AnyFunSuite {
     w.writeByte(0); w.writeVar(0L)
     FsIO.writeAtomic(s"$root/${Format.SchemaFile}", w.result())
     Snapshot.forget(root) // opened by a process that never read the store
-    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).spec)
+    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).snapshot.spec)
     FsIO.delete(root, recursive = true)
   }
 
@@ -611,13 +639,13 @@ class StoreSpec extends AnyFunSuite {
     val st = ColumnStore.create(root, ColumnStore.specFromSchema(schema))
     st.append(spark, refDf(refData(50)), AsIs)
     // the previous layout: schema v2 and no store version entries
-    val b = BinCodec.writeTableSpec(st.spec)
+    val b = BinCodec.writeTableSpec(st.snapshot.spec)
     val w = new graft.codec.Bytes.Writer()
     w.writeVar(2L)
     w.writeBytes(java.util.Arrays.copyOfRange(b, 1, b.length)) // FormatVersion is one varint byte
     FsIO.writeAtomic(s"$root/${Format.SchemaFile}", w.result())
     FsIO.delete(s"$root/${Format.VersionDir}", recursive = true)
-    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).nrows)
+    assertUnsupported(s"$root/${Format.SchemaFile}")(ColumnStore.open(root).snapshot.nrows)
     FsIO.delete(root, recursive = true)
   }
 
