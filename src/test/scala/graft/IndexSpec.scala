@@ -570,6 +570,16 @@ class IndexSpec extends AnyFunSuite {
     assert(!Index.routableFor(c.store.snapshot, "ind"))
     Index.refresh(spark, c.store, "ind")
     assert(Index.routableFor(c.store.snapshot, "ind"))
+    // both update paths run their job inside that bracket: one version
+    // before it, one after
+    val v0 = c.store.snapshot.version
+    graft.store.Mutate.update(spark, c.store, "ind", Array(3L), Array(-3L: Any))
+    assert(c.store.snapshot.version == v0 + 2)
+    graft.store.Mutate.updateDf(spark, c.store, "ind", spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(4L, -4L)), 1), StructType(Seq(
+        StructField("_row_id", LongType, nullable = false),
+        StructField("value", LongType, nullable = false)))))
+    assert(c.store.snapshot.version == v0 + 4)
     c.dropStore()
   }
 
