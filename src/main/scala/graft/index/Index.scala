@@ -408,9 +408,11 @@ object Index {
     * PERIOD from DE-LISTING (like table-format snapshot expiry): a reader
     * that loaded a previous meta may still be mid-read on a just-delisted
     * dir, and the dir's own age says nothing about that — so the first
-    * sweep that finds a dir unreferenced writes a `_gone` tombstone
-    * (starting the clock), and only a LATER sweep deletes it once the
-    * tombstone outlives the grace window.
+    * sweep that finds a dir unreferenced writes a tombstone (starting the
+    * clock), and only a LATER sweep deletes it once the tombstone outlives
+    * the grace window. A tombstone is an empty file `_gone-<millis>-<dir>`
+    * beside the dirs, so the sweep's one listing gives every tombstone's
+    * age: its metadata ops do not grow with the dirs waiting out the grace.
     *
     * live = dirs referenced by ANY meta file still present — NOT just the
     * caller's commit: in a same-epoch CAS tie both writers can transiently
@@ -424,34 +426,38 @@ object Index {
     val grace = sys.props.get("graft.index.gc.graceMs").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
     val now = System.currentTimeMillis()
-    val live: Set[String] = listMetas(d).flatMap { case (_, name) =>
+    val names = FsIO.list(d)
+    val live: Set[String] = names.collect { case n @ MetaName(_, _) => n }.flatMap { name =>
       try { val m = loadMeta(s"$d/$name"); m.base +: m.gens.map(_._1) }
       catch { case _: Exception => Nil }
     }.toSet
-    FsIO.list(d)
-      .filter(f => f.startsWith("_gen-") || f.startsWith("_base-"))
-      .foreach { f =>
-        val tomb = s"$d/$f/_gone"
-        try {
-          if (live(f)) {
-            // an IN-FLIGHT dir can be tombstoned by a concurrent sweep
-            // before its writer commits; once committed (live) the stale
-            // tombstone must go, or a LATER delisting would delete the dir
-            // instantly instead of after a fresh grace window
-            if (FsIO.exists(tomb)) FsIO.delete(tomb)
-          } else if (!FsIO.exists(tomb)) {
-            // tombstone now, delete on a LATER sweep once it outlives the
-            // grace — never in the same pass: a dir without a meta entry
-            // may belong to a writer that simply has not committed yet
-            val w = new Bytes.Writer()
-            w.writeVar(now)
-            FsIO.writeAtomic(tomb, w.result())
-          } else if (now - new Bytes.Reader(FsIO.readAll(tomb)).readVar() >= grace) {
-            FsIO.delete(s"$d/$f", recursive = true)
-          }
-        } catch { case _: Exception => () } // GC is best-effort, never fatal
-      }
+    val tombs = names.collect { case n @ Tombstone(at, of) => of -> (at.toLong, n) }.toMap
+    def sweep(body: => Unit): Unit =
+      try body catch { case _: Exception => () } // GC is best-effort, never fatal
+    val dirs = names.filter(f => f.startsWith("_gen-") || f.startsWith("_base-")).toSet
+    dirs.foreach { f =>
+      sweep(tombs.get(f) match {
+        // an IN-FLIGHT dir can be tombstoned by a concurrent sweep before
+        // its writer commits; once committed (live) the stale tombstone
+        // must go, or a LATER delisting would delete the dir instantly
+        // instead of after a fresh grace window
+        case Some((_, t)) if live(f) => FsIO.delete(s"$d/$t")
+        case None if !live(f) =>
+          // tombstone now, delete on a LATER sweep once it outlives the
+          // grace — never in the same pass: a dir without a meta entry
+          // may belong to a writer that simply has not committed yet
+          FsIO.writeAtomic(s"$d/_gone-$now-$f", Array.emptyByteArray)
+        case Some((at, t)) if now - at >= grace =>
+          FsIO.delete(s"$d/$f", recursive = true)
+          FsIO.delete(s"$d/$t")
+        case _ => ()
+      })
+    }
+    // a tombstone whose dir is gone (a sweep stopped between the two deletes)
+    tombs.foreach { case (f, (_, t)) => if (!dirs(f)) sweep(FsIO.delete(s"$d/$t")) }
   }
+
+  private val Tombstone = """_gone-(\d+)-(.+)""".r
 
   private def requireIndex(store: ColumnStore, col: String): Unit =
     require(exists(store, col),

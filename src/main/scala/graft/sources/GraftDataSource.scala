@@ -874,7 +874,7 @@ object GraftScan {
   }
 
   /** Canonical 64-bit probe hashes per column for equality/IN filters —
-    * the executor-side membership-filter test (Decode.refineUnit) checks
+    * the membership-filter test (Decode.refineUnit, at planning) checks
     * them against each chunk's split-block bloom. One entry per CONJUNCT
     * (a chunk must pass every entry). Hash domains match MemberFilter's
     * encode-side hashing exactly; a probe value that cannot canonicalize
@@ -919,6 +919,25 @@ object GraftScan {
     }
   }
 
+  /** Filter blobs by content identity: store id, the last reshape (which
+    * may reuse file names), the last update of the chunk's column (an
+    * overwrite rewrites the same names), file, offset, length and chunk CRC.
+    * Bounded by bytes.
+    */
+  private val filterCache = new PlanCache(8L << 20)
+
+  /** `units` refined against `probes` on the driver (see
+    * Decode.refineUnit), each filter blob read through [[filterCache]];
+    * units with no surviving row drop.
+    */
+  private[sources] def refine(snap: Snapshot, units: Seq[DecodeUnit],
+      probes: Seq[(String, Array[Long])]): Seq[DecodeUnit] =
+    if (probes.isEmpty) units
+    else units.flatMap(u => Decode.refineUnit(u, probes, cm => cachedPlan[Array[Byte]](
+      s"mf|${u.root}|${snap.id}|${snap.entry.reshapedAt}|${snap.updatedAt(cm.column)}|" +
+        s"${u.segment}|${cm.file}|${cm.filterOffset}|${cm.filterBytes}|${cm.crc}",
+      _.length.toLong, filterCache)(Decode.readFilter(u)(cm))))
+
   /** Bounded LRU cache of index-consult results (row-range sets / top-k id
     * selections). One logical query triggers SEVERAL plan materializations
     * (explain, AQE initial + final, a derived Dataset re-running pushdown),
@@ -959,13 +978,13 @@ object GraftScan {
 
   private val planCache = new PlanCache(PlanCacheWeight)
 
-  private[sources] def cachedPlan[T <: AnyRef](key: String, weight: T => Long)(
-      compute: => T): T =
-    planCache.get(key) match {
+  private[sources] def cachedPlan[T <: AnyRef](key: String, weight: T => Long,
+      cache: PlanCache = planCache)(compute: => T): T =
+    cache.get(key) match {
       case Some(v) => v.asInstanceOf[T]
       case None =>
         val v = compute
-        planCache.put(key, v, weight(v))
+        cache.put(key, v, weight(v))
         v
     }
 
@@ -1202,16 +1221,20 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         if (p.desc) SortDirection.DESCENDING else SortDirection.ASCENDING)).toArray
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    orderedPlan.foreach(p => return Array(p: InputPartition))
+  /** The units this scan reads. Planned once unless runtime filters
+    * arrive: a driver answer that falls back leaves the same plan to the
+    * distributed scan.
+    */
+  private def plannedUnits(): Seq[DecodeUnit] =
+    if (runtimeFilters.isEmpty) staticUnits else planUnitsNow()
+
+  @transient private lazy val staticUnits = planUnitsNow()
+
+  private def planUnitsNow(): Seq[DecodeUnit] = {
     val session = org.apache.spark.sql.SparkSession.active
-    topNSelection(session) match {
-      case Some(sel) =>
-        val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
-        val (units, _) = snap.planUnits(wanted, sel, emptyMeansAll = false)
-        return units.map(u => GraftInputPartition(u, snap.spec,
-          required.fieldNames.toSeq): InputPartition).toArray
-      case None => ()
+    val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
+    topNSelection(session).foreach { sel =>
+      return snap.planUnits(wanted, sel, emptyMeansAll = false)._1
     }
     // runtime (join-derived) filters extend both the zone-map selection and
     // the index route; a dropped/unusable runtime filter only loses pruning
@@ -1232,25 +1255,34 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // the limit first, then skip the offset
     val sel1 = if (limit >= 0) GraftScan.clipSelection(sel0, limit, snap.nrows) else sel0
     val sel = if (offset > 0) GraftScan.skipSelection(sel1, offset, snap.nrows) else sel1
-    val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
-    // equality/IN probe hashes for the executor-side membership-filter
-    // test: tasks skip chunks whose bloom excludes every probe — an
-    // unindexed point-lookup MISS then decodes zero chunks
-    val probes = GraftScan.filterProbes(snap.spec, pushed ++ runtimeFilters)
     // emptyMeansAll=false: a fully-pruned projection (count(*), or bare
     // _row_id) decodes NO column chunks — units carry row counts only
     val (units, _) = snap.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, snap.spec,
-      required.fieldNames.toSeq, probes): InputPartition).toArray
+    // equality/IN probes against the chunks' membership filters: an
+    // unindexed point lookup plans only the chunks that can hold its key,
+    // and a MISS plans none
+    GraftScan.refine(snap, units, GraftScan.filterProbes(snap.spec, pushed ++ runtimeFilters))
   }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    orderedPlan.foreach(p => return Array(p: InputPartition))
+    plannedUnits().map(u =>
+      GraftInputPartition(u, snap.spec, required.fieldNames.toSeq): InputPartition).toArray
+  }
+
+  /** What a read answered on the driver decodes: this scan's snapshot and
+    * planned units. None for an ordered scan, whose rows come in value
+    * order.
+    */
+  private[sources] def unitsForDriver: Option[(Snapshot, Seq[DecodeUnit])] =
+    if (orderedPlan.isDefined) None else Some((snap, plannedUnits()))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required)
 }
 
 final case class GraftInputPartition(unit: DecodeUnit, spec: TableSpec,
-    outFields: Seq[String],
-    probes: Seq[(String, Array[Long])] = Nil) extends InputPartition
+    outFields: Seq[String]) extends InputPartition
 
 class GraftReaderFactory(required: StructType) extends PartitionReaderFactory {
   // only ordered partitions read row-wise (value-order scatter-back); every
@@ -1268,16 +1300,15 @@ class GraftReaderFactory(required: StructType) extends PartitionReaderFactory {
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private val it = Decode.refineUnit(p.unit, p.probes)
-        .map(u => new Decode.ColumnarUnitReader(u, p.spec, p.outFields))
+      private val it = new Decode.ColumnarUnitReader(p.unit, p.spec, p.outFields)
       private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
       override def next(): Boolean = {
-        if (!it.exists(_.hasNext)) return false
-        current = it.get.next()
+        if (!it.hasNext) return false
+        current = it.next()
         true
       }
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
-      override def close(): Unit = it.foreach(_.close())
+      override def close(): Unit = it.close()
     }
   }
 }

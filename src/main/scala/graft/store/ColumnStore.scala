@@ -3,6 +3,7 @@ package graft.store
 import graft.codec._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.TaskContext
@@ -588,7 +589,10 @@ class ColumnStore(val root: String) extends Serializable {
     * `_pos` for id-list gathers). Chunk pruning against the manifest
     * rowstart/nrows zone map happens here, on the driver, before any task
     * launches — the Spark analogue of the reference's chunk binary search.
-    * Each unit decodes through the columnar reader the DSv2 scan uses.
+    * A read within `Decode.driverBound` is decoded right here into a local
+    * frame (collecting it, or a projection or limit of it, runs no job);
+    * a larger one decodes each unit in a task. Both use the columnar reader
+    * the DSv2 scan uses.
     */
   def read(spark: SparkSession, columns: Seq[String] = Seq.empty,
       sel: Selection = SelAll, emptyMeansAll: Boolean = true): DataFrame = {
@@ -599,6 +603,13 @@ class ColumnStore(val root: String) extends Serializable {
     val schema = StructType(ids.map(StructField(_, LongType, nullable = false)) ++
       wanted.map(cn => StructField(cn, sparkType(s.col(cn).ptype), nullable = false)))
     val outFields = ids ++ wanted
+    if (Decode.fitsDriver(units, wanted)) {
+      val copy = InterpretedUnsafeProjection.createProjection(schema.fields.toSeq.zipWithIndex
+        .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+      val rows = Array.newBuilder[InternalRow]
+      Decode.onDriver(units, s, outFields)(r => rows += copy(r).copy())
+      return org.apache.spark.sql.graft.InternalRows.local(spark, rows.result().toSeq, schema)
+    }
     val rdd = spark.sparkContext
       .parallelize(units, math.max(1, units.size))
       .mapPartitions(_.flatMap { u =>

@@ -6,12 +6,13 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** Executor-side chunk decode for one (segment, partition) unit.
+/** Chunk decode for one (segment, partition) unit.
   * Mirrors the reference read path (pycolumns chunks.py:633-669: histogram
   * rows per chunk, decompress each touched chunk once, slice rows out) —
   * here each unit decodes its pruned chunk list sequentially. Every read
   * surface (DSv2 scan, `ColumnStore.read`, ordered scan, the driver-side
-  * index build) decodes through [[ColumnarUnitReader]].
+  * index build) decodes through [[ColumnarUnitReader]], in a task or, for
+  * a driver-sized read, on the driver ([[onDriver]]).
   */
 object Decode {
 
@@ -46,9 +47,11 @@ object Decode {
   private final class BlobReader(root: String, segment: Long) {
     private val dir = Format.segDir(root, segment)
     private val open = mutable.HashMap.empty[String, org.apache.hadoop.fs.FSDataInputStream]
+    var reads = 0
 
     def read(cm: ChunkMeta): Array[Byte] = {
       chunksRead.incrementAndGet()
+      reads += 1
       val in = open.getOrElseUpdate(cm.file,
         FsIO.fs(dir).open(new org.apache.hadoop.fs.Path(s"$dir/${cm.file}")))
       val buf = new Array[Byte](cm.nbytes.toInt)
@@ -66,12 +69,11 @@ object Decode {
   // ------------------------------------------- membership-filter pruning
 
   /** Refine a unit against equality/IN probe hashes (per-chunk
-    * membership filters) BEFORE any chunk decode. Executor-side by design:
-    * the filter blobs live next to their chunks (few KB each) and are
-    * never shipped through planning metadata, so at 10^5 partitions the
-    * driver plan stays O(chunks) while each task trades a chunk decode for
-    * a small ranged read. Returns None when every row of the unit is
-    * provably excluded (the task emits nothing and reads no chunk).
+    * membership filters) BEFORE any chunk decode. The scan runs it on the
+    * driver at planning, reading each few-KB filter blob through
+    * `filterOf` (a cache over [[readFilter]]), so a point read plans only
+    * the chunks that can hold its key. Returns None when every row of the
+    * unit is provably excluded (no task, no chunk read).
     *
     * Sound because pushed filters are top-level conjuncts and every probe
     * hash is canonical (see GraftScan.filterProbes): a chunk whose filter
@@ -81,15 +83,14 @@ object Decode {
     * filters survive conservatively; Spark re-applies every filter as
     * residual.
     */
-  def refineUnit(u: DecodeUnit,
-      probes: Seq[(String, Array[Long])]): Option[DecodeUnit] = {
+  def refineUnit(u: DecodeUnit, probes: Seq[(String, Array[Long])],
+      filterOf: ChunkMeta => Array[Byte]): Option[DecodeUnit] = {
     if (probes.isEmpty) return Some(u)
     u.sel match {
       case SelIds(_, _) => return Some(u) // id-gather paths keep their contract
       case SelRange(_, _, step) if step != 1L => return Some(u) // refined ranges are step 1
       case _ => ()
     }
-    val dir = Format.segDir(u.root, u.segment)
     val unitSpan = (u.globalOffset, u.globalOffset + u.partRows)
     var ranges: Seq[(Long, Long)] = u.sel match {
       case SelAll => Seq(unitSpan)
@@ -111,8 +112,7 @@ object Decode {
           val keep =
             if (cm.filterKind != 1 || cm.filterBytes <= 0) true
             else try {
-              val f = FsIO.readRange(s"$dir/${cm.file}", cm.filterOffset,
-                cm.filterBytes.toInt)
+              val f = filterOf(cm)
               // chunk survives iff EVERY conjunct finds some probe present
               probeSets.forall(MemberFilter.mightContainAny(f, _))
             } catch { case _: Exception => true } // unreadable -> conservative
@@ -139,6 +139,58 @@ object Decode {
     }
     Some(u.copy(colChunks = newCols, sel = newSel))
   }
+
+  /** `cm`'s membership-filter blob, read from `u`'s segment. */
+  def readFilter(u: DecodeUnit)(cm: ChunkMeta): Array[Byte] =
+    FsIO.readRange(s"${Format.segDir(u.root, u.segment)}/${cm.file}", cm.filterOffset,
+      cm.filterBytes.toInt)
+
+  // ------------------------------------------------------ driver-side read
+
+  /** Rows and raw bytes a read may decode on the driver: the index's
+    * driver constants. A thread-scoped value so tests can force the
+    * distributed path (a bound of 0 rows sends every non-empty read there).
+    */
+  private[graft] val driverBound = new scala.util.DynamicVariable[(Long, Long)](
+    (graft.index.Index.DriverRows.toLong, graft.index.Index.DriverBytes))
+
+  /** Rows `u`'s selection holds. */
+  def unitRows(u: DecodeUnit): Long = {
+    val (off, end) = (u.globalOffset, u.globalOffset + u.partRows)
+    u.sel match {
+      case SelAll => u.partRows
+      case SelIds(ids, _) => ids.length.toLong
+      case SelRange(start, stop, step) =>
+        val lo = math.max(start, off)
+        val first = start + (math.max(0L, lo - start) + step - 1) / step * step
+        val hi = math.min(stop, end)
+        if (first >= hi) 0L else (hi - 1 - first) / step + 1
+      case SelRanges(as, bs) =>
+        as.indices.iterator.map(i => math.max(0L, math.min(bs(i), end) - math.max(as(i), off))).sum
+    }
+  }
+
+  /** Do `units` fit the driver bound, decoding `columns`: rows selected,
+    * and raw bytes of those columns' chunks (a chunk decodes whole)?
+    */
+  def fitsDriver(units: Seq[DecodeUnit], columns: Seq[String]): Boolean = {
+    val (maxRows, maxBytes) = driverBound.value
+    units.iterator.map(unitRows).sum <= maxRows &&
+      units.iterator.flatMap(u => columns.iterator.flatMap(u.colChunks.getOrElse(_, Nil)))
+        .map(_.rawBytes).sum <= maxBytes
+  }
+
+  /** Decode `units` on the calling thread, through the same reader as the
+    * tasks (so checksummed reads stay checksummed), handing every selected
+    * row — as `outFields` — to `f`. The row object is reused: copy to keep
+    * it. Returns the chunks read.
+    */
+  def onDriver(units: Seq[DecodeUnit], spec: TableSpec, outFields: Seq[String])(
+      f: InternalRow => Unit): Int =
+    units.iterator.map { u =>
+      val r = new ColumnarUnitReader(u, spec, outFields)
+      try { r.rows.foreach(f); r.chunksDecoded } finally r.close()
+    }.sum
 
   /** Default/parsed fill value for columns added after this segment
     * (pycolumns backfill: 0 / '' / fill_value, column.py:312-344).
@@ -299,6 +351,9 @@ object Decode {
 
     /** The batches as rows. Each row object is reused: copy to keep one. */
     def rows: Iterator[InternalRow] = flatMap(_.rowIterator().asScala)
+
+    /** Chunks read so far. */
+    def chunksDecoded: Int = reader.reads
 
     private def fill(cur: ColCursor, vec: WritableColumnVector,
         from: Int, until: Int): Unit = {

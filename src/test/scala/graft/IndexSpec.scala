@@ -602,4 +602,55 @@ class IndexSpec extends AnyFunSuite {
     assert(Index.routableFor(c.store.snapshot, "a"))
     c.dropStore()
   }
+
+  test("an index sweep's metadata ops stay flat however many dirs wait out the grace") {
+    import graft.store.FsIO
+    val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
+    def df(from: Long, until: Long) = spark.createDataFrame(
+      spark.sparkContext.parallelize((from until until).map(Row(_)), 2), schema)
+    val prevGrace = sys.props.get("graft.index.gc.graceMs")
+    sys.props("graft.index.gc.graceMs") = (60L * 60 * 1000).toString
+    try {
+      // leftover `_gen-*` dirs, tombstoned by one sweep and then waiting out
+      // the grace; one refresh's metadata ops must not depend on their count
+      def refreshOps(leftovers: Int): Long = {
+        val c = Columns.fromDataFrame(spark, tmpDir("graft-gc-ops"), df(0L, 1000L))
+        c("v").createIndex()
+        val d = Index.dir(c.store, "v")
+        (0 until leftovers).foreach(i => FsIO.mkdirs(s"$d/_gen-leftover$i"))
+        Index.gcSweep(c.store, "v")
+        c.store.append(spark, df(1000L, 1010L))
+        FsIO.metaOps.set(0L)
+        Index.refresh(spark, c.store, "v")
+        val ops = FsIO.metaOps.get()
+        // the grace keeps every leftover; no tombstone outlives its dir
+        assert(FsIO.list(d).count(_.startsWith("_gen-leftover")) == leftovers)
+        assert(FsIO.list(d).count(_.startsWith("_gone-")) == leftovers)
+        c.dropStore()
+        ops
+      }
+      assert(refreshOps(5) == refreshOps(60))
+
+      // grace 0: the first sweep only tombstones an unreferenced dir (its
+      // writer may not have committed yet), the next deletes it; a live
+      // dir's stale tombstone goes and the dir stays
+      sys.props("graft.index.gc.graceMs") = "0"
+      val c = Columns.fromDataFrame(spark, tmpDir("graft-gc-grace"), df(0L, 100L))
+      c("v").createIndex()
+      val d = Index.dir(c.store, "v")
+      val base = Index.readMeta(c.store, "v").base
+      FsIO.mkdirs(s"$d/_gen-inflight")
+      FsIO.writeAtomic(s"$d/_gone-0-$base", Array.emptyByteArray)
+      Index.gcSweep(c.store, "v")
+      assert(FsIO.exists(s"$d/_gen-inflight") && FsIO.exists(s"$d/$base"))
+      assert(FsIO.list(d).filter(_.startsWith("_gone-")).forall(_.endsWith("-_gen-inflight")))
+      Index.gcSweep(c.store, "v")
+      assert(!FsIO.exists(s"$d/_gen-inflight") && FsIO.list(d).forall(!_.startsWith("_gone-")))
+      assert(RowIds.collectSorted(c("v") === 42L).toSeq == Seq(42L))
+      c.dropStore()
+    } finally prevGrace match {
+      case Some(g) => sys.props("graft.index.gc.graceMs") = g
+      case None => sys.props.remove("graft.index.gc.graceMs")
+    }
+  }
 }

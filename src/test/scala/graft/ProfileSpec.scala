@@ -16,9 +16,9 @@ class ProfileSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     SparkEntry.warm(spark, dir)
     val plans = tmpDir("graft-profile-plans")
-    // p4_point gathers one row id through ColumnStore.read; the DSv2 query
-    // plans a BatchScan
-    for ((q, scan) <- Seq("p4_point" -> "ColumnStore.scala", "dsv2_scan_pushdown" -> "BatchScan graft")) {
+    // p4_point gathers one row id through ColumnStore.read, decoded on the
+    // driver into a local relation; the DSv2 query plans a BatchScan
+    for ((q, scan) <- Seq("p4_point" -> "LocalTableScan", "dsv2_scan_pushdown" -> "BatchScan graft")) {
       val o = Profile.query(spark, dir, 4, q, reps = 1, plansDir = Some(plans))
       Seq("query", "reps", "wall_s", "wall_s_reps", "steal", "ext", "util", "jobs", "stages",
         "tasks", "meta_ops", "chunks_read", "chunks_filter_skipped", "job_trace")
