@@ -420,10 +420,11 @@ object SparkEntry {
     }),
     "dsv2_ordered_scan" -> ((s, dir) => {
       // ORDER BY indexed-col WITHOUT a limit: the ordered scan streams the
-      // table in index value order (one partition walking the index's
-      // row_id column, batched chunk gathers), reports its ordering, and
-      // the GraftExtensions stage-prep rule drops the Sort AND its range
-      // exchange — the table is never shuffled or sorted. Monotonicity is
+      // table in index value order (one task walking the index's row_id
+      // column, batched chunk gathers). GraftExtensions plans it as one
+      // GraftOrderedScan node reporting a single partition and the
+      // column's ordering, so Spark inserts no range exchange and drops the
+      // Sort — the table is never shuffled or sorted. Monotonicity is
       // asserted in-query (the oracle's hash compare is order-insensitive);
       // a stale index would fall back to a real Sort, which the plan
       // require would catch.

@@ -230,12 +230,12 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
   /** Rows in `orderCol` order (the reference's index IS its sorted read
     * order). The DataFrame ALWAYS carries the Sort node — correctness
     * never depends on the ordered scan engaging — and when it does engage
-    * (fresh delta-free index, nothing else pushed) the
-    * EliminateOrderedGraftSort rule removes the Sort and its exchange, so
-    * the table streams in index order with no shuffle. Every composition
-    * stays exact by construction: a `.limit(k)` becomes the TopN pushdown,
-    * a filter or a stale index keeps the (real) sort. `_row_id` rides
-    * along like `read`.
+    * (fresh delta-free index, nothing else pushed) the `OrderedReads`
+    * strategy of `GraftExtensions` plans it as one ordered node and
+    * Spark's own rules drop the Sort, so the table streams in index order
+    * with no shuffle. Every composition stays exact by construction: a
+    * `.limit(k)` becomes the TopN pushdown, a pushed filter or a stale
+    * index keeps the (real) sort. `_row_id` rides along like `read`.
     */
   def readOrdered(orderCol: String, columns: Seq[String] = Seq.empty,
       descending: Boolean = false): DataFrame = {
@@ -254,18 +254,21 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
     * SURVEY.md §3.2) — CHUNK-PRUNED: only chunks containing hits are
     * decoded (the reference's whole point, chunks.py:633-669). Adaptive:
     *
-    *  1. id count ≤ `idCollectLimit`: collect ids → `SelIds` read. Exact
-    *     pruning; a point query decodes one chunk, not the table.
+    *  1. id count ≤ 4M (`idCollectLimit`): collect ids → `SelIds` read.
+    *     Exact pruning; a point query decodes one chunk, not the table.
     *  2. larger: compact ids to coarse global row ranges on executors
-    *     (granule-aligned buckets, ≤ `maxRanges`), read `SelRanges`, then a
+    *     (8192-row buckets, ≤ 1M ranges), read `SelRanges`, then a
     *     left-semi join on the ids restores exactness — pruning stays a
     *     performance contract, the join is the correctness one.
-    *  3. degenerate (id set spans ~everything): full scan + semi-join, the
-    *     plan that was always correct; `broadcastIds` hints the join.
+    *  3. degenerate (id set spans ~everything): full scan + semi-join on
+    *     the broadcast ids, the plan that was always correct.
     */
-  def gather(idsDf: DataFrame, columns: Seq[String] = Seq.empty,
-      broadcastIds: Boolean = true, idCollectLimit: Int = 1 << 22,
-      rangeGranule: Long = 8192L, maxRanges: Int = 1 << 20): DataFrame = {
+  def gather(idsDf: DataFrame, columns: Seq[String] = Seq.empty): DataFrame =
+    gather(idsDf, columns, idCollectLimit = 1 << 22, rangeGranule = 8192L,
+      maxRanges = 1 << 20)
+
+  private[graft] def gather(idsDf: DataFrame, columns: Seq[String],
+      idCollectLimit: Int, rangeGranule: Long, maxRanges: Int): DataFrame = {
     Jobs.described(spark, s"gather ${if (columns.isEmpty) "*" else columns.mkString(",")}") {
       // normalize to long once (an int id frame would ClassCastException in
       // getLong below). One job decides the strategy: collect up to limit+1
@@ -299,9 +302,7 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
           .select((col("_row_id") / lit(g)).cast("long").as("b"))
           .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
         if (buckets.length > maxRanges) {
-          val base = store.read(spark, columns, SelAll)
-          val right = if (broadcastIds) broadcast(ids) else ids
-          base.join(right, Seq("_row_id"), "left_semi")
+          store.read(spark, columns, SelAll).join(broadcast(ids), Seq("_row_id"), "left_semi")
         } else {
           val rs = Ranges.fromBuckets(buckets.sorted, g)
           store.read(spark, columns, SelRanges(rs.map(_._1).toArray, rs.map(_._2).toArray))

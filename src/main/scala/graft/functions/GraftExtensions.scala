@@ -10,12 +10,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions ...
   *
   * registers the graft SQL functions session-wide (the in-session
-  * equivalent is GraftFunctions.register), the ordered-scan Sort
-  * elimination rule (see [[graft.sources.EliminateOrderedGraftSort]]:
-  * drops the global Sort + range exchange over an `option("ordered",col)`
-  * graft scan, which stock Spark cannot because a V2 scan never reports
-  * SinglePartition) AND the planner strategy that answers driver-sized
-  * reads with no Spark job ([[graft.sources.DriverReads]]).
+  * equivalent is GraftFunctions.register) and two planner strategies:
+  * [[graft.sources.DriverReads]] answers driver-sized reads with no Spark
+  * job, and [[graft.sources.OrderedReads]] plans an engaged
+  * `option("ordered", col)` scan as one node reporting `SinglePartition`
+  * and its `SortOrder`, so Spark's own rules drop a matching global Sort
+  * with no exchange (a V2 batch scan never reports `SinglePartition`).
+  * Without the extension an ordered read is a plain parallel scan under
+  * an exact Sort.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,7 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectQueryStagePrepRule(_ => graft.sources.EliminateOrderedGraftSort)
     ext.injectPlannerStrategy(_ => graft.sources.DriverReads)
+    ext.injectPlannerStrategy(_ => graft.sources.OrderedReads)
   }
 }

@@ -995,8 +995,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     topN: Option[(String, Boolean, Int)] = None, offset: Int = 0,
     orderedCol: Option[String] = None)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportOrdering {
+    with SupportsRuntimeFiltering {
 
   @transient private lazy val store = ColumnStore.open(root)
   // the one store version this scan plans over
@@ -1175,14 +1174,14 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       }
     }
 
-  /** Ordered-export mode (`option("ordered", col)`) — decided ONCE so the
-    * reported ordering and the planned partitions can never disagree.
+  /** Ordered-export mode (`option("ordered", col)`) — decided ONCE per
+    * scan; the [[OrderedReads]] strategy plans it as one ordered node.
     * Engages only for a plain scan (no filters/limit/offset/topN, which
     * have their own pushdowns) over a FRESH, delta-generation-free index;
-    * otherwise the scan stays parallel, reports no ordering, and any
-    * downstream Sort survives — the exact fallback.
+    * otherwise the scan stays parallel and any downstream Sort survives —
+    * the exact fallback.
     */
-  @transient private lazy val orderedPlan: Option[GraftOrderedPartition] =
+  @transient private[sources] lazy val orderedPlan: Option[GraftOrderedPartition] =
     orderedCol.flatMap { spec0 =>
       // option value: "col", "col asc", or "col desc" (case-insensitive)
       val parts = spec0.trim.split("\\s+")
@@ -1207,19 +1206,6 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         }
       }
     }
-
-  /** Ordered column + direction when ordered-export mode actually engaged
-    * (the EliminateOrderedGraftSort extension rule consults this).
-    */
-  def orderedSpecIfActive: Option[(String, Boolean)] =
-    orderedPlan.map(p => (p.col, p.desc))
-
-  override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    orderedPlan.map(p =>
-      Expressions.sort(Expressions.column(p.col),
-        if (p.desc) SortDirection.DESCENDING else SortDirection.ASCENDING)).toArray
-  }
 
   /** The units this scan reads. Planned once unless runtime filters
     * arrive: a driver answer that falls back leaves the same plan to the
@@ -1264,11 +1250,9 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     GraftScan.refine(snap, units, GraftScan.filterProbes(snap.spec, pushed ++ runtimeFilters))
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    orderedPlan.foreach(p => return Array(p: InputPartition))
+  override def planInputPartitions(): Array[InputPartition] =
     plannedUnits().map(u =>
       GraftInputPartition(u, snap.spec, required.fieldNames.toSeq): InputPartition).toArray
-  }
 
   /** What a read answered on the driver decodes: this scan's snapshot and
     * planned units. None for an ordered scan, whose rows come in value
@@ -1285,16 +1269,14 @@ final case class GraftInputPartition(unit: DecodeUnit, spec: TableSpec,
     outFields: Seq[String]) extends InputPartition
 
 class GraftReaderFactory(required: StructType) extends PartitionReaderFactory {
-  // only ordered partitions read row-wise (value-order scatter-back); every
-  // other scan is columnar, since Spark rejects scans that mix the two
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new OrderedPartitionReader(partition.asInstanceOf[GraftOrderedPartition])
+  // every graft partition reads columnar: decoded chunk arrays bulk-copied
+  // into column vectors (no per-row object, no boxing); Spark's
+  // ColumnarToRow is codegen'd. An empty projection (count(*)) reads as
+  // zero-column batches.
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  // vectorized path: decoded chunk arrays bulk-copied into column vectors
-  // (no per-row object, no boxing); Spark's ColumnarToRow is codegen'd. An
-  // empty projection (count(*)) reads as zero-column batches.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !partition.isInstanceOf[GraftOrderedPartition]
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft partitions read columnar only")
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {

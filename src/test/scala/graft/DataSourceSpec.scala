@@ -78,6 +78,18 @@ class DataSourceSpec extends AnyFunSuite {
   }
 
   test("ordered scan: index order, no Sort node; stale index falls back exactly") {
+    // Spark's own EnsureRequirements/RemoveRedundantSorts drop the Sort over
+    // the ordered node, so the shapes hold with adaptive execution on or off
+    Seq(true, false).foreach(aqe => withAqe(aqe)(orderedScanShapes(s"aqe=$aqe")))
+  }
+
+  private def withAqe[T](on: Boolean)(body: => T): T = {
+    val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+  }
+
+  private def orderedScanShapes(label: String): Unit = {
     // UNCLUSTERED indexed column (a permutation), so emitted order can only
     // come from the index — disk order would fail the monotonicity check
     val n = 2000
@@ -89,34 +101,56 @@ class DataSourceSpec extends AnyFunSuite {
         (0 until n).map(i => Row((i.toLong * 37) % n, s"s$i")), 4), schema)
     val c = Columns.fromDataFrame(spark, tmpDir("graft-ord"), df0, chunkRows = 64)
     c("v").createIndex()
-    val df = spark.read.format("graft").option("ordered", "v").load(c.root)
-      .orderBy("v")
+    def ordered(dir: String) = spark.read.format("graft").option("ordered", dir).load(c.root)
+    val df = ordered("v").orderBy("v")
     val got = df.collect()
-    // FINAL (post-AQE) plan: the stage-prep rule dropped Sort + Exchange
+    // FINAL plan: the ordered node satisfies the Sort, no Exchange inserted
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Sort ["), s"ordered scan still plans a Sort:\n$plan")
-    assert(!plan.contains("Exchange rangepartitioning"),
-      s"ordered scan still shuffles:\n$plan")
+    assert(plan.contains("GraftOrderedScan"), s"$label: ordered scan not planned:\n$plan")
+    assert(!plan.contains("Sort ["), s"$label: ordered scan still plans a Sort:\n$plan")
+    assert(!plan.contains("Exchange"), s"$label: ordered scan still shuffles:\n$plan")
     assert(got.length == n)
     assert(got.map(_.getLong(0)).toSeq == (0L until n.toLong),
-      "rows not in index value order")
+      s"$label: rows not in index value order")
     // (v, s) pairs intact → the batched scatter-back aligned every column
     assert(got.map(r => (r.getLong(0), r.getString(1))).toSet ==
       (0 until n).map(i => ((i.toLong * 37) % n, s"s$i")).toSet)
-    // DESC: reversed file/row-group walk, Sort+Exchange dropped too
-    val ddf = spark.read.format("graft").option("ordered", "v desc").load(c.root)
-      .orderBy(col("v").desc)
+    // DESC: reversed file/row-group walk, no Sort or Exchange either
+    val ddf = ordered("v desc").orderBy(col("v").desc)
     val dgot = ddf.collect()
     val dplan = ddf.queryExecution.executedPlan.toString
-    assert(!dplan.contains("Sort [") && !dplan.contains("Exchange rangepartitioning"),
-      s"desc ordered scan still sorts/shuffles:\n$dplan")
+    assert(!dplan.contains("Sort [") && !dplan.contains("Exchange"),
+      s"$label: desc ordered scan still sorts/shuffles:\n$dplan")
     assert(dgot.map(_.getLong(0)).toSeq == (0L until n.toLong).reverse,
-      "rows not in descending index order")
-    // ASC scan under a DESC sort must NOT lose its Sort (direction mismatch)
-    val mixed = spark.read.format("graft").option("ordered", "v").load(c.root)
-      .orderBy(col("v").desc)
+      s"$label: rows not in descending index order")
+    // ASC scan under a DESC sort must NOT lose its Sort (direction
+    // mismatch), but the one partition needs no range exchange
+    val mixed = ordered("v").orderBy(col("v").desc)
     assert(mixed.collect().map(_.getLong(0)).toSeq == (0L until n.toLong).reverse)
-
+    val mplan = mixed.queryExecution.executedPlan.toString
+    assert(mplan.contains("Sort ["), s"$label: direction mismatch lost its Sort:\n$mplan")
+    assert(!mplan.contains("Exchange rangepartitioning"),
+      s"$label: direction mismatch shuffles one partition:\n$mplan")
+    // select-then-orderBy (the dsv2_ordered_scan shape): Project, no Sort
+    val sel = ordered("v").select("v").orderBy("v")
+    assert(sel.collect().map(_.getLong(0)).toSeq == (0L until n.toLong))
+    val splan = sel.queryExecution.executedPlan.toString
+    assert(!splan.contains("Sort [") && !splan.contains("Exchange"),
+      s"$label: select-then-orderBy still sorts/shuffles:\n$splan")
+    // a non-pushable filter leaves the scan engaged: order holds, no Sort
+    val odd = udf((v: Long) => v % 2 == 1)
+    val udfDf = ordered("v").where(odd(col("v"))).orderBy("v")
+    assert(udfDf.collect().map(_.getLong(0)).toSeq == (1L until n.toLong by 2),
+      s"$label: UDF-filtered ordered scan lost the order")
+    val uplan = udfDf.queryExecution.executedPlan.toString
+    assert(!uplan.contains("Sort ["), s"$label: UDF filter kept a Sort:\n$uplan")
+    // a bare ordered read (no orderBy) streams in index order, never
+    // answered on the driver in disk order
+    val bare = ordered("v")
+    assert(bare.collect().map(_.getLong(0)).toSeq == (0L until n.toLong),
+      s"$label: bare ordered read not in index order")
+    val bplan = bare.queryExecution.executedPlan.toString
+    assert(!bplan.contains("GraftLocalScan"), s"$label: bare ordered read on driver:\n$bplan")
     // STALE index (append since build) → normal scan, Sort survives, exact
     c.store.append(spark, df0.limit(2), graft.store.AsIs, lineage = "ord:extra")
     val stale = spark.read.format("graft").option("ordered", "v").load(c.root)
@@ -150,10 +184,14 @@ class DataSourceSpec extends AnyFunSuite {
     val got = c.readOrdered("v").collect()
     assert(got.map(_.getLong(1)).toSeq == (0L until n.toLong), "not in index order")
     // the Sort node is carried ALWAYS (correctness never rides on the scan
-    // engaging); when the scan engages the extension rule removed it
-    val engagedPlan = c.readOrdered("v")
-    engagedPlan.collect()
-    assert(!engagedPlan.queryExecution.executedPlan.toString.contains("Sort ["))
+    // engaging); when the scan engages, Spark drops it over the ordered node
+    for (aqe <- Seq(true, false); desc <- Seq(false, true)) withAqe(aqe) {
+      val engaged = c.readOrdered("v", descending = desc)
+      engaged.collect()
+      val plan = engaged.queryExecution.executedPlan.toString
+      assert(!plan.contains("Sort [") && !plan.contains("Exchange"),
+        s"aqe=$aqe desc=$desc: readOrdered still sorts/shuffles:\n$plan")
+    }
     // compositions that DISENGAGE the ordered scan stay exact:
     // limit → TopN pushdown (10 smallest, not 10 in disk order)
     assert(c.readOrdered("v").limit(10).collect().map(_.getLong(1)).toSeq ==
