@@ -1,6 +1,6 @@
 package graft
 
-import graft.codec.{Chunk, CodecConfig, ColVec, Fsst, IntVec, StrVec}
+import graft.codec.{Chunk, ColVec, Fsst, IntVec, StrVec}
 import graft.store.{Decode, FsIO, JObj, JVal, Json}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
@@ -237,9 +237,9 @@ object Profile {
 
   /** Encode then decode `vec` `n` times each: codec, bytes, ns per value. */
   private def codec(name: String, vec: ColVec, n: Int): Unit = {
-    var blob = Chunk.encodeWithInfo(vec, CodecConfig.default)
+    var blob = Chunk.encodeWithInfo(vec)
     val t0 = System.nanoTime()
-    (1 to n).foreach(_ => blob = Chunk.encodeWithInfo(vec, CodecConfig.default))
+    (1 to n).foreach(_ => blob = Chunk.encodeWithInfo(vec))
     val t1 = System.nanoTime()
     (1 to n).foreach(_ => Chunk.decode(blob._1))
     val per = n.toDouble * vec.n

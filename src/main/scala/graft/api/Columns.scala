@@ -1,6 +1,5 @@
 package graft.api
 
-import graft.codec.CodecConfig
 import graft.index.{Index, RowIds}
 import graft.store._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -46,8 +45,8 @@ object Rows {
         if (start0 == Slice.Unspecified) nrows - 1
         else if (start0 < 0) nrows + start0
         else math.min(start0, nrows - 1)
-      val stop = // exclusive lower end; unspecified (or legacy MaxValue) = run to row 0
-        if (stop0 == Slice.Unspecified || stop0 == Long.MaxValue) -1L
+      val stop = // exclusive lower end; unspecified = run to row 0
+        if (stop0 == Slice.Unspecified) -1L
         else if (stop0 < 0) nrows + stop0
         else stop0
       val ids = mutable.ArrayBuilder.make[Long]
@@ -93,11 +92,10 @@ object Columns {
     */
   def fromDataFrame(spark: SparkSession, root: String, df: DataFrame,
       order: OrderMode = AsIs, targetChunkBytes: Long = 1L << 20,
-      chunkRows: Int = 0, lineage: String = "",
-      cfg: CodecConfig = CodecConfig.default): Columns = {
+      chunkRows: Int = 0, lineage: String = ""): Columns = {
     val c = create(spark, root,
       ColumnStore.specFromSchema(df.schema, targetChunkBytes, chunkRows))
-    c.append(df, order, lineage, cfg)
+    c.append(df, order, lineage)
     c
   }
 
@@ -157,10 +155,9 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
 
   private var deferIndexRefresh = false
 
-  def append(df: DataFrame, order: OrderMode = AsIs, lineage: String = "",
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+  def append(df: DataFrame, order: OrderMode = AsIs, lineage: String = ""): Unit = {
     requireWritable()
-    store.append(spark, df, order, lineage, cfg)
+    store.append(spark, df, order, lineage)
     requestIndexRefresh()
   }
 
@@ -328,14 +325,13 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
     * `df` carry `fill` (default fill otherwise). Distributed: the data
     * rides the bulk-update shuffle, never the driver.
     */
-  def setColumn(name: String, df: DataFrame, fill: Option[String] = None,
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+  def setColumn(name: String, df: DataFrame, fill: Option[String] = None): Unit = {
     requireWritable()
     require(df.columns.length == 2,
       s"setColumn expects (_row_id, value) columns, got ${df.columns.toSeq}")
     val vType = df.schema.fields(1).dataType
     addColumn(ColumnSpec(name, ColumnStore.ptypeOf(vType).id, fill = fill))
-    new GraftColumn(this, name).update(df, cfg)
+    new GraftColumn(this, name).update(df)
   }
 
   /** Grow the table to `n` rows, filling new rows with each column's fill
@@ -422,16 +418,15 @@ class Columns(val spark: SparkSession, val store: ColumnStore,
 
   // ----------------------------------------------------------- maintain
 
-  def vacuum(cfg: CodecConfig = CodecConfig.default): Unit = {
+  def vacuum(): Unit = {
     requireWritable()
-    Mutate.vacuum(spark, store, cfg)
+    Mutate.vacuum(spark, store)
   }
 
   /** Merge all segments into one (row ids preserved, indexes stay valid). */
-  def compactSegments(numParts: Int = 0,
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+  def compactSegments(numParts: Int = 0): Unit = {
     requireWritable()
-    Mutate.compactSegments(spark, store, numParts, cfg)
+    Mutate.compactSegments(spark, store, numParts)
   }
 
   def storageBytes: Long = Mutate.storageBytes(store)
@@ -451,12 +446,11 @@ class GraftColumn(cols: Columns, val name: String) {
   /** col[rows] = values (P5). Triggers index rebuild unless inside
     * `updating{}` (reference column.py:360-381).
     */
-  def update(ids: Seq[Long], values: Seq[Any],
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+  def update(ids: Seq[Long], values: Seq[Any]): Unit = {
     cols.requireWritable()
     val n = cols.nrows
     val wrapped = ids.map(i => if (i < 0) i + n else i).toArray
-    Mutate.update(spark, store, name, wrapped, values.toArray, cfg)
+    Mutate.update(spark, store, name, wrapped, values.toArray)
     cols.requestIndexRefresh()
   }
 
@@ -466,11 +460,9 @@ class GraftColumn(cols: Columns, val name: String) {
     * One shuffle keyed by target partition; chunks rewritten COW on
     * executors.
     */
-  def update(updates: DataFrame): Unit = update(updates, CodecConfig.default)
-
-  def update(updates: DataFrame, cfg: CodecConfig): Unit = {
+  def update(updates: DataFrame): Unit = {
     cols.requireWritable()
-    Mutate.updateDf(spark, store, name, updates, cfg)
+    Mutate.updateDf(spark, store, name, updates)
     cols.requestIndexRefresh()
   }
 

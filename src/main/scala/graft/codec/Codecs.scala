@@ -93,25 +93,19 @@ object CodecId {
   }
 }
 
-final case class CodecConfig(
-    outerLevel: Int = 3,      // zstd level for the outer layer
-    minOuterSize: Int = 64,   // don't bother zstd-ing tiny payloads
-    distinctCap: Int = 1 << 14, // stop exact distinct counting past this
-    fsstSampleBytes: Int = 1 << 16,
-    fsstGenerations: Int = 5,
+/** How one column's chunks are encoded: what a schema's per-column
+  * `compression` resolves to ([[CodecConfig.forColumn]]). The store
+  * resolves it per column; nothing else sets it.
+  */
+private[graft] final case class CodecConfig(
     forceCodec: Int = -1,     // pin the inner codec (-1 = auto-select)
     outerMode: Int = 0,       // 0 = trial, 1 = never zstd, 2 = prefer zstd
-    /** Write per-chunk membership filters (MemberFilter) for point-lookup
-      * pruning on unindexed columns; ~10 bits per DISTINCT value appended
-      * to the column file (never the tokens list column — filters only
-      * build for scalar int/float/string kinds).
-      */
-    chunkFilters: Boolean = true)
+    outerLevel: Int = 3)      // zstd level for the outer layer
 
-object CodecConfig {
+private[graft] object CodecConfig {
   val default: CodecConfig = CodecConfig()
 
-  /** Resolve a per-column compression hint onto a base config (the
+  /** Resolve a per-column compression hint (the
     * pycolumns schema compression-resolution analogue,
     * /root/reference/pycolumns/schema.py:264-325):
     *  - None / "auto"  → content-driven auto-selection (default)
@@ -120,14 +114,14 @@ object CodecConfig {
     *  - a codec name ("rle","dict","bitpack","for","forshuf","fsst",
     *    "shuffle","boolpack") → pin that inner codec, outer zstd trialed
     */
-  def forColumn(base: CodecConfig, compression: Option[String]): CodecConfig =
+  def forColumn(compression: Option[String]): CodecConfig =
     compression.map(_.trim.toLowerCase) match {
-      case None | Some("") | Some("auto") => base
+      case None | Some("") | Some("auto") => default
       case Some("none") | Some("plain") =>
-        base.copy(forceCodec = CodecId.Plain, outerMode = 1)
+        CodecConfig(forceCodec = CodecId.Plain, outerMode = 1)
       case Some(z) if z == "zstd" || z.startsWith("zstd:") =>
-        val lvl = if (z.contains(':')) z.split(':')(1).toInt else base.outerLevel
-        base.copy(forceCodec = CodecId.Plain, outerMode = 2, outerLevel = lvl)
+        val lvl = if (z.contains(':')) z.split(':')(1).toInt else default.outerLevel
+        CodecConfig(forceCodec = CodecId.Plain, outerMode = 2, outerLevel = lvl)
       case Some(name) =>
         val id = name match {
           case "rle" => CodecId.Rle
@@ -141,7 +135,7 @@ object CodecConfig {
           case other => throw new IllegalArgumentException(
             s"unknown compression '$other'")
         }
-        base.copy(forceCodec = id)
+        CodecConfig(forceCodec = id)
     }
 }
 
@@ -221,10 +215,21 @@ object Chunk {
 
   // ---------------------------------------------------------------- public
 
-  def encode(vec: ColVec, cfg: CodecConfig = CodecConfig.default): Array[Byte] =
-    encodeWithInfo(vec, cfg)._1
+  // payloads under MinOuterSize bytes skip the zstd trial; exact distinct
+  // counting stops past DistinctCap; FSST trains on a chunk's first bytes
+  private final val MinOuterSize = 64
+  private final val DistinctCap = 1 << 14
+  private final val FsstSampleBytes = 1 << 16
+  private final val FsstGenerations = 5
 
-  def encodeWithInfo(vec: ColVec, cfg: CodecConfig = CodecConfig.default)
+  def encode(vec: ColVec): Array[Byte] = encodeWithInfo(vec)._1
+
+  /** Encode with content-driven codec selection. */
+  def encodeWithInfo(vec: ColVec): (Array[Byte], EncodeInfo) =
+    encodeWithInfo(vec, CodecConfig.default)
+
+  /** Encode under a column's resolved [[CodecConfig]]. */
+  private[graft] def encodeWithInfo(vec: ColVec, cfg: CodecConfig)
       : (Array[Byte], EncodeInfo) = {
     val pt = PType.of(vec)
     vec match {
@@ -447,7 +452,7 @@ object Chunk {
 
   private def maybeOuter(payload: Array[Byte], cfg: CodecConfig): (Int, Array[Byte]) = {
     if (cfg.outerMode == 1) return (0, payload)
-    if (cfg.outerMode != 2 && payload.length < cfg.minOuterSize) return (0, payload)
+    if (cfg.outerMode != 2 && payload.length < MinOuterSize) return (0, payload)
     val z = zstdCompress(payload, cfg.outerLevel)
     if (z.length < payload.length) (1, z) else (0, payload)
   }
@@ -565,10 +570,10 @@ object Chunk {
       // bytes as the generic path over toLongs(v), without widening every
       // value to a Long array first — the token column's values and lengths
       // both land here, and encode is memory-bandwidth-bound (BENCH.md)
-      intCandidates(v.a, cfg)
+      intCandidates(v.a)
     case v: BoolVec =>
       val longs = toLongs(v)
-      val st = intStats(longs, cfg.distinctCap)
+      val st = intStats(longs, DistinctCap)
       val out = mutable.ArrayBuffer.empty[(Int, Array[Byte])]
       out += CodecId.BoolPack -> boolPackPayload(v.a)
       if (st.nRuns <= v.n / 8 + 1) out += CodecId.Rle -> rlePayload(longs)
@@ -577,7 +582,7 @@ object Chunk {
       val pt = PType.of(vec)
       val width = PType.width(pt)
       val longs = toLongs(vec)
-      val st = intStats(longs, cfg.distinctCap)
+      val st = intStats(longs, DistinctCap)
       val out = mutable.ArrayBuffer.empty[(Int, Array[Byte])]
       out += CodecId.Plain -> plainPayload(longs, width)
       val isFloat = pt == PType.F32 || pt == PType.F64
@@ -587,7 +592,7 @@ object Chunk {
         out += CodecId.Rle -> rlePayload(longs)
       if (st.distinctExact && (st.distinct <= math.max(2, st.n / 2) ||
           cfg.forceCodec == CodecId.Dict))
-        out += CodecId.Dict -> dictPayload(longs, cfg)
+        out += CodecId.Dict -> dictPayload(longs)
       if (!isFloat) {
         // FOR: guard subtraction overflow (min<0, max>0 with huge spread)
         val rangeOk = (st.min >= 0) || (st.max <= st.min + Long.MaxValue)
@@ -613,9 +618,9 @@ object Chunk {
 
   // --- int-specialized candidate generation (byte-identical payloads) ----
 
-  private def intCandidates(vals: Array[Int], cfg: CodecConfig)
+  private def intCandidates(vals: Array[Int])
       : Seq[(Int, Array[Byte])] = {
-    val st = intStatsI(vals, cfg.distinctCap)
+    val st = intStatsI(vals, DistinctCap)
     val out = mutable.ArrayBuffer.empty[(Int, Array[Byte])]
     out += CodecId.Plain -> plainPayloadI(vals)
     if (st.nRuns <= st.n / 2 + 1)
@@ -809,7 +814,7 @@ object Chunk {
     out
   }
 
-  private def dictPayload(vals: Array[Long], cfg: CodecConfig): Array[Byte] = {
+  private def dictPayload(vals: Array[Long]): Array[Byte] = {
     val dict = vals.distinct.sorted
     val idx = new java.util.HashMap[java.lang.Long, Integer](dict.length * 2)
     var i = 0
@@ -974,7 +979,7 @@ object Chunk {
     i = 0
     while (exact && i < bs.length) {
       seen.add(new String(bs(i), java.nio.charset.StandardCharsets.ISO_8859_1))
-      if (seen.size > cfg.distinctCap) exact = false
+      if (seen.size > DistinctCap) exact = false
       i += 1
     }
     if (bs.nonEmpty && exact && (seen.size <= math.max(2, bs.length / 2) ||
@@ -982,7 +987,7 @@ object Chunk {
       out += CodecId.Dict -> strDictPayload(bs)
     val totalBytes = bs.foldLeft(0L)(_ + _.length)
     if (totalBytes > 512 || cfg.forceCodec == CodecId.Fsst)
-      out += CodecId.Fsst -> fsstPayload(bs, cfg)
+      out += CodecId.Fsst -> fsstPayload(bs)
     out.toSeq
   }
 
@@ -1088,15 +1093,15 @@ object Chunk {
     out
   }
 
-  private def fsstPayload(bs: Array[Array[Byte]], cfg: CodecConfig): Array[Byte] = {
-    // sample = prefix of corpus up to fsstSampleBytes (content-deterministic)
-    val sampleW = new Bytes.Writer(math.min(cfg.fsstSampleBytes, 1 << 16))
+  private def fsstPayload(bs: Array[Array[Byte]]): Array[Byte] = {
+    // sample = prefix of corpus up to FsstSampleBytes (content-deterministic)
+    val sampleW = new Bytes.Writer(FsstSampleBytes)
     var i = 0
-    while (i < bs.length && sampleW.size < cfg.fsstSampleBytes) {
-      sampleW.writeBytes(bs(i), 0, math.min(bs(i).length, cfg.fsstSampleBytes - sampleW.size))
+    while (i < bs.length && sampleW.size < FsstSampleBytes) {
+      sampleW.writeBytes(bs(i), 0, math.min(bs(i).length, FsstSampleBytes - sampleW.size))
       i += 1
     }
-    val table = Fsst.buildTable(sampleW.result(), cfg.fsstGenerations)
+    val table = Fsst.buildTable(sampleW.result(), FsstGenerations)
     val w = new Bytes.Writer()
     table.serialize(w)
     val enc = new Bytes.Writer()

@@ -190,11 +190,7 @@ object Index {
     * one distributed range sort.
     */
   def create(spark: SparkSession, store: ColumnStore, col: String,
-      overwrite: Boolean = false): Unit =
-    create(spark, store, col, overwrite, DriverRows)
-
-  private[graft] def create(spark: SparkSession, store: ColumnStore, col: String,
-      overwrite: Boolean, bound: Int): Unit = {
+      overwrite: Boolean = false): Unit = {
     val snap = store.snapshot
     require(snap.spec.col(col).ptypeId != graft.codec.PType.I32LIST.id,
       s"cannot index array column $col")
@@ -208,7 +204,7 @@ object Index {
     // NEW versioned base dir — never overwrites files another meta (or an
     // in-flight reader) references; superseded bases age out via the GC
     val base = s"_base-${java.util.UUID.randomUUID().toString.take(12)}"
-    writeRun(spark, store, snap, col, base, SelRange(0L, nrows, 1L), Seq.empty, bound,
+    writeRun(spark, store, snap, col, base, SelRange(0L, nrows, 1L), Seq.empty,
       s"index build $col")
     // a full build collapses every delta generation into the new base.
     // Commit-until-win: a rebuild reflects the complete CURRENT table, so
@@ -240,7 +236,7 @@ object Index {
     * `sel` plus the rows of the delta gens `merged`, sorted by (value,
     * row_id). The reference argsorts a column in memory when it fits and
     * mergesorts externally past `cache_mem` (column.py:483-559); here a run
-    * of at most `bound` rows and `DriverBytes` raw bytes is decoded on the
+    * within `Decode.driverBound` (rows, and raw bytes) is decoded on the
     * driver (the store's chunk decoder, the gens through [[RunFile]]),
     * sorted by Spark's own ordering and written by [[RunFile.write]] with
     * no Spark job. Larger runs take one distributed range sort:
@@ -248,18 +244,19 @@ object Index {
     * Parquet, partitions scaling with the rows.
     */
   private def writeRun(spark: SparkSession, store: ColumnStore, snap: Snapshot, col: String,
-      run: String, sel: SelRange, merged: Seq[(String, Long)], bound: Int, what: String): Unit = {
+      run: String, sel: SelRange, merged: Seq[(String, Long)], what: String): Unit = {
     val d = dir(store, col)
     val schema = tableSchema(snap.spec, col)
     val rows = sel.stop - sel.start + merged.map(_._2).sum
-    if (rows <= bound) {
+    val (maxRows, maxBytes) = Decode.driverBound.value
+    if (rows <= maxRows) {
       val (units, _) = snap.planUnits(Seq(col), sel)
       val opened = mutable.ArrayBuffer.empty[RunFile]
       try {
         for ((g, _) <- merged; f <- RunFile.files(s"$d/$g")) opened += new RunFile(s"$d/$g/$f")
         val bytes = units.flatMap(_.colChunks(col)).map(_.rawBytes).sum +
           opened.map(_.rawBytes).sum
-        if (bytes <= DriverBytes) {
+        if (bytes <= maxBytes) {
           val dt = schema.head.dataType
           val buf = new mutable.ArrayBuffer[(Any, Long)](rows.toInt)
           units.foreach { u =>
@@ -349,15 +346,11 @@ object Index {
     * columns leave the index as it is.
     */
   def refresh(spark: SparkSession, store: ColumnStore, col: String,
-      maxDeltaGens: Int = 8): Unit =
-    refresh(spark, store, col, maxDeltaGens, DriverRows)
-
-  private[graft] def refresh(spark: SparkSession, store: ColumnStore, col: String,
-      maxDeltaGens: Int, bound: Int): Unit = {
+      maxDeltaGens: Int = 8): Unit = {
     var attempt = 0
     var done = false
     while (!done && attempt < 4) {
-      done = refreshOnce(spark, store, col, maxDeltaGens, bound)
+      done = refreshOnce(spark, store, col, maxDeltaGens)
       attempt += 1 // lost a CAS race: re-read the winner — usually the
                    // racing refresh already covered our rows → no-op
     }
@@ -369,7 +362,7 @@ object Index {
     * re-reads and retries); every other exit is a clean completion.
     */
   private def refreshOnce(spark: SparkSession, store: ColumnStore, col: String,
-      maxDeltaGens: Int, bound: Int): Boolean = {
+      maxDeltaGens: Int): Boolean = {
     if (!exists(store, col)) return true
     val (m, epoch) = readMetaEpoch(store, col)
     // the one snapshot this refresh reads; a build from this version or a
@@ -380,14 +373,14 @@ object Index {
     if (m.version >= snap.version || (m.rows == n && unchanged)) return true
     val newRows = n - m.rows
     if (!unchanged || newRows <= 0 || (m.deltaRows + newRows) * 4L > n) {
-      create(spark, store, col, overwrite = true, bound) // commit-until-win inside
+      create(spark, store, col, overwrite = true) // commit-until-win inside
       return true
     }
     // past maxDeltaGens, collapse every gen + the new rows into ONE
     // generation — reads only delta data, the base sort is untouched
     val merged = if (m.gens.size >= maxDeltaGens) m.gens else Seq.empty
     val gen = s"_gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    writeRun(spark, store, snap, col, gen, SelRange(m.rows, n, 1L), merged, bound,
+    writeRun(spark, store, snap, col, gen, SelRange(m.rows, n, 1L), merged,
       s"index refresh $col")
     val kept = if (merged.isEmpty) m.gens else Seq.empty
     // COMMIT (CAS): the epoch-named meta makes the new generation (and, on
@@ -469,7 +462,8 @@ object Index {
 
   /** Most index rows read or written on the driver: a consult's
     * footer-kept rows, and the rows of a run a build, refresh or merge
-    * writes (see [[writeRun]]; `DriverBytes` bounds its bytes too).
+    * writes (see [[writeRun]]; `DriverBytes` bounds its bytes too). Both
+    * reach the code as the default of `Decode.driverBound`.
     * Measured at local[4] on a one-column long index: a consult matching
     * every one of 2^15 rows plans and collects its local id frame as fast
     * as the distributed read (≈110 ms each), and at 2^16 takes ≈180 ms
@@ -518,16 +512,15 @@ object Index {
     * delta gens) and keeps the row groups whose footer min/max pass the
     * store's zone-map test of the filters (`GraftScan.colBounds`) — the
     * reference's bisect of its `index1` fences (column.py:584-613). When
-    * the kept groups hold at most `bound` rows, their rows are read here and
-    * filtered by Spark's own predicate (its literal coercion, NaN and
-    * string order): Left(the matching row ids, in (value, row_id) order, or
-    * ascending when `valueOrder` is false). Otherwise Right(the distributed
-    * `where(cond)` over the index table), the only shape for id sets too
-    * large for the driver.
+    * the kept groups hold at most the rows of `Decode.driverBound`, their
+    * rows are read here and filtered by Spark's own predicate (its literal
+    * coercion, NaN and string order): Left(the matching row ids, in
+    * (value, row_id) order, or ascending when `valueOrder` is false).
+    * Otherwise Right(the distributed `where(cond)` over the index table),
+    * the only shape for id sets too large for the driver.
     */
   private[graft] def lookup(spark: SparkSession, store: ColumnStore, col: String,
-      filters: Seq[Filter], bound: Int = DriverRows,
-      valueOrder: Boolean = true): Either[Array[Long], DataFrame] = {
+      filters: Seq[Filter], valueOrder: Boolean = true): Either[Array[Long], DataFrame] = {
     requireIndex(store, col)
     val cond = filters.map(f => indexCond(f).getOrElse(
       throw new IllegalArgumentException(s"not an index predicate: $f")))
@@ -546,7 +539,7 @@ object Index {
         opened += f
         f -> (0 until f.groups).filter(mayMatch(f, _))
       }
-      if (kept.map { case (f, gs) => gs.map(f.rowCount).sum }.sum > bound)
+      if (kept.map { case (f, gs) => gs.map(f.rowCount).sum }.sum > Decode.driverBound.value._1)
         Right(table(spark, store, col).where(InternalRows.column(cond)).select(RowIdCol))
       else {
         val schema = tableSchema(store.snapshot.spec, col)
@@ -570,19 +563,20 @@ object Index {
     * sorted ascending. Read on the driver: each run gives its own top k
     * (ascending: its first k rows; descending: its last rows back past the
     * k-th value's ties) and the runs merge. Distributed sort + limit when k
-    * or the rows read would pass `bound`.
+    * or the rows read would pass the rows of `Decode.driverBound`.
     */
   private[graft] def topN(spark: SparkSession, store: ColumnStore, col: String,
-      desc: Boolean, k: Int, bound: Int = DriverRows): Array[Long] =
-    driverTopN(store, col, desc, k, bound).getOrElse {
+      desc: Boolean, k: Int): Array[Long] =
+    driverTopN(store, col, desc, k).getOrElse {
       val v = if (desc) functions.col(ValueCol).desc else functions.col(ValueCol).asc
       Jobs.described(spark, s"index topN $col")(
         table(spark, store, col).orderBy(v, functions.col(RowIdCol).asc)
           .limit(k).select(RowIdCol).collect().map(_.getLong(0)).sorted)
     }
 
-  private def driverTopN(store: ColumnStore, col: String, desc: Boolean, k: Int,
-      bound: Int): Option[Array[Long]] = {
+  private def driverTopN(store: ColumnStore, col: String, desc: Boolean,
+      k: Int): Option[Array[Long]] = {
+    val bound = Decode.driverBound.value._1
     if (k > bound) return None
     val dt = tableSchema(store.snapshot.spec, col).head.dataType
     val byValue = TypeUtils.getInterpretedOrdering(dt)

@@ -1485,7 +1485,7 @@ final case class GraftDataWriterFactory(segDir: String, seg: Long, spec: TableSp
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val enc = new ColumnStore.PartitionEncoder(spec, segDir, seg, partitionId,
-      lineage = "dsv2:batch-write", graft.codec.CodecConfig.default)
+      lineage = "dsv2:batch-write")
     new DataWriter[InternalRow] {
       override def write(row: InternalRow): Unit = enc.add(row)
       override def commit(): WriterCommitMessage =
@@ -1579,7 +1579,7 @@ final case class GraftStreamingWriterFactory(root: String, stagingPrefix: String
       epochId: Long): DataWriter[InternalRow] = {
     val stagingDir = s"$root/$stagingPrefix-$epochId"
     val enc = new ColumnStore.PartitionEncoder(spec, stagingDir, 0L, partitionId,
-      lineage = s"stream-write-epoch:$epochId", graft.codec.CodecConfig.default)
+      lineage = s"stream-write-epoch:$epochId")
     new DataWriter[InternalRow] {
       override def write(row: InternalRow): Unit = enc.add(row)
       override def commit(): WriterCommitMessage =

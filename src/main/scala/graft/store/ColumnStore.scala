@@ -173,13 +173,52 @@ object ColumnStore {
     }
   }
 
+  /** The one chunk writer (encode and every copy-on-write update): `vec`
+    * as chunk `idx` of `cs`, first row `rowStart`, under the column's
+    * schema compression, at byte `offset` of `file`. Returns its manifest
+    * entry and the bytes to write there: the chunk, then its membership
+    * filter when the kind gets one — right AFTER the chunk, so chunk reads
+    * stay exact ranges and an unindexed point lookup reads the few-KB
+    * filter INSTEAD of the chunk.
+    */
+  private[store] def encodeChunk(cs: ColumnSpec, idx: Int, rowStart: Long, vec: ColVec,
+      file: String, offset: Long): (ChunkMeta, Seq[Array[Byte]]) = {
+    val (blob, info) = Chunk.encodeWithInfo(vec, CodecConfig.forColumn(cs.compression))
+    val filter = MemberFilter.fromVec(vec)
+    val (fk, fOff, fLen) =
+      filter.fold((0, 0L, 0L))(f => (1, offset + blob.length, f.length.toLong))
+    val cm = ChunkMeta(cs.name, idx, rowStart, info.nrows, info.codec, info.outer, file,
+      offset, blob.length.toLong, info.rawBytes, FsIO.crc32c(blob),
+      info.statsKind, info.minBits, info.maxBits, info.sumKind, info.sumBits,
+      fk, fOff, fLen)
+    (cm, blob +: filter.toSeq)
+  }
+
+  /** Rows per chunk of `cs` (each column's grid is independent, like
+    * pycolumns chunked columns): its own `chunkRows`, else the table's, else
+    * ~`chunkBytes` raw at the bytes per row of a sample (reference '1m'
+    * policy, chunks.py:600-618); 0 while a derived size has no sample.
+    */
+  private[store] def chunkRows(spec: TableSpec, cs: ColumnSpec, sampleBytes: Long,
+      sampleRows: Int): Int =
+    if (cs.chunkRows > 0) cs.chunkRows
+    else if (spec.chunkRows > 0) spec.chunkRows
+    else if (sampleRows == 0) 0
+    else {
+      val target = if (cs.chunkBytes > 0) cs.chunkBytes else spec.targetChunkBytes
+      val perRow = sampleBytes.toDouble / sampleRows
+      // floor 16, not 256: with multi-MB values a 256-row floor builds
+      // gigabyte chunk payloads (the Bytes.Writer 2 GiB guard trips)
+      math.max(16, math.min(1 << 22, (target / math.max(1.0, perRow)).toInt))
+    }
+
   /** Push-based encoder for one partition — the heart of the engine
     * (SURVEY.md §2.5 C1). Used by both write surfaces: the API append path
     * (pull from an iterator, `encodePartition`) and the DSv2 `BatchWrite`
     * DataWriter (Spark pushes rows in).
     */
   private[graft] final class PartitionEncoder(spec: TableSpec, segDir: String,
-      segment: Long, val part: Int, lineage: String, cfg: CodecConfig) {
+      segment: Long, val part: Int, lineage: String) {
     private val t0 = System.nanoTime()
     private val cols = spec.columns.toArray
     private val builders = cols.map(new ColBuilder(_))
@@ -188,15 +227,8 @@ object ColumnStore {
     private val tmpNames = new Array[String](cols.length)
     private val offsets = new Array[Long](cols.length)
     private val chunkIdx = new Array[Int](cols.length)
-    // per-column codec config + chunk boundaries (reference: chunksize and
-    // compression resolve PER COLUMN through the schema, schema.py:264-325;
-    // each column's chunk grid is independent, like pycolumns chunked cols)
-    private val colCfg = cols.map(c => CodecConfig.forColumn(cfg, c.compression))
-    private val colTarget = cols.map { c =>
-      if (c.chunkRows > 0) c.chunkRows
-      else if (spec.chunkRows > 0) spec.chunkRows
-      else 0 // derive from observed bytes/row at the 256-row mark
-    }
+    // rows per chunk; a derived size is set at the 256-row mark
+    private val colTarget = cols.map(chunkRows(spec, _, 0L, 0))
     private val colRowStart = new Array[Long](cols.length)
     private var nrows = 0L
 
@@ -216,25 +248,11 @@ object ColumnStore {
     private def flushCol(c: Int): Unit = {
       if (builders(c).count == 0) return
       val vec = builders(c).flush()
-      val (blob, info) = Chunk.encodeWithInfo(vec, colCfg(c))
-      streams(c).write(blob)
-      // membership filter interleaved AFTER its chunk in the same file:
-      // chunk reads stay exact ranged reads, and the few-KB filter region
-      // is what an unindexed point lookup reads INSTEAD of the chunk
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
-      filter.foreach(streams(c).write)
-      val (fk, fOff, fLen) = filter match {
-        case Some(f) => (1, offsets(c) + blob.length, f.length.toLong)
-        case None => (0, 0L, 0L)
-      }
-      chunks += ChunkMeta(cols(c).name, chunkIdx(c), colRowStart(c),
-        info.nrows, info.codec, info.outer,
-        Format.colFile(part, cols(c).name), offsets(c), blob.length.toLong,
-        info.rawBytes, FsIO.crc32c(blob),
-        info.statsKind, info.minBits, info.maxBits, info.sumKind, info.sumBits,
-        fk, fOff, fLen)
-      offsets(c) += blob.length + fLen
+      val (cm, bytes) = encodeChunk(cols(c), chunkIdx(c), colRowStart(c), vec,
+        Format.colFile(part, cols(c).name), offsets(c))
+      bytes.foreach(streams(c).write)
+      chunks += cm
+      offsets(c) += cm.nbytes + cm.filterBytes
       chunkIdx(c) += 1
       colRowStart(c) += vec.n
     }
@@ -244,17 +262,8 @@ object ColumnStore {
       var c = 0
       while (c < cols.length) {
         builders(c).add(row, c)
-        if (colTarget(c) == 0 && builders(c).count >= 256) {
-          // derive rows/chunk so THIS column's chunk is ~target bytes
-          // uncompressed (reference '1m' policy, chunks.py:600-618)
-          val bytesTarget =
-            if (cols(c).chunkBytes > 0) cols(c).chunkBytes else spec.targetChunkBytes
-          // floor 16, not 256: with multi-MB values a 256-row floor builds
-          // gigabyte chunk payloads (the Bytes.Writer 2 GiB guard trips)
-          val perRow = builders(c).rawBytes.toDouble / builders(c).count
-          colTarget(c) = math.max(16, math.min(1 << 22,
-            (bytesTarget / math.max(1.0, perRow)).toInt))
-        }
+        if (colTarget(c) == 0 && builders(c).count >= 256)
+          colTarget(c) = chunkRows(spec, cols(c), builders(c).rawBytes, builders(c).count)
         if (colTarget(c) > 0 && builders(c).count >= colTarget(c)) flushCol(c)
         c += 1
       }
@@ -301,15 +310,14 @@ object ColumnStore {
       spec: TableSpec,
       segDir: String,
       segment: Long,
-      lineage: String,
-      cfg: CodecConfig): (Int, Array[Byte]) = {
+      lineage: String): (Int, Array[Byte]) = {
     val part = TaskContext.getPartitionId()
     val manifestPath = s"$segDir/${Format.partManifestFile(part, 0)}"
     if (FsIO.exists(manifestPath)) {
       // resume: partition already complete from a prior attempt/run
       return part -> FsIO.readAll(manifestPath)
     }
-    val enc = new PartitionEncoder(spec, segDir, segment, part, lineage, cfg)
+    val enc = new PartitionEncoder(spec, segDir, segment, part, lineage)
     try {
       while (it.hasNext) enc.add(it.next())
       part -> enc.finish()
@@ -430,7 +438,7 @@ class ColumnStore(val root: String) extends Serializable {
     * must match exactly; values cast to column dtypes).
     */
   def append(spark: SparkSession, df: DataFrame, order: OrderMode = AsIs,
-      lineage: String = "", cfg: CodecConfig = CodecConfig.default): Long = {
+      lineage: String = ""): Long = {
     val s = snapshot.spec
     val names = df.columns.toSet
     val seg = claimSegment(lineage)
@@ -438,7 +446,7 @@ class ColumnStore(val root: String) extends Serializable {
     require(names == expect,
       s"appended data columns $names != table columns $expect " +
         "(reference rejects mismatched column sets, columns.py:619-627)")
-    writeSegment(spark, df, s, seg, order, lineage, cfg)
+    writeSegment(spark, df, s, seg, order, lineage)
     seg
   }
 
@@ -551,7 +559,7 @@ class ColumnStore(val root: String) extends Serializable {
   }
 
   private def writeSegment(spark: SparkSession, df0: DataFrame, s: TableSpec, seg: Long,
-      order: OrderMode, lineage: String, cfg: CodecConfig): Unit = {
+      order: OrderMode, lineage: String): Unit = {
     val df1 = normalize(df0, s)
     val df = order match {
       case ByKey(key, n) =>
@@ -575,7 +583,7 @@ class ColumnStore(val root: String) extends Serializable {
       val rdd = df.queryExecution.toRdd
       spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
         ColumnStore.encodePartition(it, specB,
-          s"$rootB/${Format.SegmentsDir}/seg$seg", seg, lineage, cfg))
+          s"$rootB/${Format.SegmentsDir}/seg$seg", seg, lineage))
     }
     // commit: per-partition row counts in partition-id order fix the global
     // row-id assignment (SURVEY.md §7.5(6)). The consolidated manifest goes

@@ -147,9 +147,10 @@ object Decode {
 
   // ------------------------------------------------------ driver-side read
 
-  /** Rows and raw bytes a read may decode on the driver: the index's
-    * driver constants. A thread-scoped value so tests can force the
-    * distributed path (a bound of 0 rows sends every non-empty read there).
+  /** Rows and raw bytes a read may decode on the driver, and an index
+    * build, refresh, consult or top-N may handle there: the index's driver
+    * constants. A thread-scoped value so tests can force the distributed
+    * path (a bound of 0 rows sends every non-empty read there).
     */
   private[graft] val driverBound = new scala.util.DynamicVariable[(Long, Long)](
     (graft.index.Index.DriverRows.toLong, graft.index.Index.DriverBytes))

@@ -422,15 +422,16 @@ object FsIO {
     * could leave the store without its `_schema.bin`/`_commit.bin`/latest
     * manifest. Falls back to delete+rename on filesystems without atomic
     * overwrite rename (object stores — which have no atomic rename at all;
-    * documented limitation there).
+    * documented limitation there). The file's content is `parts` in order.
     */
-  def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
+  def writeAtomic(path: String, parts: Array[Byte]*): Unit = {
     val lp = localOf(path)
     if (lp != null) {
       createParent(lp)
       val tmp = lp.resolveSibling(
         lp.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-      java.nio.file.Files.write(tmp, bytes)
+      val out = java.nio.file.Files.newOutputStream(tmp)
+      try parts.foreach(out.write) finally out.close()
       java.nio.file.Files.move(tmp, lp,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -442,7 +443,7 @@ object FsIO {
     val f = fs(path)
     val tmp = new Path(path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
+    try parts.foreach(out.write) finally out.close()
     try fc(path).rename(tmp, new Path(path),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     catch {

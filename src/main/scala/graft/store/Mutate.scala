@@ -125,8 +125,7 @@ object Mutate {
     * single scalar broadcast over all ids.
     */
   def update(spark: SparkSession, store: ColumnStore, colName: String,
-      ids: Array[Long], values: Array[Any],
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+      ids: Array[Long], values: Array[Any]): Unit = {
     val snap = store.snapshot
     val s = snap.spec
     val cs = s.col(colName)
@@ -158,7 +157,7 @@ object Mutate {
     Snapshot.publishAround(store.root, Change.Update(Set(colName)))(
       Jobs.described(spark, s"update $colName")(
         spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
-          .map(t => runPartUpdate(t, specB, cfg))
+          .map(t => runPartUpdate(t, specB))
           .collect()))
   }
 
@@ -170,8 +169,7 @@ object Mutate {
     * like the scalar path. Duplicate ids are dropped (one winner per id).
     */
   def updateDf(spark: SparkSession, store: ColumnStore, colName: String,
-      updates: org.apache.spark.sql.DataFrame,
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+      updates: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col => f, substring}
     val snap = store.snapshot
     val s = snap.spec
@@ -245,148 +243,88 @@ object Mutate {
               lv += v
             }
             runPartUpdate(PartUpdate(rootB, seg, part, colB, li.result(), lv.toArray),
-              specB, cfg)
+              specB)
           }
         }
       }.collect()))
   }
 
-  private def runPartUpdate(t: PartUpdate, spec: TableSpec,
-      cfg: CodecConfig): Int = {
+  /** Raw bytes of one value, as the encoder counts them. */
+  private def rawBytes(v: Any): Long = v match {
+    case s: String => s.length + 4L
+    case b: Array[Byte] => b.length + 4L
+    case s: scala.collection.Seq[_] => 4L * s.length + 4
+    case a: Array[Int] => 4L * a.length + 4
+    case _: java.lang.Long | _: java.lang.Double => 8L
+    case _: java.lang.Integer | _: java.lang.Float => 4L
+    case _: java.lang.Short => 2L
+    case _ => 1L
+  }
+
+  /** Copy-on-write rewrite of one partition's chunks of `t.colName`: each
+    * rewritten chunk goes to a new chunk file version, then a new manifest
+    * version publishes them. An encoded column rewrites the chunks the
+    * update touches. A column BACKFILLED after this partition's segment has
+    * no chunks here — readers synthesize its fill value — so its first
+    * update rewrites a whole grid of fill-valued chunks, sized from the
+    * partition's first 256 rows with the update applied: the moment the
+    * reference allocates real storage for a new column's data
+    * (create_from_array, columns.py:129-198). Untouched partitions keep
+    * synthesizing the fill for free.
+    */
+  private def runPartUpdate(t: PartUpdate, spec: TableSpec): Int = {
     val dir = Format.segDir(t.root, t.seg)
     val m = latestManifest(t.root, t.seg, t.part)
     val newVer = m.updateVersion + 1
-    // group local ids by chunk — binary search per id, not a linear scan
-    // (the bulk path can carry 10^6 updates into a 10^3-chunk partition)
-    val colChunks = m.chunks.filter(_.column == t.colName)
-      .sortBy(_.rowStartLocal).toIndexedSeq
-    if (colChunks.isEmpty)
-      return materializeBackfilled(t, spec, m, dir, newVer, cfg)
-    def chunkFor(lid: Long): ChunkMeta = {
-      var lo = 0
-      var hi = colChunks.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (colChunks(mid).rowStartLocal + colChunks(mid).nrows <= lid) lo = mid + 1
-        else hi = mid
-      }
-      if (lo >= colChunks.length || lid < colChunks(lo).rowStartLocal)
-        throw new IllegalStateException(s"no chunk covers local row $lid")
-      colChunks(lo)
-    }
-    val byChunk = mutable.LinkedHashMap.empty[ChunkMeta, (mutable.ArrayBuilder[Int], mutable.ArrayBuffer[Any])]
-    var i = 0
-    while (i < t.localIds.length) {
-      val lid = t.localIds(i)
-      val cm = chunkFor(lid)
-      val slot = byChunk.getOrElseUpdate(cm,
-        (mutable.ArrayBuilder.make[Int], mutable.ArrayBuffer.empty[Any]))
-      slot._1 += (lid - cm.rowStartLocal).toInt
-      slot._2 += t.values(i)
-      i += 1
-    }
-    val colCfg = CodecConfig.forColumn(cfg, spec.col(t.colName).compression)
-    val replaced = byChunk.map { case (cm, (idxB, vals)) =>
-      val blob = readChunk(dir, cm)
-      val pt = spec.col(t.colName).ptype
-      val any = vecToAny(Chunk.decode(blob))
-      val idx = idxB.result()
-      var k = 0
-      while (k < idx.length) { any(idx(k)) = vals(k); k += 1 }
-      val vec = anyToVec(pt, any)
-      val (newBlob, info) = Chunk.encodeWithInfo(vec, colCfg)
-      val cow = Format.cowFile(t.part, t.colName, cm.chunkIdx, newVer)
-      // filter appended after the chunk in the cow file — updated values
-      // must re-enter it or point lookups would miss them
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
-      FsIO.writeAtomic(s"$dir/$cow", filter.fold(newBlob)(newBlob ++ _))
-      val (fk, fOff, fLen) = filter match {
-        case Some(f) => (1, newBlob.length.toLong, f.length.toLong)
-        case None => (0, 0L, 0L)
-      }
-      // refresh ALL encode-derived fields — stale zone-map stats would let
-      // DSv2 planSelection prune chunks whose updated values now match
-      cm -> cm.copy(codec = info.codec, outer = info.outer, file = cow,
-        offset = 0L, nbytes = newBlob.length.toLong, rawBytes = info.rawBytes,
-        crc = FsIO.crc32c(newBlob),
-        statsKind = info.statsKind, minBits = info.minBits, maxBits = info.maxBits,
-        sumKind = info.sumKind, sumBits = info.sumBits,
-        filterKind = fk, filterOffset = fOff, filterBytes = fLen)
-    }
-    val newChunks = m.chunks.map(c => replaced.getOrElse(c, c))
-    val nm = m.copy(updateVersion = newVer, chunks = newChunks)
-    FsIO.writeAtomic(s"$dir/${Format.partManifestFile(t.part, newVer)}",
-      BinCodec.writePartManifest(nm))
-    newVer
-  }
-
-  /** First update to a column BACKFILLED after this partition's segment:
-    * there are no chunks to rewrite, so materialize the whole partition —
-    * fill value everywhere, scattered updates applied — into a fresh chunk
-    * grid (the moment the reference allocates real storage for a new
-    * column's data: create_from_array, columns.py:129-198). Readers decide
-    * fill-vs-chunks by manifest presence, so the new chunks become visible
-    * with the manifest version bump; untouched partitions keep synthesizing
-    * the fill for free.
-    */
-  private def materializeBackfilled(t: PartUpdate, spec: TableSpec,
-      m: PartManifest, dir: String, newVer: Int, cfg: CodecConfig): Int = {
     val cs = spec.col(t.colName)
-    val colCfg = CodecConfig.forColumn(cfg, cs.compression)
-    val n = m.nrows.toInt
-    val fv: Any = Decode.fillValue(cs)
-    val any = new Array[Any](n)
-    java.util.Arrays.fill(any.asInstanceOf[Array[AnyRef]], fv.asInstanceOf[AnyRef])
-    var i = 0
-    while (i < t.localIds.length) { any(t.localIds(i).toInt) = t.values(i); i += 1 }
-    def rowBytes(v: Any): Long = v match {
-      case s: String => s.length + 4L
-      case b: Array[Byte] => b.length + 4L
-      case s: scala.collection.Seq[_] => 4L * s.length + 4
-      case a: Array[Int] => 4L * a.length + 4
-      case _: java.lang.Long | _: java.lang.Double => 8L
-      case _: java.lang.Integer | _: java.lang.Float => 4L
-      case _: java.lang.Short => 2L
-      case _ => 1L
-    }
-    val targetBytes = if (cs.chunkBytes > 0) cs.chunkBytes else spec.targetChunkBytes
-    val rowsPer =
-      if (cs.chunkRows > 0) cs.chunkRows
-      else if (spec.chunkRows > 0) spec.chunkRows
+    val fill = Decode.fillValue(cs)
+    val encoded = m.chunks.filter(_.column == t.colName).sortBy(_.rowStartLocal).toIndexedSeq
+    val backfilled = encoded.isEmpty
+    // the chunk grid: each chunk's first local row and row count
+    val (starts, lens) =
+      if (!backfilled) (encoded.map(_.rowStartLocal).toArray, encoded.map(_.nrows).toArray)
       else {
-        val sample = math.min(n, 256)
-        val per = (0 until sample).map(j => rowBytes(any(j))).sum.toDouble /
-          math.max(1, sample)
-        math.max(16, math.min(1 << 22, (targetBytes / math.max(1.0, per)).toInt))
+        val sample = Array.fill[Any](math.min(m.nrows, 256L).toInt)(fill)
+        t.localIds.indices.foreach { i =>
+          if (t.localIds(i) < sample.length) sample(t.localIds(i).toInt) = t.values(i)
+        }
+        val rows = ColumnStore.chunkRows(spec, cs, sample.map(rawBytes).sum, sample.length)
+        val at = (0L until m.nrows by rows.toLong).toArray
+        (at, at.map(s => math.min(rows.toLong, m.nrows - s).toInt))
       }
-    val newChunks = mutable.ArrayBuffer.empty[ChunkMeta]
-    var start = 0
-    var ci = 0
-    while (start < n) {
-      val len = math.min(rowsPer, n - start)
-      val slice = java.util.Arrays.copyOfRange(
-        any.asInstanceOf[Array[AnyRef]], start, start + len).asInstanceOf[Array[Any]]
-      val vec = anyToVec(cs.ptype, slice)
-      val (blob, info) = Chunk.encodeWithInfo(vec, colCfg)
-      val cow = Format.cowFile(t.part, t.colName, ci, newVer)
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
-      FsIO.writeAtomic(s"$dir/$cow", filter.fold(blob)(blob ++ _))
-      val (fk, fOff, fLen) = filter match {
-        case Some(f) => (1, blob.length.toLong, f.length.toLong)
-        case None => (0, 0L, 0L)
-      }
-      newChunks += ChunkMeta(t.colName, ci, start.toLong, info.nrows,
-        info.codec, info.outer, cow, 0L, blob.length.toLong, info.rawBytes,
-        FsIO.crc32c(blob), info.statsKind, info.minBits, info.maxBits,
-        info.sumKind, info.sumBits, fk, fOff, fLen)
-      start += len
-      ci += 1
+    // each update's chunk: a binary search per id, not a linear scan (the
+    // bulk path can carry 10^6 updates into a 10^3-chunk partition)
+    val byChunk = t.localIds.indices.groupBy { i =>
+      val lid = t.localIds(i)
+      val k = java.util.Arrays.binarySearch(starts, lid)
+      val g = if (k >= 0) k else -k - 2
+      if (g < 0 || lid >= starts(g) + lens(g))
+        throw new IllegalStateException(s"no chunk covers local row $lid")
+      g
     }
+    val written = (if (backfilled) starts.indices else byChunk.keys).map { g =>
+      val any =
+        if (backfilled) Array.fill[Any](lens(g))(fill)
+        else vecToAny(Chunk.decode(readChunk(dir, encoded(g))))
+      byChunk.getOrElse(g, Nil).foreach(i => any((t.localIds(i) - starts(g)).toInt) = t.values(i))
+      val chunkIdx = if (backfilled) g else encoded(g).chunkIdx
+      val cow = Format.cowFile(t.part, t.colName, chunkIdx, newVer)
+      // every encode-derived field is fresh — stale zone-map stats would
+      // let DSv2 planSelection prune chunks whose updated values now
+      // match, and a stale filter would hide them from point lookups
+      val (cm, bytes) = ColumnStore.encodeChunk(cs, chunkIdx, starts(g),
+        anyToVec(cs.ptype, any), cow, 0L)
+      FsIO.writeAtomic(s"$dir/$cow", bytes: _*)
+      g -> cm
+    }.toMap
+    val newChunks =
+      if (backfilled) m.chunks ++ starts.indices.map(written)
+      else {
+        val byOld = written.map { case (g, cm) => encoded(g) -> cm }
+        m.chunks.map(c => byOld.getOrElse(c, c))
+      }
     FsIO.writeAtomic(s"$dir/${Format.partManifestFile(t.part, newVer)}",
-      BinCodec.writePartManifest(
-        m.copy(updateVersion = newVer, chunks = m.chunks ++ newChunks)))
+      BinCodec.writePartManifest(m.copy(updateVersion = newVer, chunks = newChunks)))
     newVer
   }
 
@@ -422,8 +360,7 @@ object Mutate {
     * latest manifest) are skipped, so repeated vacuums are no-ops instead
     * of full rewrites.
     */
-  def vacuum(spark: SparkSession, store: ColumnStore,
-      cfg: CodecConfig = CodecConfig.default): Unit = {
+  def vacuum(spark: SparkSession, store: ColumnStore): Unit = {
     val cowRe = """\.c\d+\.v\d+\.bin$""".r
     val snap = store.snapshot
     val tasks = for {
@@ -437,7 +374,7 @@ object Mutate {
     // that the previous snapshot still points to
     try Jobs.described(spark, "vacuum")(
       spark.sparkContext.parallelize(tasks, tasks.size)
-        .map(t => compactPartition(t, spec, cfg))
+        .map(t => compactPartition(t, spec))
         .collect())
     finally Snapshot.publish(store.root, Change.Reshape)
   }
@@ -451,8 +388,7 @@ object Mutate {
     * the rewritten blob ONTO the live base file before publishing — a crash
     * in that window left the latest manifest pointing at wrong offsets.
     */
-  private def compactPartition(t: CompactTask, spec: TableSpec,
-      cfg: CodecConfig): Unit = {
+  private def compactPartition(t: CompactTask, spec: TableSpec): Unit = {
     val dir = Format.segDir(t.root, t.seg)
     val m = latestManifest(t.root, t.seg, t.part)
     val newVer = m.updateVersion + 1
@@ -507,7 +443,7 @@ object Mutate {
     * segments directory is swapped in with a rename.
     */
   def compactSegments(spark: SparkSession, store: ColumnStore,
-      numParts: Int = 0, cfg: CodecConfig = CodecConfig.default): Unit = {
+      numParts: Int = 0): Unit = {
     val snap = store.snapshot
     if (snap.segments.size <= 1) return
     val parts = if (numParts > 0) numParts
@@ -525,7 +461,7 @@ object Mutate {
       columns = snap.spec.columns.map(_.copy(addedAtSegment = 0L)))
     val tmpRoot = s"${store.root}/.compact-${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = ColumnStore.create(tmpRoot, freshSpec)
-    tmp.append(spark, ordered, AsIs, lineage = s"compact:${snap.segments.size}segs", cfg)
+    tmp.append(spark, ordered, AsIs, lineage = s"compact:${snap.segments.size}segs")
     val written = tmp.snapshot.nrows
     require(written == snap.nrows,
       s"compaction row count mismatch: $written != ${snap.nrows}")

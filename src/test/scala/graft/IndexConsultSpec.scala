@@ -88,7 +88,7 @@ class IndexConsultSpec extends AnyFunSuite {
     val inOrder = Index.table(spark, c.store, name).orderBy(Index.ValueCol, Index.RowIdCol)
       .collect().map(_.getLong(1))
     val distributed = cs.zipWithIndex.map { case ((_, _, fs), i) =>
-      val df = Index.lookup(spark, c.store, name, fs, bound = -1) match {
+      val df = driverRows(-1)(Index.lookup(spark, c.store, name, fs)) match {
         case Right(d) => d
         case Left(_) => fail(s"$state $name: bound -1 still answered on the driver")
       }
@@ -126,7 +126,7 @@ class IndexConsultSpec extends AnyFunSuite {
     // (value order, ties by ascending row id), for every type
     for ((n, _, _) <- cols; desc <- Seq(false, true); k <- Seq(1, 3, 17, 500)) {
       val driver = Index.topN(spark, c.store, n, desc, k)
-      val sparkSorted = Index.topN(spark, c.store, n, desc, k, bound = -1)
+      val sparkSorted = driverRows(-1)(Index.topN(spark, c.store, n, desc, k))
       assert(driver.toSeq == sparkSorted.toSeq, s"topN $n desc=$desc k=$k")
     }
     c.dropStore()
@@ -149,7 +149,7 @@ class IndexConsultSpec extends AnyFunSuite {
     def agree(fs: Seq[Filter], want: Set[Long]): Unit = {
       // answered on the driver although the index holds 4000 rows: the
       // footers kept at most 600 of them
-      val got = Index.lookup(spark, c.store, "x", fs, bound = 600) match {
+      val got = driverRows(600)(Index.lookup(spark, c.store, "x", fs)) match {
         case Left(ids) => ids.toSet
         case Right(_) => fail(s"$fs: footers kept more than 600 rows")
       }
@@ -193,7 +193,7 @@ class IndexConsultSpec extends AnyFunSuite {
     assert(files.size >= 2 && groups >= 10, s"expected ties across groups: $files, $groups")
     for (desc <- Seq(true, false); k <- Seq(1, 5, 300, 2100)) {
       val driver = Index.topN(spark, c.store, "v", desc, k)
-      val sparkSorted = Index.topN(spark, c.store, "v", desc, k, bound = -1)
+      val sparkSorted = driverRows(-1)(Index.topN(spark, c.store, "v", desc, k))
       assert(driver.toSeq == sparkSorted.toSeq, s"topN desc=$desc k=$k")
     }
     c.dropStore()
@@ -244,7 +244,7 @@ class IndexConsultSpec extends AnyFunSuite {
     val c = Columns.fromDataFrame(spark, tmpDir("graft-consult-crc"), spark.createDataFrame(
       spark.sparkContext.parallelize((0 until n).map(i => Row((i * 7919L) % n)), 4), schema),
       chunkRows = 50)
-    Index.create(spark, c.store, "v", overwrite = false, bound)
+    driverRows(bound)(Index.create(spark, c.store, "v", overwrite = false))
     val base = Index.basePath(c.store, "v")
     val part = graft.index.RunFile.files(base).head
     // the checksummed local FS verifies every read against this sidecar
@@ -311,9 +311,10 @@ class IndexConsultSpec extends AnyFunSuite {
     try {
       settle()
       jobs.set(0)
-      // the read itself forced past the driver bound: a small one is
-      // answered on the driver with no job at all (DriverReadSpec)
-      val out = graft.store.Decode.driverBound.withValue((0L, 0L)) {
+      // the read itself forced past the driver bound by its bytes: a small
+      // one is answered on the driver with no job at all (DriverReadSpec);
+      // the consult, bounded by rows alone, stays on the driver
+      val out = graft.store.Decode.driverBound.withValue((Index.DriverRows.toLong, 0L)) {
         c.gather(c("x") === 17L, Seq("y")).collect()
       }
       settle()
@@ -376,10 +377,12 @@ class IndexConsultSpec extends AnyFunSuite {
     }
     def append(from: Int, until: Int, maxGens: Int = 8)(c: Columns, bound: Int): Unit = {
       c.store.append(spark, rows(from, until))
-      cols.foreach { case (n, _, _) => Index.refresh(spark, c.store, n, maxGens, bound) }
+      cols.foreach { case (n, _, _) =>
+        driverRows(bound)(Index.refresh(spark, c.store, n, maxGens)) }
     }
     step("create")((c, bound) =>
-      cols.foreach { case (n, _, _) => Index.create(spark, c.store, n, overwrite = false, bound) })
+      cols.foreach { case (n, _, _) =>
+        driverRows(bound)(Index.create(spark, c.store, n, overwrite = false)) })
     step("delta")(append(400, 420))
     step("second delta")(append(420, 450))
     step("merge")(append(450, 470, maxGens = 2))
@@ -483,7 +486,7 @@ class IndexConsultSpec extends AnyFunSuite {
       val store = graft.store.ColumnStore.create(tmpDir("graft-build-empty"),
         graft.store.ColumnStore.specFromSchema(StructType(Seq(
           StructField("s", StringType, nullable = false)))))
-      Index.create(spark, store, "s", overwrite = false, bound)
+      driverRows(bound)(Index.create(spark, store, "s", overwrite = false))
       val base = Index.basePath(store, "s")
       assert(graft.index.RunFile.files(base).nonEmpty, s"bound $bound: no run file")
       assert(Index.table(spark, store, "s").count() == 0L)
@@ -519,7 +522,7 @@ class IndexConsultSpec extends AnyFunSuite {
       val old = graft.store.ColumnStore.open(c.root)
       c("v").update(Seq(3L), Seq(-3L))
       assert(old.snapshot.version == c.store.snapshot.version)
-      Index.create(spark, old, "v", overwrite = false, bound)
+      driverRows(bound)(Index.create(spark, old, "v", overwrite = false))
       assert(Index.routableFor(c.store.snapshot, "v"),
         s"bound $bound: fresh index not routable")
       assert(RowIds.collectSorted(c("v") === -3L).toSeq == Seq(3L))
@@ -529,7 +532,7 @@ class IndexConsultSpec extends AnyFunSuite {
       assert(!Index.routableFor(c.store.snapshot, "v"),
         s"bound $bound: stale index routable")
       // the stale index forces a rebuild, which sees the update
-      Index.refresh(spark, c.store, "v", maxDeltaGens = 8, bound)
+      driverRows(bound)(Index.refresh(spark, c.store, "v", maxDeltaGens = 8))
       assert(Index.routableFor(c.store.snapshot, "v"))
       assert(RowIds.collectSorted(c("v") === -4L).toSeq == Seq(4L))
       c.dropStore()

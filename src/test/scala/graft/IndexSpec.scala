@@ -208,7 +208,7 @@ class IndexSpec extends AnyFunSuite {
       // the append and its refresh, the refresh forced onto the distributed
       // sort (a run this small is otherwise built on the driver, no shuffle)
       c.store.append(spark, df(100000L until 102000L, 2))
-      Index.refresh(spark, c.store, "ind", maxDeltaGens = 8, bound = -1)
+      driverRows(-1)(Index.refresh(spark, c.store, "ind", maxDeltaGens = 8))
       // listener events are async: poll until the counter stabilizes
       var last = -1L
       var same = 0
@@ -492,9 +492,9 @@ class IndexSpec extends AnyFunSuite {
     try {
       // build and incremental refresh forced onto the distributed sort: runs
       // this small are otherwise built on the driver with no job at all
-      Index.create(spark, c.store, "ind", overwrite = false, bound = -1)
+      driverRows(-1)(Index.create(spark, c.store, "ind", overwrite = false))
       c.store.append(spark, df(20000L until 21000L, 1))
-      Index.refresh(spark, c.store, "ind", maxDeltaGens = 8, bound = -1)
+      driverRows(-1)(Index.refresh(spark, c.store, "ind", maxDeltaGens = 8))
       assert(Index.deltaGens(c.store, "ind").size == 1)
       c("ind").update(Seq(5L), Seq(-5L))
       c.vacuum()

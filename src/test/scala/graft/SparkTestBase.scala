@@ -25,6 +25,12 @@ object SparkTestBase {
         e.getMessage.contains(file), e.getMessage)
   }
 
+  /** Run `body` with `Decode.driverBound` at `rows` rows and the default
+    * bytes: -1 sends every index run, consult and top-N to Spark.
+    */
+  def driverRows[T](rows: Long)(body: => T): T =
+    graft.store.Decode.driverBound.withValue((rows, graft.index.Index.DriverBytes))(body)
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.delete()

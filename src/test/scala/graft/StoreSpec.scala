@@ -68,6 +68,12 @@ class StoreSpec extends AnyFunSuite {
     // stepped [10, 100) step 7 (reference turns stepped slices into arange)
     val b = st.read(spark, Seq("id"), SelRange(10, 100, 7)).collect().sortBy(_.getLong(0))
     assert(b.map(_.getLong(1)).toSeq == (10L until 100L by 7L))
+    // a negative step from 5 with a stop past the end reads nothing, as
+    // Python's a[5:huge:-1] does, whatever the stop's size
+    val c = new graft.api.Columns(spark, st)
+    for (stop <- Seq(100L, Long.MaxValue))
+      assert(c.read(Seq("id"), graft.api.Slice(5, stop, -1)).collect().isEmpty,
+        s"Slice(5, $stop, -1) read rows")
     st.dropStore()
   }
 
@@ -611,7 +617,7 @@ class StoreSpec extends AnyFunSuite {
     assert(byCol("id").size > byCol("rand").size)
     // unknown compression rejected
     intercept[IllegalArgumentException] {
-      CodecConfig.forColumn(CodecConfig.default, Some("lz77"))
+      CodecConfig.forColumn(Some("lz77"))
     }
     st.dropStore()
   }
@@ -724,6 +730,67 @@ class StoreSpec extends AnyFunSuite {
       assert(row.getInt(3) == n)
       assert(row.getString(4) == s)
     }
+    st.dropStore()
+  }
+
+  test("every writer's chunks verify, with filters right after them holding every value") {
+    // ~256 raw bytes a chunk: several chunks per partition, and the
+    // backfilled column's grid is sized from its sampled rows
+    val data = refData(1200)
+    val st = ColumnStore.create(tmpDir("graft-writers"),
+      ColumnStore.specFromSchema(schema, targetChunkBytes = 256))
+    st.append(spark, refDf(data, parts = 2), AsIs)
+    val c = new graft.api.Columns(spark, st)
+    val want = scala.collection.mutable.Map[String, Array[Any]](
+      "id" -> data.map(_._1: Any).toArray,
+      "rand" -> data.map(_._2: Any).toArray,
+      "scol" -> data.map(_._3: Any).toArray)
+    def values(v: ColVec): Seq[Any] = v match {
+      case LongVec(a) => a.toSeq
+      case FloatVec(a) => a.toSeq
+      case StrVec(a) => a.toSeq
+      case Utf8Vec(b) => b.map(new String(_, java.nio.charset.StandardCharsets.UTF_8)).toSeq
+    }
+    def hash(v: Any): Long = v match {
+      case l: Long => MemberFilter.hashLong(l)
+      case f: Float => MemberFilter.hashDouble(f.toDouble)
+      case s: String => MemberFilter.hashString(s)
+    }
+    def check(writer: String): Unit = {
+      val snap = st.snapshot
+      var chunks = 0
+      for ((seg, part, off, _) <- snap.partOffsets; cm <- snap.partManifest(seg, part).chunks) {
+        val file = s"${Format.segDir(st.root, seg)}/${cm.file}"
+        val blob = FsIO.readRange(file, cm.offset, cm.nbytes.toInt)
+        Decode.verifyChunk(cm, blob)
+        val got = values(Chunk.decode(blob))
+        val at = (off + cm.rowStartLocal).toInt
+        assert(got == want(cm.column).slice(at, at + cm.nrows).toSeq,
+          s"$writer: ${cm.column} chunk ${cm.chunkIdx} of seg$seg p$part")
+        // long, float and string chunks always get a filter
+        assert(cm.filterKind == 1 && cm.filterOffset == cm.offset + cm.nbytes,
+          s"$writer: ${cm.column} chunk ${cm.chunkIdx} filter at ${cm.filterOffset}")
+        val filter = FsIO.readRange(file, cm.filterOffset, cm.filterBytes.toInt)
+        got.foreach(v => assert(MemberFilter.mightContainAny(filter, Array(hash(v))),
+          s"$writer: ${cm.column} chunk ${cm.chunkIdx} filter misses $v"))
+        chunks += 1
+      }
+      assert(chunks > snap.partOffsets.size * 3, s"$writer: only $chunks chunks")
+    }
+    check("encode")
+    c("scol").update(Seq(3L, 250L, 1199L), Seq("x", "yy", "zzz"))
+    c("id").update(Seq(10L), Seq(-10L))
+    want("scol")(3) = "x"; want("scol")(250) = "yy"; want("scol")(1199) = "zzz"
+    want("id")(10) = -10L
+    check("copy-on-write update")
+    c.addColumn(ColumnSpec("t", PType.STR.id, fill = Some("fill")))
+    c("t").update(Seq(1L, 800L), Seq("a much longer value than the fill", "b"))
+    want("t") = Array.fill[Any](1200)("fill")
+    want("t")(1) = "a much longer value than the fill"; want("t")(800) = "b"
+    assert(st.snapshot.partManifests.values.flatten.count(_.chunks.exists(_.column == "t")) == 2)
+    check("first update of a backfilled column")
+    c.vacuum()
+    check("vacuum")
     st.dropStore()
   }
 }
