@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalRows
 import org.apache.spark.sql.types._
 import org.apache.spark.TaskContext
 import scala.collection.mutable
@@ -300,18 +301,17 @@ object ColumnStore {
     }
   }
 
-  /** Encode one partition's rows into per-column chunk files + manifest.
-    * Runs inside `runJob` on executors; resumable: if the partition
-    * manifest already exists, the input is skipped and the prior result
-    * returned.
+  /** Encode partition `part`'s rows into per-column chunk files + manifest,
+    * in a task or on the driver; resumable: if the partition manifest
+    * already exists, the input is skipped and the prior result returned.
     */
   private[graft] def encodePartition(
       it: Iterator[InternalRow],
       spec: TableSpec,
       segDir: String,
       segment: Long,
-      lineage: String): (Int, Array[Byte]) = {
-    val part = TaskContext.getPartitionId()
+      lineage: String,
+      part: Int): (Int, Array[Byte]) = {
     val manifestPath = s"$segDir/${Format.partManifestFile(part, 0)}"
     if (FsIO.exists(manifestPath)) {
       // resume: partition already complete from a prior attempt/run
@@ -396,8 +396,9 @@ object ColumnStore {
 }
 
 /** A graft column store rooted at `root` — the Spark-native analogue of
-  * `pycolumns.Columns` storage (SURVEY.md §1). All table-level operations
-  * (write/read/update/vacuum) are Spark jobs. A handle holds only the root:
+  * `pycolumns.Columns` storage (SURVEY.md §1). Table-level operations
+  * (write/read/update/vacuum) run as Spark jobs, or on the driver with no
+  * job when they fit `Decode.driverBound`. A handle holds only the root:
   * `snapshot` is the store's newest [[Snapshot]] (one listing while the
   * version is unchanged), so it sees every published mutation; take it
   * once per operation and read every piece of metadata from it.
@@ -435,7 +436,11 @@ class ColumnStore(val root: String) extends Serializable {
 
   /** Encode `df` as the next segment. First write → segment 0; subsequent →
     * append (pycolumns Columns.append, columns.py:603-634: column-name sets
-    * must match exactly; values cast to column dtypes).
+    * must match exactly; values cast to column dtypes). Rows already on the
+    * driver (a local frame such as `createDataFrame(Seq)`, `AsIs` or
+    * `ByKey`) are encoded there with no Spark job when they fit
+    * `Decode.driverBound`, into the same partitions and bytes a job writes;
+    * any other frame is encoded by one job.
     */
   def append(spark: SparkSession, df: DataFrame, order: OrderMode = AsIs,
       lineage: String = ""): Long = {
@@ -561,7 +566,7 @@ class ColumnStore(val root: String) extends Serializable {
   private def writeSegment(spark: SparkSession, df0: DataFrame, s: TableSpec, seg: Long,
       order: OrderMode, lineage: String): Unit = {
     val df1 = normalize(df0, s)
-    val df = order match {
+    lazy val df = order match {
       case ByKey(key, n) =>
         df1.repartitionByRange(n, col(key)).sortWithinPartitions(col(key))
       case ByKeySalted(key, n, salts) =>
@@ -576,19 +581,28 @@ class ColumnStore(val root: String) extends Serializable {
     val segDir = Format.segDir(root, seg)
     FsIO.mkdirs(segDir)
     val specB = s
-    val rootB = root
-    // unboxed path: execute the plan to InternalRows (datasource-style) and
-    // encode per partition; runJob returns results in partition order
-    val manifests: Array[(Int, Array[Byte])] = Jobs.described(spark, s"append seg$seg") {
-      val rdd = df.queryExecution.toRdd
-      spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
-        ColumnStore.encodePartition(it, specB,
-          s"$rootB/${Format.SegmentsDir}/seg$seg", seg, lineage))
+    val encode = (p: Int, rows: Iterator[InternalRow]) =>
+      ColumnStore.encodePartition(rows, specB, segDir, seg, lineage, p)
+    // a local frame is cut into the partitions a job would see; larger ones,
+    // and any other frame, run one job over the plan
+    val maxRows = Decode.driverBound.value._1
+    val local = order match {
+      case AsIs => InternalRows.localPartitions(df1, None, maxRows)
+      case ByKey(key, n) => InternalRows.localPartitions(df1, Some((key, n)), maxRows)
+      case _: ByKeySalted => None
+    }
+    val manifests = local match {
+      case Some(parts) =>
+        Jobs.run(spark, s"append seg$seg", parts.zipWithIndex, parts.map(_.length.toLong).sum,
+          parts.map(_.map(_.getSizeInBytes.toLong).sum).sum) { case (rows, p) => encode(p, rows.iterator) }
+      // unboxed path: execute the plan to InternalRows (datasource-style) and
+      // encode per partition; results come back in partition order
+      case None => Jobs.run(spark, s"append seg$seg", df.queryExecution.toRdd)(encode)
     }
     // commit: per-partition row counts in partition-id order fix the global
     // row-id assignment (SURVEY.md §7.5(6)). The consolidated manifest goes
     // first so a segment with a commit record always has one.
-    ColumnStore.commitSegment(root, seg, manifests.toSeq, lineage)
+    ColumnStore.commitSegment(root, seg, manifests, lineage)
   }
 
   // ---------------------------------------------------------------- read
@@ -616,7 +630,7 @@ class ColumnStore(val root: String) extends Serializable {
         .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
       val rows = Array.newBuilder[InternalRow]
       Decode.onDriver(units, s, outFields)(r => rows += copy(r).copy())
-      return org.apache.spark.sql.graft.InternalRows.local(spark, rows.result().toSeq, schema)
+      return InternalRows.local(spark, rows.result().toSeq, schema)
     }
     val rdd = spark.sparkContext
       .parallelize(units, math.max(1, units.size))
@@ -625,7 +639,7 @@ class ColumnStore(val root: String) extends Serializable {
         TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
         reader.rows
       })
-    org.apache.spark.sql.graft.InternalRows.toDataFrame(spark, rdd, schema)
+    InternalRows.toDataFrame(spark, rdd, schema)
   }
 
   // ---------------------------------------------------------------- meta

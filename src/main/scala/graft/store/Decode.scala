@@ -31,9 +31,11 @@ object Decode {
   val chunksRead = new java.util.concurrent.atomic.AtomicLong()
   val chunksFilterSkipped = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Fail unless `blob` matches the CRC32C its manifest entry recorded. */
-  def verifyChunk(cm: ChunkMeta, blob: Array[Byte]): Unit = {
-    val crc = FsIO.crc32c(blob)
+  /** Fail unless the chunk at the head of `buf` (its first `cm.nbytes`
+    * bytes) matches the CRC32C its manifest entry recorded.
+    */
+  def verifyChunk(cm: ChunkMeta, buf: Array[Byte]): Unit = {
+    val crc = FsIO.crc32c(buf, 0, cm.nbytes.toInt)
     require(crc == cm.crc,
       s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
         f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")

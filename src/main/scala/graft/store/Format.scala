@@ -77,6 +77,14 @@ object Format {
     s"p$part.$col.g$ver.bin"
   def partManifestFile(part: Int, ver: Int): String =
     if (ver == 0) s"p$part.manifest.bin" else s"p$part.manifest.v$ver.bin"
+  private val PartManifestName = """p(\d+)\.manifest(?:\.v(\d+))?\.bin""".r
+  /** (part, version) of a [[partManifestFile]] name; None for any other
+    * name, a crashed atomic write's `.tmp-` leftover included.
+    */
+  def partManifestVersion(name: String): Option[(Int, Int)] = name match {
+    case PartManifestName(p, v) => Some((p.toInt, Option(v).fold(0)(_.toInt)))
+    case _ => None
+  }
 }
 
 /** One persisted column's schema (pycolumns ColumnSchema analogue,
@@ -612,9 +620,11 @@ object FsIO {
     }
   }
 
-  def crc32c(b: Array[Byte]): Long = {
+  def crc32c(b: Array[Byte]): Long = crc32c(b, 0, b.length)
+
+  def crc32c(b: Array[Byte], off: Int, len: Int): Long = {
     val c = new java.util.zip.CRC32C()
-    c.update(b)
+    c.update(b, off, len)
     c.getValue
   }
 

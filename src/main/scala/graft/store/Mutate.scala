@@ -108,8 +108,8 @@ object Mutate {
       localIds: Array[Long],
       values: Array[Any]) extends Serializable
 
-  /** Index of the partition holding global row `id`, given the partitions'
-    * ascending start offsets: binary search, O(log P) per id.
+  /** Index of the partition (or chunk) holding row `id`, given their
+    * ascending first rows: binary search, O(log P) per id.
     */
   private def partOf(starts: Array[Long], id: Long): Int = {
     var lo = 0
@@ -122,7 +122,11 @@ object Mutate {
   }
 
   /** Scatter update: col[ids] = values (P5). Values aligned with ids, or a
-    * single scalar broadcast over all ids.
+    * single scalar broadcast over all ids. Each touched partition is one
+    * copy-on-write rewrite; they run on the driver when the chunks they
+    * rewrite fit `Decode.driverBound` (the rows and raw bytes of the touched
+    * chunks, or of a backfilled column's whole partition), else in one job
+    * (see [[Jobs.run]]).
     */
   def update(spark: SparkSession, store: ColumnStore, colName: String,
       ids: Array[Long], values: Array[Any]): Unit = {
@@ -153,12 +157,21 @@ object Mutate {
       PartUpdate(store.root, offs(pid)._1, offs(pid)._2, colName, li.result(), lv.toArray)
     }
     if (tasks.isEmpty) return
+    val fillBytes = rawBytes(Decode.fillValue(cs))
+    val sizes = tasks.map { t =>
+      val m = snap.partManifest(t.seg, t.part)
+      val chunks = m.chunks.filter(_.column == colName).sortBy(_.rowStartLocal).toArray
+      if (chunks.isEmpty) (m.nrows, m.nrows * fillBytes)
+      else {
+        val starts = chunks.map(_.rowStartLocal)
+        val hit = t.localIds.map(partOf(starts, _)).distinct.map(chunks)
+        (hit.map(_.nrows.toLong).sum, hit.map(_.rawBytes).sum)
+      }
+    }
     val specB = s
     Snapshot.publishAround(store.root, Change.Update(Set(colName)))(
-      Jobs.described(spark, s"update $colName")(
-        spark.sparkContext.parallelize(tasks.toSeq, tasks.size)
-          .map(t => runPartUpdate(t, specB))
-          .collect()))
+      Jobs.run(spark, s"update $colName", tasks, sizes.map(_._1).sum, sizes.map(_._2).sum)(
+        t => runPartUpdate(t, specB)))
   }
 
   /** Distributed bulk update: col[id] = value for every (_row_id, value)
@@ -296,8 +309,7 @@ object Mutate {
     // bulk path can carry 10^6 updates into a 10^3-chunk partition)
     val byChunk = t.localIds.indices.groupBy { i =>
       val lid = t.localIds(i)
-      val k = java.util.Arrays.binarySearch(starts, lid)
-      val g = if (k >= 0) k else -k - 2
+      val g = partOf(starts, lid)
       if (g < 0 || lid >= starts(g) + lens(g))
         throw new IllegalStateException(s"no chunk covers local row $lid")
       g
@@ -330,56 +342,65 @@ object Mutate {
 
   private def latestManifest(root: String, seg: Long, part: Int): PartManifest = {
     val dir = Format.segDir(root, seg)
-    val base = s"p$part.manifest"
-    val vers = FsIO.list(dir).flatMap { n =>
-      if (n == s"$base.bin") Some(0)
-      else if (n.startsWith(s"$base.v") && n.endsWith(".bin"))
-        n.stripPrefix(s"$base.v").stripSuffix(".bin").toIntOption
-      else None
-    }
-    val file = s"$dir/${Format.partManifestFile(part, vers.max)}"
+    val ver = FsIO.list(dir).flatMap(Format.partManifestVersion)
+      .collect { case (`part`, v) => v }.max
+    val file = s"$dir/${Format.partManifestFile(part, ver)}"
     BinCodec.readPartManifest(FsIO.readAll(file), file)
   }
 
-  /** A chunk blob a rewrite copies, checked against its manifest CRC: a
-    * corrupt source fails the update or vacuum before anything publishes.
+  /** A chunk blob a rewrite copies, and the `extra` bytes stored right
+    * after it, in one read; the chunk is checked against its manifest CRC:
+    * a corrupt source fails the update or vacuum before anything publishes.
     */
-  private def readChunk(dir: String, cm: ChunkMeta): Array[Byte] = {
-    val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
-    Decode.verifyChunk(cm, blob)
-    blob
+  private def readChunk(dir: String, cm: ChunkMeta, extra: Long = 0L): Array[Byte] = {
+    val buf = FsIO.readRange(s"$dir/${cm.file}", cm.offset, (cm.nbytes + extra).toInt)
+    Decode.verifyChunk(cm, buf)
+    buf
   }
 
   // ---------------------------------------------------------------- vacuum
 
   final case class CompactTask(root: String, seg: Long, part: Int) extends Serializable
 
-  /** Rewrite partitions that carry copy-on-write chunk versions into fresh
-    * contiguous generation files; drop dead chunk versions. Data identical,
-    * storage shrinks. Partitions already compacted (no cow files in the
-    * latest manifest) are skipped, so repeated vacuums are no-ops instead
-    * of full rewrites.
+  private val CowFile = """\.c\d+\.v\d+\.bin$""".r
+  private def isCow(cm: ChunkMeta): Boolean = CowFile.findFirstIn(cm.file).isDefined
+
+  /** Chunks of the columns that carry a copy-on-write version in `m`: the
+    * ones a vacuum rewrites. Any other column's chunks already sit together
+    * in one file that holds nothing else, so copying them reclaims nothing.
+    */
+  private def compacted(m: PartManifest): Seq[ChunkMeta] = {
+    val cols = m.chunks.filter(isCow).map(_.column).toSet
+    m.chunks.filter(c => cols(c.column))
+  }
+
+  /** Rewrite each column that carries copy-on-write chunk versions, per
+    * partition, into a fresh contiguous generation file; drop dead chunk
+    * versions. Data identical, storage shrinks. Partitions already
+    * compacted (no cow files in the latest manifest) are skipped, so
+    * repeated vacuums are no-ops instead of full rewrites. The partitions
+    * are rewritten on the driver when their rows and the stored bytes
+    * copied fit `Decode.driverBound`, else in one job (see [[Jobs.run]]).
     */
   def vacuum(spark: SparkSession, store: ColumnStore): Unit = {
-    val cowRe = """\.c\d+\.v\d+\.bin$""".r
     val snap = store.snapshot
-    val tasks = for {
+    val spec = snap.spec
+    val parts = for {
       seg <- snap.segments
       m <- snap.partManifests(seg)
-      if m.updateVersion > 0 && m.chunks.exists(c => cowRe.findFirstIn(c.file).isDefined)
-    } yield CompactTask(store.root, seg, m.part)
-    if (tasks.isEmpty) return
-    val spec = snap.spec
-    // a failed job may already have published manifests and deleted files
-    // that the previous snapshot still points to
-    try Jobs.described(spark, "vacuum")(
-      spark.sparkContext.parallelize(tasks, tasks.size)
-        .map(t => compactPartition(t, spec))
-        .collect())
+      if m.updateVersion > 0 && m.chunks.exists(isCow)
+    } yield (seg, m)
+    if (parts.isEmpty) return
+    val copied = parts.flatMap(p => compacted(p._2)).filter(c => spec.colNames.contains(c.column))
+    // a failed rewrite may already have published manifests and deleted
+    // files that the previous snapshot still points to
+    try Jobs.run(spark, "vacuum", parts.map { case (seg, m) => CompactTask(store.root, seg, m.part) },
+      parts.map(_._2.nrows).sum, copied.map(c => c.nbytes + c.filterBytes).sum)(
+      t => compactPartition(t, spec))
     finally Snapshot.publish(store.root, Change.Reshape)
   }
 
-  /** Crash-safe compaction order: (1) write each column's chunks into a NEW
+  /** Crash-safe compaction order: (1) write each rewritten column's chunks into a NEW
     * generation file — the files the current manifest references are never
     * touched; (2) atomically publish the new manifest; (3) GC every file of
     * this partition the new manifest no longer references. A crash at any
@@ -392,28 +413,26 @@ object Mutate {
     val dir = Format.segDir(t.root, t.seg)
     val m = latestManifest(t.root, t.seg, t.part)
     val newVer = m.updateVersion + 1
-    val cols = spec.columns.filter(c => m.chunks.exists(_.column == c.name))
+    val rewrite = compacted(m).map(_.column).toSet
     val newChunks = mutable.ArrayBuffer.empty[ChunkMeta]
-    cols.foreach { cs =>
+    newChunks ++= m.chunks.filter(c => spec.colNames.contains(c.column) && !rewrite(c.column))
+    spec.columns.filter(c => rewrite(c.name)).foreach { cs =>
       val gen = Format.genFile(t.part, cs.name, newVer)
       val out = FsIO.createOut(s"$dir/$gen")
       var offset = 0L
       try {
         m.chunks.filter(_.column == cs.name).sortBy(_.rowStartLocal).foreach { cm =>
-          val blob = readChunk(dir, cm)
-          out.write(blob)
-          // carry the membership filter into the generation file — losing
-          // it on vacuum would silently disable point-lookup pruning
-          val (fk, fOff, fLen) =
-            if (cm.filterKind == 1 && cm.filterBytes > 0) {
-              val f = FsIO.readRange(s"$dir/${cm.file}", cm.filterOffset,
-                cm.filterBytes.toInt)
-              out.write(f)
-              (1, offset + blob.length, f.length.toLong)
-            } else (0, 0L, 0L)
-          newChunks += cm.copy(file = gen, offset = offset,
-            filterKind = fk, filterOffset = fOff, filterBytes = fLen)
-          offset += blob.length + fLen
+          // the chunk and its membership filter, stored right after it, in
+          // one read — losing the filter on vacuum would silently disable
+          // point-lookup pruning
+          val fLen = if (cm.filterKind == 1) cm.filterBytes else 0L
+          require(fLen == 0 || cm.filterOffset == cm.offset + cm.nbytes,
+            s"filter of ${cm.file} @${cm.offset} does not follow its chunk")
+          val buf = readChunk(dir, cm, fLen)
+          out.write(buf)
+          newChunks += cm.copy(file = gen, offset = offset, filterKind = if (fLen > 0) 1 else 0,
+            filterOffset = if (fLen > 0) offset + cm.nbytes else 0L, filterBytes = fLen)
+          offset += buf.length
         }
       } finally out.close()
     }
@@ -426,11 +445,9 @@ object Mutate {
     val keep = newChunks.iterator.map(_.file).toSet
     val prefix = s"p${t.part}."
     FsIO.list(dir).foreach { name =>
-      val isManifest = name.startsWith(s"p${t.part}.manifest")
-      val isOldManifest = isManifest &&
-        name.stripPrefix(s"p${t.part}.manifest.v").stripSuffix(".bin").toIntOption
-          .exists(v => v > 0 && v < newVer)
-      val isDeadChunkFile = !isManifest && name.startsWith(prefix) &&
+      val manifest = Format.partManifestVersion(name)
+      val isOldManifest = manifest.exists { case (p, v) => p == t.part && v > 0 && v < newVer }
+      val isDeadChunkFile = manifest.isEmpty && name.startsWith(prefix) &&
         name.endsWith(".bin") && !keep(name)
       if (isOldManifest || isDeadChunkFile) FsIO.delete(s"$dir/$name")
     }

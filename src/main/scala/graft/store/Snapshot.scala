@@ -315,16 +315,10 @@ object Snapshot {
   private def loadPartManifests(root: String, seg: Long): IndexedSeq[PartManifest] = {
     val dir = Format.segDir(root, seg)
     val names = FsIO.list(dir)
-    // max update version per part from the single listing; ignore leftover
-    // .tmp-xxxx from crashed atomic writes (endsWith .bin + toIntOption)
-    val verRe = """^p(\d+)\.manifest\.v(\d+)\.bin$""".r
+    // max update version per part from the single listing
     val topVer = mutable.HashMap.empty[Int, Int]
-    names.foreach {
-      case verRe(p, v) =>
-        val pi = p.toInt
-        val vi = v.toInt
-        if (vi > topVer.getOrElse(pi, 0)) topVer(pi) = vi
-      case _ =>
+    names.flatMap(Format.partManifestVersion).foreach { case (p, v) =>
+      if (v > topVer.getOrElse(p, 0)) topVer(p) = v
     }
     val file = s"$dir/${Format.SegManifestFile}"
     BinCodec.readSegManifest(FsIO.readAll(file), file).map { m =>

@@ -139,31 +139,6 @@ class DriverReadSpec extends AnyFunSuite {
     c.dropStore()
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settle(): Unit = { // listener events are async: poll until stable
-      var last = -1
-      var same = 0
-      var spins = 0
-      while (same < 3 && spins < 50) {
-        val v = jobs.get()
-        if (v == last) same += 1 else { same = 0; last = v }
-        Thread.sleep(100)
-        spins += 1
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try { settle(); jobs.set(0); body; settle() }
-    finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("small reads launch no Spark job; a point hit decodes the filter's survivors plus one chunk per column") {
     // RANDOM string keys: every chunk's zone map spans the keyspace, so
     // only the membership filters prune
@@ -188,7 +163,7 @@ class DriverReadSpec extends AnyFunSuite {
       rowList = c.read(Seq("k", "v"), RowList(Seq(2999L, 4L))).collect()
       gathered = c.gather(c("v") === 17L, Seq("k")).collect()
     }
-    assert(jobs == 0, s"$jobs jobs launched")
+    assert(jobs.isEmpty, s"jobs launched: $jobs")
     assert(hit.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((keys(1234), 1234L)))
     assert(miss.isEmpty && slice.map(_.getLong(0)).toSeq == (40L until 56L))
     // ascending row ids, `_pos` giving the request order

@@ -425,32 +425,6 @@ class IndexConsultSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs started while `body` runs, with their descriptions. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descs.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def settle(): Unit = { // listener events are async: poll until stable
-      var last = -1
-      var same = 0
-      var spins = 0
-      while (same < 3 && spins < 50) {
-        val v = descs.size
-        if (v == last) same += 1 else { same = 0; last = v }
-        Thread.sleep(100)
-        spins += 1
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try { settle(); descs.clear(); body; settle() }
-    finally sc.removeSparkListener(listener)
-    descs.toArray(Array.empty[String]).toSeq
-  }
-
   test("a small build, refresh and merge run no Spark job; the refresh decodes only new chunks") {
     val schema = StructType(Seq(StructField("v", LongType, nullable = false)))
     def df(from: Int, until: Int) = spark.createDataFrame(spark.sparkContext.parallelize(

@@ -496,8 +496,11 @@ class IndexSpec extends AnyFunSuite {
       c.store.append(spark, df(20000L until 21000L, 1))
       driverRows(-1)(Index.refresh(spark, c.store, "ind", maxDeltaGens = 8))
       assert(Index.deltaGens(c.store, "ind").size == 1)
-      c("ind").update(Seq(5L), Seq(-5L))
-      c.vacuum()
+      // an update and a vacuum this small run on the driver too
+      driverRows(-1) {
+        c("ind").update(Seq(5L), Seq(-5L))
+        c.vacuum()
+      }
       // the caller's own description is back after every engine call
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       // listener events are async: poll until the queue stabilizes
@@ -570,16 +573,18 @@ class IndexSpec extends AnyFunSuite {
     assert(!Index.routableFor(c.store.snapshot, "ind"))
     Index.refresh(spark, c.store, "ind")
     assert(Index.routableFor(c.store.snapshot, "ind"))
-    // both update paths run their job inside that bracket: one version
-    // before it, one after
+    // both update paths run their rewrite inside that bracket, in a job or
+    // on the driver: one version before it, one after
     val v0 = c.store.snapshot.version
-    graft.store.Mutate.update(spark, c.store, "ind", Array(3L), Array(-3L: Any))
+    driverRows(-1)(graft.store.Mutate.update(spark, c.store, "ind", Array(3L), Array(-3L: Any)))
     assert(c.store.snapshot.version == v0 + 2)
+    graft.store.Mutate.update(spark, c.store, "ind", Array(2L), Array(-2L: Any))
+    assert(c.store.snapshot.version == v0 + 4)
     graft.store.Mutate.updateDf(spark, c.store, "ind", spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(4L, -4L)), 1), StructType(Seq(
         StructField("_row_id", LongType, nullable = false),
         StructField("value", LongType, nullable = false)))))
-    assert(c.store.snapshot.version == v0 + 4)
+    assert(c.store.snapshot.version == v0 + 6)
     c.dropStore()
   }
 

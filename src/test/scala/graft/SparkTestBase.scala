@@ -31,6 +31,32 @@ object SparkTestBase {
   def driverRows[T](rows: Long)(body: => T): T =
     graft.store.Decode.driverBound.withValue((rows, graft.index.Index.DriverBytes))(body)
 
+  /** Spark jobs started while `body` runs, with their descriptions. */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def settle(): Unit = { // listener events are async: poll until stable
+      var last = -1
+      var same = 0
+      var spins = 0
+      while (same < 3 && spins < 50) {
+        val v = descs.size
+        if (v == last) same += 1 else { same = 0; last = v }
+        Thread.sleep(100)
+        spins += 1
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try { settle(); descs.clear(); body; settle() }
+    finally sc.removeSparkListener(listener)
+    descs.toArray(Array.empty[String]).toSeq
+  }
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.delete()

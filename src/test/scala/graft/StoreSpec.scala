@@ -265,7 +265,13 @@ class StoreSpec extends AnyFunSuite {
     Mutate.update(spark, st, "rand", ids, vals.map(v => v: Any))
     val before = Mutate.storageBytes(st)
     val expected = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq)
+    // the columns the update left alone keep their chunks where they are:
+    // only a column with copy-on-write chunks has anything to reclaim
+    def untouched() = st.snapshot.segments.flatMap(st.snapshot.partManifests)
+      .flatMap(_.chunks).filter(_.column != "rand").sortBy(c => (c.file, c.offset))
+    val kept = untouched()
     Mutate.vacuum(spark, st)
+    assert(untouched() == kept)
     val after = Mutate.storageBytes(st)
     assert(after < before, s"storage did not shrink: $before -> $after")
     val got = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq)
@@ -442,43 +448,133 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("vacuum and update verify copied chunk bytes against the manifest CRC") {
-    val (st, _) = mkStore(400, chunkRows = 50, parts = 2)
-    Mutate.update(spark, st, "rand", Array(5L), Array(0.5f: Any))
-    val expected = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq
-    val seg = st.segments.head
-    val m = st.snapshot.partManifests(seg).find(_.updateVersion > 0).get
-    // flip one byte inside a chunk every vacuum of this partition copies
-    val cm = m.chunks.filter(_.column == "scol").maxBy(_.rowStartLocal)
-    val at = cm.offset + cm.nbytes / 2
-    def flip(): Unit = {
-      val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
-      try {
-        raf.seek(at)
-        val b = raf.read()
-        raf.seek(at)
-        raf.write(b ^ 0x40)
-      } finally raf.close()
+    // on the driver (the default bound) and in a job (a bound of 0 rows)
+    Seq(Decode.driverBound.value, (0L, 0L)).foreach(bound => Decode.driverBound.withValue(bound) {
+      val (st, _) = mkStore(400, chunkRows = 50, parts = 2)
+      Mutate.update(spark, st, "rand", Array(5L), Array(0.5f: Any))
+      val expected = st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq
+      val seg = st.segments.head
+      val m = st.snapshot.partManifests(seg).find(_.updateVersion > 0).get
+      // flip one byte inside a chunk every vacuum of this partition copies:
+      // an untouched chunk of the updated column
+      val cm = m.chunks.filter(_.column == "rand").maxBy(_.rowStartLocal)
+      val at = cm.offset + cm.nbytes / 2
+      def flip(): Unit = {
+        val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
+        try {
+          raf.seek(at)
+          val b = raf.read()
+          raf.seek(at)
+          raf.write(b ^ 0x40)
+        } finally raf.close()
+      }
+      flip()
+      // a failed copy still publishes the store versions it would on
+      // success: `published` of them (after a vacuum, around an update)
+      def failsOnCrc(published: Int)(op: => Any): Unit = {
+        val v0 = st.snapshot.version
+        val e = intercept[Exception](op)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage))
+        assert(msgs.exists(_.contains("chunk CRC mismatch")), e.toString)
+        assert(st.snapshot.partManifest(seg, m.part).updateVersion == m.updateVersion,
+          "a failed copy must not publish a new manifest")
+        assert(st.snapshot.version == v0 + published)
+      }
+      failsOnCrc(1)(Mutate.vacuum(spark, st))
+      // an update that rewrites the corrupted chunk fails the same way
+      val off = st.snapshot.partOffsets.find(o => o._1 == seg && o._2 == m.part).get._3
+      failsOnCrc(2)(Mutate.update(spark, st, "rand", Array(off + cm.rowStartLocal),
+        Array(0.25f: Any)))
+      // with the byte restored, a fresh handle reads every row as before: the
+      // failed copies published nothing a reader follows
+      flip()
+      assert(ColumnStore.open(st.root).read(spark).collect().sortBy(_.getLong(0))
+        .map(_.toSeq).toSeq == expected)
+      st.dropStore()
+    })
+  }
+
+  /** Every data, copy-on-write and generation file of `st` by its SHA-256,
+    * every part manifest by its rows, update version and chunk list, then
+    * the row count and every row.
+    */
+  private def storeState(st: ColumnStore): (Seq[(String, Any)], Long, Seq[Seq[Any]]) = {
+    val snap = st.snapshot
+    val files = snap.segments.flatMap { seg =>
+      val dir = Format.segDir(st.root, seg)
+      FsIO.list(dir).sorted.collect {
+        case n if Format.partManifestVersion(n).isDefined =>
+          val m = BinCodec.readPartManifest(FsIO.readAll(s"$dir/$n"), n)
+          s"seg$seg/$n" -> ((m.nrows, m.updateVersion, m.chunks))
+        case n if n.startsWith("p") && n.endsWith(".bin") =>
+          s"seg$seg/$n" -> java.security.MessageDigest.getInstance("SHA-256")
+            .digest(FsIO.readAll(s"$dir/$n")).toSeq
+      }
     }
-    flip()
-    def failsOnCrc(op: => Any): Unit = {
-      val e = intercept[Exception](op)
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(x => String.valueOf(x.getMessage))
-      assert(msgs.exists(_.contains("chunk CRC mismatch")), e.toString)
-      assert(st.snapshot.partManifest(seg, m.part).updateVersion == m.updateVersion,
-        "a failed copy must not publish a new manifest")
+    (files, snap.nrows, st.read(spark).collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq)
+  }
+
+  test("small mutations run no job and write exactly what their jobs write") {
+    val data = refData(600)
+    val extra = refData(608).drop(600)
+    val local = spark.createDataFrame(extra).toDF("id", "rand", "scol")
+    // not a local frame, but cut as Spark cuts the local one into tasks
+    val sliced = refDf(extra, parts = math.min(extra.size, spark.sparkContext.defaultParallelism))
+    // the same mutations at the default bound and at a bound of 0 rows,
+    // which sends each one to a job; the state after each one, and the
+    // graft jobs they ran
+    def run(bound: (Long, Long), appended: DataFrame): (Seq[Any], Seq[String]) = {
+      val st = ColumnStore.create(tmpDir("graft-paths"), ColumnStore.specFromSchema(schema,
+        chunkRows = 50))
+      st.append(spark, refDf(data), AsIs)
+      val states = Seq.newBuilder[Any]
+      def step(op: => Unit): Unit = {
+        Decode.driverBound.withValue(bound)(op)
+        states += storeState(st)
+      }
+      val jobs = jobsDuring {
+        step(Mutate.update(spark, st, "rand", Array(3L, 77L, 401L), Array[Any](1.5f, 2.5f, 3.5f)))
+        step(st.append(spark, appended, AsIs))
+        st.addColumn(ColumnSpec("t", PType.STR.id, fill = Some("-")))
+        step(Mutate.update(spark, st, "t", Array(5L, 590L, 603L), Array[Any]("a", "b", "c")))
+        step(Mutate.vacuum(spark, st))
+      }.filter(_.startsWith("graft: "))
+      st.dropStore()
+      (states.result(), jobs)
     }
-    failsOnCrc(Mutate.vacuum(spark, st))
-    // an update that rewrites the corrupted chunk fails the same way
-    val off = st.snapshot.partOffsets.find(o => o._1 == seg && o._2 == m.part).get._3
-    failsOnCrc(Mutate.update(spark, st, "scol", Array(off + cm.rowStartLocal),
-      Array("x": Any)))
-    // with the byte restored, a fresh handle reads every row as before: the
-    // failed copies published nothing a reader follows
-    flip()
-    assert(ColumnStore.open(st.root).read(spark).collect().sortBy(_.getLong(0))
-      .map(_.toSeq).toSeq == expected)
-    st.dropStore()
+    val (onDriver, driverJobs) = run(Decode.driverBound.value, local)
+    assert(driverJobs.isEmpty, s"jobs at the default bound: $driverJobs")
+    for (appended <- Seq(local, sliced)) {
+      val (inJobs, jobs) = run((0L, 0L), appended)
+      assert(jobs == Seq("graft: update rand", "graft: append seg1", "graft: update t",
+        "graft: vacuum"), jobs.toString)
+      onDriver.zip(inJobs).zipWithIndex.foreach { case ((a, b), i) =>
+        val same = a == b
+        assert(same, s"step $i: the two paths left different files, manifests or rows")
+      }
+    }
+  }
+
+  test("a local ByKey append partitions and sorts its rows as Spark's range exchange does") {
+    // 7 distinct keys over 40 rows: equal keys keep their input order
+    val data = new scala.util.Random(5).shuffle(refData(40).map { case (i, r, _) => (i, r, s"s${i % 7}") })
+    val local = spark.createDataFrame(data).toDF("id", "rand", "scol")
+    val states = Seq(local, refDf(data, parts = 3)).map { df =>
+      val st = ColumnStore.create(tmpDir("graft-bykey"), ColumnStore.specFromSchema(schema,
+        chunkRows = 4))
+      val jobs = jobsDuring(st.append(spark, df, ByKey("scol", 3)))
+      val state = storeState(st)
+      st.dropStore()
+      (state, jobs)
+    }
+    // the local frame is encoded on the driver; every job the other append
+    // runs, its range sample included, carries the append's description
+    assert(states(0)._2.isEmpty && states(1)._2.nonEmpty &&
+      states(1)._2.forall(_ == "graft: append seg0"), states.map(_._2).toString)
+    val same = states(0)._1 == states(1)._1
+    assert(same, "the two appends left different files, manifests or rows")
+    assert(states(0)._1._3.map(_(3)) == data.map(_._3).sorted)
   }
 
   test("failed anonymous append's orphan is not absorbed by a later append") {
