@@ -437,10 +437,10 @@ class ColumnStore(val root: String) extends Serializable {
   /** Encode `df` as the next segment. First write → segment 0; subsequent →
     * append (pycolumns Columns.append, columns.py:603-634: column-name sets
     * must match exactly; values cast to column dtypes). Rows already on the
-    * driver (a local frame such as `createDataFrame(Seq)`, `AsIs` or
-    * `ByKey`) are encoded there with no Spark job when they fit
-    * `Decode.driverBound`, into the same partitions and bytes a job writes;
-    * any other frame is encoded by one job.
+    * driver (a local frame such as `createDataFrame(Seq)`, appended `AsIs`)
+    * are encoded there with no Spark job when they fit `Decode.driverBound`,
+    * into the same partitions and bytes a job writes; any other frame is
+    * encoded by one job.
     */
   def append(spark: SparkSession, df: DataFrame, order: OrderMode = AsIs,
       lineage: String = ""): Long = {
@@ -566,7 +566,7 @@ class ColumnStore(val root: String) extends Serializable {
   private def writeSegment(spark: SparkSession, df0: DataFrame, s: TableSpec, seg: Long,
       order: OrderMode, lineage: String): Unit = {
     val df1 = normalize(df0, s)
-    lazy val df = order match {
+    val df = order match {
       case ByKey(key, n) =>
         df1.repartitionByRange(n, col(key)).sortWithinPartitions(col(key))
       case ByKeySalted(key, n, salts) =>
@@ -583,18 +583,12 @@ class ColumnStore(val root: String) extends Serializable {
     val specB = s
     val encode = (p: Int, rows: Iterator[InternalRow]) =>
       ColumnStore.encodePartition(rows, specB, segDir, seg, lineage, p)
-    // a local frame is cut into the partitions a job would see; larger ones,
-    // and any other frame, run one job over the plan
-    val maxRows = Decode.driverBound.value._1
-    val local = order match {
-      case AsIs => InternalRows.localPartitions(df1, None, maxRows)
-      case ByKey(key, n) => InternalRows.localPartitions(df1, Some((key, n)), maxRows)
-      case _: ByKeySalted => None
-    }
+    // a local frame within the driver bound is cut into the partitions a
+    // job would see and encoded here; any other frame runs one job
+    val (maxRows, maxBytes) = Decode.driverBound.value
+    val local = if (order == AsIs) InternalRows.localPartitions(df1, maxRows, maxBytes) else None
     val manifests = local match {
-      case Some(parts) =>
-        Jobs.run(spark, s"append seg$seg", parts.zipWithIndex, parts.map(_.length.toLong).sum,
-          parts.map(_.map(_.getSizeInBytes.toLong).sum).sum) { case (rows, p) => encode(p, rows.iterator) }
+      case Some(parts) => parts.zipWithIndex.map { case (rows, p) => encode(p, rows.iterator) }
       // unboxed path: execute the plan to InternalRows (datasource-style) and
       // encode per partition; results come back in partition order
       case None => Jobs.run(spark, s"append seg$seg", df.queryExecution.toRdd)(encode)

@@ -158,14 +158,17 @@ object Mutate {
     }
     if (tasks.isEmpty) return
     val fillBytes = rawBytes(Decode.fillValue(cs))
+    // the rows and raw bytes of the chunks each task rewrites, and of its
+    // new values
     val sizes = tasks.map { t =>
       val m = snap.partManifest(t.seg, t.part)
       val chunks = m.chunks.filter(_.column == colName).sortBy(_.rowStartLocal).toArray
-      if (chunks.isEmpty) (m.nrows, m.nrows * fillBytes)
+      val values = t.values.iterator.map(rawBytes).sum
+      if (chunks.isEmpty) (m.nrows, m.nrows * fillBytes + values)
       else {
         val starts = chunks.map(_.rowStartLocal)
         val hit = t.localIds.map(partOf(starts, _)).distinct.map(chunks)
-        (hit.map(_.nrows.toLong).sum, hit.map(_.rawBytes).sum)
+        (hit.map(_.nrows.toLong).sum, hit.map(_.rawBytes).sum + values)
       }
     }
     val specB = s

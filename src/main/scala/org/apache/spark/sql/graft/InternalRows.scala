@@ -1,12 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.RangePartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BasePredicate, BindReferences,
-  BoundReference, Expression, InterpretedOrdering, Predicate, SortOrder, UnsafeProjection,
-  UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BasePredicate, BindReferences, Expression,
+  Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, OptimizeIn}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -32,42 +30,25 @@ object InternalRows {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  /** When `df`'s optimized plan is a LocalRelation of at most `maxRows`
-    * rows — rows already on the driver — its rows cut into the partitions a
-    * job over it sees: the slices `LocalTableScanExec` makes, or with
-    * `rangeKey` (column, n) those of `repartitionByRange(n, column)
-    * .sortWithinPartitions(column)`: range bounds over every row, as Spark's
-    * range sampler finds them when it samples every row, each range sorted
-    * stably by Spark's ordering. None for any other plan.
+  /** When `df`'s optimized plan is a LocalRelation — rows already on the
+    * driver — of at most `maxRows` rows and `maxBytes` bytes, its rows cut
+    * into the partitions a job over it sees: the slices `LocalTableScanExec`
+    * makes. None for any other plan, or a larger one.
     */
-  def localPartitions(df: DataFrame, rangeKey: Option[(String, Int)],
-      maxRows: Long): Option[Seq[Array[UnsafeRow]]] = df.queryExecution.optimizedPlan match {
-    case r: LocalRelation if r.data.length <= maxRows &&
-        rangeKey.forall(k => r.schema.fieldNames.contains(k._1)) =>
+  def localPartitions(df: DataFrame, maxRows: Long,
+      maxBytes: Long): Option[Seq[Array[UnsafeRow]]] = df.queryExecution.optimizedPlan match {
+    case r: LocalRelation if r.data.length <= maxRows =>
       val proj = UnsafeProjection.create(r.schema)
       val rows = r.data.iterator.map(proj(_).copy()).toArray
-      Some(rangeKey match {
-        case _ if rows.isEmpty => Nil // an empty LocalTableScanExec has no partition
-        case None =>
-          val n = math.min(rows.length,
-            df.sparkSession.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism)
-          // ParallelCollectionRDD.slice's positions
-          (0 until n).map(i => rows.slice((i.toLong * rows.length / n).toInt,
-            ((i + 1L) * rows.length / n).toInt))
-        case Some((key, n)) =>
-          val k = r.schema.fieldIndex(key)
-          val ord = new InterpretedOrdering(Seq(SortOrder(
-            BoundReference(k, r.schema(k).dataType, r.schema(k).nullable), Ascending)))
-          val bounds = RangePartitioner.determineBounds[InternalRow](
-            rows.map(row => (row: InternalRow, 1.0f)).to(scala.collection.mutable.ArrayBuffer),
-            math.min(n, rows.length))(ord, implicitly)
-          // RangePartitioner.getPartition: the first bound at or above the key
-          val byPart = rows.groupBy { row =>
-            val b = java.util.Arrays.binarySearch[InternalRow](bounds, row, ord)
-            if (b >= 0) b else -b - 1
-          }
-          (0 to bounds.length).map(p => byPart.getOrElse(p, Array.empty[UnsafeRow]).sorted(ord))
-      })
+      if (rows.iterator.map(_.getSizeInBytes.toLong).sum > maxBytes) None
+      else {
+        // no rows, no partition, as an empty LocalTableScanExec
+        val n = math.min(rows.length,
+          df.sparkSession.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism)
+        // ParallelCollectionRDD.slice's positions
+        Some((0 until n).map(i => rows.slice((i.toLong * rows.length / n).toInt,
+          ((i + 1L) * rows.length / n).toInt)))
+      }
     case _ => None
   }
 

@@ -545,8 +545,11 @@ class StoreSpec extends AnyFunSuite {
     }
     val (onDriver, driverJobs) = run(Decode.driverBound.value, local)
     assert(driverJobs.isEmpty, s"jobs at the default bound: $driverJobs")
-    for (appended <- Seq(local, sliced)) {
-      val (inJobs, jobs) = run((0L, 0L), appended)
+    // a bound of 0 rows; and one the rows fit but the bytes do not, which
+    // sends the local frame to the planned job too
+    val rowsOnly = (Decode.driverBound.value._1, 0L)
+    for ((bound, appended) <- Seq(((0L, 0L), local), ((0L, 0L), sliced), (rowsOnly, local))) {
+      val (inJobs, jobs) = run(bound, appended)
       assert(jobs == Seq("graft: update rand", "graft: append seg1", "graft: update t",
         "graft: vacuum"), jobs.toString)
       onDriver.zip(inJobs).zipWithIndex.foreach { case ((a, b), i) =>
@@ -556,7 +559,7 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a local ByKey append partitions and sorts its rows as Spark's range exchange does") {
+  test("a local ByKey append runs the planned job and writes what an RDD frame's does") {
     // 7 distinct keys over 40 rows: equal keys keep their input order
     val data = new scala.util.Random(5).shuffle(refData(40).map { case (i, r, _) => (i, r, s"s${i % 7}") })
     val local = spark.createDataFrame(data).toDF("id", "rand", "scol")
@@ -568,13 +571,27 @@ class StoreSpec extends AnyFunSuite {
       st.dropStore()
       (state, jobs)
     }
-    // the local frame is encoded on the driver; every job the other append
-    // runs, its range sample included, carries the append's description
-    assert(states(0)._2.isEmpty && states(1)._2.nonEmpty &&
-      states(1)._2.forall(_ == "graft: append seg0"), states.map(_._2).toString)
+    // every job either append runs, its range sample included, carries the
+    // append's description
+    assert(states.forall(s => s._2.nonEmpty && s._2.forall(_ == "graft: append seg0")),
+      states.map(_._2).toString)
     val same = states(0)._1 == states(1)._1
     assert(same, "the two appends left different files, manifests or rows")
     assert(states(0)._1._3.map(_(3)) == data.map(_._3).sorted)
+  }
+
+  test("an update's new values count toward the driver bound") {
+    val (st, _) = mkStore(200, chunkRows = 50, parts = 2)
+    // one 50-row string chunk rewritten, but with a 100 KB value: past a
+    // 64 KB bound, so it runs in a job; within the default bound, on the driver
+    val big = "x" * 100000
+    val jobs = jobsDuring(Decode.driverBound.withValue((Decode.driverBound.value._1, 64L << 10))(
+      Mutate.update(spark, st, "scol", Array(7L), Array(big: Any))))
+    assert(jobs == Seq("graft: update scol"), jobs.toString)
+    assert(jobsDuring(Mutate.update(spark, st, "scol", Array(8L), Array(big: Any))).isEmpty)
+    assert(st.read(spark).collect().sortBy(_.getLong(0)).slice(7, 9).map(_.getString(3)).toSeq ==
+      Seq(big, big))
+    st.dropStore()
   }
 
   test("failed anonymous append's orphan is not absorbed by a later append") {
